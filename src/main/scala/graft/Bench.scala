@@ -1,12 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.core.{Checkpoints, GraftSession, Metrics}
+
 object Bench {
 
   /** Queries whose documented semantics are quadratic baselines or
     * fixed-query-set brute force: their scaling ratios are recorded
     * but exempt from the ≲-linear expectation. */
-  private val scalingExempt = Map(
+  private[graft] val scalingExempt = Map(
     "dedup_ngram_jaccard" -> "documented O(n^2) exact Jaccard baseline (maxId-bounded)",
     "sim_topk" -> "brute-force float cosine top-k baseline",
     "sim_hamming" -> "brute-force Hamming top-k baseline",
@@ -16,7 +18,7 @@ object Bench {
   /** PlanLint findings expected by design, keyed by query name →
     * (rule, why). A finding matching an entry here is recorded as
     * exempt; anything else in the lint sweep is a defect to fix. */
-  private val lintExempt: Map[String, Map[String, String]] = Map(
+  private[graft] val lintExempt: Map[String, Map[String, String]] = Map(
     "sim_topk" -> Map("cartesian" ->
       "brute-force cosine baseline: every doc scored against a bounded query set"),
     "sim_hamming" -> Map("cartesian" ->
@@ -26,22 +28,9 @@ object Bench {
     "corpus_shuffle" -> Map("wide-shuffle" ->
       "shard-shuffle IS the operator: redistributing payload rows is the point"),
     "doc_pack" -> Map("wide-shuffle" ->
-      "sequence packing redistributes document text into shards by design"),
-    "substr_dedup" -> Map("wide-shuffle" ->
-      "Parallelism.ensure round-robins the 1-partition local input before CPU-bound window hashing; no-op at scale where the scan splits naturally"),
-    "substr_dedup_incremental" -> Map("wide-shuffle" ->
-      "Parallelism.ensure round-robins the 1-partition local input before CPU-bound window hashing; no-op at scale where the scan splits naturally"),
-    "substr_dedup_incremental_bucketed" -> Map("wide-shuffle" ->
-      "Parallelism.ensure round-robins the 1-partition local input before CPU-bound window hashing; no-op at scale where the scan splits naturally"),
-    "substr_dedup_spans" -> Map("wide-shuffle" ->
-      "Parallelism.ensure round-robins the 1-partition local input before CPU-bound window hashing; no-op at scale where the scan splits naturally"))
+      "sequence packing redistributes document text into shards by design"))
 
   private def fmt(d: Double): String = f"$d%.3f"
-
-  /** Per-run metered volumes from the stage listener wrapped around
-    * every timed run — the attribution record for outlier runs. */
-  final case class RunMeter(shuffleBytes: Long, shuffleRecords: Long,
-                            spillDisk: Long, scanRows: Long)
 
   /** Per-query minimums and per-run arrays from a previous round's
     * BENCH_detail.json (read BEFORE this run overwrites it). Parsed
@@ -197,26 +186,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The live status stores retain per-execution plan graphs and
-      // per-stage rollups even with the UI off; at 150 queries x 3 runs
-      // the defaults (1000 executions / 1000 jobs) accumulate hundreds
-      // of MB of driver state over the sweep — steady GC pressure that
-      // taxes LATER queries more than earlier ones. Bound them hard.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.ui.retainedDeadExecutors", "0")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Previous round's per-query numbers, read before we overwrite the
     // detail file: the round-over-round regression gate diffs against
@@ -229,8 +199,7 @@ object Bench {
     // Warm-up: JIT/codegen/parquet-reader init and page cache are not
     // operator cost; run one shuffle + every table scan before timing.
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
+    Engine.lakeTables.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
@@ -252,57 +221,35 @@ object Bench {
     // stages of a re-executed DataFrame instance, which would not be an
     // honest timing).
     //
-    // EVERY run is also metered by a stage listener (shuffle volume,
+    // EVERY run is also metered (Metrics.metered: shuffle volume,
     // spill, scan rows — a few atomic adds per stage, free at this
     // scale): when a steady-state run spikes, the artifact carries the
     // volumes that say whether it recomputed more (real) or just ran
     // the same work slower (host noise) — no after-the-fact
-    // adjudication. The listener registers BEFORE fn() evaluates, so
+    // adjudication. The meter attaches BEFORE fn() evaluates, so
     // eager constructor-time jobs (fixpoints) are counted too.
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 dir: String,
-                lint: Boolean = false): Option[(Double, RunMeter)] = {
-      import java.util.concurrent.atomic.AtomicLong
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-      val shufB = new AtomicLong; val shufR = new AtomicLong
-      val spillD = new AtomicLong; val inRecs = new AtomicLong
-      val listener = new SparkListener {
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            shufB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufR.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-            spillD.addAndGet(m.diskBytesSpilled)
-            inRecs.addAndGet(m.inputMetrics.recordsRead)
-            ()
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
+                lint: Boolean = false): Option[(Double, Metrics.JobTotals)] = {
       val timed =
         try {
-          val df = fn(spark, dir)
-          df.queryExecution.toRdd.count()
-          val t = (System.nanoTime() - t0) / 1e9
+          val ((t, df), jobs) = Metrics.metered {
+            val t0 = System.nanoTime()
+            val df = fn(spark, dir)
+            df.queryExecution.toRdd.count()
+            ((System.nanoTime() - t0) / 1e9, df)
+          }
           // Lint the EXECUTED plan (AQE-final) — a plan walk, done
           // after the clock stops so it costs the timing nothing.
           if (lint)
             try lintFindings(name) = graft.plans.PlanLint.lint(df)
             catch { case e: Throwable =>
               System.err.println(s"[bench] lint $name failed: ${e.getMessage}") }
-          Some(t)
+          Some((t, jobs))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
-        } finally {
-          // drain the bus so late stage events land before detaching
-          // (outside the timer either way)
-          try org.apache.spark.GraftListenerAccess
-            .waitUntilListenerBusEmpty(spark.sparkContext)
-          catch { case _: Throwable => () }
-          spark.sparkContext.removeSparkListener(listener)
         }
       // Isolation between timed runs (outside the timer). Operators
       // scope their own persists since round 7, but a localCheckpoint
@@ -310,18 +257,12 @@ object Bench {
       // after the referencing object is GARBAGE-COLLECTED — across a
       // 150-query sweep those orphaned blocks stack up in the storage
       // pool until later queries pay eviction/spill (the unattributed
-      // r6->r7 drift on untouched queries). Unpersisting every leftover
-      // persistent RDD is deterministic and synchronous; clearCache
-      // handles DataFrame-level cache entries; the GC nudge releases
-      // broadcast/weak refs.
-      spark.catalog.clearCache()
-      val leftovers = spark.sparkContext.getPersistentRDDs
-      if (leftovers.nonEmpty)
-        leftoverBlocks(name) = math.max(leftoverBlocks.getOrElse(name, 0), leftovers.size)
-      leftovers.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-      timed.map(t =>
-        (t, RunMeter(shufB.get(), shufR.get(), spillD.get(), inRecs.get())))
+      // r6->r7 drift on untouched queries). The reset frees them
+      // deterministically and reports how many there were.
+      val leftovers = Checkpoints.resetBlocks(spark).size
+      if (leftovers > 0)
+        leftoverBlocks(name) = math.max(leftoverBlocks.getOrElse(name, 0), leftovers)
+      timed
     }
     // min of three timed runs per query: this VM's run-to-run variance
     // is ±30%, and the steady-state minimum is the honest throughput
@@ -370,9 +311,7 @@ object Bench {
           layoutTimes(name) =
             if (failed || layoutTimes.get(name).exists(_ < 0)) -1.0
             else math.max(layoutTimes.getOrElse(name, 0.0), t)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
+        Checkpoints.resetBlocks(spark)
       }
     // snapshot of CorpusPipeline.lastStageSeconds taken right after
     // corpus_prepare's OWN sweep runs — the register is shared (the
@@ -416,7 +355,7 @@ object Bench {
         val ts = rs.map(_._1); ts.min > 0.3 && ts.max / ts.min > 2.0
       } =>
         val rows = rs.map { case (t, m) =>
-          s"""{"s":${fmt(t)},"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"spill_disk_bytes":${m.spillDisk},"scan_rows":${m.scanRows}}"""
+          s"""{"s":${fmt(t)},"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"spill_disk_bytes":${m.spillDisk},"scan_rows":${m.inputRecords}}"""
         }
         s""""$name":[${rows.mkString(",")}]"""
     }
@@ -427,12 +366,12 @@ object Bench {
     // the NEXT round's attribution baseline: vs_prev classifies a
     // surviving regression as barrier/host-class (flat volumes) vs real
     // recompute (volume growth) from data, not from a manual read.
-    val volByQuery: Map[String, RunMeter] = metered.collect {
+    val volByQuery: Map[String, Metrics.JobTotals] = metered.collect {
       case (name, rs) if rs.nonEmpty => name -> rs.minBy(_._1)._2
     }.toMap
     val volumesJson = metered.collect { case (name, rs) if rs.nonEmpty =>
-      val m = rs.minBy(_._1)._2
-      s""""$name":{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"scan_rows":${m.scanRows},"spill_disk_bytes":${m.spillDisk}}"""
+      val m = volByQuery(name)
+      s""""$name":{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"scan_rows":${m.inputRecords},"spill_disk_bytes":${m.spillDisk}}"""
     }.mkString("{", ",", "}")
 
     // ---- Round-over-round regression gate ----
@@ -441,10 +380,9 @@ object Bench {
     // to measure, >0.3s on the slower side) is flagged; flags are
     // adjudicated against BOTH rounds' per-run spreads — if the two
     // [min,max] run intervals overlap, the movement is within box
-    // noise, not code. Regressions that survive adjudication get one
-    // metered run (stage-listener totals) so the artifact carries the
-    // shuffle/scan/spill numbers that attribute them, and those
-    // metrics persist per-query for the NEXT round to diff against.
+    // noise, not code. Regressions that survive adjudication carry the
+    // fastest timed run's metered volumes, so the artifact holds the
+    // shuffle/scan/spill numbers that attribute them.
     val minsMap = mins.toMap
     val runsMap = results.toMap
     val vsPrevJson = prev match {
@@ -480,30 +418,19 @@ object Bench {
               yield {
                 val pRec = pv.getOrElse("shuffle_records", 0L)
                 val pScan = pv.getOrElse("scan_rows", 0L)
-                if (flat(pRec, cv.shuffleRecords) && flat(pScan, cv.scanRows))
+                if (flat(pRec, cv.shuffleRecords) && flat(pScan, cv.inputRecords))
                   "regressed-flat-volumes"
-                else if (cv.shuffleRecords > pRec || cv.scanRows > pScan)
+                else if (cv.shuffleRecords > pRec || cv.inputRecords > pScan)
                   "regressed-volume-growth"
                 else "regressed-volume-shrank"
               }).getOrElse("regressed")
           (name, p, cur, r, verdict)
         }
-        // Attribute surviving regressions (cap the extra metered runs).
-        val attributed = adjudicated
-          .filter { case (_, _, cur, _, v) => v.startsWith("regressed") && cur > 0.3 }
-          .take(10).map { case (name, _, _, _, _) =>
-            val m = try Some(graft.core.Metrics.measureAllJobs(
-                      SparkEntry.queries(name)(spark, sfDir)))
-                    catch { case _: Throwable => None }
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-            System.gc()
-            name -> m
-          }.toMap
         val flaggedJson = adjudicated.map { case (name, p, cur, r, verdict) =>
-          val metricsJson = attributed.get(name).flatten.map { m =>
-            s""","metrics":{"shuffle_bytes":${m.shuffleBytesWritten},"shuffle_records":${m.shuffleRecordsWritten},"scan_rows":${m.scanRowsRead},"spill_disk_bytes":${m.spillBytesDisk},"spill_mem_bytes":${m.spillBytesMemory}}"""
-          }.getOrElse("")
+          val metricsJson = volByQuery.get(name).filter(_ => verdict.startsWith("regressed"))
+            .map { m =>
+              s""","metrics":{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"scan_rows":${m.inputRecords},"spill_disk_bytes":${m.spillDisk},"spill_mem_bytes":${m.spillMemory}}"""
+            }.getOrElse("")
           s""""$name":{"prev_min_s":${fmt(p)},"cur_min_s":${fmt(cur)},"ratio":${fmt(r)},"verdict":"$verdict"$metricsJson}"""
         }.mkString("{", ",", "}")
         val ratiosJson = compared.map { case (name, _, _, r) =>
@@ -565,20 +492,15 @@ object Bench {
           val points = sfNames.map { sn =>
             val dir = new java.io.File(base, sn).getPath
             primeLayout(name, dir)
-            val ts = (1 to 2).flatMap(_ => timeOne(name, fn, dir)).map(_._1)
-            // One metered (untimed) run per point: its shuffle volume,
-            // spill, and scan-row counts ATTRIBUTE the time curve — a
+            // the fastest run's meter ATTRIBUTES the time curve: its
+            // shuffle volume, spill and scan rows (summed over every
+            // job, so iterative operators' earlier rounds count) — a
             // time ratio at or below the shuffle/scan-volume ratio is
             // data-proportional cost (scale-fine); time outgrowing both
             // would mean the plan itself changed shape across SFs.
-            // measureAllJobs (stage listener) rather than the plan
-            // walk: iterative operators shuffle in earlier jobs the
-            // final plan no longer references.
-            val m = try Some(graft.core.Metrics.measureAllJobs(fn(spark, dir)))
-                    catch { case _: Throwable => None }
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-            ((if (ts.nonEmpty) ts.min else -1.0), m)
+            val runs = (1 to 2).flatMap(_ => timeOne(name, fn, dir))
+            if (runs.nonEmpty) { val (t, m) = runs.minBy(_._1); (t, Some(m)) }
+            else (-1.0, None)
           }
           val times = points.map(_._1)
           System.err.println(s"[bench][scaling] $name " +
@@ -593,12 +515,12 @@ object Bench {
             case Seq(a, b) if a > 0.05 && b > 0 => fmt(b / a)
             case _ => "null"
           }.mkString("[", ",", "]")
-          def mSeries(f: graft.core.Metrics.PlanMetrics => Long): Seq[Long] =
+          def mSeries(f: Metrics.JobTotals => Long): Seq[Long] =
             points.map(_._2.map(f).getOrElse(-1L))
-          val shufB = mSeries(_.shuffleBytesWritten)
-          val shufR = mSeries(_.shuffleRecordsWritten)
-          val scanR = mSeries(_.scanRowsRead)
-          val spill = mSeries(_.spillBytesDisk)
+          val shufB = mSeries(_.shuffleBytes)
+          val shufR = mSeries(_.shuffleRecords)
+          val scanR = mSeries(_.inputRecords)
+          val spill = mSeries(_.spillDisk)
           def lastRatio(xs: Seq[Long]): Option[Double] = (xs.init.last, xs.last) match {
             case (a, b) if a > 0 && b >= 0 => Some(b.toDouble / a)
             case _ => None
@@ -630,7 +552,7 @@ object Bench {
           def arr(xs: Seq[Long]) = xs.mkString("[", ",", "]")
           s""""$name":{"times_s":${times.map(fmt).mkString("[", ",", "]")},"growth_per_10x":$ratios,"shuffle_bytes":${arr(shufB)},"shuffle_records":${arr(shufR)},"scan_rows":${arr(scanR)},"spill_bytes":${arr(spill)},"attribution":"$attribution","vs_prev":"$verdict","label":$exempt}"""
         }
-        s"""{"sf_points":${sfNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"data_ratio_per_step":10,"timing":"min-of-2 fresh plans + one metered run per point","queries":{${entries.mkString(",")}}}"""
+        s"""{"sf_points":${sfNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"data_ratio_per_step":10,"timing":"min-of-2 fresh plans per point, volumes from the fastest run","queries":{${entries.mkString(",")}}}"""
       case _ => "null"
     }
 
@@ -687,9 +609,7 @@ object Bench {
             layoutTimes("[sf1-expand-text]") = (System.nanoTime() - t0) / 1e9
             d
           } else null
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
+        Checkpoints.resetBlocks(spark)
         val entries = sf1Watch.filter(n => minsMap.get(n).exists(_ > 0)).map { name =>
           val fn = SparkEntry.queries(name)
           val legDir = if (sf1TextPerturbed(name)) sf1TextDir else sf1Dir
@@ -709,11 +629,11 @@ object Bench {
             leg01.map(_._1).getOrElse(minsMap(name)), minsMap(name))
           val t1 = if (runs1.nonEmpty) runs1.map(_._1).min else -1.0
           val growth = if (t01 > 0.05 && t1 > 0) Some(t1 / t01) else None
-          def volG(f: RunMeter => Long): Option[Double] =
+          def volG(f: Metrics.JobTotals => Long): Option[Double] =
             for {
               a <- leg01.map(r => f(r._2)) if a > 0 && runs1.nonEmpty
             } yield runs1.map(r => f(r._2)).max.toDouble / a
-          val vol = (volG(_.shuffleRecords).toSeq ++ volG(_.scanRows).toSeq ++ Seq(1.0)).max
+          val vol = (volG(_.shuffleRecords).toSeq ++ volG(_.inputRecords).toSeq ++ Seq(1.0)).max
           def attributeOf(g: Option[Double]): String = g match {
             case None => "too-fast-to-attribute"
             case Some(x) if x <= 2.0 => "near-flat"
@@ -744,16 +664,16 @@ object Bench {
           // (What's wrong #3 of round 12: sf1 legs carried no class)
           val verdict = legVerdict(prevSf1Legs.get(name), tBest,
             if (runs1.nonEmpty) runs1.map(_._2.shuffleRecords).max else -1L,
-            if (runs1.nonEmpty) runs1.map(_._2.scanRows).max else -1L)
+            if (runs1.nonEmpty) runs1.map(_._2.inputRecords).max else -1L)
           System.err.println(s"[bench][sf1] $name sf0.1=${fmt(t01)} sf1=${fmt(t1)} " +
             s"requiet=${requiet.map(fmt).getOrElse("n/a")} " +
             s"growth=${growthAdj.map(fmt).getOrElse("n/a")} ($attribution) [$verdict]")
-          def meterArr(f: RunMeter => Long): String =
+          def meterArr(f: Metrics.JobTotals => Long): String =
             (leg01.map(r => f(r._2)).getOrElse(-1L) +:
               (if (runs1.nonEmpty) Seq(runs1.map(r => f(r._2)).max) else Seq(-1L)))
               .mkString("[", ",", "]")
           (name, growthAdj,
-            s""""$name":{"sf01_s":${fmt(t01)},"sf1_s":${fmt(t1)},"requiet_s":${requiet.map(fmt).getOrElse("null")},"growth_10x":${growthAdj.map(fmt).getOrElse("null")},"shuffle_records":${meterArr(_.shuffleRecords)},"scan_rows":${meterArr(_.scanRows)},"spill_bytes":${meterArr(_.spillDisk)},"attribution":"$attribution","vs_prev":"$verdict"}""")
+            s""""$name":{"sf01_s":${fmt(t01)},"sf1_s":${fmt(t1)},"requiet_s":${requiet.map(fmt).getOrElse("null")},"growth_10x":${growthAdj.map(fmt).getOrElse("null")},"shuffle_records":${meterArr(_.shuffleRecords)},"scan_rows":${meterArr(_.inputRecords)},"spill_bytes":${meterArr(_.spillDisk)},"attribution":"$attribution","vs_prev":"$verdict"}""")
         }
         sf1Compact ++= entries.map { case (n, g, _) =>
           s""""$n":${g.map(fmt).getOrElse("null")}""" }

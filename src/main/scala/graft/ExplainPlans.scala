@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Plan-inspection utility: prints `explain("formatted")` for the named
-  * queries (or all) against a testdata dir. Usage:
+  * queries (or all) against a testdata dir, on the same session config
+  * (extensions included) Bench times them under. Usage:
   *   runMain graft.ExplainPlans <sfDir> [query ...]
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Deterministic release of the block-store entries behind
@@ -42,4 +43,23 @@ object Checkpoints {
     df.queryExecution.analyzed.collect {
       case l: LogicalRDD => l.rdd
     }.distinct.foreach { r => r.unpersist(blocking = false); () }
+
+  /** The between-runs block reset the sequential drivers (Bench,
+    * Profile) run after every query: drop DataFrame-level cache
+    * entries, unpersist (blocking) every RDD still persisted, and nudge
+    * GC to release broadcast/weak refs. Returns the leftover RDDs it
+    * freed, oldest first — a non-empty result names a query that left
+    * blocks behind (RDD.toString carries the creation callsite).
+    *
+    * Unlike [[releaseAll]] this diffs nothing and spares nothing: it
+    * frees the whole persistent registry, so it is only valid when no
+    * other query is running on the session (never inside Verify's
+    * concurrent dump). */
+  def resetBlocks(spark: SparkSession): Seq[RDD[_]] = {
+    spark.catalog.clearCache()
+    val leftovers = spark.sparkContext.getPersistentRDDs.toSeq.sortBy(_._1).map(_._2)
+    leftovers.foreach(_.unpersist(blocking = true))
+    System.gc()
+    leftovers
+  }
 }

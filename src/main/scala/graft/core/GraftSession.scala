@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Session factory mirroring the reference's Spark tuning
   * (reference: batch_processing_optimized.py:50-78 — AQE, partition
   * coalescing, Kryo; S3A/Arrow knobs dropped: no object store / no
-  * Python boundary in a Scala engine).
+  * Python boundary in a Scala engine). Every driver (Bench, Profile,
+  * Verify, ExplainPlans) and the test session build through here, so
+  * the plans one tool prints are the plans another times.
   *
   * Scale notes: `shuffle.partitions` tracks the local core count here;
   * on a real cluster it should be ~2-3x total executor cores (or left
@@ -29,12 +31,15 @@ object GraftSession {
       // nanos timestamp type — read as long, convert in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-
-  def get(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+      // The live status stores retain per-execution plan graphs and
+      // per-stage rollups even with the UI off; over a sweep of
+      // hundreds of queries the defaults (1000 executions / 1000 jobs)
+      // accumulate hundreds of MB of driver state — steady GC pressure
+      // that taxes later queries more than earlier ones. Bound them.
+      .config("spark.sql.ui.retainedExecutions", "8")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "200")
+      .config("spark.ui.retainedTasks", "1000")
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)

@@ -61,37 +61,45 @@ object Metrics {
       }.sum)
   }
 
-  /** Like [[measure]], but sums task metrics across EVERY job the
-    * evaluation triggers, via a stage listener. The plan-walk in
-    * [[measure]] sees only the final query's executed plan — an
-    * iterative operator (connected components, PageRank, a pipeline
-    * with `localCheckpoint` rounds) does most of its shuffling in
-    * earlier jobs whose plans are gone by the time the result
-    * materializes, so plan-walk volumes under-report exactly the
-    * operators whose scaling most needs attribution. `filesRead` is
-    * not a task metric; it is taken from the final plan as before.
+  /** Totals of every job one metered body ran: counts plus task
+    * volumes summed over completed stages. `inputRecords` is what the
+    * scans read across all jobs (the plan walk in [[measure]] sees
+    * only the final plan's scans). */
+  final case class JobTotals(
+      jobs: Long,
+      stages: Long,
+      tasks: Long,
+      shuffleBytes: Long,
+      shuffleRecords: Long,
+      spillDisk: Long,
+      spillMemory: Long,
+      inputRecords: Long)
+
+  /** Evaluate `body` under a job/stage listener and return its result
+    * with the [[JobTotals]] of every job it ran. The one stage meter:
+    * Bench wraps every timed run in it, Profile every profiled run.
     *
-    * Only this query may be executing on the session while measuring —
-    * a concurrent job's stages would be counted too (fine in Bench,
-    * which is strictly sequential).
-    *
-    * `df` is BY-NAME, and that is load-bearing: the eager fixpoint
+    * `body` is BY-NAME, and that is load-bearing: the eager fixpoint
     * operators (connected components, PageRank, the corpus pipeline)
     * run most of their jobs while the query CONSTRUCTOR evaluates, so
-    * a by-value parameter would finish those jobs before the listener
-    * registers and attribute near-zero volumes to exactly the queries
-    * whose attribution matters most (the round-8 128-row ghosts).
-    * Requires an active session (the listener must attach before the
-    * frame exists). */
-  def measureAllJobs(df: => DataFrame): PlanMetrics = {
+    * the listener must attach before the frame exists or those jobs
+    * go uncounted. The listener bus is flushed before the listener
+    * detaches (events are posted asynchronously); a failed flush is
+    * logged and rethrown, never swallowed.
+    *
+    * Only this body may be running jobs on the session while metering
+    * — a concurrent job's stages would be counted too. Requires an
+    * active session. */
+  def metered[A](body: => A): (A, JobTotals) = {
     import java.util.concurrent.atomic.AtomicLong
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val shufB = new AtomicLong; val shufR = new AtomicLong
-    val spillD = new AtomicLong; val spillM = new AtomicLong
-    val inRecs = new AtomicLong
+    val jobs, stages, tasks, shufB, shufR, spillD, spillM, inRecs = new AtomicLong
     val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(s.stageInfo.numTasks)
         val m = s.stageInfo.taskMetrics
         if (m != null) {
           shufB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
@@ -100,22 +108,19 @@ object Metrics {
           spillM.addAndGet(m.memoryBytesSpilled)
           inRecs.addAndGet(m.inputMetrics.recordsRead)
         }
+        ()
       }
     }
     sc.addSparkListener(listener)
-    val planSide =
-      try {
-        val r = measure(df) // by-name: constructor-time jobs count too
-        org.apache.spark.GraftListenerAccess.waitUntilListenerBusEmpty(sc)
-        r
-      } finally sc.removeSparkListener(listener)
-    PlanMetrics(
-      rowsOut = planSide.rowsOut,
-      shuffleBytesWritten = shufB.get(),
-      shuffleRecordsWritten = shufR.get(),
-      spillBytesDisk = spillD.get(),
-      spillBytesMemory = spillM.get(),
-      filesRead = planSide.filesRead,
-      scanRowsRead = inRecs.get())
+    try {
+      val result = body
+      try org.apache.spark.GraftListenerAccess.waitUntilListenerBusEmpty(sc)
+      catch { case e: Throwable =>
+        System.err.println(s"[metrics] listener bus flush failed: $e")
+        throw e
+      }
+      (result, JobTotals(jobs.get, stages.get, tasks.get, shufB.get, shufR.get,
+        spillD.get, spillM.get, inRecs.get))
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1003,11 +1003,15 @@ object Dedup {
         bound(tokens(col(textCol))) { ts =>
           // loud guard, not a scaladoc caveat: a doc with >= 2^20
           // tokens would silently collide its occ_key into the next
-          // doc_id's key space and elect wrong first occurrences
-          when(assert_true(size(ts) - w < lit(posCap.toInt),
-            concat(lit(s"document exceeds the $posCap-token window-position cap "),
-              lit("(occ_key packs doc_id * 2^20 + pos) — re-key or chunk it"))).isNull,
-            graft.expressions.WindowHashFunctions.windowHashes(ts, w))
+          // doc_id's key space and elect wrong first occurrences.
+          // Only docs with a full window reach it: a null text has a
+          // null size, which assert_true would reject as a cap breach;
+          // null and short docs yield null here, i.e. no window rows.
+          when(size(ts) >= w,
+            when(assert_true(size(ts) - w < lit(posCap.toInt),
+              concat(lit(s"document exceeds the $posCap-token window-position cap "),
+                lit("(occ_key packs doc_id * 2^20 + pos) — re-key or chunk it"))).isNull,
+              graft.expressions.WindowHashFunctions.windowHashes(ts, w)))
         }.as("whs"))
       .select(col("doc_id"), posexplode(col("whs")).as(Seq("pos", "whash")))
       .select(col("doc_id"), col("pos"), col("whash"),

@@ -30,10 +30,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 case class WindowHashes(child: Expression, w: Int)
     extends UnaryExpression {
 
+  // containsNull = false: compute reads every element without a null
+  // check; split() output, what every caller passes, already qualifies
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 2 => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, false) if w >= 2 => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"window_hashes expects array<string> (w >= 2), got ($t, w=$w)")
+      s"window_hashes expects array<string> without null elements (w >= 2), got ($t, w=$w)")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true

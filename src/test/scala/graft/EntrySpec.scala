@@ -16,7 +16,15 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every oracle key has a matching query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    val queries = SparkEntry.queries.keySet
+    val oracle = SparkEntry.oracleSql.keySet
+    assert(oracle == queries, s"queries without oracle SQL: ${queries -- oracle}; " +
+      s"oracle SQL without a query: ${oracle -- queries}")
+    // every per-query side table is keyed by a registered query name
+    def strays(keys: Iterable[String]): Set[String] = keys.toSet -- queries
+    assert(strays(SparkEntry.layoutBuilds.keys).isEmpty, strays(SparkEntry.layoutBuilds.keys))
+    assert(strays(Bench.lintExempt.keys).isEmpty, strays(Bench.lintExempt.keys))
+    assert(strays(Bench.scalingExempt.keys).isEmpty, strays(Bench.scalingExempt.keys))
   }
 
   test("corpus lists layout carries the stage split of the build that made it") {

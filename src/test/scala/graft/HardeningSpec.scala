@@ -85,6 +85,25 @@ class HardeningSpec extends SparkSpec {
     assert(m2.shuffleRecordsWritten == 0 && m2.rowsOut == m2.scanRowsRead)
   }
 
+  test("Metrics.metered counts jobs run while its by-name body is evaluated") {
+    import graft.core.Metrics
+    // the count runs inside the body, before the returned frame exists:
+    // a by-value argument would have run it before the meter attached
+    val (df, totals) = Metrics.metered { spark.range(10).count(); spark.range(5).toDF() }
+    assert(totals.jobs >= 1, totals.toString)
+    assert(totals.stages >= 1 && totals.tasks >= 1, totals.toString)
+    assert(df.count() == 5)
+  }
+
+  test("Checkpoints.resetBlocks frees and returns leftover persisted RDDs") {
+    import graft.core.Checkpoints
+    val left = spark.sparkContext.parallelize(1 to 100, 2).persist()
+    assert(left.count() == 100)
+    val freed = Checkpoints.resetBlocks(spark)
+    assert(freed.map(_.id).contains(left.id), freed.toString)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("annotate/partitionValid split rows by violation lists in suite order") {
     val df = Seq(
       (1L, "click", 10.0),   // valid

@@ -548,6 +548,36 @@ class TextDedupSpec extends SparkSpec {
     assert(m(5L) == (("gap1 gap2 gap3", 55L, 2L)), m(5L).toString)
   }
 
+  test("window-hash dedup: null and short texts yield no windows instead of a cap error") {
+    import graft.dedup.Dedup
+    val docs = Seq[(Long, String)](
+      (0L, "a b c d e f g h i j"),
+      (1L, null),                  // null text: no windows, no assert
+      (2L, "short doc"),           // under the window
+      (3L, "a b c d e f g h i j")  // duplicate of 0
+    ).toDF("doc_id", "text")
+    val nonNull = docs.filter(col("text").isNotNull)
+    val catalog = Dedup.windowHashCatalog(docs).as[Long].collect().toSet
+    assert(catalog.nonEmpty)
+    assert(catalog == Dedup.windowHashCatalog(nonNull).as[Long].collect().toSet)
+    // the null doc passes through with nothing removed
+    val out = Dedup.substrDedup(docs, w = 8).collect()
+      .map(r => r.getLong(0) -> Option(r.get(3))).toMap
+    assert(out.keySet == Set(0L, 1L, 2L, 3L), out.toString)
+    assert(out(1L).forall(_ == 0L), out.toString)
+    assert(out(0L).contains(0L) && out(2L).contains(0L) && out(3L).contains(10L), out.toString)
+  }
+
+  test("window_hashes rejects arrays that may hold null elements at analysis") {
+    import graft.expressions.WindowHashFunctions.windowHashes
+    // Seq[String] encodes as array<string> with containsNull = true
+    val df = Seq(Tuple1(Seq("a", null, "c"))).toDF("ts")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(windowHashes(col("ts"), 2)).collect()
+    }
+    assert(e.getMessage.contains("window_hashes"), e.getMessage)
+  }
+
   test("substrDedupIncremental: catalog text always wins; batch dedupes within itself") {
     import graft.dedup.Dedup
     val accepted = Seq((0L, "a b c d e f g h i j")).toDF("doc_id", "text")
