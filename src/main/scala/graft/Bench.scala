@@ -1,71 +1,58 @@
 package graft
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.{Checkpoints, GraftSession, Metrics}
 
 object Bench {
 
-  /** Queries whose documented semantics are quadratic baselines or
-    * fixed-query-set brute force: their scaling ratios are recorded
-    * but exempt from the ≲-linear expectation. */
-  private[graft] val scalingExempt = Map(
-    "dedup_ngram_jaccard" -> "documented O(n^2) exact Jaccard baseline (maxId-bounded)",
-    "sim_topk" -> "brute-force float cosine top-k baseline",
-    "sim_hamming" -> "brute-force Hamming top-k baseline",
-    "embed_neardup" -> "pair-verifying near-dup: candidate pairs grow with bucket density",
-    "sim_lsh" -> "LSH bucket self-join pair baseline")
-
-  /** PlanLint findings expected by design, keyed by query name →
-    * (rule, why). A finding matching an entry here is recorded as
-    * exempt; anything else in the lint sweep is a defect to fix. */
-  private[graft] val lintExempt: Map[String, Map[String, String]] = Map(
-    "sim_topk" -> Map("cartesian" ->
-      "brute-force cosine baseline: every doc scored against a bounded query set"),
-    "sim_hamming" -> Map("cartesian" ->
-      "brute-force Hamming baseline: bounded query set vs corpus"),
-    "dedup_ngram_jaccard" -> Map("cartesian" ->
-      "documented O(n^2) exact-Jaccard baseline (maxId-bounded)"),
-    "corpus_shuffle" -> Map("wide-shuffle" ->
-      "shard-shuffle IS the operator: redistributing payload rows is the point"),
-    "doc_pack" -> Map("wide-shuffle" ->
-      "sequence packing redistributes document text into shards by design"))
-
   private def fmt(d: Double): String = f"$d%.3f"
 
-  /** Per-query minimums and per-run arrays from a previous round's
-    * BENCH_detail.json (read BEFORE this run overwrites it). Parsed
-    * with the Jackson bundled in Spark's own classpath. */
-  private def readPrevDetail(path: String, sfName: String)
-      : Option[(Double, Map[String, Double], Map[String, Seq[Double]],
-                Map[String, Map[String, Long]])] =
-    try {
-      val f = new java.io.File(path)
-      if (!f.isFile) None
-      else {
-        import scala.jdk.CollectionConverters._
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(f)
-        def obj(name: String): Map[String, com.fasterxml.jackson.databind.JsonNode] =
-          Option(root.get(name)).filter(_.isObject).map { n =>
-            n.fieldNames().asScala.map(k => k -> n.get(k)).toMap
-          }.getOrElse(Map.empty)
-        val mins = obj("queries").map { case (k, v) => k -> v.asDouble() }
-        val runs = obj("runs_s").map { case (k, v) =>
-          k -> v.elements().asScala.map(_.asDouble()).toSeq
-        }
-        // per-query steady-state volumes (older artifacts lack the
-        // block — vs_prev then falls back to the unclassified verdict)
-        val vols = obj("volumes").map { case (k, v) =>
-          k -> v.fieldNames().asScala.map(f2 => f2 -> v.get(f2).asLong()).toMap
-        }
-        val total = Option(root.get("total_s")).map(_.asDouble()).getOrElse(-1.0)
-        // Cross-SF comparison is meaningless — only diff when the
-        // previous detail ran at the same scale factor.
+  /** The previous round's BENCH_detail.json, parsed once with the
+    * Jackson bundled in Spark's own classpath (read BEFORE this run
+    * overwrites it). A missing file means no prior, and so does a file
+    * from another scale factor (cross-SF comparison is meaningless); a
+    * file that fails to parse is logged with its path, then treated
+    * as no prior. */
+  private def readPrev(path: String, sfName: String): Option[JsonNode] = {
+    val f = new java.io.File(path)
+    if (!f.isFile) None
+    else
+      try {
+        val root = new ObjectMapper().readTree(f)
         val prevSf = Option(root.get("sf")).map(_.asText()).getOrElse("")
-        if (new java.io.File(prevSf).getName != sfName) None
-        else Some((total, mins, runs, vols))
+        if (new java.io.File(prevSf).getName != sfName) None else Some(root)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] previous detail $path is unreadable, " +
+          s"so there is no vs_prev: ${e.getMessage}")
+        None
       }
-    } catch { case _: Throwable => None }
+  }
+
+  /** Per-query minimums, per-run arrays and steady-state volumes from
+    * the previous detail. */
+  private def prevDetail(root: JsonNode)
+      : (Double, Map[String, Double], Map[String, Seq[Double]],
+         Map[String, Map[String, Long]]) = {
+    import scala.jdk.CollectionConverters._
+    def obj(name: String): Map[String, JsonNode] =
+      Option(root.get(name)).filter(_.isObject).map { n =>
+        n.fieldNames().asScala.map(k => k -> n.get(k)).toMap
+      }.getOrElse(Map.empty)
+    val mins = obj("queries").map { case (k, v) => k -> v.asDouble() }
+    val runs = obj("runs_s").map { case (k, v) =>
+      k -> v.elements().asScala.map(_.asDouble()).toSeq
+    }
+    // per-query steady-state volumes (older artifacts lack the
+    // block — vs_prev then falls back to the unclassified verdict)
+    val vols = obj("volumes").map { case (k, v) =>
+      k -> v.fieldNames().asScala.map(f2 => f2 -> v.get(f2).asLong()).toMap
+    }
+    val total = Option(root.get("total_s")).map(_.asDouble()).getOrElse(-1.0)
+    (total, mins, runs, vols)
+  }
 
   /** Budget for [[requietMeasure]] child JVMs: a pathological host
     * could flag every watched query SUSPECT; three re-measures bound
@@ -133,38 +120,29 @@ object Bench {
   private final case class PrevLeg(timeS: Double, shuffleRecords: Long,
                                    scanRows: Long)
 
-  /** Prior round's scaling legs from BENCH_detail.json: per query,
+  /** Prior round's scaling legs from the previous detail: per query,
     * the sf1 leg and the scaling block's FINAL point (time + metered
     * volumes). Absent blocks/fields parse to empty — legs then carry
     * "no-prior". */
-  private def readPrevLegs(path: String, sfName: String)
-      : (Map[String, PrevLeg], Map[String, PrevLeg]) =
-    try {
-      val f = new java.io.File(path)
-      if (!f.isFile) return (Map.empty, Map.empty)
-      import scala.jdk.CollectionConverters._
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(f)
-      if (Option(root.get("sf")).map(n => new java.io.File(n.asText()).getName)
-          .getOrElse("") != sfName) return (Map.empty, Map.empty)
-      def legs(block: String, timeOf: com.fasterxml.jackson.databind.JsonNode => Double)
-          : Map[String, PrevLeg] =
-        (for {
-          b <- Option(root.get(block)) if b.isObject
-          qs <- Option(b.get("queries")) if qs.isObject
-        } yield qs.fieldNames().asScala.map { q =>
-          val e = qs.get(q)
-          def lastOf(field: String): Long =
-            Option(e.get(field)).filter(_.isArray).filter(_.size > 0)
-              .map(a => a.get(a.size - 1).asLong(-1L)).getOrElse(-1L)
-          q -> PrevLeg(timeOf(e), lastOf("shuffle_records"), lastOf("scan_rows"))
-        }.toMap).getOrElse(Map.empty)
-      (legs("scaling_sf1",
-          e => Option(e.get("sf1_s")).map(_.asDouble(-1.0)).getOrElse(-1.0)),
-        legs("scaling", e =>
-          Option(e.get("times_s")).filter(_.isArray).filter(_.size > 0)
-            .map(a => a.get(a.size - 1).asDouble(-1.0)).getOrElse(-1.0)))
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
+  private def prevLegs(root: JsonNode): (Map[String, PrevLeg], Map[String, PrevLeg]) = {
+    import scala.jdk.CollectionConverters._
+    def legs(block: String, timeOf: JsonNode => Double): Map[String, PrevLeg] =
+      (for {
+        b <- Option(root.get(block)) if b.isObject
+        qs <- Option(b.get("queries")) if qs.isObject
+      } yield qs.fieldNames().asScala.map { q =>
+        val e = qs.get(q)
+        def lastOf(field: String): Long =
+          Option(e.get(field)).filter(_.isArray).filter(_.size > 0)
+            .map(a => a.get(a.size - 1).asLong(-1L)).getOrElse(-1L)
+        q -> PrevLeg(timeOf(e), lastOf("shuffle_records"), lastOf("scan_rows"))
+      }.toMap).getOrElse(Map.empty)
+    (legs("scaling_sf1",
+        e => Option(e.get("sf1_s")).map(_.asDouble(-1.0)).getOrElse(-1.0)),
+      legs("scaling", e =>
+        Option(e.get("times_s")).filter(_.isArray).filter(_.size > 0)
+          .map(a => a.get(a.size - 1).asDouble(-1.0)).getOrElse(-1.0)))
+  }
 
   /** The volume-adjudicated leg verdict (What round 12's contended
     * regen sweep proved necessary: one noisy host printed fact_trip's
@@ -193,16 +171,11 @@ object Bench {
     // these (driver archives BENCH_r{N}.json, but the detail file is
     // the one with per-query minimums and run arrays).
     val prevDetailPath = sys.env.getOrElse("SPARK_GRAFT_PREV_DETAIL", "BENCH_detail.json")
-    val prev = readPrevDetail(prevDetailPath, new java.io.File(sfDir).getName)
+    val prevRoot = readPrev(prevDetailPath, new java.io.File(sfDir).getName)
+    val prev = prevRoot.map(prevDetail)
     val (prevSf1Legs, prevScalingLegs) =
-      readPrevLegs(prevDetailPath, new java.io.File(sfDir).getName)
-    // Warm-up: JIT/codegen/parquet-reader init and page cache are not
-    // operator cost; run one shuffle + every table scan before timing.
-    spark.range(1000000).selectExpr("sum(id % 7)").collect()
-    Engine.lakeTables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+      prevRoot.map(prevLegs).getOrElse((Map.empty[String, PrevLeg], Map.empty[String, PrevLeg]))
+    GraftSession.warmUp(spark, sfDir)
     // Leftover persisted RDDs per query (localCheckpoint blocks whose
     // owners went out of scope): freed deterministically below, and
     // counted here so any query that leaks blocks is named in the
@@ -448,7 +421,7 @@ object Bench {
     // anything else is a defect surfaced in the artifact.
     val lintRows = lintFindings.toSeq.flatMap { case (q, fs) =>
       fs.map { f =>
-        val exempt = lintExempt.get(q).flatMap(_.get(f.rule))
+        val exempt = SparkEntry.specByName.get(q).flatMap(_.lintExempt.get(f.rule))
         (q, f, exempt)
       }
     }
@@ -539,10 +512,11 @@ object Bench {
             case Some(g) if g <= 1.5 * volG => "volume-proportional"
             case Some(_) => "SUSPECT: time outgrows shuffle+scan volume — possible plan change"
           }
-          val exempt = scalingExempt.get(name)
+          val exemptWhy = SparkEntry.specByName.get(name).flatMap(_.scalingExempt)
+          val exempt = exemptWhy
             .map(r => s"""{"exempt":true,"why":"$r"}""").getOrElse("""{"exempt":false}""")
           scalingCompact +=
-            s""""$name${if (scalingExempt.contains(name)) "(exempt)" else ""}":$ratios"""
+            s""""$name${if (exemptWhy.isDefined) "(exempt)" else ""}":$ratios"""
           attributionCompact += s""""$name":"$attribution""""
           // volume-adjudicated verdict of the final point vs the prior
           // committed artifact — a contended host can no longer print a

@@ -14,15 +14,12 @@ import graft.warehouse.Warehouse
   */
 object Engine {
 
-  val lakeTables: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Register every lake table under its own name plus the warehouse
     * model views (`staging_nyc_taxi`, `dim_*`, `fact_trip`). Returns
     * the staging frame. Views are lazy — nothing materializes until
     * queried; call `spark.catalog.cacheTable` on hot ones. */
   def attach(spark: SparkSession, dir: String): DataFrame = {
-    lakeTables.foreach { t =>
+    Tables.lakeTables.foreach { t =>
       // Tables.events applies the nanos-long -> timestamp_ntz repair;
       // raw load would expose ts as BIGINT through the SQL facade
       val df = if (t == "events") Tables.events(spark, dir) else Tables.load(spark, dir, t)

@@ -22,12 +22,7 @@ object Profile {
                 else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.builder("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same warm-up discipline as Bench
-    spark.range(1000000).selectExpr("sum(id % 7)").collect()
-    Engine.lakeTables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    GraftSession.warmUp(spark, sfDir)
     def fmt(d: Double): String = f"$d%.3f"
     println(f"${"query"}%-40s ${"plan_s"}%8s ${"exec_s"}%8s ${"total_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"leftovers"}%9s")
     names.foreach { n =>

@@ -1,16 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{Exact, Tables}
-import graft.clean.Clean
-import graft.staging.Staging
-import graft.warehouse.Warehouse
-import graft.validate.Expectations
-import graft.taxi.TaxiShape
+import graft.catalog._
 
 /** Driver contract — one named query per implemented operator from
   * SURVEY.md §2, each with a DuckDB-equivalent oracle statement.
@@ -18,10876 +10,61 @@ import graft.taxi.TaxiShape
   * plan and the oracle SQL (the driver hash-compares values after
   * sorting columns by name). Double aggregates go through
   * [[graft.core.Exact]] so both engines produce bit-identical sums.
+  *
+  * Every query is declared once, as a [[graft.catalog.QuerySpec]] in
+  * its family's file under `graft/catalog/`; the name-keyed maps here
+  * are views derived from those specs.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    q1Agg(spark, "/root/testdata/sf0.001")
+    queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  // =================================================================
-  // parity queries (SURVEY.md §2 / §7.5)
-  // =================================================================
+  val specs: Seq[QuerySpec] =
+    ParityQueries.specs ++ EventQueries.specs ++ TextQueries.specs ++
+      CorpusQueries.specs ++ DedupQueries.specs ++ SimilarityQueries.specs ++
+      VectorIndexQueries.specs ++ GraphQueries.specs ++
+      LakehouseQueries.specs ++ MultimodalQueries.specs
 
-  /** A1-lite flagship: calendar-derived keys + exact grouped sums. */
-  private def q1Agg(spark: SparkSession, dir: String): DataFrame =
-    TaxiShape.staging(spark, dir)
-      .groupBy(col("year"), col("month"), col("dow"), col("service_type"))
-      .agg(
-        count(lit(1)).as("n_trips"),
-        Exact.dsum(col("passenger_count")).as("sum_passengers"),
-        Exact.dsum(col("fare_amount")).as("sum_fare"),
-        Exact.dsum(col("total_amount")).as("sum_total"))
-
-  /** The A1 grouping-key set (reference: datalake_to_dw.py:104-130). */
-  private val stagingAggKeys = Seq("year", "month", "dow", "vendor_id",
-    "rate_code_id", "pickup_location_id", "dropoff_location_id",
-    "payment_type_id", "pickup_datetime", "dropoff_datetime",
-    "pickup_latitude", "pickup_longitude",
-    "dropoff_latitude", "dropoff_longitude")
-
-  /** A1 full: the reference's staging aggregate — grouping keys include
-    * the raw timestamps (dedup-and-sum semantics, datalake_to_dw.py:104-130).
-    * Near-unique keys mean partial aggregation removes almost nothing,
-    * so the WHOLE table crosses the exchange — semantics-exact but
-    * superlinear at scale; [[stagingAggBucketed]] is the scale path. */
-  private def stagingAgg(spark: SparkSession, dir: String): DataFrame =
-    Staging.stagingAggregateDeferredCalendar(
-      TaxiShape.staging(spark, dir), keys = stagingAggKeys)
-
-  /** A1 at scale: identical semantics (and oracle SQL) to
-    * [[stagingAgg]], but the staging frame is first laid out BUCKETED
-    * on `pickup_datetime` — a member of the grouping-key set, so the
-    * bucketed scan's hash partitioning already satisfies the
-    * aggregation's required distribution and the re-aggregation plans
-    * with NO Exchange (PlanSpec-guarded). At 100 TB this converts the
-    * recurring whole-table shuffle (the dominant cost of the exact
-    * dedup-and-sum) into a one-time write-side layout cost, amortized
-    * over every downstream aggregate/join keyed on the bucket column
-    * ([[graft.sources.Bucketing]]). */
-  /** 8-hex-char fingerprint of a source dir — the key under which
-    * session-lifetime bucketed layouts are reused (`staging_agg
-    * _bucketed`, `dedup_incremental_minhash_bucketed`): same dir ⇒
-    * same table name ⇒ reuse; different SF dir ⇒ rebuild. One
-    * definition so the keying policy cannot drift between layouts. */
-  private def dirFingerprint(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-
-  /** Build-if-absent of `staging_agg_bucketed`'s layout; returns the
-    * table name. Layout cost is paid ONCE per source snapshot and
-    * amortized — the operator's whole point. The table name carries
-    * the source-dir fingerprint, so a same-session re-run (bench
-    * steady state, a downstream consumer) reuses the layout, while a
-    * different SF dir rebuilds; a fresh JVM also rebuilds (in-memory
-    * catalog), which writeBucketed's orphan-location sweep makes safe.
-    * Production would key this on a snapshot/version id instead. */
-  private def ensureStagingBucketedLayout(spark: SparkSession, dir: String): String = {
-    val table = "graft_staging_bucketed_" + dirFingerprint(dir)
-    if (!spark.catalog.tableExists(table)) {
-      graft.sources.Bucketing.writeBucketed(
-        TaxiShape.staging(spark, dir), table,
-        bucketCol = "pickup_datetime", nBuckets = 32)
-    }
-    table
-  }
-
-  private def stagingAggBucketed(spark: SparkSession, dir: String): DataFrame =
-    Staging.stagingAggregateDeferredCalendar(
-      spark.table(ensureStagingBucketedLayout(spark, dir)), keys = stagingAggKeys)
-
-  /** Star-schema scans at 100 TB are only viable when the fact is laid
-    * out partitioned on a join-facing key and the engine prunes fact
-    * DIRECTORIES from a selective dim filter at RUNTIME — Spark's
-    * dynamic partition pruning. The partition-layout twin of
-    * [[stagingAggBucketed]]: staging is written ONCE per source-dir
-    * fingerprint partitioned by month (`ym`), and the query joins a
-    * calendar dim filtered to one quarter. The month list is NOT
-    * derivable at plan time (the filter is on year/quarter, the
-    * partition key is `ym`), so only DPP can prune — the broadcast
-    * build result doubles as the pruning subquery
-    * (reuseBroadcastOnly default: no extra job), and 3 of ~84 month
-    * directories are read. PlanSpec asserts the
-    * dynamicpruningexpression reached the scan's PartitionFilters.
-    * Like the bucketed twin, the layout cost is paid once and reused —
-    * but keyed on a CONTENT fingerprint of the source files (see
-    * below); production would key on a snapshot id. */
-  /** Build-if-absent of `fact_pruned`'s month-partitioned layout;
-    * returns the layout path. Unlike the bucketed twins
-    * (session-scoped catalog — a fresh JVM rebuilds), this layout
-    * outlives the JVM, so [[graft.sources.LayoutCache]] supplies both
-    * guarantees a cross-JVM cache needs: a sampled CONTENT fingerprint
-    * of the source files (regenerated testdata must miss — size+mtime
-    * alone can silently replay stale bytes) and an atomic
-    * lock-serialized publish (a crashed or racing builder can never
-    * surface a partial layout; stale-fingerprint siblings are swept). */
-  private def ensureFactPrunedLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq("lineitem.parquet", "orders.parquet").map(new java.io.File(dir, _)))
-    // scope = the source dir name, so the sf0.001/sf0.01/sf0.1 layouts
-    // coexist and a regeneration evicts only ITS scope's stale copy
-    // v1: bump when the staging derivation feeding this layout changes
-    graft.sources.LayoutCache.ensure("graft_fact_pruned_v1",
-      new java.io.File(dir).getName, fp) { tmp =>
-      graft.sources.Sinks.partitionedParquet(
-        TaxiShape.staging(spark, dir).select(
-          date_format(col("pickup_datetime"), "yyyy-MM").as("ym"),
-          col("service_type"), col("payment_type_id"),
-          col("passenger_count"), col("fare_amount"), col("total_amount")),
-        tmp, Seq("ym"))
-    }
-  }
-
-  private def factPruned(spark: SparkSession, dir: String): DataFrame = {
-    val fact = spark.read.parquet(ensureFactPrunedLayout(spark, dir))
-    val calendar = spark.range(1)
-      .select(explode(sequence(
-        lit(java.sql.Date.valueOf("1992-01-01")),
-        lit(java.sql.Date.valueOf("1998-12-01")),
-        expr("interval 1 month"))).as("m"))
-      .select(date_format(col("m"), "yyyy-MM").as("ym"),
-        year(col("m")).as("y"), quarter(col("m")).as("q"))
-    val dim = calendar.filter(col("y") === 1995 && col("q") === 2)
-    fact.join(broadcast(dim), Seq("ym"))
-      .groupBy(col("ym"), col("service_type"))
-      .agg(count(lit(1)).as("n_trips"),
-        Exact.dsum(col("total_amount")).as("sum_total"))
-  }
-
-  /** P1+P3+P6+P12+F2 — the clean-stage pipeline on `events`, fed
-    * mixed-case input to exercise lowercase normalization. */
-  private def cleanNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.events(spark, dir).select(
-      col("event_id").as("EVENT_ID"), col("ts").as("TS"),
-      col("user_id").as("USER_ID"), col("event_type").as("Event_Type"),
-      col("value").as("Value"), col("props").as("PROPS"))
-    val cleaned = Clean.dropNullRows(
-      Clean.castColumns(
-        Clean.dropColumns(Clean.lowercaseColumns(raw), "props"),
-        Map("user_id" -> "int")))
-    Clean.sortColumns(cleaned)
-  }
-
-  /** J1 — double zone-lookup enrichment via broadcast inner joins;
-    * unmatched location ids are silently dropped (pandas-merge parity). */
-  private def zoneEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    val trips = l.select(
-      col("l_orderkey"), col("l_linenumber"),
-      (col("l_partkey") % 12).cast("int").as("pulocationid"),
-      (col("l_suppkey") % 12).cast("int").as("dolocationid"),
-      col("l_extendedprice").as("fare_amount"))
-    val lookup = Tables.supplier(spark, dir).select(
-      col("s_suppkey").cast("int").as("LocationID"),
-      (col("s_suppkey") % 180 - 90).cast("double").as("latitude"),
-      (col("s_suppkey") % 360 - 180).cast("double").as("longitude"))
-    Clean.zoneEnrich(
-      Clean.zoneEnrich(trips, lookup, "pulocationid", "pickup"),
-      lookup, "dolocationid", "dropoff")
-  }
-
-  private def stagingOf(spark: SparkSession, dir: String): DataFrame =
-    TaxiShape.staging(spark, dir)
-
-  /** F5/A4 — the GX-equivalent 12-rule suite in one aggregate pass,
-    * over a staging frame with injected violations so counts are
-    * non-trivial. */
-  private def validateSuite(spark: SparkSession, dir: String): DataFrame = {
-    val s = stagingOf(spark, dir)
-      .withColumn("vendor_id", expr("nullif(vendor_id, 0)"))
-      .withColumn("trip_distance",
-        when(col("payment_type_id") === 6, col("trip_distance") * 100)
-          .otherwise(col("trip_distance")))
-    Expectations.report(s, Expectations.referenceSuite)
-  }
-
-  /** Extended validation-rule kinds (dbt unique/accepted_values + GX
-    * regex) over the events table, with an injected duplicate so the
-    * unique count is non-trivial. */
-  private def validateExtended(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val withDup = ev.unionAll(ev.orderBy(col("event_id").asc).limit(7)) // 7 dup ids
-    Expectations.report(withDup, Seq(
-      Expectations.NotNull("event_id"),
-      Expectations.Unique(Seq("event_id")),
-      Expectations.InSet("event_type",
-        Seq("click", "view", "purchase", "signup")), // 'error' rows violate
-      Expectations.MatchesRegex("event_type", "^[a-z]+$")))
-  }
-
-  /** Row-level quarantine annotation over events (violation names per
-    * row + validity flag). The library API (`Expectations.annotate`)
-    * keeps the array-typed `violations` column; the oracle-checked query
-    * serializes it to a comma-joined string because the driver's pandas
-    * comparator cannot sort/hash array columns. */
-  private def validateRows(spark: SparkSession, dir: String): DataFrame =
-    Expectations.annotate(
-      Tables.events(spark, dir).select(col("event_id"), col("event_type"), col("value")),
-      Seq(
-        Expectations.InSet("event_type", Seq("click", "view", "purchase", "signup")),
-        Expectations.Between("value", 0, 50),
-        Expectations.NotNull("event_id")))
-      .withColumn("violations", array_join(col("violations"), ","))
-
-  /** Bucketized range join: events.value against nation-derived
-    * intervals [2k, 2k+3] — the equi-join-on-bucket rewrite of a
-    * BETWEEN predicate (Joins.rangeJoin), oracle-checked against the
-    * plain BETWEEN join. */
-  private def rangeJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Tables.events(spark, dir).select(col("event_id"), col("value"))
-    val iv = Tables.nation(spark, dir).select(col("n_nationkey"),
-      (col("n_nationkey") * 2.0).as("lo"),
-      (col("n_nationkey") * 2.0 + 3.0).as("hi"))
-    graft.operators.Joins.rangeJoin(pts, iv, "value", "lo", "hi", bucketWidth = 4.0)
-      .select(col("event_id"), col("n_nationkey"), col("value"))
-  }
-
-  /** U1 — union all (reference example model). */
-  private def unionAll(spark: SparkSession, dir: String): DataFrame = {
-    val r = Tables.region(spark, dir).select(col("r_regionkey"), col("r_name"))
-    r.unionAll(r.filter(col("r_regionkey") < 3))
-  }
-
-  /** P10+P11 — Debezium-envelope build + parse roundtrip (batch mode)
-    * with epoch-micros → timestamp conversion. */
-  private def cdcParse(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val env = ev.select(to_json(struct(struct(struct(
-      col("event_id"), col("user_id"), col("event_type"),
-      unix_micros(col("ts").cast("timestamp")).as("ts_us")).as("after")).as("payload"))).as("value"))
-    val afterSchema = new StructType()
-      .add("event_id", LongType).add("user_id", LongType)
-      .add("event_type", StringType).add("ts_us", LongType)
-    val schema = new StructType().add("payload",
-      new StructType().add("after", afterSchema))
-    env.select(from_json(col("value"), schema).as("data"))
-      .select(col("data.payload.after.*"))
-      .withColumn("event_ts", timestamp_micros(col("ts_us")).cast("timestamp_ntz"))
-  }
-
-  /** Multi-join analytic THROUGH THE SQL SURFACE: temp views +
-    * spark.sql (the engine's Trino-replacement path, SURVEY.md §3.3).
-    * Four-table join tree left to Catalyst's join reordering; sums via
-    * the registered-view twin of Exact.dsum. */
-  /** Month-over-month revenue: cents-exact monthly totals
-    * ([[graft.core.Exact.centsSum]]) with lag/delta/basis-point change
-    * in pure integer arithmetic. The ordered window runs over the
-    * month axis — BOUNDED (dozens of aggregate rows), so the
-    * single-partition sort it implies is over aggregates, never facts;
-    * the facts themselves take one hash-agg exchange on the month key.
-    * Months with zero orders emit no row, so "previous" means the
-    * previous PRESENT month — date-spine-join against [[dimDate]]
-    * first when calendar-adjacent semantics are needed. */
-  private def periodOverPeriod(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val monthly = Tables.orders(spark, dir)
-      .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-      .agg(graft.core.Exact.centsSum(col("o_totalprice")).as("rev_cents"))
-    val w = Window.orderBy(col("month"))
-    monthly
-      .withColumn("prev_cents", lag(col("rev_cents"), 1).over(w))
-      .withColumn("delta_cents", col("rev_cents") - col("prev_cents"))
-      .withColumn("pct_bp",
-        // integer division of NEGATIVE operands rounds differently
-        // across engines (truncate vs floor) — divide magnitudes and
-        // re-apply the sign so both engines agree bit-for-bit
-        when(col("prev_cents").isNotNull && col("prev_cents") > 0,
-          when(col("delta_cents") < 0, lit(-1L)).otherwise(lit(1L)) *
-            expr("(10000 * abs(delta_cents)) div prev_cents")))
-  }
-
-  private def revenueByNation(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("v_customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("v_orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("v_lineitem")
-    Tables.nation(spark, dir).createOrReplaceTempView("v_nation")
-    // FROM order leads with LINEITEM: without CBO join reordering
-    // Spark follows the syntactic order, and leading with the dim
-    // chain made the single-task customer⋈orders result the PROBE
-    // side with 600k lineitem rows streaming through one core (the
-    // 10.8 MB lineitem estimate broadcast). Fact-first, the planner
-    // probes the parallelism-bootstrapped lineitem scan and
-    // broadcasts the genuinely small sides — the star-join shape
-    // that stays right at scale (oversized sides fall back to SMJ by
-    // size, never by syntax). Inner equi-joins: result unchanged.
-    spark.sql(
-      """SELECT n.n_name AS nation, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM v_lineitem l
-        |JOIN v_orders o ON o.o_orderkey = l.l_orderkey
-        |JOIN v_customer c ON c.c_custkey = o.o_custkey
-        |JOIN v_nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY n.n_name""".stripMargin)
-  }
-
-  /** Q3-shaped analytic: segment filter + date filter pushed to the
-    * scans, 3-way join, revenue agg, deterministic top-10. */
-  private def q3Priority(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
-    val o = Tables.orders(spark, dir).filter(col("o_orderdate") < lit("1995-03-15").cast("timestamp_ntz"))
-    val l = Tables.lineitem(spark, dir)
-    c.join(o, col("c_custkey") === col("o_custkey"))
-      .join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1).cast(DecimalType(18, 2)) - col("l_discount").cast(DecimalType(18, 2))))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey").asc)
-      .limit(10)
-  }
-
-  /** Aggregation over the part catalog: per-brand counts and exact
-    * retail-value sums. */
-  private def partsByBrand(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n_parts"),
-        Exact.dsum(col("p_retailprice")).as("retail_value"),
-        min(col("p_size")).as("min_size"), max(col("p_size")).as("max_size"))
-
-  /** LEFT SEMI: customers that placed at least one order. */
-  private def semiJoin(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .join(Tables.orders(spark, dir),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"))
-
-  /** LEFT ANTI: customers with no high-value order (the referential
-    * complement; the value filter keeps the result non-empty at every
-    * scale factor — the plain complement is empty in this data). */
-  private def antiJoin(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
-      .join(Tables.orders(spark, dir).filter(col("o_totalprice") > 400000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"))
-
-  /** INTERSECT / EXCEPT over derived key sets. */
-  private def setOps(spark: SparkSession, dir: String): DataFrame = {
-    val orderCust = Tables.orders(spark, dir).select(col("o_custkey").as("custkey"))
-    val bigSpenders = Tables.orders(spark, dir)
-      .filter(col("o_totalprice") > 100000).select(col("o_custkey").as("custkey"))
-    val both = orderCust.intersect(bigSpenders)
-      .withColumn("op", lit("intersect"))
-    val onlySmall = orderCust.except(bigSpenders)
-      .withColumn("op", lit("except"))
-    both.unionAll(onlySmall)
-  }
-
-  /** PIVOT: per-user-bucket event-type counts as columns (explicit
-    * value list keeps the output schema static). */
-  private def pivotEvents(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("user_bucket", (col("user_id") % 10).cast("int"))
-      .groupBy(col("user_bucket"))
-      .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-      .count()
-      // fill only the pivoted counts — a NULL user_bucket (null
-      // user_id) must survive as NULL to match the oracle's grouping
-      .na.fill(0L, Seq("click", "view", "purchase", "signup", "error"))
-
-  /** Deterministic hash-based sample: 20% of events by event_id, plus
-    * a stratified variant keeping 50% of purchases / 10% of clicks. */
-  private def hashSample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Sampling
-    val ev = Tables.events(spark, dir)
-    Sampling.hashSample(ev, "event_id", 20, salt = "r1")
-      .select(col("event_id"), col("event_type"))
-      .withColumn("stratum", lit("uniform20"))
-      .unionAll(
-        Sampling.stratified(ev, "event_id", "event_type",
-          Map("purchase" -> 50, "click" -> 10), salt = "r1")
-          .select(col("event_id"), col("event_type"))
-          .withColumn("stratum", lit("stratified")))
-  }
-
-  /** One-pass long-format dataset profile of the events table. */
-  private def profileEvents(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiler.profile(
-      Tables.events(spark, dir), Seq("event_id", "user_id", "event_type", "value"))
-
-  /** JSON property extraction from the events `props` column. */
-  private def jsonExtract(spark: SparkSession, dir: String): DataFrame =
-    // bootstrap: per-row JSON parsing is the cost, and the local
-    // single-row-group events file arrives as one task
-    graft.core.Parallelism.ensureBy(Tables.events(spark, dir), "event_id")
-      .select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("int").as("k"))
-
-  /** Semi-structured round-trip through Spark 4's native VARIANT type:
-    * the typed row becomes a binary variant via `to_variant_object`
-    * (no JSON text serialized), the `props` JSON string is parsed ONCE
-    * via `parse_json`, and every downstream field is a typed
-    * `variant_get` path extraction. This is the 100 TB semi-structured
-    * path: `get_json_object` re-parses the string per extraction call,
-    * while VARIANT parses once into a binary encoding that every
-    * subsequent extraction (and any exchange it crosses) reuses — on a
-    * wide telemetry payload read by k extractors that is a k× parse
-    * saving. The oracle is closed-form: extraction inverts
-    * construction, so the round-trip must be the identity on the
-    * typed columns. Pure projection — zero exchanges (PlanSpec). */
-  private def jsonVariant(spark: SparkSession, dir: String): DataFrame = {
-    // bootstrap: parse_json/to_variant_object per row is the cost
-    val v = graft.core.Parallelism.ensureBy(
-      Tables.events(spark, dir), "event_id").select(
-      col("event_id"),
-      to_variant_object(struct(
-        col("user_id"), col("event_type"), col("value"))).as("row_v"),
-      parse_json(col("props")).as("props_v"))
-    v.select(col("event_id"),
-      variant_get(col("row_v"), "$.user_id", "bigint").as("user_id"),
-      variant_get(col("row_v"), "$.event_type", "string").as("event_type"),
-      variant_get(col("row_v"), "$.value", "double").as("value"),
-      variant_get(col("props_v"), "$.k", "int").as("k"))
-  }
-
-  /** Variant shredding WRITE path ([[graft.sources.VariantShred]]) —
-    * the write-side twin of [[jsonVariant]]: the merged
-    * `schema_of_variant_agg` schema of each variant column is
-    * materialized as typed parquet columns (+ residual variant only
-    * where types conflict), and read-back extraction of a shredded
-    * field reads ONLY its typed column (ReadSchema-pruned,
-    * PlanSpec-guarded). The oracle is the same identity as
-    * `json_variant` (construct → shred → extract inverts), plus an
-    * array-element extraction through a shredded ARRAY column. The
-    * timed query includes the write — it IS the write path. */
-  private def jsonShred(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.VariantShred
-    // parallelism bootstrap: the shredded WRITE (variant encode +
-    // schema_of_variant_agg pass) is the operator's cost, and a
-    // single-row-group local events file would run it as one task
-    val v = graft.core.Parallelism.ensureBy(
-      Tables.events(spark, dir), "event_id").select(
-      col("event_id"),
-      to_variant_object(struct(
-        col("user_id"), col("event_type"), col("value"),
-        array(col("value")).as("vals"))).as("payload"),
-      parse_json(col("props")).as("props_v"))
-    // per-PROCESS path: this query rewrites its output every run (the
-    // write IS the operator); a path shared across JVMs would let a
-    // concurrent bench/test overwrite the directory mid-read. TempDirs
-    // deletes it at JVM exit and sweeps dead predecessors' leftovers.
-    val out = graft.sources.TempDirs.perProcess(
-      s"graft_json_shred_${dirFingerprint(dir)}")
-    VariantShred.writeShredded(v, out)
-    val back = spark.read.parquet(out)
-    back.select(col("event_id"),
-      VariantShred.extract(back, "payload", "$.user_id", "bigint").as("user_id"),
-      VariantShred.extract(back, "payload", "$.event_type", "string").as("event_type"),
-      VariantShred.extract(back, "payload", "$.value", "double").as("value"),
-      VariantShred.extract(back, "payload", "$.vals[0]", "double").as("val0"),
-      VariantShred.extract(back, "props_v", "$.k", "int").as("k"))
-  }
-
-  /** Explicit frame spec: per-customer running order total. The sum
-    * accumulates in DECIMAL inside the frame, so the result is exact
-    * regardless of each engine's window-aggregation order (running
-    * accumulation vs segment tree). */
-  private def runningTotal(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(spark, dir)
-      .filter(col("o_custkey") < 100)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
-          .cast("double").as("running_total"))
-  }
-
-  /** Window ranking extension: top-3 orders per customer. */
-  private def windowTopk(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w).cast("bigint"))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-  }
-
-  /** ROLLUP hierarchy totals over the staging shape (engine capability
-    * beyond reference parity; SURVEY.md §2.6 note). */
-  private def rollupAgg(spark: SparkSession, dir: String): DataFrame =
-    TaxiShape.staging(spark, dir)
-      .rollup(col("year"), col("month"))
-      .agg(count(lit(1)).as("n_trips"),
-        Exact.dsum(col("fare_amount")).as("sum_fare"),
-        grouping(col("year")).cast("int").as("g_year"),
-        grouping(col("month")).cast("int").as("g_month"))
-
-  /** Gap-based sessionization of the event stream: a new session starts
-    * after >30 min of user inactivity (window lag + running sum). */
-  /** Session assignment shared by [[sessionize]] and [[eventPairs]]:
-    * every event tagged with its user's running session index. */
-  private def sessionAssign(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-    val prev = lag(col("ts"), 1).over(w)
-    Tables.events(spark, dir)
-      .withColumn("is_new",
-        when(prev.isNull ||
-          (unix_micros(col("ts").cast("timestamp")) -
-            unix_micros(prev.cast("timestamp"))) > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_id",
-        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
-
-  private def sessionize(spark: SparkSession, dir: String): DataFrame =
-    sessionAssign(spark, dir)
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("ts")).as("session_start"), max(col("ts")).as("session_end"))
-
-  /** Market-basket co-occurrence over sessions: for each unordered
-    * event-type pair, in how many sessions both occur — the
-    * association signal behind "users who X also Y" (support counts;
-    * lift is a read-time divide by the singleton counts). The
-    * per-session distinct type set is tiny (≤ #types), so the
-    * within-session self-join is bounded C(#types, 2) per session —
-    * never quadratic in events. */
-  private def eventPairs(spark: SparkSession, dir: String): DataFrame = {
-    val st = sessionAssign(spark, dir)
-      .select(col("user_id"), col("session_id"), col("event_type"))
-      .distinct()
-    val a = st.withColumnRenamed("event_type", "type_a")
-    val b = st.withColumnRenamed("event_type", "type_b")
-    a.join(b, Seq("user_id", "session_id"))
-      .filter(col("type_a") < col("type_b"))
-      .groupBy(col("type_a"), col("type_b"))
-      .agg(count(lit(1)).as("n_sessions"))
-  }
-
-  /** Last-touch conversion attribution: every purchase is credited to
-    * the most recent preceding click/view by the same user within a
-    * 24-hour lookback — the standard marketing-attribution primitive.
-    * One running last-non-null window per carried column over ONE
-    * (user, ts, tie) ordering: the three carried columns share the
-    * same null pattern, so their last-non-null values always come from
-    * the same touch row — no join back, no struct. Purchases with no
-    * in-window touch are dropped (direct conversions). One shuffle by
-    * user; narrow columns only. */
-  private def attribution(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-    val touch = col("event_type") === "click" || col("event_type") === "view"
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev
-      .withColumn("touch_event_id",
-        last(when(touch, col("event_id")), ignoreNulls = true).over(w))
-      .withColumn("touch_type",
-        last(when(touch, col("event_type")), ignoreNulls = true).over(w))
-      .withColumn("touch_us",
-        last(when(touch, col("ts_us")), ignoreNulls = true).over(w))
-      .filter(col("event_type") === "purchase" && col("touch_us").isNotNull &&
-        col("ts_us") - col("touch_us") <= 24L * 3600L * 1000000L)
-      .select(col("event_id").as("purchase_event_id"), col("user_id"),
-        col("touch_event_id"), col("touch_type"),
-        (col("ts_us") - col("touch_us")).as("gap_us"))
-  }
-
-  /** Clickstream path analysis: the top-20 session event-type
-    * sequences. The per-session collect is bounded by session length
-    * and sorted explicitly on (ts, event_id) before joining, so the
-    * path string is deterministic; the global top-k is a
-    * TakeOrderedAndProject, not a full sort. */
-  private def sessionPaths(spark: SparkSession, dir: String): DataFrame =
-    sessionAssign(spark, dir)
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(concat_ws(">", transform(
-        array_sort(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
-        e => e.getField("event_type"))).as("path"))
-      .groupBy("path").agg(count(lit(1)).as("n_sessions"))
-      .orderBy(col("n_sessions").desc, col("path").asc)
-      .limit(20)
-
-  /** Session transition matrix — the first-order Markov input for
-    * sequence modeling: consecutive in-session event-type pairs
-    * counted per (from, to), with the row-normalized transition
-    * probability in fixed-point millionths (exact integer floor
-    * division, engine-portable). Consecutive means adjacent under the
-    * (ts, event_id) total order within a session — the same ordering
-    * convention as `session_paths`.
-    *
-    * Scale shape: the lag window rides the existing per-(user,
-    * session) partitioning; the matrix is (|types|², count) — tiny —
-    * and the row totals broadcast back onto it. */
-  private def transitionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"), col("session_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val pairs = sessionAssign(spark, dir)
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .select(col("from_type"), col("event_type").as("to_type"))
-    // row totals via a window over the (tiny) matrix itself — a
-    // totals-aggregate-plus-join would plan the whole sessionize
-    // subtree TWICE (once per side); the window reuses the single pass
-    val wTot = Window.partitionBy(col("from_type"))
-    pairs.groupBy("from_type", "to_type")
-      .agg(count(lit(1)).as("n"))
-      .withColumn("row_total", sum(col("n")).over(wTot))
-      .select(col("from_type"), col("to_type"), col("n"),
-        expr("(1000000 * n) div row_total").as("p_fp"))
-  }
-
-  /** Calendar date-spine dimension over the fact table's date span —
-    * the dbt-utils date-spine staple: one row per day with surrogate
-    * key, names, and weekend flag. Dates serialize as ISO strings (the
-    * comparator-stable form). Bounded output (years × 365), generated
-    * from one min/max aggregate — no source rows expand. */
-  private def dimDate(spark: SparkSession, dir: String): DataFrame = {
-    val span = Tables.orders(spark, dir)
-      .agg(to_date(min(col("o_orderdate"))).as("lo"),
-        to_date(max(col("o_orderdate"))).as("hi"))
-    span.select(explode(sequence(col("lo"), col("hi"))).as("d"))
-      .select(
-        date_format(col("d"), "yyyyMMdd").cast("long").as("date_key"),
-        date_format(col("d"), "yyyy-MM-dd").as("date_iso"),
-        year(col("d")).cast("long").as("year"),
-        date_format(col("d"), "MMMM").as("month_name"),
-        month(col("d")).cast("long").as("month"),
-        date_format(col("d"), "EEEE").as("dow_name"),
-        dayofweek(col("d")).cast("long").as("dow"),
-        dayofweek(col("d")).isin(1, 7).as("is_weekend"))
-  }
-
-  /** LSH banding s-curve — the tuning table for choosing (bands, rows):
-    * for Jaccard similarity s on a 0.05 grid, the candidate probability
-    * 1 − (1 − s^r)^b of the engine's MinHash convention (k = 12,
-    * b = 4, r = 3), in exact basis-point integer arithmetic (every
-    * power is a chain of int64 floor divisions — engine-portable,
-    * overflow-safe: q^4 ≤ 10^16). Generated, not scanned: a constant
-    * 19-row planning table. */
-  private def lshTuning(spark: SparkSession, dir: String): DataFrame = {
-    spark.range(1, 20).toDF("i")
-      .select((col("i") * 500L).as("s_bp"))
-      .withColumn("s3_bp", expr("(s_bp * s_bp * s_bp) div 100000000"))
-      .withColumn("q_bp", lit(10000L) - col("s3_bp"))
-      .withColumn("p_candidate_bp",
-        lit(10000L) - expr("(q_bp * q_bp * q_bp * q_bp) div 1000000000000"))
-      .select("s_bp", "s3_bp", "p_candidate_bp")
-  }
-
-  /** Key-skew diagnostic for shuffle planning: one row with the row /
-    * key counts, the heaviest key, its share in basis points, and the
-    * max-over-mean skew factor ×100 — all integer floor arithmetic so
-    * the report is engine-exact. skew_x100 = 100 means perfectly
-    * uniform; the salting / AQE-skew-join decision threshold is
-    * typically 10-20× (1000-2000). */
-  private def skewReport(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.events(spark, dir)
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-    val top = counts.orderBy(col("n").desc, col("user_id").desc).limit(1)
-      .select(col("user_id").as("top_key"), col("n").as("top_n"))
-    counts.agg(sum(col("n")).cast("bigint").as("n_rows"),
-        count(lit(1)).as("n_keys"))
-      .crossJoin(broadcast(top))
-      .select(col("n_rows"), col("n_keys"), col("top_key"), col("top_n"),
-        expr("top_n * 10000 DIV n_rows").as("top_share_bp"),
-        expr("top_n * n_keys * 100 DIV n_rows").as("skew_x100"))
-  }
-
-  import graft.operators.Joins
-
-  /** As-of join: each click picks up the user's most recent
-    * purchase-value at or before the click time (union + window carry —
-    * no range-join explosion; oracle is DuckDB's native ASOF JOIN). */
-  private def asofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(Exact.dsum(col("value")).as("purchase_value"))
-    Joins.asOfJoin(clicks, purchases, Seq("user_id"), "ts", Seq("purchase_value"))
-  }
-
-  /** Tolerance-bounded as-of join (the pandas `merge_asof(tolerance)`
-    * contract): a purchase older than 48 hours must not price the
-    * click — the staleness test reads the MATCHED row's own carried
-    * timestamp, zero extra data movement. */
-  private def asofJoinTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(Exact.dsum(col("value")).as("purchase_value"))
-    Joins.asOfJoin(clicks, purchases, Seq("user_id"), "ts",
-      Seq("purchase_value"), maxStaleness = Some(expr("INTERVAL 48 HOURS")))
-  }
-
-  /** Grouped summary statistics with engine-exact aggregates only
-    * (min/max/exact-decimal avg/count/count-distinct). */
-  private def statsSummary(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"),
-        Exact.davg(col("value")).as("avg_value"),
-        count_distinct(col("user_id")).as("n_users"))
-
-  /** Conversion funnel: per viewing user, first view and first
-    * purchase at-or-after it (min-aggregates + one equi-join — exact
-    * timestamps, no float math). */
-  private def funnel(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("first_view"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .join(v, "user_id")
-      .filter(col("ts") >= col("first_view"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("first_purchase_after"))
-    v.join(p, Seq("user_id"), "left")
-  }
-
-  /** Ordered 3-step funnel depth counts (view → click → purchase,
-    * each step strictly at-or-after the previous step's first
-    * occurrence): the product-analytics conversion table. Each stage
-    * is one slim per-user min aggregate joined forward — no
-    * self-join of the event stream against itself, no window over
-    * raw events; at 100 TB each stage shuffles one row per user. */
-  private def funnelSteps(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    def firstAfter(tpe: String, prev: Option[DataFrame], prevCol: String,
-                   outCol: String): DataFrame = {
-      val base = ev.filter(col("event_type") === tpe)
-      val gated = prev match {
-        case Some(p) => base.join(p, "user_id").filter(col("ts") >= col(prevCol))
-        case None => base
-      }
-      gated.groupBy(col("user_id")).agg(min(col("ts")).as(outCol))
-    }
-    val v = firstAfter("view", None, "", "t_view")
-    val c = firstAfter("click", Some(v), "t_view", "t_click")
-    val p = firstAfter("purchase", Some(c), "t_click", "t_purchase")
-    def cnt(df: DataFrame, step: String, depth: Int) =
-      df.agg(count(lit(1)).as("n_users"))
-        .select(lit(depth.toLong).as("depth"), lit(step).as("step"), col("n_users"))
-    cnt(v, "view", 1).unionAll(cnt(c, "click", 2)).unionAll(cnt(p, "purchase", 3))
-  }
-
-  /** Exact interpolated percentiles per group (Spark `percentile` and
-    * DuckDB `quantile_cont` share the p*(n-1) linear-interpolation
-    * definition). */
-  private def percentiles(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(
-        expr("percentile(value, 0.25)").as("p25"),
-        expr("percentile(value, 0.5)").as("p50"),
-        expr("percentile(value, 0.75)").as("p75"))
-
-  /** Weekly retention cohorts: users grouped by the ISO week of their
-    * first event; each later event credits the (cohort_week,
-    * weeks_since) cell with one distinct user. The classic
-    * product-analytics matrix, all in exact integer time arithmetic
-    * (micros difference / week length — both engines truncate weeks
-    * to ISO Monday). Two shuffles: the per-user min and the
-    * user-keyed join back (same key, so AQE can reuse the exchange);
-    * the distinct-count recount is partial-agg friendly. */
-  private def retentionCohorts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val first = ev.groupBy(col("user_id"))
-      .agg(date_trunc("week", min(col("ts"))).as("cohort_week"))
-    val weekMicros = 7L * 86400L * 1000000L
-    ev.join(first, "user_id")
-      .withColumn("weeks_since",
-        ((unix_micros(date_trunc("week", col("ts")).cast("timestamp")) -
-          unix_micros(col("cohort_week").cast("timestamp"))) / weekMicros)
-          .cast("long"))
-      .groupBy(col("cohort_week").cast("timestamp_ntz").as("cohort_week"),
-        col("weeks_since"))
-      .agg(count_distinct(col("user_id")).as("n_users"))
-  }
-
-  /** CUBE totals over (event_type, year): all four grouping-set
-    * combinations in one pass — the full-lattice twin of
-    * [[rollupAgg]]'s hierarchy (§2.6 note). Partial aggregation holds
-    * per grouping set, so the exchange carries only group cells. */
-  private def cubeAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("year", year(col("ts")).cast("int"))
-      .cube(col("event_type"), col("year"))
-      .agg(count(lit(1)).as("n"),
-        Exact.dsum(col("value")).as("sum_value"),
-        grouping(col("event_type")).cast("int").as("g_type"),
-        grouping(col("year")).cast("int").as("g_year"))
-
-  /** Incremental view maintenance, proven against the full recompute:
-    * history (event_id % 5 < 4) and the "new batch" (% 5 == 4) are
-    * aggregated separately in mergeable integer domains, merged with
-    * [[graft.operators.Incremental.mergeAggregates]], and the result
-    * must equal the one-shot aggregate over everything — which is
-    * exactly what the oracle computes. Money stays in cents (long)
-    * until the final divide, so merge order cannot drift the sum. */
-  private def incrementalAgg(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-    def aggOf(df: DataFrame) = df.groupBy(col("event_type")).agg(
-      count(lit(1)).as("n"),
-      Exact.centsSum(col("value")).as("value_cents"),
-      min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-    val merged = graft.operators.Incremental.mergeAggregates(
-      aggOf(ev.filter(pmod(col("event_id"), lit(5)) < 4)),
-      aggOf(ev.filter(pmod(col("event_id"), lit(5)) === 4)),
-      Seq("event_type"),
-      Map("n" -> "sum", "value_cents" -> "sum",
-        "first_ts" -> "min", "last_ts" -> "max"))
-    merged.select(col("event_type"), col("n"),
-      (col("value_cents") / 100.0).as("sum_value"),
-      col("first_ts"), col("last_ts"))
-  }
-
-  /** Population covariance per group, derived from engine-exact
-    * decimal sums (sum(x), sum(y), sum(x*y) are exact; the final
-    * double arithmetic is the same three operations in any engine —
-    * unlike covar_pop's streaming accumulation, which is
-    * order-dependent). */
-  private def lineitemCov(spark: SparkSession, dir: String): DataFrame = {
-    val l = Tables.lineitem(spark, dir)
-    // operand precisions sized so the product (27,4) stays inside the
-    // 38-digit decimal cap in EVERY engine — a (28,4)^2 product would
-    // overflow and round engine-specifically
-    val Dx = DecimalType(12, 2)
-    val Dy = DecimalType(14, 2)
-    l.groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("l_quantity").cast(Dx)).as("sx"),
-        sum(col("l_extendedprice").cast(Dy)).as("sy"),
-        sum((col("l_quantity").cast(Dx) * col("l_extendedprice").cast(Dy))).as("sxy"))
-      .select(col("l_returnflag"), col("n"),
-        col("sx").cast("double").as("sum_qty"),
-        col("sy").cast("double").as("sum_price"),
-        ((col("sxy").cast("double") -
-          col("sx").cast("double") * col("sy").cast("double") / col("n"))
-          / col("n")).as("covar_pop"))
-  }
-
-  /** Event-time tumbling (hourly) aggregation — the batch twin of the
-    * streaming windowed count (§2.11 extension). */
-  private def eventsWindowAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour_start"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), Exact.dsum(col("value")).as("sum_value"))
-
-  // =================================================================
-  // north-star extensions: dedup / text analysis / similarity search
-  // =================================================================
-
-  import graft.dedup.Dedup
-  import graft.functions.TextFunctions
-  import graft.similarity.Similarity
-
-  private def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exact(Tables.documents(spark, dir))
-
-  private def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNearDups(Tables.documents(spark, dir))
-
-  /** Cross-corpus overlap audit ([[graft.dedup.Dedup.crossNearDups]]):
-    * docs < 250 play the accepted corpus, the rest the incoming crawl;
-    * scored near-dup pairs BETWEEN the two only. */
-  private def dedupCross(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    Dedup.crossNearDups(docs.filter(col("doc_id") < 250),
-      docs.filter(col("doc_id") >= 250))
-  }
-
-  /** Train/val/test split leakage audit
-    * ([[graft.operators.Splits.splitLeakage]]): deterministic salted
-    * hash split (10/10/80), then every val/test document whose
-    * near-duplicate (Jaccard ≥ 0.8) sits in train — the memorized-eval
-    * hazard an exact-dup check misses. */
-  private def splitLeakageQ(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Splits.splitLeakage(Tables.documents(spark, dir))
-
-  /** Near-dup pairs → connected components → keep/drop decision. */
-  private def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    Dedup.nearDupClusters(
-      Dedup.minhashNearDups(Tables.documents(spark, dir)).select("doc_a", "doc_b"))
-      .withColumn("keep", col("doc_id") === col("cluster_id"))
-
-  private def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(Tables.documents(spark, dir), maxId = 40L)
-
-  /** Radius 3 is the production-typical SimHash cutoff: the pigeonhole
-    * blocking yields 4 blocks x 15 bits, so buckets stay near-empty and
-    * candidate generation is ~linear. (Radius 10 would shrink blocks to
-    * ~5 bits and explode the bucket self-join quadratically.) */
-  private def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashNearDups(Tables.documents(spark, dir), maxHamming = 3)
-
-  private def textStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      length(t).cast("bigint").as("len_chars"),
-      TextFunctions.wsTokenCount(t).as("n_tokens"),
-      TextFunctions.stopwordCount(t).as("n_stopwords"),
-      TextFunctions.punctCount(t).as("n_punct"),
-      TextFunctions.tokenLenSum(t).as("token_len_sum"))
-      .withColumn("stopword_ratio",
-        col("n_stopwords").cast("double") / col("n_tokens").cast("double"))
-      .withColumn("avg_token_len",
-        col("token_len_sum").cast("double") / col("n_tokens").cast("double"))
-  }
-
-  private def textLangId(spark: SparkSession, dir: String): DataFrame = {
-    val t = col("text")
-    val scored = Tables.documents(spark, dir).select(
-      (Seq(col("doc_id"), col("lang")) ++
-        TextFunctions.langMarkers.map { case (l, m) =>
-          TextFunctions.langScore(t, m).as(s"s_$l") }): _*)
-    scored.withColumn("lang_pred", {
-      // argmax chain generated from langMarkers so language list and
-      // priority order stay single-sourced (mirrors the oracle SQL,
-      // which is generated from the same table)
-      val langs = TextFunctions.langMarkers.map(_._1)
-      val all = langs.map(l => col(s"s_$l"))
-      val chain = langs.init.foldRight(lit(langs.last): Column) { (l, rest) =>
-        val others = langs.filterNot(_ == l).map(o => col(s"s_$o"))
-        when(col(s"s_$l") >= greatest(others: _*), l).otherwise(rest)
-      }
-      when(all.reduce(_ + _) === 0, "und").otherwise(chain)
-    })
-  }
-
-  /** Composite document-quality scoring (C4/Gopher-style filter flags). */
-  private def textQuality(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("flags", TextFunctions.qualityFlags(col("text")))
-      .select(col("doc_id"),
-        col("flags.too_short"), col("flags.low_stopword_ratio"),
-        col("flags.high_punct_ratio"),
-        TextFunctions.qualityScore(col("flags")).as("quality_score"))
-
-  /** Gopher-rules quality filter (Rae et al. 2021): integer measures +
-    * cross-multiplied ratio flags, engine-exact. `minRequiredHits = 1`
-    * because the synthetic corpus vocabulary carries only one of the
-    * closed-class required words (the paper's web-text default is 2). */
-  private def qualityGopher(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("m", TextFunctions.gopherMeasures(col("text")))
-      .withColumn("f", TextFunctions.gopherFlags(col("m"), minRequiredHits = 1))
-      .select(col("doc_id"),
-        col("m.n_words"), col("m.word_len_sum"), col("m.n_alpha_words"),
-        col("m.n_symbols"), col("m.n_lines"), col("m.n_bullet_lines"),
-        col("m.n_ellipsis_lines"), col("m.req_stop_hits"),
-        col("f.word_count_ok"), col("f.word_len_ok"), col("f.symbol_ok"),
-        col("f.bullet_ok"), col("f.ellipsis_ok"), col("f.alpha_ok"),
-        col("f.stopword_ok"), col("f.keep"))
-
-  /** Per-source/per-language corpus report with ROLLUP subtotals —
-    * the "what's in my training mix" dashboard query. One partial+final
-    * hash aggregate; rollup adds no extra shuffle. */
-  private def corpusStatsBySource(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("toks", TextFunctions.wsTokenCount(col("text")))
-      .rollup(col("source"), col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum("toks").as("sum_tokens"),
-        sum("n_chars").as("sum_chars"),
-        grouping_id().as("grp"))
-
-  private def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      TextFunctions.wsTokenCount(col("text")).as("ws_tokens"),
-      TextFunctions.bpeTokenCount(col("text")).as("bpe_tokens"))
-
-  /** LLM-prep chunking: one row per 32-token window per document. */
-  private def textChunks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), posexplode(TextFunctions.chunks(col("text"), 32)))
-      .withColumnRenamed("pos", "chunk_idx")
-      .withColumnRenamed("col", "chunk_text")
-      .withColumn("chunk_idx", col("chunk_idx").cast("int"))
-      .withColumn("n_chunk_tokens", TextFunctions.wsTokenCount(col("chunk_text")))
-
-  /** Overlapping retrieval chunks
-    * ([[TextFunctions.chunksOverlap]]): 32-token windows every 24
-    * tokens (8-token overlap) — boundary sentences appear whole in at
-    * least one chunk. */
-  private def textChunksOverlap(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        posexplode(TextFunctions.chunksOverlap(col("text"), 32, 24)))
-      .select(col("doc_id"), col("pos").cast("int").as("chunk_idx"),
-        col("col.start_tok").cast("int").as("start_tok"),
-        col("col.chunk_text").as("chunk_text"))
-      .withColumn("n_chunk_tokens", TextFunctions.wsTokenCount(col("chunk_text")))
-
-  /** PII-style scrubbing over documents. */
-  private def textScrub(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"), TextFunctions.scrub(col("text")).as("scrubbed"))
-
-  private def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame =
-    TextFunctions.tfidfTopTerms(Tables.documents(spark, dir), k = 5)
-
-  /** Decontamination stage: 80/20 deterministic hash split of the
-    * corpus, then the train→test 3-gram contamination fraction per
-    * held-out document. */
-  private def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), "decon")
-    TextFunctions.contamination(
-      docs.filter(bucket < 80), docs.filter(bucket >= 80))
-  }
-
-  /** ONE eager pipeline run per source snapshot, shared by the three
-    * corpus queries: [[graft.pipeline.CorpusPipeline.prepare]] runs
-    * once (under [[graft.sources.LayoutCache]], keyed on a content
-    * fingerprint of `documents.parquet` — the amortized layout-build
-    * discipline, metered separately by Bench), its narrow decision
-    * lists persist as parquet, and every consumer re-assembles the
-    * SAME snapshot's lazy tail from them. This mirrors production —
-    * the funnel report and the per-doc audit describe the run that
-    * shipped, not three independent re-runs — and the oracles are
-    * unchanged because the lists are deterministic. */
-  /** The cached lists are a SEMANTIC artifact: they encode the
-    * pipeline's parameters and algorithm, not just the input bytes —
-    * so the layout prefix carries a version tag that MUST be bumped
-    * whenever the prepare() call below (params) or the pipeline's
-    * algorithms change semantics. Without it, a cross-JVM cache hit
-    * after a code change would replay stale decisions and the oracle
-    * compare would catch it only as an unexplained hash mismatch. */
-  private val CorpusListsVersion = "v2-wt256-ns8-mj0.8-meo0.1" // v2: +stages.json
-
-  private def corpusListsDir(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "documents.parquet")))
-    graft.sources.LayoutCache.ensure(s"graft_corpus_lists_$CorpusListsVersion",
-      new java.io.File(dir).getName, fp) { tmp =>
-      val docs = Tables.documents(spark, dir)
-      val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), "decon")
-      val prep = graft.pipeline.CorpusPipeline.prepare(
-        docs.filter(bucket < 80), evalDocs = Some(docs.filter(bucket >= 80)),
-        windowTokens = 256, nShards = 8)
-      try {
-        prep.lists.keepIds.write.parquet(s"$tmp/keep_ids")
-        prep.lists.dupOf.write.parquet(s"$tmp/dup_of")
-        prep.lists.dirtyIds.get.write.parquet(s"$tmp/dirty_ids")
-        // the eager stage split travels WITH the snapshot it describes:
-        // a later JVM serving these lists from cache never ran
-        // prepare(), so the bench reads the split from here instead of
-        // reporting an empty one ([[corpusListsStages]])
-        val stages = graft.pipeline.CorpusPipeline.lastStageSeconds.get()
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(tmp, "stages.json"),
-          stages.map { case (k, v) => s""""$k":$v""" }
-            .mkString("{", ",", "}"))
-        // the three Spark writes leave their own markers; LayoutCache's
-        // completeness contract wants one at the layout root
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
-        ()
-      } finally prep.release()
-    }
-  }
-
-  /** The eager stage split of the build that produced `dir`'s cached
-    * corpus snapshot — read from the layout itself, so it describes
-    * the run the lists came from even when THIS JVM served them from
-    * cache and never ran the pipeline. */
-  def corpusListsStages(spark: SparkSession, dir: String): Map[String, Double] =
-    try {
-      val f = new java.io.File(corpusListsDir(spark, dir), "stages.json")
-      if (!f.isFile) Map.empty
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(f)
-        import scala.jdk.CollectionConverters._
-        root.fieldNames().asScala.map(k => k -> root.get(k).asDouble()).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  private def corpusPreparedShared(spark: SparkSession,
-                                   dir: String): graft.pipeline.CorpusPipeline.Prepared = {
-    val p = corpusListsDir(spark, dir)
-    val lists = graft.pipeline.CorpusPipeline.PreparedLists(
-      spark.read.parquet(s"$p/keep_ids"),
-      spark.read.parquet(s"$p/dup_of"),
-      Some(spark.read.parquet(s"$p/dirty_ids")))
-    val docs = Tables.documents(spark, dir)
-    val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), "decon")
-    graft.pipeline.CorpusPipeline.assemble(
-      docs.filter(bucket < 80), lists, windowTokens = 256, nShards = 8)
-  }
-
-  /** Flagship one-call corpus preparation
-    * ([[graft.pipeline.CorpusPipeline.prepare]]): quality filter →
-    * MinHash-LSH near-dup removal → benchmark decontamination against
-    * the held-out 20% hash split → fixed-window sequence packing.
-    * Output is the training-ready packed frame (placement + text),
-    * re-assembled from the shared snapshot lists (see
-    * [[corpusListsDir]]). */
-  private def corpusPrepare(spark: SparkSession, dir: String): DataFrame =
-    corpusPreparedShared(spark, dir).packed
-
-  /** Sharded training export round-trip
-    * ([[graft.sources.TrainingExport.export]]): documents packed into
-    * 8 shards, exported one-file-per-shard with a content manifest,
-    * read back — the oracle is the identity on the exported columns
-    * (the manifest fingerprints are spec-tier:
-    * `TrainingExportSpec`). */
-  private def exportShards(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val docs = Tables.documents(spark, dir).select(
-      col("doc_id"),
-      (col("doc_id") % 8).cast("int").as("shard"),
-      size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-    // per-PROCESS path — same rationale as json_shred: the rewrite is
-    // the operator, and cross-JVM sharing would race reader vs writer
-    val out = graft.sources.TempDirs.perProcess(
-      s"graft_export_${dirFingerprint(dir)}")
-    graft.sources.TrainingExport.export(docs, out, "shard", "n_tokens",
-      orderCols = Seq("doc_id"))
-    spark.read.parquet(out)
-      .select(col("doc_id"), col("shard").cast("int").as("shard"), col("n_tokens"))
-  }
-
-  /** JSONL twin of [[exportShards]]
-    * ([[graft.sources.TrainingExport.exportJsonl]]): same
-    * one-file-per-shard, declared-order, recomputed-manifest
-    * discipline over the text format trainers stream; the oracle is
-    * the same read-back identity (types pinned by the declared
-    * schema, never inferred from the on-disk text). */
-  private def exportShardsJsonl(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val docs = Tables.documents(spark, dir).select(
-      col("doc_id"),
-      (col("doc_id") % 8).cast("int").as("shard"),
-      size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-    val out = graft.sources.TempDirs.perProcess(
-      s"graft_export_jsonl_${dirFingerprint(dir)}")
-    graft.sources.TrainingExport.exportJsonl(docs, out, "shard", "n_tokens",
-      orderCols = Seq("doc_id"))
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      docs.schema.fields.filterNot(_.name == "shard"))
-    spark.read.schema(dataSchema).json(out)
-      .select(col("doc_id"), col("shard").cast("int").as("shard"), col("n_tokens"))
-  }
-
-  /** k-anonymity release gate ([[graft.validate.Privacy]]): events
-    * under QI (event_type, day, value decile) — one aggregate keyed
-    * by the QI tuple, one O(1) report row with exposure in exact
-    * basis points. */
-  /** Seeded ε-DP count release ([[graft.validate.Privacy.dpCounts]]):
-    * per-language document counts released at ε = 0.5 with Laplace
-    * noise that is a pure function of (seed, group) — md5-derived
-    * uniform bucket through the literal inverse-CDF table — so the
-    * release is reproducible and the oracle inlines the SAME table
-    * literals (generated by the same Scala function) and replays the
-    * mechanism exactly. The symmetry/scaling/determinism laws are
-    * PrivacySpec rows. */
-  private def dpCountsQ(spark: SparkSession, dir: String): DataFrame =
-    graft.validate.Privacy.dpCounts(
-      Tables.documents(spark, dir).select("lang"), "lang",
-      epsMicro = 500000L)
-
-  /** Seeded ε-DP bounded-sum release
-    * ([[graft.validate.Privacy.dpSum]]): per-event-type spend totals
-    * with values clamped at \$80 (sensitivity = the cap) and
-    * Laplace(cap/ε) noise at ε = 0.5 — the same seeded-LUT
-    * discipline as `dp_counts`, with the clamp replayed in SQL. */
-  private def dpSumQ(spark: SparkSession, dir: String): DataFrame =
-    graft.validate.Privacy.dpSum(
-      Tables.events(spark, dir).select("event_type", "value"),
-      "event_type", "value", capMicro = 80000000L, epsMicro = 500000L)
-
-  private def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir).select(
-      col("event_type"),
-      to_date(col("ts")).as("day"),
-      floor(col("value") / 10).cast("long").as("value_decile"))
-    graft.validate.Privacy.kAnonymityReport(
-      e, Seq("event_type", "day", "value_decile"), k = 5)
-  }
-
-  /** l-diversity audit ([[graft.validate.Privacy.lDiversityGroups]]):
-    * classes under QI (event_type, day) whose sensitive value-decile
-    * takes < 3 distinct values — the leak k-anonymity misses (a
-    * uniform class re-identifies its sensitive value at ANY k). */
-  private def lDiversity(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir).select(
-      col("event_type"),
-      to_date(col("ts")).as("day"),
-      floor(col("value") / 10).cast("long").as("value_decile"))
-    graft.validate.Privacy.lDiversityGroups(
-      e, Seq("event_type", "day"), "value_decile", l = 3)
-  }
-
-  /** Pipeline capstone: the SHARED prepared snapshot's packed corpus
-    * ([[corpusPreparedShared]]) exported as JSONL training shards with
-    * a recomputed manifest ([[graft.sources.TrainingExport
-    * .exportJsonl]]) and read back schema-pinned — curation → packing
-    * → export → consumption in one oracle-checked chain (the oracle
-    * is `corpus_prepare`'s staged CTE replay: export→read-back is the
-    * identity). */
-  private def corpusExport(spark: SparkSession, dir: String): DataFrame = {
-    val packed = corpusPreparedShared(spark, dir).packed
-    val out = graft.sources.TempDirs.perProcess(
-      s"graft_corpus_export_${dirFingerprint(dir)}")
-    graft.sources.TrainingExport.exportJsonl(packed, out, "shard", "n_tokens",
-      orderCols = Seq("bin_id", "offset_in_bin", "doc_id"))
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      packed.schema.fields.filterNot(_.name == "shard"))
-    val back = spark.read.schema(dataSchema).json(out)
-    // an empty packed corpus (every doc filtered) exports no partition
-    // directories, so the shard column must be restored as typed null
-    val withShard =
-      if (back.columns.contains("shard")) back
-      else back.withColumn("shard", lit(null).cast("int"))
-    withShard
-      .select(col("doc_id"), col("shard").cast("int").as("shard"),
-        col("n_tokens"), col("start_tok"), col("bin_id"),
-        col("offset_in_bin"), col("text"))
-  }
-
-  /** Packing fragmentation report: per shard, how many packed
-    * documents CROSS a context-window boundary (a fragmented document
-    * trains on a truncated prefix/suffix — the packing-quality metric
-    * that decides window size and shard order policies), in exact
-    * basis points. One narrow aggregate over the shared snapshot's
-    * placement frame. */
-  private def packFragmentation(spark: SparkSession, dir: String): DataFrame =
-    corpusPreparedShared(spark, dir).packed
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(expr("start_tok div 256") =!=
-          expr("(start_tok + n_tokens - 1) div 256"), 1L)
-          .otherwise(0L)).as("n_crossing"))
-      .select(col("shard"), col("n_docs"), col("n_crossing"),
-        expr("(n_crossing * 10000) div greatest(n_docs, 1)").as("crossing_bps"))
-
-  /** Batched model-inference plumbing
-    * ([[graft.operators.Inference.batchScore]]): the deterministic
-    * hash model scores every document through the real batching path
-    * (64-doc batches, per-partition init, contract checks); the
-    * oracle replays the fake model's formula row-wise. */
-  private def modelScore(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Inference.batchScore(
-      Tables.documents(spark, dir),
-      graft.operators.Inference.hashScoreModel, batchSize = 64)
-
-  /** Per-doc provenance of [[corpusPrepare]]
-    * ([[graft.pipeline.CorpusPipeline.Prepared.disposition]]): why
-    * each input document survived or died — quality gate, duplicate
-    * (with the kept representative), contamination — in the
-    * pipeline's own stage order, read from the SAME snapshot lists
-    * the prepare query packs (audit the run that shipped). */
-  private def corpusDisposition(spark: SparkSession, dir: String): DataFrame =
-    corpusPreparedShared(spark, dir).disposition
-
-  /** Curation funnel: disposition counts of [[corpusDisposition]] —
-    * the one-row-per-stage survival report an ops dashboard tracks
-    * across corpus snapshots (input → quality gate → dedup →
-    * decontamination). */
-  private def corpusFunnel(spark: SparkSession, dir: String): DataFrame =
-    corpusDisposition(spark, dir)
-      .groupBy(col("disposition"))
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** Content-defined chunking ([[TextFunctions.cdcChunkRows]]): w=4
-    * rolling window, 2^3-token expected chunks over the documents
-    * table. The oracle replays the same boundary rule row-wise
-    * (window string_agg + cumulative boundary count). */
-  private def cdcChunks(spark: SparkSession, dir: String): DataFrame =
-    TextFunctions.cdcChunkRows(Tables.documents(spark, dir))
-
-  /** Chunk-level CDC dedup ([[TextFunctions.cdcDedup]]): rebuild every
-    * document from its first-occurrence chunks. */
-  private def cdcDedupQ(spark: SparkSession, dir: String): DataFrame =
-    TextFunctions.cdcDedup(Tables.documents(spark, dir))
-
-  private def docFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"), TextFunctions.fingerprint(col("text")).as("fingerprint"))
-
-  /** Order-sensitive rolling-hash fingerprint (vs the whitespace-
-    * normalized md5 of doc_fingerprint). */
-  private def docRollingHash(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(
-      col("doc_id"), TextFunctions.rollingHash(col("text")).as("rolling_hash"))
-
-  import graft.multimodal.Multimodal
-
-  /** Multimodal plumbing: typed binary asset table → mapPartitions
-    * feature extraction; only the SQL-expressible outputs are exposed
-    * for the oracle (byte length + content hash). */
-  private def multimodalFeatures(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.featurize(
-      Multimodal.syntheticAssets(Tables.documents(spark, dir)))
-      .toDF()
-      .select(col("asset_id"), col("media_type"), col("n_bytes"), col("content_hash"))
-
-  /** Real-codec frame pipeline: synthetic Y4M containers → container
-    * demux ([[graft.multimodal.Multimodal.frameSample]]) → per-frame
-    * features. The constant-luma construction makes every feature a
-    * closed-form function of (doc_id, frame_idx), so the oracle
-    * predicts the decoded bytes exactly — the same proof shape as
-    * `audio_features`. */
-  private def multimodalFrames(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.frameFeatures(Multimodal.frameSample(
-      Multimodal.syntheticVideoAssets(Tables.documents(spark, dir))))
-      .toDF()
-
-  /** Composed multimodal pipeline: decode → resize → featurize over
-    * the typed asset table (three chained mapPartitions stages). The
-    * XOR-roll decode + nearest-neighbor resize are pure byte arithmetic,
-    * so the whole pipeline IS oracle-expressible: the DuckDB twin
-    * replays the prefix-XOR with a bit_xor window and the resize with a
-    * list_transform index map. The checked hash is md5 over the
-    * lowercase hex rendering of the resized bytes (DuckDB's md5 takes
-    * VARCHAR only); byte_entropy_bits stays library-only (log2 is not
-    * bit-reproducible across engines). */
-  private def multimodalPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val resized = Multimodal.resize(
-      Multimodal.decode(
-        Multimodal.syntheticAssets(Tables.documents(spark, dir))),
-      dstW = 16, dstH = 12)
-    val hashes = resized.toDF().select(col("asset_id"),
-      md5(lower(hex(col("content")))).as("content_hash"))
-    Multimodal.featurize(resized).toDF()
-      .select(col("asset_id"), col("media_type"), col("n_bytes"), col("mean_byte"))
-      .join(hashes, "asset_id")
-  }
-
-  /** One-pass exact covariance profiling under the oracle
-    * ([[graft.operators.Profiler.covarianceReport]]): which lineitem
-    * measures move together, as exact integer moments — all six
-    * pairwise `n·cov` values plus per-column `n·var`, every unit
-    * scaled so the report stays long-ranged at any SF. The oracle
-    * replays the HUGEINT moments and floor divisions. */
-  private def profileCovariance(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiler.covarianceReport(Tables.lineitem(spark, dir), Seq(
-      "qty" -> round(col("l_quantity")).cast("long"),
-      "disc_milli" -> round(col("l_discount") * 1000).cast("long"),
-      "tax_milli" -> round(col("l_tax") * 1000).cast("long"),
-      "price_usd" -> round(col("l_extendedprice")).cast("long")))
-
-  private def profileCovarianceSql: String = {
-    val ms = Seq(
-      "qty" -> "CAST(round(l_quantity) AS BIGINT)",
-      "disc_milli" -> "CAST(round(l_discount * 1000) AS BIGINT)",
-      "tax_milli" -> "CAST(round(l_tax * 1000) AS BIGINT)",
-      "price_usd" -> "CAST(round(l_extendedprice) AS BIGINT)")
-    val names = ms.map(_._1)
-    val pairs = for { i <- names.indices; j <- (i + 1) until names.size }
-      yield (names(i), names(j))
-    val sums = (Seq("CAST(COUNT(*) AS HUGEINT) AS n") ++
-      names.map(n => s"SUM(CAST($n AS HUGEINT)) AS s_$n") ++
-      names.map(n => s"SUM(CAST($n AS HUGEINT) * CAST($n AS HUGEINT)) AS q_$n") ++
-      pairs.map { case (a, b) =>
-        s"SUM(CAST($a AS HUGEINT) * CAST($b AS HUGEINT)) AS p_${a}_$b" })
-      .mkString(",\n    ")
-    def fdiv(e: String) = s"CAST((($e) - ((($e) % n + n) % n)) // n AS BIGINT)"
-    val rows = pairs.map { case (a, b) =>
-      s"""SELECT '$a' AS col_x, '$b' AS col_y, CAST(n AS BIGINT) AS n,
-         |  ${fdiv(s"n * p_${a}_$b - s_$a * s_$b")} AS cov_n,
-         |  ${fdiv(s"n * q_$a - s_$a * s_$a")} AS var_nx,
-         |  ${fdiv(s"n * q_$b - s_$b * s_$b")} AS var_ny
-         |FROM s""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH m AS (
-       |  SELECT ${ms.map { case (n, e) => s"$e AS $n" }.mkString(", ")}
-       |  FROM lineitem
-       |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-       |    AND l_tax IS NOT NULL AND l_extendedprice IS NOT NULL),
-       |s AS MATERIALIZED (
-       |  SELECT $sums
-       |  FROM m)
-       |$rows""".stripMargin
-  }
-
-  /** Fixed-point token entropy under the oracle
-    * ([[graft.functions.TextFunctions.tokenEntropy]]): every
-    * document's Shannon entropy over its own token distribution in
-    * 1/2^16 bits — the lexical-diversity filter signal — with both
-    * log2 chains (per-count, per-total) replayed step-for-step. */
-  private def textEntropyQ(spark: SparkSession, dir: String): DataFrame =
-    TextFunctions.tokenEntropy(Tables.documents(spark, dir))
-
-  private def textEntropySql: String = {
-    def lg(tag: String, keys: String, src: String): String =
-      (Seq(s"""elg_${tag}_0 AS (
-         |  SELECT $keys, p, CAST(length(bin(p)) - 1 AS BIGINT) AS msb,
-         |    (CAST(p AS BIGINT) << 20) >> (length(bin(p)) - 1) AS x, CAST(0 AS BIGINT) AS acc
-         |  FROM $src)""".stripMargin) ++
-        (1 to 16).map(i => s"""elg_${tag}_$i AS (
-         |  SELECT $keys, p, msb,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN ((x*x) >> 20) >> 1 ELSE (x*x) >> 20 END AS x,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN acc*2+1 ELSE acc*2 END AS acc
-         |  FROM elg_${tag}_${i - 1})""".stripMargin) :+
-        s"""elg_$tag AS MATERIALIZED (
-         |  SELECT $keys, CAST(msb*65536 + acc AS BIGINT) AS lg
-         |  FROM elg_${tag}_16)""".stripMargin).mkString(",\n")
-    s"""WITH tkf AS MATERIALIZED (
-       |  SELECT doc_id, sym FROM (
-       |    SELECT doc_id, unnest($toksSql) AS sym FROM documents)
-       |  WHERE sym <> ''),
-       |tf AS MATERIALIZED (
-       |  SELECT doc_id, sym, CAST(COUNT(*) AS BIGINT) AS c FROM tkf GROUP BY 1, 2),
-       |nn AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM tf GROUP BY 1),
-       |cp AS (SELECT doc_id, sym, c AS p FROM tf),
-       |${lg("c", "doc_id, sym", "cp")},
-       |np AS (SELECT doc_id, n AS p FROM nn),
-       |${lg("n", "doc_id", "np")}
-       |SELECT tf.doc_id,
-       |  CAST((SUM(tf.c * (ln.lg - lc.lg)) - ((SUM(tf.c * (ln.lg - lc.lg)) % nn.n + nn.n) % nn.n)) // nn.n AS BIGINT) AS entropy_fp16
-       |FROM tf
-       |JOIN elg_c lc ON lc.doc_id = tf.doc_id AND lc.sym = tf.sym
-       |JOIN elg_n ln ON ln.doc_id = tf.doc_id
-       |JOIN nn ON nn.doc_id = tf.doc_id
-       |GROUP BY tf.doc_id, nn.n""".stripMargin
-  }
-
-  /** Integer Naive Bayes classifier under the oracle
-    * ([[graft.functions.TextFunctions.nbClassify]]): self-attribution
-    * of every document to its most probable `source` — train and
-    * serve in one statement, every probability a fixed-point integer,
-    * so the oracle replays counts, smoothing, all three 16-step log2
-    * chains (term costs, per-label defaults, priors) and the argmin. */
-  private def nbClassifyQ(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    TextFunctions.nbClassify(docs, docs)
-  }
-
-  private def nbSql: String = {
-    def lg(tag: String, keys: String, src: String): String =
-      (Seq(s"""nlg_${tag}_0 AS (
-         |  SELECT $keys, p, CAST(length(bin(p)) - 1 AS BIGINT) AS msb,
-         |    (CAST(p AS BIGINT) << 20) >> (length(bin(p)) - 1) AS x, CAST(0 AS BIGINT) AS acc
-         |  FROM $src)""".stripMargin) ++
-        (1 to 16).map(i => s"""nlg_${tag}_$i AS (
-         |  SELECT $keys, p, msb,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN ((x*x) >> 20) >> 1 ELSE (x*x) >> 20 END AS x,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN acc*2+1 ELSE acc*2 END AS acc
-         |  FROM nlg_${tag}_${i - 1})""".stripMargin) :+
-        s"""ncost_$tag AS MATERIALIZED (
-         |  SELECT $keys, CAST(26*65536 - (msb*65536 + acc) AS BIGINT) AS cost
-         |  FROM nlg_${tag}_16)""".stripMargin).mkString(",\n")
-    s"""WITH tkf AS MATERIALIZED (
-       |  SELECT doc_id, source AS label, sym FROM (
-       |    SELECT doc_id, source, unnest($toksSql) AS sym FROM documents)
-       |  WHERE sym <> ''),
-       |cnt AS MATERIALIZED (
-       |  SELECT label, sym, CAST(COUNT(*) AS BIGINT) AS c FROM tkf GROUP BY 1, 2),
-       |lt AS (SELECT label, CAST(SUM(c) AS BIGINT) AS t FROM cnt GROUP BY 1),
-       |vs AS (SELECT CAST(COUNT(DISTINCT sym) AS BIGINT) AS v FROM cnt),
-       |mp AS (SELECT cnt.label, cnt.sym, ((c + 1) * 1000000) // (t + v) AS p
-       |       FROM cnt JOIN lt USING (label), vs),
-       |${lg("m", "label, sym", "mp")},
-       |dp AS (SELECT label, 1000000 // (t + v) AS p FROM lt, vs),
-       |${lg("d", "label", "dp")},
-       |nd AS (SELECT source AS label, CAST(COUNT(*) AS BIGINT) AS n
-       |       FROM documents GROUP BY 1),
-       |ns AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(COUNT(*) AS BIGINT) AS l FROM nd),
-       |pp AS (SELECT label, ((n + 1) * 1000000) // (nn + l) AS p FROM nd, ns),
-       |${lg("p", "label", "pp")},
-       |tfq AS MATERIALIZED (
-       |  SELECT doc_id, sym, CAST(COUNT(*) AS BIGINT) AS tf FROM tkf GROUP BY 1, 2),
-       |x AS (SELECT q.doc_id, d.label, q.tf, COALESCE(m.cost, d.cost) AS cost
-       |      FROM tfq q CROSS JOIN ncost_d d
-       |      LEFT JOIN ncost_m m ON m.label = d.label AND m.sym = q.sym),
-       |tot AS (SELECT x.doc_id, x.label, p.cost + SUM(tf * x.cost) AS total
-       |        FROM x JOIN ncost_p p ON p.label = x.label GROUP BY 1, 2, p.cost)
-       |SELECT doc_id, label AS pred_label, CAST(total AS BIGINT) AS cost_fp
-       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-       |        ORDER BY total ASC, label ASC) AS rn FROM tot)
-       |WHERE rn = 1""".stripMargin
-  }
-
-  /** Transparent MV serving under the oracle
-    * ([[graft.plans.MvAggregateRewrite]]): the builder materializes
-    * `GROUP BY lang, source` aggregates of documents, registers the
-    * view, then issues the NATURAL base-table aggregate — and
-    * REQUIREs that the optimizer served it from the view (the
-    * optimized plan scans the MV parquet and keeps no Aggregate).
-    * The oracle is the plain aggregate over documents: the rewrite
-    * must change the plan, never the answer. */
-  /** Build-and-register the shared documents (lang, source) view —
-    * used by `mv_rewrite` (exact-dims serve) and `mv_rollup` (coarser
-    * re-aggregation); re-registration is an idempotent put. */
-  private def ensureMvView(spark: SparkSession, dir: String): (String, String) = {
-    import graft.plans.MvCatalog
-    val src = s"$dir/documents.parquet"
-    val mvPath = tmpArtifactRoot("mvrw", dir) + "/mv"
-    if (!new java.io.File(s"$mvPath/_SUCCESS").exists()) {
-      spark.read.parquet(src).groupBy("lang", "source")
-        .agg(sum(col("n_chars")).as("sum_chars"), count(lit(1)).as("n_docs"))
-        .write.mode("overwrite").parquet(mvPath)
-    }
-    MvCatalog.register(src, Seq("lang", "source"),
-      Seq(("sum", Some("n_chars"), "sum_chars"), ("count", None, "n_docs")), mvPath)
-    (src, mvPath)
-  }
-
-  private def mvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val (src, mvPath) = ensureMvView(spark, dir)
-    val q = spark.read.parquet(src).groupBy("lang", "source")
-      .agg(sum(col("n_chars")).as("sum_chars"), count(lit(1)).as("n_docs"))
-    val opt = q.queryExecution.optimizedPlan
-    val leafPaths = opt.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(leafPaths.exists(_.contains(mvPath)),
-      s"mv_rewrite: optimizer did not serve the registered view (scans: $leafPaths):\n$opt")
-    require(!opt.exists(_.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-      s"mv_rewrite: Aggregate survived the rewrite:\n$opt")
-    q
-  }
-
-  /** ROLLUP serving under the oracle: a coarser GROUP BY lang over
-    * documents is answered by RE-AGGREGATING the registered
-    * (lang, source) view — SUM of sums, SUM of counts — never
-    * scanning the base table. The builder REQUIREs the optimized plan
-    * aggregates over the view scan and touches no documents path;
-    * the oracle is the natural per-lang aggregate. */
-  private def mvRollup(spark: SparkSession, dir: String): DataFrame = {
-    val (src, mvPath) = ensureMvView(spark, dir)
-    val q = spark.read.parquet(src).groupBy("lang")
-      .agg(sum(col("n_chars")).as("sum_chars"), count(lit(1)).as("n_docs"))
-    val opt = q.queryExecution.optimizedPlan
-    val leafPaths = opt.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(leafPaths.exists(_.contains(mvPath)) &&
-        !leafPaths.exists(_.contains("documents.parquet")),
-      s"mv_rollup: rollup not served from the view (scans: $leafPaths):\n$opt")
-    require(opt.exists(_.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-      s"mv_rollup: expected a re-aggregation over the view:\n$opt")
-    q
-  }
-
-  /** Transparent MV serving over a TxnLog table
-    * ([[graft.plans.MvCatalog.registerGraft]]): same contract as
-    * `mv_rewrite`, but the base table is `format("graft")` and the
-    * staleness pin is the committed VERSION — the rewrite-time guard
-    * is one O(1) manifest-name listing, the shape the check must take
-    * at 100 TB. The builder proves the serve the same way (view
-    * scanned, no Aggregate). */
-  private def mvRewriteGraft(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.MvCatalog
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("mvrwg", dir)
-    val mvPath = tmpArtifactRoot("mvrwgv", dir) + "/mv"
-    if (TxnLog.latestVersion(spark, root) < 0L) {
-      TxnLog.overwrite(Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
-        root, Some("mv0"))
-      ()
-    }
-    def baseAgg = spark.read.format("graft").load(root).groupBy("lang", "source")
-      .agg(sum(col("n_chars")).as("sum_chars"), count(lit(1)).as("n_docs"))
-    if (!new java.io.File(s"$mvPath/_SUCCESS").exists()) {
-      baseAgg.write.mode("overwrite").parquet(mvPath)
-    }
-    MvCatalog.registerGraft(spark, root, Seq("lang", "source"),
-      Seq(("sum", Some("n_chars"), "sum_chars"), ("count", None, "n_docs")), mvPath)
-    val q = baseAgg
-    val opt = q.queryExecution.optimizedPlan
-    val leafPaths = opt.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
-    require(leafPaths.exists(_.contains(mvPath)),
-      s"mv_rewrite_graft: optimizer did not serve the view (scans: $leafPaths):\n$opt")
-    require(!opt.exists(_.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-      s"mv_rewrite_graft: Aggregate survived the rewrite:\n$opt")
-    q
-  }
-
-  /** Perceptual-hash image dedup over the REAL codec path
-    * ([[graft.multimodal.Multimodal.averageHash]] +
-    * [[graft.multimodal.Multimodal.phashNearDups]]): paired PNG
-    * assets (each document's plane plus a one-pixel perturbation)
-    * round-trip through the actual encoder, decode, 8×8
-    * nearest-neighbor resize, and 60-bit aHash; the banded Hamming
-    * join then recovers the planted near-dup pairs. PNG is lossless,
-    * so the oracle predicts every decoded byte closed-form (the
-    * multimodal_pipeline proof shape) and replays the hash, the
-    * pigeonhole bands, and the popcount verify verbatim. */
-  private def imagePhash(spark: SparkSession, dir: String): DataFrame = {
-    val assets = Multimodal.syntheticImagePairAssets(Tables.documents(spark, dir))
-    Multimodal.phashNearDups(Multimodal.averageHash(assets), maxHamming = 3)
-  }
-
-  /** Cross-modal duplicate ensemble
-    * ([[graft.dedup.Dedup.crossModalClusters]]): MinHash text pairs
-    * and perceptual-hash image pairs (asset pairs mapped onto their
-    * owning documents, same-doc perturbation pairs dropped) union
-    * into ONE connected-components clustering with per-modality
-    * evidence flags — the "same page, re-encoded image, paraphrased
-    * caption" merge single-modality dedup misses. The oracle composes
-    * the two proven chains (minhash band candidates + closed-form PNG
-    * hash pairs) and runs the recursive CC over their union. */
-  private def multimodalDedupEnsemble(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val textPairs = Dedup.minhashNearDups(docs).select("doc_a", "doc_b")
-    val assetPairs = Multimodal.phashNearDups(
-      Multimodal.averageHash(Multimodal.syntheticImagePairAssets(docs)),
-      maxHamming = 3)
-    val imagePairs = assetPairs.select(
-        least(expr("asset_a div 2"), expr("asset_b div 2")).as("doc_a"),
-        greatest(expr("asset_a div 2"), expr("asset_b div 2")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    Dedup.crossModalClusters(textPairs, imagePairs)
-  }
-
-  /** Residual-quantized ANN under the oracle
-    * ([[graft.similarity.Similarity.rqTopK]]): two additive first-k
-    * codebooks, tie-deterministic assignments, the nC1×nC2
-    * reconstruction LUT, ADC, and the exact-cosine rerank — the FULL
-    * production chain replayed (the sim_sq8 convention, stronger than
-    * exhaustive-only). */
-  private def simRq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.rqTopK(e.select("vec_id", "embedding"), queries,
-      k = 5, nC1 = 16, nC2 = 16, coarseK = 20)
-  }
-
-  private def simTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.bruteForceTopK(e.select("vec_id", "embedding"), queries, k = 5)
-  }
-
-  private def simIvf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.ivfTopK(e.select("vec_id", "embedding"), queries, dim = 64, k = 5)
-  }
-
-  /** Product-quantization ADC ANN
-    * ([[graft.similarity.Similarity.pqTopK]]): 64 float dims → 4
-    * one-byte codes against a 16-centroid codebook per subspace;
-    * distance = sum of per-subspace lookups. All-integer fixed-point
-    * arithmetic, so the oracle replays assignment and ADC exactly. */
-  private def simPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.pqTopK(e.select("vec_id", "embedding"), queries, dim = 64, k = 5)
-  }
-
-  /** Lloyd-trained PQ ([[graft.similarity.Similarity.pqTrainedTopK]]):
-    * two rounds of per-subspace exact fixed-point Lloyd improve the
-    * first-`nCents` sample codebook at the same code budget; the
-    * oracle unrolls both training rounds per subspace (the
-    * `sim_ivf_lloyd` convention) then replays the PQ chain. */
-  private def simPqTrained(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.pqTrainedTopK(e.select("vec_id", "embedding"), queries,
-      dim = 64, k = 5, iters = 2)
-  }
-
-  /** `sim_pq_trained` oracle: per-subspace Lloyd unrolled `iters`
-    * rounds in SQL (assignment by integer sq-distance with
-    * (d, cent_id) ties, update by exact sums + floor division, empty
-    * cells carry), then the [[simPq]] codes/ADC chain on cb$iters. */
-  private def pqTrainedSql(iters: Int): String = {
-    val sq16 = (a: String, b: String) =>
-      s"list_sum(list_transform(range(1, 17), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
-    val setup =
-      s"""WITH f AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |sub AS (
-         |  SELECT vec_id, CAST(t.j AS INTEGER) AS sub_id,
-         |    fv[t.j*16+1 : t.j*16+16] AS sv
-         |  FROM f, range(0, 4) t(j)),
-         |cb0 AS (
-         |  SELECT sub_id, vec_id AS cent_id, sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id ASC LIMIT 16))""".stripMargin
-    val its = (1 to iters).map { i =>
-      s""",
-         |a$i AS (
-         |  SELECT sub_id, cent_id, sv FROM (
-         |    SELECT s.sub_id, s.sv, c.cent_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub_id ORDER BY
-         |        ${sq16("s.sv", "c.cv")} ASC, c.cent_id ASC) AS rn
-         |    FROM sub s JOIN cb${i - 1} c USING (sub_id)) WHERE rn = 1),
-         |s$i AS (
-         |  SELECT sub_id, cent_id, p, SUM(sv[CAST(p AS INT) + 1]) AS s, COUNT(*) AS n
-         |  FROM a$i, range(0, 16) t(p) GROUP BY sub_id, cent_id, p),
-         |n$i AS (
-         |  SELECT sub_id, cent_id,
-         |    list(CAST((s - ((s % n + n) % n)) // n AS BIGINT) ORDER BY p) AS cv
-         |  FROM s$i GROUP BY sub_id, cent_id),
-         |cb$i AS (
-         |  SELECT c.sub_id, c.cent_id, COALESCE(n$i.cv, c.cv) AS cv
-         |  FROM cb${i - 1} c LEFT JOIN n$i
-         |    ON c.sub_id = n$i.sub_id AND c.cent_id = n$i.cent_id)""".stripMargin
-    }.mkString
-    setup + its +
-      s""",
-         |codes AS (
-         |  SELECT vec_id, sub_id, cent_id FROM (
-         |    SELECT s.vec_id, s.sub_id, c.cent_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub_id ORDER BY
-         |        ${sq16("s.sv", "c.cv")} ASC, c.cent_id ASC) AS rn
-         |    FROM sub s JOIN cb$iters c USING (sub_id)) WHERE rn = 1),
-         |dtab AS (
-         |  SELECT s.vec_id AS q_id, s.sub_id, c.cent_id,
-         |    CAST(${sq16("s.sv", "c.cv")} AS BIGINT) AS d
-         |  FROM sub s JOIN cb$iters c USING (sub_id) WHERE s.vec_id < 10),
-         |adc AS (
-         |  SELECT t.q_id, k.vec_id, CAST(SUM(t.d) AS BIGINT) AS adc
-         |  FROM codes k JOIN dtab t ON k.sub_id = t.sub_id AND k.cent_id = t.cent_id
-         |  WHERE k.vec_id <> t.q_id GROUP BY 1, 2)
-         |SELECT q_id, vec_id, rank, adc FROM (
-         |  SELECT q_id, vec_id, adc,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY adc ASC, vec_id ASC) AS BIGINT) AS rank
-         |  FROM adc) WHERE rank <= 5""".stripMargin
-  }
-
-  /** OPQ-gated PQ ([[graft.similarity.Similarity.opqTopK]]): the
-    * eigenvalue-allocation permutation engages only on a measurably
-    * variance-skewed corpus; the oracle recomputes the per-dim
-    * integer variances, the skew gate, and the snake permutation in
-    * SQL — no literals — then replays the PQ chain over the chosen
-    * layout. */
-  private def simOpq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.opqTopK(e.select("vec_id", "embedding"), queries, dim = 64, k = 5)
-  }
-
-  /** IVF over Spark-ML-trained k-means centroids, run at full probe
-    * width (`nProbe = nCells`). ML KMeans accumulates float partial
-    * sums in partition order, so its centroids are not
-    * bit-reproducible outside Spark and no SQL oracle can restate
-    * them — but the standard IVF invariant is that probing EVERY cell
-    * scores every (query, candidate) pair exactly once, making the
-    * result identical to brute-force top-k no matter what centroids
-    * training produced. That is what the oracle checks (same SQL as
-    * `sim_topk`): the full chain — ML training, cell assignment,
-    * probing, per-cell scoring, global top-k — runs live, and the
-    * exact-at-full-probe guarantee is hash-verified. The reduced-probe
-    * trained-centroid path is `sim_ivf_lloyd`, whose fixed-point
-    * trainer ([[graft.similarity.Similarity.lloydCentroidsExact]])
-    * lets the oracle replay training itself. */
-  private def simIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cents = Similarity.kmeansCentroids(e.select("vec_id", "embedding"), nCells = 16)
-    Similarity.ivfTopK(e.select("vec_id", "embedding"), queries,
-      dim = 64, k = 5, nCells = 16, nProbe = 16, centroids = Some(cents))
-  }
-
-  /** IVF over exactly-trained Lloyd centroids
-    * ([[graft.similarity.Similarity.lloydCentroidsExact]]): integer
-    * micro-unit arithmetic end-to-end, so the DuckDB oracle replays the
-    * full 2-iteration training verbatim — the oracle-checkable trained-
-    * centroid path that `sim_ivf_kmeans` (ML floats) cannot be. */
-  private def simIvfLloyd(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cents = Similarity.lloydCentroidsExact(
-      e.select("vec_id", "embedding"), nCells = 16, iters = 2)
-    Similarity.ivfTopK(e.select("vec_id", "embedding"), queries,
-      dim = 64, k = 5, nCells = 16, nProbe = 4, centroids = Some(cents))
-  }
-
-  /** Fixed-point PCA power iteration under the oracle
-    * ([[graft.similarity.Similarity.pc1Scores]]): every embedding's
-    * coordinate along the corpus's dominant principal direction, in
-    * exact micro-units — the "all-but-the-top" isotropy primitive.
-    * The oracle replays the mean-centering, all three v ← Xᵀ(Xv)
-    * rounds (HUGEINT back-projection, floor-division renormalization)
-    * and the final scoring, verbatim. */
-  private def embedPca(spark: SparkSession, dir: String): DataFrame =
-    Similarity.pc1Scores(
-      Tables.embeddings(spark, dir).select("vec_id", "embedding"), iters = 3)
-
-  private def pcaSql(iters: Int): String = {
-    val ones = Seq.fill(64)("1000000").mkString("[", ", ", "]")
-    val setup =
-      s"""WITH f AS MATERIALIZED (
-         |  SELECT vec_id, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |st AS (
-         |  SELECT p, SUM(fv[CAST(p AS INT) + 1]) AS s, COUNT(*) AS n
-         |  FROM f, range(0, 64) t(p) GROUP BY p),
-         |mu AS MATERIALIZED (
-         |  SELECT list(CAST((s - ((s % n + n) % n)) // n AS BIGINT) ORDER BY p) AS mv
-         |  FROM st),
-         |xc AS MATERIALIZED (
-         |  SELECT vec_id, list_transform(range(1, 65),
-         |    i -> fv[i] - mu.mv[i]) AS xc
-         |  FROM f, mu),
-         |v0 AS (SELECT $ones AS v)""".stripMargin
-    val rounds = (1 to iters).map { t =>
-      s""",
-         |sc$t AS MATERIALIZED (
-         |  SELECT vec_id, xc, list_sum(list_transform(range(1, 65),
-         |    i -> xc[i] * pv.v[i])) AS s
-         |  FROM xc, v${t - 1} pv),
-         |w$t AS MATERIALIZED (
-         |  SELECT p, SUM(CAST(xc[CAST(p AS INT) + 1] AS HUGEINT) * s) AS w
-         |  FROM sc$t, range(0, 64) t(p) GROUP BY p),
-         |m$t AS (SELECT MAX(ABS(w)) AS m FROM w$t),
-         |v$t AS MATERIALIZED (
-         |  SELECT list(CAST((w * 1000000 - (((w * 1000000) % m + m) % m)) // m AS BIGINT)
-         |    ORDER BY p) AS v
-         |  FROM w$t, m$t)""".stripMargin
-    }.mkString
-    setup + rounds +
-      s""",
-         |fin AS (
-         |  SELECT vec_id, list_sum(list_transform(range(1, 65),
-         |    i -> xc[i] * pv.v[i])) AS s
-         |  FROM xc, v$iters pv),
-         |dd AS (
-         |  SELECT CAST(((vv - (vv % 1000000)) // 1000000) AS BIGINT) AS d FROM (
-         |    SELECT list_sum(list_transform(v, x -> x * x)) AS vv FROM v$iters))
-         |SELECT vec_id, CAST((s - ((s % d + d) % d)) // d AS BIGINT) AS pc1_micro
-         |FROM fin, dd""".stripMargin
-  }
-
-  /** k-means|| scalable initialization under the oracle
-    * ([[graft.similarity.Similarity.kmeansParallelInit]], Bahmani et
-    * al. VLDB 2012): 3 rounds of D²-weighted batch sampling (md5
-    * uniforms, exact integer cross-multiplied acceptance), weights
-    * from a nearest-candidate census, and a weighted fixed-point
-    * Lloyd over the candidate set. The ENTIRE training — every
-    * sampling decision included — replays in DuckDB CTEs; the query
-    * emits the final centroids as narrow (cell_id, pos, micro) rows. */
-  private def kmeansppInit(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val cents = Similarity.kmeansParallelInit(
-      e.select("vec_id", "embedding"),
-      nCells = 8, oversample = 8, rounds = 3, lloydIters = 2)
-    cents.select(col("cell_id"), posexplode(col("cv")).as(Seq("p", "c")))
-      .select(col("cell_id"), col("p").cast("long").as("p"), col("c"))
-  }
-
-  /** The full k-means|| replay for the `kmeanspp_init` oracle —
-    * sampling rounds, weight census, weighted-Lloyd recluster —
-    * mirroring [[kmeansppInit]]'s parameters. MATERIALIZED CTEs: the
-    * round chain references each stage more than once and DuckDB
-    * inlines CTEs by default (the unigram_train lesson). */
-  private def kmeansppSql(nCells: Int, oversample: Int, rounds: Int,
-                          lloydIters: Int): String = {
-    val d2fc = "list_sum(list_transform(range(1, 65), i -> (f.fv[i] - c.cv[i]) * (f.fv[i] - c.cv[i])))"
-    val setup =
-      s"""WITH f AS MATERIALIZED (
-         |  SELECT vec_id, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |k0 AS (SELECT vec_id AS cand_id, fv AS cv FROM f ORDER BY vec_id ASC LIMIT 1)""".stripMargin
-    val rds = (1 to rounds).map { t =>
-      s""",
-         |d$t AS MATERIALIZED (
-         |  SELECT f.vec_id, MIN($d2fc) AS d2
-         |  FROM f CROSS JOIN k${t - 1} c GROUP BY f.vec_id),
-         |s$t AS MATERIALIZED (
-         |  SELECT d.vec_id FROM d$t d
-         |  WHERE (CAST(concat('0x', substring(md5(concat(CAST(d.vec_id AS VARCHAR), ':kpp:$t')), 1, 15)) AS BIGINT) % 1000000)
-         |        * (SELECT SUM(d2) FROM d$t)
-         |      < CAST(d.d2 AS HUGEINT) * ${oversample.toLong * 1000000L}),
-         |k$t AS MATERIALIZED (
-         |  SELECT * FROM k${t - 1} UNION ALL
-         |  SELECT f.vec_id AS cand_id, f.fv AS cv FROM f JOIN s$t USING (vec_id))""".stripMargin
-    }.mkString
-    val census =
-      s""",
-         |asg AS MATERIALIZED (
-         |  SELECT vec_id, cand_id FROM (
-         |    SELECT f.vec_id, c.cand_id,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY $d2fc ASC, c.cand_id ASC) AS rn
-         |    FROM f CROSS JOIN k$rounds c) WHERE rn = 1),
-         |wt AS (SELECT cand_id, CAST(COUNT(*) AS BIGINT) AS w FROM asg GROUP BY cand_id),
-         |kw AS MATERIALIZED (
-         |  SELECT k.cand_id, k.cv, COALESCE(wt.w, 0) AS w
-         |  FROM k$rounds k LEFT JOIN wt USING (cand_id)),
-         |c0 AS (SELECT cand_id AS cell_id, cv FROM kw ORDER BY w DESC, cand_id ASC LIMIT $nCells)""".stripMargin
-    val lloyd = (1 to lloydIters).map { i =>
-      s""",
-         |la$i AS MATERIALIZED (
-         |  SELECT cand_id, cell_id FROM (
-         |    SELECT kw.cand_id, c.cell_id,
-         |      ROW_NUMBER() OVER (PARTITION BY kw.cand_id ORDER BY
-         |        list_sum(list_transform(range(1, 65), j -> (kw.cv[j] - c.cv[j]) * (kw.cv[j] - c.cv[j]))) ASC,
-         |        c.cell_id ASC) AS rn
-         |    FROM kw CROSS JOIN c${i - 1} c) WHERE rn = 1),
-         |ls$i AS (
-         |  SELECT a.cell_id, p, SUM(kw.cv[CAST(p AS INT) + 1] * kw.w) AS s, SUM(kw.w) AS n
-         |  FROM la$i a JOIN kw USING (cand_id), range(0, 64) t(p)
-         |  GROUP BY a.cell_id, p HAVING SUM(kw.w) > 0),
-         |ln$i AS (
-         |  SELECT cell_id, list(CAST((s - ((s % n + n) % n)) // n AS BIGINT) ORDER BY p) AS cv
-         |  FROM ls$i GROUP BY cell_id),
-         |c$i AS MATERIALIZED (
-         |  SELECT c${i - 1}.cell_id, COALESCE(ln$i.cv, c${i - 1}.cv) AS cv
-         |  FROM c${i - 1} LEFT JOIN ln$i USING (cell_id))""".stripMargin
-    }.mkString
-    setup + rds + census + lloyd +
-      s"""
-         |SELECT cell_id, CAST(p AS BIGINT) AS p, cv[CAST(p AS INT) + 1] AS c
-         |FROM c$lloydIters, range(0, 64) t(p)""".stripMargin
-  }
-
-  /** IVF-PQ composed ANN ([[graft.similarity.Similarity.ivfPqTopK]]):
-    * the Lloyd-exact coarse quantizer probes 4 of 16 cells, PQ-ADC
-    * scores ONLY the probed cells' candidates from their 4×16-codebook
-    * codes, and an exact-cosine rerank of the ADC top-20 yields the
-    * final top-5 — the FAISS `IVF16,PQ4` serving shape with every
-    * stage fixed-point/integer, so the oracle replays the ENTIRE
-    * composition (training, assignment, probing, code assignment,
-    * ADC, rerank) verbatim. The exhaustive-budget ≡ brute-force law
-    * and the recall floor are SimilarityScaleSpec rows. */
-  private def simIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cents = Similarity.lloydCentroidsExact(
-      e.select("vec_id", "embedding"), nCells = 16, iters = 2)
-    Similarity.ivfPqTopK(e.select("vec_id", "embedding"), queries,
-      dim = 64, k = 5, nCells = 16, nProbe = 4, nSub = 4, nCents = 16,
-      coarseK = 20, centroids = Some(cents))
-  }
-
-  /** Build-if-absent of the PERSISTED IVF index
-    * ([[graft.similarity.IvfIndex]]) — the ANN twin of the bucketed /
-    * partitioned table layouts: quantizer training + corpus assignment
-    * run once per source snapshot (content-keyed, metered as a layout
-    * build), queries serve from partition-pruned scans of `cells/`.
-    * v1 tag: dim 64, nCells 16, Lloyd iters 2 — bump on change. */
-  private def ensureIvfIndexLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "embeddings.parquet")))
-    graft.sources.LayoutCache.ensure("graft_ivf_index_v1-d64-c16-i2",
-      new java.io.File(dir).getName, fp) { tmp =>
-      graft.similarity.IvfIndex.build(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        tmp, dim = 64, nCells = 16, iters = 2)
-    }
-  }
-
-  /** Once-per-snapshot unigram tokenizer training
-    * ([[graft.functions.TextFunctions.unigramTrain]]'s output
-    * persisted, content-keyed): the trained-model artifact encode
-    * consumers serve from — training is deterministic, so the stored
-    * vocab equals a fresh run bit-for-bit (the oracle still replays
-    * the full training). v1: rounds 2, maxPiece 4, seed 100, cap 16,
-    * keep 80%. */
-  private def ensureUnigramVocabLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "documents.parquet")))
-    graft.sources.LayoutCache.ensure("graft_unigram_vocab_v1-r2-p4-s100-w16-k80",
-      new java.io.File(dir).getName, fp) { tmp =>
-      TextFunctions.unigramTrain(Tables.documents(spark, dir))
-        .write.parquet(s"$tmp/vocab")
-      // the layout root needs its own completeness marker (the
-      // vocab subdir's parquet _SUCCESS is one level down)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
-      ()
-    } + "/vocab"
-  }
-
-  /** Persisted IVF-PQ index layout — [[ensureIvfIndexLayout]] plus
-    * the PQ tier ([[graft.similarity.IvfIndex.buildPq]]): the corpus
-    * CODES are computed once per source snapshot and stored
-    * cell-partitioned, so serving never re-encodes the corpus (at
-    * 100 TB the 4-byte codes are the index; the float vectors are
-    * read only by the exact rerank). v1 tag: dim 64, 16 cells,
-    * Lloyd 2 iters, PQ 4 subspaces × 16 centroids. */
-  private def ensureIvfPqIndexLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "embeddings.parquet")))
-    graft.sources.LayoutCache.ensure("graft_ivfpq_index_v1-d64-c16-i2-s4x16",
-      new java.io.File(dir).getName, fp) { tmp =>
-      graft.similarity.IvfIndex.build(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        tmp, dim = 64, nCells = 16, iters = 2)
-      graft.similarity.IvfIndex.buildPq(spark, tmp, dim = 64,
-        nSub = 4, nCents = 16)
-    }
-  }
-
-  /** IVF-PQ served from PERSISTED codes
-    * ([[graft.similarity.IvfIndex.topKPq]]): the probe prunes the
-    * pq_codes partitions, ADC never reads a raw embedding, and the
-    * exact rerank touches only the coarse survivors' vectors in the
-    * probed cells — bit-identical to `sim_ivfpq` (same quantizers,
-    * same integer ADC), so it shares that oracle statement verbatim:
-    * storage changes the plan, never the answer. */
-  private def simIvfPqIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.similarity.IvfIndex.topKPq(spark,
-      ensureIvfPqIndexLayout(spark, dir), queries, dim = 64, k = 5,
-      nProbe = 4, coarseK = 20)
-  }
-
-  /** ANN served from the persisted index: must equal `sim_ivf_lloyd`
-    * bit-for-bit (same exact-Lloyd quantizer, same shared assignment
-    * expression at build and probe) — which is exactly what the
-    * shared oracle checks; the plan difference is the point (scan
-    * reads only the probed cell PARTITIONS, PlanSpec-guarded). */
-  private def simIvfIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.similarity.IvfIndex.topK(spark,
-      ensureIvfIndexLayout(spark, dir), queries, dim = 64, k = 5, nProbe = 4)
-  }
-
-  /** The object-store-safe twin: cells routed through TxnLog
-    * (manifest = commit point, a reader can never list a torn append),
-    * partition pruning preserved inside each version dir. Same oracle
-    * as `sim_ivf_indexed` — the storage mode must not change a single
-    * result bit. */
-  private def ensureIvfIndexTxnLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "embeddings.parquet")))
-    graft.sources.LayoutCache.ensure("graft_ivf_index_txn_v1-d64-c16-i2",
-      new java.io.File(dir).getName, fp) { tmp =>
-      graft.similarity.IvfIndex.build(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        tmp, dim = 64, nCells = 16, iters = 2, txnSafe = true)
-    }
+  /** `specs` keyed by name; throws naming every name declared twice. */
+  private[graft] def byName(specs: Seq[QuerySpec]): Map[String, QuerySpec] = {
+    val dups = specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    specs.map(s => s.name -> s).toMap
   }
 
-  private def simIvfIndexedTxn(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.similarity.IvfIndex.topK(spark,
-      ensureIvfIndexTxnLayout(spark, dir), queries, dim = 64, k = 5,
-      nProbe = 4, txnSafe = true)
-  }
-
-  /** Incrementally-maintained index: base built (and its quantizer
-    * TRAINED) on vec_id < 250 only, the rest appended with the stored
-    * centroids ([[graft.similarity.IvfIndex.append]] — no retraining,
-    * the daily-ingest maintenance path). The oracle trains its Lloyd
-    * replay on the same subset and searches ALL vectors — exactly the
-    * semantics "assignment is always correct w.r.t. the stored
-    * quantizer". */
-  private def ensureIvfIndexIncLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "embeddings.parquet")))
-    graft.sources.LayoutCache.ensure("graft_ivf_index_inc_v1-d64-c16-i2-cut250",
-      new java.io.File(dir).getName, fp) { tmp =>
-      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      graft.similarity.IvfIndex.build(
-        e.filter(col("vec_id") < 250), tmp, dim = 64, nCells = 16, iters = 2)
-      graft.similarity.IvfIndex.append(
-        spark, tmp, e.filter(col("vec_id") >= 250), dim = 64)
-    }
-  }
-
-  /** Drift-then-heal lifecycle under the oracle: gen0 is the
-    * incremental story (quantizer trained on vec_id < 250, the rest
-    * appended with NO retraining — accepted drift), gen1 is
-    * [[graft.similarity.IvfIndex.rebuild]] retraining on gen0's
-    * OWN cells table. The rebuilt generation must be bit-identical
-    * to a fresh full-corpus build — so the FULL-corpus Lloyd oracle
-    * (`sim_ivf_indexed`'s SQL) checks it, while gen0 still answers
-    * to the subset-trained oracle. Generation swap = pointer move;
-    * gen0 stays servable inside the same layout. */
-  private def ensureIvfIndexRebLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "embeddings.parquet")))
-    graft.sources.LayoutCache.ensure("graft_ivf_index_reb_v1-d64-c16-i2-cut250",
-      new java.io.File(dir).getName, fp) { tmp =>
-      val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      val gen0 = s"$tmp/gen0"
-      graft.similarity.IvfIndex.build(
-        e.filter(col("vec_id") < 250), gen0, dim = 64, nCells = 16, iters = 2)
-      graft.similarity.IvfIndex.append(
-        spark, gen0, e.filter(col("vec_id") >= 250), dim = 64)
-      graft.similarity.IvfIndex.rebuild(spark, gen0, s"$tmp/gen1", dim = 64,
-        nCells = 16, iters = 2)
-      // the gens carry their own _SUCCESS one level down; the layout
-      // root needs its own completeness marker for the cache contract
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
-      ()
-    }
-  }
-
-  private def simIvfRebuilt(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.similarity.IvfIndex.topK(spark,
-      s"${ensureIvfIndexRebLayout(spark, dir)}/gen1", queries,
-      dim = 64, k = 5, nProbe = 4)
-  }
-
-  /** Persisted BM25 postings index ([[graft.search.Bm25Index]]):
-    * built on doc_id < 250, the rest APPENDED — and because postings,
-    * stats, df, dl are all additive, the incrementally-built index
-    * must serve results bit-identical to the ad-hoc
-    * [[graft.functions.TextFunctions.bm25Search]] over the full
-    * corpus, which is exactly what the shared `bm25_search` oracle
-    * checks (the IVF contrast: no drift to accept, no rebuild debt). */
-  private def ensureBm25IndexLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "documents.parquet")))
-    graft.sources.LayoutCache.ensure("graft_bm25_index_v3pos-b16-cut250",
-      new java.io.File(dir).getName, fp) { tmp =>
-      val docs = Tables.documents(spark, dir)
-      graft.search.Bm25Index.build(
-        docs.filter(col("doc_id") < 250), tmp, nBuckets = 16)
-      graft.search.Bm25Index.append(
-        spark, tmp, docs.filter(col("doc_id") >= 250))
-    }
-  }
-
-  private def bm25Indexed(spark: SparkSession, dir: String): DataFrame =
-    graft.search.Bm25Index.topK(spark, ensureBm25IndexLayout(spark, dir),
-      Seq("spark", "merge", "window"), k = 20)
-
-  /** Index-SERVED phrase search ([[graft.search.Bm25Index
-    * .phraseCounts]]): the positional postings answer the same phrase
-    * query `phrase_search` answers by re-scanning text — identical
-    * results (the shared oracle statement), but from ≤ 2 of 16
-    * posting buckets at one pinned release. */
-  private def phraseIndexed(spark: SparkSession, dir: String): DataFrame =
-    graft.search.Bm25Index.phraseCounts(spark,
-      ensureBm25IndexLayout(spark, dir), Seq("table", "part"))
-
-  /** Post-erasure BM25 index ([[graft.search.Bm25Index.delete]]): a
-    * full-corpus index takes a right-to-be-forgotten delete of every
-    * doc_id ≡ 7 (mod 10) — postings copy-on-write-deleted, a negative
-    * stats delta appended, one release published — and must then
-    * serve results BIT-IDENTICAL to an index that never held those
-    * documents, which is what the oracle states: the shared BM25
-    * chain over the surviving corpus (df shrinks because df IS the
-    * posting-list length; N/total_dl shrink through the additive
-    * delta). */
-  private def ensureBm25DeletedLayout(spark: SparkSession, dir: String): String = {
-    val fp = graft.sources.LayoutCache.contentFingerprint(
-      Seq(new java.io.File(dir, "documents.parquet")))
-    graft.sources.LayoutCache.ensure("graft_bm25_del_v2pos-b16-mod10ne7",
-      new java.io.File(dir).getName, fp) { tmp =>
-      val docs = Tables.documents(spark, dir)
-      graft.search.Bm25Index.build(docs, tmp, nBuckets = 16)
-      val ids = docs.filter(col("doc_id") % 10 === 7)
-        .select("doc_id").collect().map(_.getLong(0)).toSeq
-      graft.search.Bm25Index.delete(spark, tmp, ids, Some("rtbf-1"))
-    }
-  }
-
-  private def bm25Deleted(spark: SparkSession, dir: String): DataFrame =
-    graft.search.Bm25Index.topK(spark, ensureBm25DeletedLayout(spark, dir),
-      Seq("spark", "merge", "window"), k = 20)
-
-  /** Index health report ([[graft.similarity.IvfIndex.stats]]): cell
-    * populations + corpus share in exact bps over the persisted index —
-    * the rebuild-the-quantizer signal; the oracle replays the Lloyd
-    * assignment and counts per cell. */
-  private def ivfIndexStats(spark: SparkSession, dir: String): DataFrame =
-    graft.similarity.IvfIndex.stats(spark, ensureIvfIndexLayout(spark, dir))
-
-  /** Rebuild decision ([[graft.similarity.IvfIndex.rebuildAdvice]]):
-    * the monitoring→action close of the index lifecycle — hot-cell
-    * imbalance and empty-cell thresholds in exact bps over the stats
-    * row; the oracle replays the stats and the threshold arithmetic. */
-  private def ivfRebuildAdvice(spark: SparkSession, dir: String): DataFrame =
-    graft.similarity.IvfIndex.rebuildAdvice(spark,
-      ensureIvfIndexLayout(spark, dir))
-
-  private def simIvfIndexedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.similarity.IvfIndex.topK(spark,
-      ensureIvfIndexIncLayout(spark, dir), queries, dim = 64, k = 5, nProbe = 4)
-  }
-
-  /** KNN-Shapley data valuation
-    * ([[graft.operators.Valuation.knnShapley]]): exact per-training-
-    * point Shapley value under a 5-NN utility against the bounded
-    * eval set (vec_id < 10), labels derived as vec_id % 3, summed
-    * over eval points in integer micro-units. */
-  private def dataShapley(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("label", (col("vec_id") % 3).cast("int"))
-    val test = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
-    graft.operators.Valuation.knnShapley(
-      e.filter(col("vec_id") >= 10).select("vec_id", "embedding", "label"), test)
-  }
-
-  /** ANN-screened KNN-Shapley
-    * ([[graft.operators.Valuation.knnShapleyScreened]]): the
-    * coarse-to-fine JL screen prunes each test point's candidates to
-    * screenK=50 of the 1990 train points, then the exact recurrence
-    * values the retrieved neighborhood (n = candidate count). The
-    * whole chain — integer plane projections, coarse cut, exact
-    * cosine re-rank, recurrence — replays in SQL, so the oracle
-    * checks the screen AND the restricted valuation end-to-end. */
-  private def dataShapleyScreened(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("label", (col("vec_id") % 3).cast("int"))
-    val test = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"))
-    graft.operators.Valuation.knnShapleyScreened(
-      e.filter(col("vec_id") >= 10).select("vec_id", "embedding", "label"), test,
-      k = 5, screenK = 50, coarseK = 100)
-  }
-
-  /** SemDeDup ([[graft.similarity.Similarity.semanticDedup]]): drop
-    * bucket members within cosine 0.2 of their representative. */
-  private def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    Similarity.semanticDedup(
-      Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-      dim = 64, tau = 0.2, nPlanes = 6)
-
-  /** Semantic coverage sampling ([[graft.similarity.Similarity.diversitySample]]):
-    * 3 highest-norm representatives per 6-plane LSH bucket. */
-  private def embedDiversity(spark: SparkSession, dir: String): DataFrame =
-    Similarity.diversitySample(
-        Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-        dim = 64, perBucket = 3, nPlanes = 6)
-      .select("vec_id", "bucket", "bucket_rank")
-
-  private def simLsh(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.lshTopK(e.select("vec_id", "embedding"), queries, dim = 64, k = 5)
-  }
-
-  /** Multi-probe LSH ([[graft.similarity.Similarity.lshMultiProbeTopK]]):
-    * each query also probes the two flipped lowest-|margin| buckets —
-    * several hash tables' recall at one table's memory. */
-  private def simLshMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Similarity.lshMultiProbeTopK(e.select("vec_id", "embedding"), queries,
-      dim = 64, k = 5, nPlanes = 8, extraProbes = 2)
-  }
-
-  /** Threshold 0.4: the synthetic embeddings carry no true near-dups
-    * (max pairwise cosine ≈ 0.51), so a production-style 0.95 cutoff
-    * would legitimately return zero rows; 0.4 keeps the pipeline
-    * observable end-to-end. */
-  private def embedNearDup(spark: SparkSession, dir: String): DataFrame =
-    Similarity.cosineNearDups(
-      Tables.embeddings(spark, dir).select("vec_id", "embedding"),
-      dim = 64, threshold = 0.4)
-
-  // ---- oracle fragments shared by the text/dedup statements
-
-  private val toksSql = """string_split_regex(trim(lower(text)), '\s+')"""
-
-  private val shinglesSql =
-    s"""list_distinct(list_transform(range(1, len($toksSql) - 1),
-       |  i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))""".stripMargin
-
-  private def markersSqlList(ws: Seq[String]): String =
-    ws.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  private val stopwordsSql = markersSqlList(TextFunctions.stopwords)
-
-  private def dotSql(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  /** BM25 scoring chain (posting → tf → dfs/doctf → dls/st → scored)
-    * for the literal 3-term query over an arbitrary doc source — the
-    * WITH-body shared by the `bm25_search`/`bm25_indexed` oracles
-    * (full corpus), the lexical leg of `hybrid_search`, and
-    * `bm25_deleted` (post-erasure corpus). */
-  private def bm25CtesFor(docsSrc: String, conjunctive: Boolean = false): String = {
-    def ts(t: String) =
-      s"""(CASE WHEN tf_$t > 0 THEN
-         |    CAST(44 * tf_$t * t * (n + 1) AS DOUBLE)
-         |    / CAST((df_$t + 1) * (20 * t * tf_$t + 6 * t + 18 * dl * n) AS DOUBLE)
-         |    ELSE 0.0 END)""".stripMargin
-    // OR semantics: df per term over the >=1-term universe (from tf);
-    // AND semantics: only all-term docs compete, df self-consistently
-    // over that set (where every per-term df = the set's size)
-    val doctfTail =
-      if (conjunctive) " WHERE tf_spark > 0 AND tf_merge > 0 AND tf_window > 0"
-      else ""
-    val dfsSql =
-      if (conjunctive)
-        """SELECT count(*) AS df_spark, count(*) AS df_merge,
-          |    count(*) AS df_window FROM doctf""".stripMargin
-      else
-        """SELECT
-          |    count(*) FILTER (term = 'spark') AS df_spark,
-          |    count(*) FILTER (term = 'merge') AS df_merge,
-          |    count(*) FILTER (term = 'window') AS df_window
-          |  FROM tf""".stripMargin
-    s"""posting AS (
-       |  SELECT doc_id, term FROM (
-       |    SELECT doc_id, unnest($toksSql) AS term FROM $docsSrc)
-       |  WHERE term IN ('spark', 'merge', 'window')),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM posting GROUP BY 1, 2),
-       |doctf0 AS (SELECT doc_id,
-       |    CAST(coalesce(sum(tf) FILTER (term = 'spark'), 0) AS BIGINT) AS tf_spark,
-       |    CAST(coalesce(sum(tf) FILTER (term = 'merge'), 0) AS BIGINT) AS tf_merge,
-       |    CAST(coalesce(sum(tf) FILTER (term = 'window'), 0) AS BIGINT) AS tf_window
-       |  FROM tf GROUP BY 1),
-       |doctf AS (SELECT * FROM doctf0$doctfTail),
-       |dfs AS ($dfsSql),
-       |dls AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS dl FROM $docsSrc),
-       |st AS (SELECT count(*) AS n, CAST(SUM(dl) AS BIGINT) AS t FROM dls),
-       |scored AS (SELECT d.doc_id, l.dl, d.tf_spark, d.tf_merge, d.tf_window,
-       |    ${ts("spark")} + ${ts("merge")} + ${ts("window")} AS score_raw
-       |  FROM doctf d JOIN dls l USING (doc_id), dfs, st)""".stripMargin
-  }
-
-  private lazy val bm25CtesSql: String = bm25CtesFor("documents")
-
-  /** MinHash→LSH-band→CC chain over `documents`, ending in
-    * `cc(doc_id, cluster_id)` — the WITH-body (requires `WITH
-    * RECURSIVE`) shared by `dedup_clusters` and
-    * `dedup_canonical_quality`. */
-  /** Closed-form PNG pair-hash CTEs (base → … → cand: banded Hamming
-    * candidates with both hashes) — shared by `image_phash` and the
-    * cross-modal ensemble oracle. */
-  private lazy val imagePhashPairCtesSql: String =
-    """base AS (
-        |  SELECT doc_id, text,
-        |    CAST(doc_id % 32 + 16 AS INT) AS w,
-        |    CAST(doc_id % 24 + 12 AS INT) AS h
-        |  FROM documents),
-        |bytes AS (
-        |  SELECT doc_id, i, ord(substr(text, CAST(i AS INT), 1)) AS b
-        |  FROM (SELECT *, unnest(range(1, length(text)+1)) AS i FROM base)),
-        |dec AS (
-        |  SELECT doc_id, i, bit_xor(b) OVER (PARTITION BY doc_id ORDER BY i) AS d
-        |  FROM bytes),
-        |dl AS MATERIALIZED (
-        |  SELECT doc_id, list(d ORDER BY i) AS dl FROM dec GROUP BY doc_id),
-        |var AS (
-        |  SELECT base.doc_id * 2 + v AS asset_id, w, h, dl.dl, v
-        |  FROM base JOIN dl USING (doc_id), (VALUES (0), (1)) t(v)),
-        |rs AS MATERIALIZED (
-        |  SELECT asset_id,
-        |    list_transform(range(0, 64), q ->
-        |      CASE WHEN v = 1 AND ((least(h-1, (q // 8) * h // 8) * w + least(w-1, (q % 8) * w // 8)) % (w*h)) = 0 THEN (dl[1] + 128) % 256
-        |           ELSE dl[CAST((((least(h-1, (q // 8) * h // 8) * w + least(w-1, (q % 8) * w // 8)) % (w*h)) % len(dl)) + 1 AS INT)] END) AS r
-        |  FROM var),
-        |ah AS (
-        |  SELECT asset_id, r,
-        |    (list_sum(r) - (list_sum(r) % 64)) // 64 AS m
-        |  FROM rs),
-        |ph AS MATERIALIZED (
-        |  SELECT asset_id, CAST(list_sum(list_transform(range(0, 60), q ->
-        |    CASE WHEN r[CAST(q AS INT) + 1] > m THEN (CAST(1 AS BIGINT) << q)
-        |         ELSE 0 END)) AS BIGINT) AS phash
-        |  FROM ah),
-        |bk AS MATERIALIZED (
-        |  SELECT asset_id, phash, b,
-        |    (phash // (CAST(1 AS BIGINT) << (15 * CAST(b AS INT)))) % 32768 AS bv
-        |  FROM (SELECT asset_id, phash, unnest(range(0, 4)) AS b FROM ph)),
-        |cand AS (
-        |  SELECT DISTINCT a.asset_id AS asset_a, a.phash AS ph_a,
-        |    c.asset_id AS asset_b, c.phash AS ph_b
-        |  FROM bk a JOIN bk c ON a.b = c.b AND a.bv = c.bv
-        |    AND a.asset_id < c.asset_id)""".stripMargin
-
-  /** MinHash band-candidate CTEs (docs → … → cands) — the shared
-    * prefix of [[minhashCcCtesSql]], reused by the cross-modal
-    * ensemble whose CC must run over a LARGER edge set. */
-  private lazy val minhashCandCtesSql: String =
-    s"""docs AS (
-       |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-       |sigs AS (
-       |  SELECT doc_id, shingles,
-       |    list_transform(range(0, 12), j ->
-       |      list_aggregate(list_transform(shingles,
-       |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-       |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-       |             % 2147483648), 'min')) AS sig
-       |  FROM docs WHERE len(shingles) > 0),
-       |bands AS (
-       |  SELECT doc_id, b AS band_idx,
-       |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-       |  FROM sigs, range(0, 4) AS t(b)),
-       |bsz AS (
-       |  SELECT band_idx, band_hash FROM bands
-       |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-       |bands2 AS (
-       |  SELECT b.doc_id, b.band_idx, b.band_hash
-       |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands2 a JOIN bands2 b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       |  WHERE a.doc_id < b.doc_id)""".stripMargin
-
-  private lazy val minhashCcCtesSql: String =
-    s"""$minhashCandCtesSql,
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM cands
-       |      UNION SELECT doc_b, doc_a FROM cands),
-       |reach(src, dst) AS (
-       |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-       |cc AS (SELECT src AS doc_id, min(dst) AS cluster_id
-       |  FROM reach GROUP BY src)""".stripMargin
-
-  /** Hashed-TF document vectors (tok → b → grid → v, 64 buckets) —
-    * the WITH-body shared by the `text_knn` oracle and the dense leg
-    * of `hybrid_search`. */
-  private lazy val hashedVecCtesSql: String =
-    s"""tok AS (SELECT doc_id, unnest($toksSql) AS t FROM documents),
-       |b AS (SELECT doc_id,
-       |    CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) % 64 AS bucket,
-       |    count(*) AS c
-       |  FROM tok GROUP BY 1, 2),
-       |grid AS (SELECT d.doc_id, t.i
-       |  FROM (SELECT DISTINCT doc_id FROM documents) d, range(0, 64) t(i)),
-       |v AS (SELECT g.doc_id,
-       |    list(CAST(coalesce(b.c, 0) AS BIGINT) ORDER BY g.i) AS vec
-       |  FROM grid g LEFT JOIN b ON g.doc_id = b.doc_id AND g.i = b.bucket
-       |  GROUP BY g.doc_id)""".stripMargin
-
-  /** Incremental substring-dedup oracle — shared by the plain and
-    * bucketed-catalog variants (layout changes the plan, never the
-    * answer): catalog hit cuts unconditionally, plus the within-batch
-    * first-occurrence rule. */
-  private lazy val substrIncrOracleSql: String =
-    """WITH d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts FROM documents),
-      |occ AS (
-      |  SELECT doc_id, i - 1 AS pos,
-      |    CAST(concat('0x', substring(md5(array_to_string(list_slice(ts, i, i + 7), ' ')), 1, 15)) AS BIGINT) AS whash,
-      |    doc_id * 1048576 + (i - 1) AS occ_key
-      |  FROM d, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-      |  WHERE len(ts) >= 8),
-      |cat AS (SELECT DISTINCT whash FROM occ WHERE doc_id < 250),
-      |bocc AS (SELECT * FROM occ WHERE doc_id >= 250),
-      |el AS (SELECT whash, min(occ_key) AS min_key, count(*) AS n_occ FROM bocc GROUP BY whash),
-      |flagged AS (
-      |  SELECT doc_id, pos FROM bocc WHERE whash IN (SELECT whash FROM cat)
-      |  UNION
-      |  SELECT b.doc_id, b.pos FROM bocc b JOIN el USING (whash)
-      |  WHERE el.n_occ >= 2 AND b.occ_key <> el.min_key),
-      |cut AS (SELECT doc_id, list_sort(list(pos)) AS cuts FROM flagged GROUP BY doc_id),
-      |r AS (SELECT d.doc_id, ts,
-      |        CASE WHEN cuts IS NULL THEN CAST([] AS BIGINT[]) ELSE cuts END AS cuts
-      |      FROM d LEFT JOIN cut USING (doc_id) WHERE d.doc_id >= 250),
-      |k AS (SELECT doc_id, ts,
-      |        list_filter(range(0, len(ts)), i ->
-      |          len(list_filter(cuts, s -> i >= s AND i < s + 8)) = 0) AS keep
-      |      FROM r)
-      |SELECT doc_id,
-      |  COALESCE(array_to_string(list_transform(keep, i -> ts[CAST(i + 1 AS INT)]), ' '), '') AS text_dedup,
-      |  CAST(len(ts) AS BIGINT) AS n_tokens,
-      |  CAST(len(ts) - len(keep) AS BIGINT) AS n_removed
-      |FROM k""".stripMargin
-
-  /** The corpus_prepare oracle's staged CTE chain (quality gate,
-    * near-dup pairs + recursive CC, decontamination) up to the
-    * `clean` survivors — shared by the `corpus_prepare` packing tail
-    * and the `corpus_disposition` provenance tail. */
-  private lazy val corpusStagesCtesSql: String =
-    s"""WITH RECURSIVE split AS (
-       |  SELECT doc_id, text,
-       |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'decon')), 1, 15)) AS BIGINT) % 100 AS bucket
-       |  FROM documents),
-       |corpus AS (SELECT doc_id, text FROM split WHERE bucket < 80),
-       |ev AS (SELECT doc_id, text FROM split WHERE bucket >= 80),
-       |flt AS (
-       |  SELECT doc_id,
-       |    len($toksSql) >= 20 AS len_ok,
-       |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS not_dup
-       |  FROM corpus),
-       |grams AS (
-       |  SELECT doc_id, CAST(concat('0x', substring(md5(gr), 1, 15)) AS BIGINT) AS h
-       |  FROM (SELECT doc_id,
-       |          unnest(list_transform(range(1, len($toksSql)),
-       |            i -> $toksSql[i] || ' ' || $toksSql[i+1])) AS gr
-       |        FROM corpus)),
-       |per AS (SELECT doc_id, h, count(*) AS c FROM grams GROUP BY doc_id, h),
-       |rep AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_2grams,
-       |          CAST(max(c) AS BIGINT) AS top_count
-       |        FROM per GROUP BY doc_id),
-       |repok AS (
-       |  SELECT c.doc_id,
-       |    CASE WHEN COALESCE(r.n_2grams, 0) = 0 THEN 0.0
-       |         ELSE CAST(r.top_count AS DOUBLE) / CAST(r.n_2grams AS DOUBLE)
-       |    END < 0.2 AS rep_ok
-       |  FROM corpus c LEFT JOIN rep r ON c.doc_id = r.doc_id),
-       |kept AS (
-       |  SELECT c.doc_id, c.text
-       |  FROM corpus c JOIN flt f ON c.doc_id = f.doc_id
-       |    JOIN repok r ON c.doc_id = r.doc_id
-       |  WHERE f.len_ok AND f.not_dup AND r.rep_ok),
-       |docs2 AS (SELECT doc_id, $shinglesSql AS shingles FROM kept),
-       |sigs AS (
-       |  SELECT doc_id, shingles,
-       |    list_transform(range(0, 12), j ->
-       |      list_aggregate(list_transform(shingles,
-       |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-       |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-       |             % 2147483648), 'min')) AS sig
-       |  FROM docs2 WHERE len(shingles) > 0),
-       |bands AS (
-       |  SELECT doc_id, b AS band_idx,
-       |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-       |  FROM sigs, range(0, 4) AS t(b)),
-       |bsz AS (
-       |  SELECT band_idx, band_hash FROM bands
-       |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-       |bands2 AS (
-       |  SELECT b.doc_id, b.band_idx, b.band_hash
-       |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands2 a JOIN bands2 b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       |  WHERE a.doc_id < b.doc_id),
-       |ver AS (
-       |  SELECT c.doc_a, c.doc_b
-       |  FROM cands c JOIN sigs a ON c.doc_a = a.doc_id
-       |    JOIN sigs b ON c.doc_b = b.doc_id
-       |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-       |    / CAST(len(a.shingles) + len(b.shingles)
-       |           - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) >= 0.8),
-       |e AS (SELECT doc_a AS a, doc_b AS b FROM ver
-       |      UNION SELECT doc_b, doc_a FROM ver),
-       |reach(src, dst) AS (
-       |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-       |  UNION
-       |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-       |dd AS (
-       |  SELECT k.doc_id, k.text FROM kept k
-       |  WHERE k.doc_id NOT IN (
-       |    SELECT src FROM reach GROUP BY src HAVING min(dst) <> src)),
-       |tsh AS (SELECT DISTINCT CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h
-       |        FROM (SELECT unnest($shinglesSql) AS sh FROM ev)),
-       |tesh AS (SELECT doc_id, CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h
-       |         FROM (SELECT doc_id, unnest($shinglesSql) AS sh FROM dd)),
-       |tot AS (SELECT doc_id, CAST(len($shinglesSql) AS BIGINT) AS n_shingles FROM dd),
-       |m AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched
-       |      FROM tesh WHERE h IN (SELECT h FROM tsh) GROUP BY doc_id),
-       |clean AS (
-       |  SELECT t.doc_id FROM tot t LEFT JOIN m ON t.doc_id = m.doc_id
-       |  WHERE CASE WHEN t.n_shingles = 0 THEN 0.0
-       |        ELSE CAST(COALESCE(m.n_matched, 0) AS DOUBLE) / CAST(t.n_shingles AS DOUBLE)
-       |        END <= 0.1)""".stripMargin
-
-  /** Brute-force cosine top-k (k=5, queries = vec_id < 10) — the
-    * oracle for `sim_topk` and, via the exact-at-full-probe IVF
-    * invariant, for `sim_ivf_kmeans`. */
-  private lazy val bruteTopKSql: String = {
-    val dotEq = dotSql("e.embedding", "q.q_emb")
-    val normE = dotSql("e.embedding", "e.embedding")
-    val normQ = dotSql("q.q_emb", "q.q_emb")
-    s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-       |pairs AS (
-       |  SELECT q.q_id, e.vec_id,
-       |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-       |  FROM embeddings e, q WHERE e.vec_id <> q.q_id)
-       |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-       |  SELECT q_id, vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-       |  FROM pairs) WHERE rank <= 5""".stripMargin
-  }
-
-  /** The ivfTopK scoring chain (assign → probe → score → top-k) as a
-    * suffix to an arbitrary centroid CTE chain ending in
-    * `cents(cell_id, c_emb, c_norm)` — shared by `sim_ivf`
-    * (deterministic-sample centroids) and `sim_ivf_lloyd` (exact
-    * fixed-point trained centroids). */
-  private def ivfScoringSql(centsCtes: String, candWhere: String = ""): String = {
-    val dotEC = dotSql("e.embedding", "c.c_emb")
-    val dotAQ = dotSql("a.embedding", "p.q_emb")
-    s"""$centsCtes,
-       |assigned AS (
-       |  SELECT vec_id, embedding, c_norm2, cell_id FROM (
-       |    SELECT e.vec_id, e.embedding,
-       |      sqrt(${dotSql("e.embedding", "e.embedding")}) AS c_norm2,
-       |      c.cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        -($dotEC) / (sqrt(${dotSql("e.embedding", "e.embedding")}) * c.c_norm) ASC,
-       |        c.cell_id ASC) AS rn
-       |    FROM embeddings e CROSS JOIN cents c)
-       |  WHERE rn = 1),
-       |probed AS (
-       |  SELECT q_id, q_emb, q_norm2, cell_id FROM (
-       |    SELECT e.vec_id AS q_id, e.embedding AS q_emb,
-       |      sqrt(${dotSql("e.embedding", "e.embedding")}) AS q_norm2,
-       |      c.cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        -($dotEC) / (sqrt(${dotSql("e.embedding", "e.embedding")}) * c.c_norm) ASC,
-       |        c.cell_id ASC) AS rn
-       |    FROM embeddings e CROSS JOIN cents c
-       |    WHERE e.vec_id < 10)
-       |  WHERE rn <= 4),
-       |pairs AS (
-       |  SELECT p.q_id, a.vec_id,
-       |    ($dotAQ) / (a.c_norm2 * p.q_norm2) AS cos
-       |  FROM assigned a JOIN probed p USING (cell_id)
-       |  WHERE a.vec_id <> p.q_id$candWhere)
-       |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-       |  SELECT q_id, vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-       |  FROM pairs) WHERE rank <= 5""".stripMargin
-  }
-
-  /** The ivf_index_stats replay (Lloyd assignment → per-cell counts +
-    * integral share), shared with the rebuild-advice oracle, which
-    * wraps it in the decision rule's threshold arithmetic. */
-  private lazy val ivfStatsOracleSql: String = {
-    val dotEC = dotSql("e.embedding", "c.c_emb")
-    lloydCentsSql(2) + s""",
-       |assigned AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT e.vec_id, c.cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        -($dotEC) / (sqrt(${dotSql("e.embedding", "e.embedding")}) * c.c_norm) ASC,
-       |        c.cell_id ASC) AS rn
-       |    FROM embeddings e CROSS JOIN cents c)
-       |  WHERE rn = 1),
-       |counts AS (
-       |  SELECT cell_id, count(*) AS n_vectors FROM assigned GROUP BY cell_id)
-       |SELECT cell_id, n_vectors,
-       |  CAST((n_vectors * 10000) // greatest((SELECT SUM(n_vectors) FROM counts), 1) AS BIGINT) AS share_bps
-       |FROM counts""".stripMargin
-  }
-
-  /** Whole-data HLL register replay — the merged-sketch truth shared
-    * by `distinct_hll_union` (two-way stored-register union) and
-    * `mv_distinct_hll` (N-way fold over per-batch TxnLog partials):
-    * pointwise register max is lossless, so every maintenance shape
-    * answers with the same statement. */
-  private val hllUnionOracleSql: String =
-    """WITH h AS (
-      |  SELECT event_type,
-      |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-      |  FROM events WHERE user_id IS NOT NULL),
-      |b AS (
-      |  SELECT event_type, CAST(hv // 4503599627370496 AS INT) AS j,
-      |         hv % 4503599627370496 AS w
-      |  FROM h),
-      |r AS (
-      |  SELECT event_type, j,
-      |    MAX(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS reg
-      |  FROM b GROUP BY event_type, j),
-      |et AS (SELECT DISTINCT event_type FROM h),
-      |dense AS (
-      |  SELECT et.event_type, g.j, COALESCE(r.reg, 0) AS reg
-      |  FROM et CROSS JOIN (SELECT CAST(k AS INT) AS j FROM range(256) t(k)) g
-      |  LEFT JOIN r ON r.event_type = et.event_type AND r.j = g.j)
-      |SELECT event_type,
-      |  string_agg(CAST(reg AS VARCHAR), ',' ORDER BY j) AS regs,
-      |  CAST(SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-      |  CAST(SUM(CAST(POW(2, 53 - reg) AS BIGINT)) AS BIGINT) AS pow_sum
-      |FROM dense GROUP BY event_type""".stripMargin
-
-  /** Positional self-join replay of the phrase counter: adjacent
-    * positions must equal the phrase, overlaps count. Shared by
-    * `phrase_search` (map-side shingle scan) and `phrase_indexed`
-    * (positional-postings adjacency join). */
-  private val phraseSearchOracleSql: String =
-    """WITH tok AS (
-      |  SELECT doc_id,
-      |    unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok,
-      |    generate_subscripts(string_split_regex(trim(lower(text)), '\s+'), 1) AS pos
-      |  FROM documents)
-      |SELECT t1.doc_id, CAST(count(*) AS BIGINT) AS n_matches
-      |FROM tok t1 JOIN tok t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-      |WHERE t1.tok = 'table' AND t2.tok = 'part'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Unigram-LM tokenizer-training oracle — the ENTIRE hard-EM
-    * training of [[graft.functions.TextFunctions.unigramTrain]]
-    * unrolled (the bpe_merges convention): word-type table, seed
-    * substring vocabulary, and per EM round the smoothed millionths
-    * probabilities, the 16-step integer fixed-point log2 (each step a
-    * CTE so the squaring chain replays verbatim), the Viterbi DP as
-    * one relaxation CTE per word position (ROW_NUMBER over
-    * (cost, path) = the engine's array_min total order), the
-    * frequency-weighted recount, and the keep-top-80% multi-piece
-    * prune. CTEs are MATERIALIZED — DuckDB inlines by default and the
-    * position chain would otherwise expand combinatorially. */
-  private def unigramTrainSql(rounds: Int = 2, maxPiece: Int = 4,
-                              seedMulti: Int = 100, maxWordLen: Int = 16,
-                              keepPct: Int = 80): String = {
-    def lgChain(tag: String, src: String): Seq[String] =
-      Seq(s"""lg_${tag}_0 AS (
-         |  SELECT sym, cnt, p, CAST(length(bin(p)) - 1 AS BIGINT) AS msb,
-         |    (CAST(p AS BIGINT) << 20) >> (length(bin(p)) - 1) AS x, CAST(0 AS BIGINT) AS acc
-         |  FROM $src)""".stripMargin) ++
-        (1 to 16).map(k => s"""lg_${tag}_$k AS (
-         |  SELECT sym, cnt, p, msb,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN ((x*x) >> 20) >> 1 ELSE (x*x) >> 20 END AS x,
-         |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN acc*2+1 ELSE acc*2 END AS acc
-         |  FROM lg_${tag}_${k - 1})""".stripMargin) :+
-        s"""cost_$tag AS MATERIALIZED (
-         |  SELECT sym, cnt, p AS p_micro,
-         |    CAST(26*65536 - (msb*65536 + acc) AS BIGINT) AS cost FROM lg_${tag}_16)""".stripMargin
-    def prob(tag: String, vocab: String): Seq[String] = Seq(
-      s"st_$tag AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS v FROM $vocab)",
-      s"pr_$tag AS MATERIALIZED (SELECT sym, cnt, ((cnt + 1) * 1000000) // (st_$tag.t + st_$tag.v) AS p FROM $vocab, st_$tag)")
-    def dp(r: String): Seq[String] = {
-      val head = Seq(
-        s"""edges_$r AS MATERIALIZED (
-           |  SELECT ps.word, ps.freq, ps.i, ps.j, ps.piece, c.cost
-           |  FROM ps JOIN cost_$r c ON c.sym = ps.piece)""".stripMargin,
-        s"""b_${r}_0 AS MATERIALIZED (SELECT word, freq, CAST(length(word) AS BIGINT) AS len,
-           |  CAST(0 AS BIGINT) AS cost, '' AS path FROM w)""".stripMargin)
-      val positions = (1 to maxWordLen).map { j =>
-        val branches = (math.max(0, j - maxPiece) until j).map(i =>
-          s"""SELECT b.word, b.freq, b.len, b.cost + e.cost AS cost,
-             |      b.path || '|' || e.piece AS path
-             |    FROM b_${r}_$i b JOIN edges_$r e ON e.word = b.word AND e.i = $i AND e.j = $j""".stripMargin)
-          .mkString("\n    UNION ALL\n    ")
-        s"""b_${r}_$j AS MATERIALIZED (
-           |  SELECT word, freq, len, cost, path FROM (
-           |    SELECT word, freq, len, cost, path,
-           |      ROW_NUMBER() OVER (PARTITION BY word ORDER BY cost, path) AS rn FROM (
-           |    $branches
-           |  )) WHERE rn = 1)""".stripMargin
-      }
-      val bestUnion = (1 to maxWordLen)
-        .map(j => s"SELECT word, freq, path FROM b_${r}_$j WHERE len = $j")
-        .mkString("\n  UNION ALL\n  ")
-      head ++ positions :+ s"best_$r AS MATERIALIZED (\n  $bestUnion)"
-    }
-    def recount(r: Int): Seq[String] = Seq(
-      s"""cnt_$r AS MATERIALIZED (
-         |  SELECT t.sym, CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM best_$r, UNNEST(string_split(substr(path, 2), '|')) AS t(sym)
-         |  GROUP BY 1)""".stripMargin,
-      s"""jn_$r AS MATERIALIZED (
-         |  SELECT v.sym, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS cnt
-         |  FROM vocab$r v LEFT JOIN cnt_$r c USING (sym))""".stripMargin,
-      s"""vocab${r + 1} AS MATERIALIZED (
-         |  SELECT sym, cnt FROM jn_$r WHERE length(sym) = 1
-         |  UNION ALL
-         |  SELECT sym, cnt FROM (
-         |    SELECT sym, cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, sym ASC) AS rn
-         |    FROM jn_$r WHERE length(sym) > 1)
-         |  WHERE rn <= (SELECT (count(*) * $keepPct + 99) // 100 FROM jn_$r WHERE length(sym) > 1))""".stripMargin)
-    val ctes = Seq(
-      s"""w AS (
-         |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word FROM documents)
-         |  WHERE length(word) <= $maxWordLen GROUP BY word)""".stripMargin,
-      s"""ps AS MATERIALIZED (
-         |  SELECT word, freq, CAST((e).i AS BIGINT) AS i, CAST((e).j AS BIGINT) AS j, (e).piece AS piece FROM (
-         |    SELECT word, freq, unnest(flatten(list_transform(range(1, length(word) + 1), i ->
-         |      list_transform(range(1, least($maxPiece, length(word) - i + 1) + 1), l ->
-         |        struct_pack(i := i - 1, j := i - 1 + l,
-         |          piece := substr(word, CAST(i AS INTEGER), CAST(l AS INTEGER))))))) AS e
-         |    FROM w))""".stripMargin,
-      "seed AS MATERIALIZED (SELECT piece AS sym, CAST(SUM(freq) AS BIGINT) AS cnt FROM ps GROUP BY 1)",
-      s"""vocab0 AS MATERIALIZED (
-         |  SELECT sym, cnt FROM seed WHERE length(sym) = 1
-         |  UNION ALL
-         |  SELECT sym, cnt FROM (
-         |    SELECT sym, cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, sym ASC) AS rn
-         |    FROM seed WHERE length(sym) > 1) WHERE rn <= $seedMulti)""".stripMargin) ++
-      (0 until rounds).flatMap(r => prob(r.toString, s"vocab$r") ++
-        lgChain(r.toString, s"pr_$r") ++ dp(r.toString) ++ recount(r)) ++
-      prob("fin", s"vocab$rounds")
-    "WITH " + ctes.mkString(",\n") +
-      "\nSELECT sym, cnt, CAST(p AS BIGINT) AS p_micro FROM pr_fin"
-  }
-
-  /** Train-then-ENCODE oracle
-    * ([[graft.functions.TextFunctions.unigramEncodeStats]]): the full
-    * [[unigramTrainSql]] training, one more Viterbi pass under the
-    * FINAL model, per-word piece counts joined back to the document
-    * word stream; words over the training length cap fall back to
-    * their character count, docs with no words count zero. */
-  private def unigramEncodeSql(rounds: Int = 2, maxPiece: Int = 4,
-                               seedMulti: Int = 100, maxWordLen: Int = 16,
-                               keepPct: Int = 80): String = {
-    val train = unigramTrainSql(rounds, maxPiece, seedMulti, maxWordLen, keepPct)
-    val ctes = train.stripPrefix("WITH ")
-      .stripSuffix("\nSELECT sym, cnt, CAST(p AS BIGINT) AS p_micro FROM pr_fin")
-    // re-generate the fin-tagged log2 + Viterbi blocks (the generator
-    // closures are local to unigramTrainSql, so rebuild them here via
-    // one more call parameterized purely by string templates)
-    val lgFin = (Seq(s"""lg_fin_0 AS (
-        |  SELECT sym, cnt, p, CAST(length(bin(p)) - 1 AS BIGINT) AS msb,
-        |    (CAST(p AS BIGINT) << 20) >> (length(bin(p)) - 1) AS x, CAST(0 AS BIGINT) AS acc
-        |  FROM pr_fin)""".stripMargin) ++
-      (1 to 16).map(k => s"""lg_fin_$k AS (
-        |  SELECT sym, cnt, p, msb,
-        |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN ((x*x) >> 20) >> 1 ELSE (x*x) >> 20 END AS x,
-        |    CASE WHEN ((x*x) >> 20) >= 2097152 THEN acc*2+1 ELSE acc*2 END AS acc
-        |  FROM lg_fin_${k - 1})""".stripMargin) :+
-      s"""cost_fin AS MATERIALIZED (
-        |  SELECT sym, cnt, p AS p_micro,
-        |    CAST(26*65536 - (msb*65536 + acc) AS BIGINT) AS cost FROM lg_fin_16)""".stripMargin)
-    val dpFin = {
-      val head = Seq(
-        s"""edges_fin AS MATERIALIZED (
-           |  SELECT ps.word, ps.freq, ps.i, ps.j, ps.piece, c.cost
-           |  FROM ps JOIN cost_fin c ON c.sym = ps.piece)""".stripMargin,
-        s"""b_fin_0 AS MATERIALIZED (SELECT word, freq, CAST(length(word) AS BIGINT) AS len,
-           |  CAST(0 AS BIGINT) AS cost, '' AS path FROM w)""".stripMargin)
-      val positions = (1 to maxWordLen).map { j =>
-        val branches = (math.max(0, j - maxPiece) until j).map(i =>
-          s"""SELECT b.word, b.freq, b.len, b.cost + e.cost AS cost,
-             |      b.path || '|' || e.piece AS path
-             |    FROM b_fin_$i b JOIN edges_fin e ON e.word = b.word AND e.i = $i AND e.j = $j""".stripMargin)
-          .mkString("\n    UNION ALL\n    ")
-        s"""b_fin_$j AS MATERIALIZED (
-           |  SELECT word, freq, len, cost, path FROM (
-           |    SELECT word, freq, len, cost, path,
-           |      ROW_NUMBER() OVER (PARTITION BY word ORDER BY cost, path) AS rn FROM (
-           |    $branches
-           |  )) WHERE rn = 1)""".stripMargin
-      }
-      val bestUnion = (1 to maxWordLen)
-        .map(j => s"SELECT word, freq, path FROM b_fin_$j WHERE len = $j")
-        .mkString("\n  UNION ALL\n  ")
-      head ++ positions :+ s"best_fin AS MATERIALIZED (\n  $bestUnion)"
-    }
-    val tail = Seq(
-      """wp AS MATERIALIZED (
-        |  SELECT word, CAST(len(string_split(substr(path, 2), '|')) AS BIGINT) AS n_pieces
-        |  FROM best_fin)""".stripMargin,
-      """dw AS MATERIALIZED (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        |  FROM documents)""".stripMargin,
-      """pd AS (
-        |  SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(SUM(COALESCE(w.n_pieces, length(d.word))) AS BIGINT) AS n_unigram_tokens,
-        |    CAST(SUM(length(d.word)) AS BIGINT) AS n_char_tokens
-        |  FROM dw d LEFT JOIN wp w USING (word) GROUP BY 1)""".stripMargin)
-    "WITH " + (Seq(ctes) ++ lgFin ++ dpFin ++ tail).mkString(",\n") + """
-      |SELECT d.doc_id,
-      |  CAST(COALESCE(p.n_words, 0) AS BIGINT) AS n_words,
-      |  CAST(COALESCE(p.n_unigram_tokens, 0) AS BIGINT) AS n_unigram_tokens,
-      |  CAST(COALESCE(p.n_char_tokens, 0) AS BIGINT) AS n_char_tokens,
-      |  CAST(CASE WHEN COALESCE(p.n_unigram_tokens, 0) > 0
-      |    THEN (1000000 * p.n_char_tokens) // p.n_unigram_tokens
-      |    ELSE 0 END AS BIGINT) AS compression_fp
-      |FROM (SELECT DISTINCT doc_id FROM documents) d
-      |LEFT JOIN pd p USING (doc_id)""".stripMargin
-  }
-
-  /** Greedy (WordPiece-style) vs Viterbi encode oracle: the full
-    * [[unigramEncodeSql]] chain up through its per-doc Viterbi rollup,
-    * plus the greedy longest-match unrolled as `maxWordLen` hop CTEs
-    * (per hop: the max-j in-vocab edge at the current position — the
-    * `mj` table is the precomputed longest-match map). */
-  private def wordpieceEncodeSql(maxWordLen: Int = 16): String = {
-    val enc = unigramEncodeSql()
-    val cut = enc.indexOf("\nSELECT d.doc_id,")
-    require(cut > 0, "unigramEncodeSql tail changed — update wordpieceEncodeSql")
-    val hops = (1 to maxWordLen).map { t =>
-      s""",
-         |gr_$t AS MATERIALIZED (SELECT g.word, g.len,
-         |  CASE WHEN g.pos >= g.len THEN g.pos ELSE m.mj END AS pos,
-         |  CASE WHEN g.pos >= g.len THEN g.cnt ELSE g.cnt + 1 END AS cnt
-         |  FROM gr_${t - 1} g LEFT JOIN mj m ON m.word = g.word AND m.i = g.pos)""".stripMargin
-    }.mkString
-    enc.substring(0, cut) +
-      s""",
-         |mj AS MATERIALIZED (
-         |  SELECT word, i, CAST(MAX(j) AS BIGINT) AS mj FROM edges_fin GROUP BY 1, 2),
-         |gr_0 AS (SELECT word, CAST(length(word) AS BIGINT) AS len,
-         |  CAST(0 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS cnt FROM w)""".stripMargin +
-      hops +
-      s""",
-         |gw AS MATERIALIZED (SELECT word, cnt AS n_greedy FROM gr_$maxWordLen),
-         |pg AS (
-         |  SELECT d.doc_id,
-         |    CAST(SUM(COALESCE(g.n_greedy, length(d.word))) AS BIGINT) AS n_greedy_tokens
-         |  FROM dw d LEFT JOIN gw g USING (word) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(p.n_words, 0) AS BIGINT) AS n_words,
-         |  CAST(COALESCE(p.n_unigram_tokens, 0) AS BIGINT) AS n_viterbi_tokens,
-         |  CAST(COALESCE(g.n_greedy_tokens, 0) AS BIGINT) AS n_greedy_tokens,
-         |  CAST(CASE WHEN COALESCE(p.n_unigram_tokens, 0) > 0
-         |    THEN (1000000 * g.n_greedy_tokens) // p.n_unigram_tokens
-         |    ELSE 0 END AS BIGINT) AS greedy_ratio_fp
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN pd p USING (doc_id)
-         |LEFT JOIN pg g USING (doc_id)""".stripMargin
-  }
-
-  /** IVF-PQ composition oracle: Lloyd training + cosine
-    * assignment/probing (shared cents/assigned/probed shapes), PQ
-    * codes + ADC restricted to probed pairs, exact-cosine rerank of
-    * the ADC top-20 — every stage replayed verbatim; `f` (micro
-    * fixed-point vectors) is shared between the Lloyd trainer and the
-    * PQ subvector slicer. Shared by `sim_ivfpq` (ad-hoc composition)
-    * and `sim_ivfpq_indexed` (persisted codes): the storage mode must
-    * not change a single result bit. */
-  private lazy val simIvfPqOracleSql: String = {
-    val sq16 = (a: String, b: String) =>
-      s"list_sum(list_transform(range(1, 17), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
-    val dotEC = dotSql("e.embedding", "c.c_emb")
-    val dotEE = dotSql("e.embedding", "e.embedding")
-    lloydCentsSql(2) + s""",
-       |assigned AS (
-       |  SELECT vec_id, embedding, c_norm2, cell_id FROM (
-       |    SELECT e.vec_id, e.embedding,
-       |      sqrt($dotEE) AS c_norm2, c.cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        -($dotEC) / (sqrt($dotEE) * c.c_norm) ASC,
-       |        c.cell_id ASC) AS rn
-       |    FROM embeddings e CROSS JOIN cents c)
-       |  WHERE rn = 1),
-       |probed AS (
-       |  SELECT q_id, cell_id FROM (
-       |    SELECT e.vec_id AS q_id, c.cell_id,
-       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |        -($dotEC) / (sqrt($dotEE) * c.c_norm) ASC,
-       |        c.cell_id ASC) AS rn
-       |    FROM embeddings e CROSS JOIN cents c
-       |    WHERE e.vec_id < 10)
-       |  WHERE rn <= 4),
-       |qs AS (
-       |  SELECT e.vec_id AS q_id, e.embedding AS q_emb,
-       |    sqrt($dotEE) AS q_norm2
-       |  FROM embeddings e WHERE e.vec_id < 10),
-       |sub AS (
-       |  SELECT vec_id, CAST(t.j AS INTEGER) AS sub_id,
-       |    fv[t.j*16+1 : t.j*16+16] AS sv
-       |  FROM f, range(0, 4) t(j)),
-       |cb AS (
-       |  SELECT sub_id, vec_id AS cent_id, sv AS cv FROM sub
-       |  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id ASC LIMIT 16)),
-       |codes AS (
-       |  SELECT vec_id, sub_id, cent_id FROM (
-       |    SELECT s.vec_id, s.sub_id, c.cent_id,
-       |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub_id ORDER BY
-       |        ${sq16("s.sv", "c.cv")} ASC, c.cent_id ASC) AS rn
-       |    FROM sub s JOIN cb c USING (sub_id)) WHERE rn = 1),
-       |dtab AS (
-       |  SELECT s.vec_id AS q_id, s.sub_id, c.cent_id,
-       |    CAST(${sq16("s.sv", "c.cv")} AS BIGINT) AS d
-       |  FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 10),
-       |ppairs AS (
-       |  SELECT p.q_id, a.vec_id
-       |  FROM assigned a JOIN probed p USING (cell_id)
-       |  WHERE a.vec_id <> p.q_id),
-       |adcx AS (
-       |  SELECT pp.q_id, k.vec_id, CAST(SUM(t.d) AS BIGINT) AS adc
-       |  FROM ppairs pp JOIN codes k ON k.vec_id = pp.vec_id
-       |    JOIN dtab t ON t.q_id = pp.q_id
-       |      AND t.sub_id = k.sub_id AND t.cent_id = k.cent_id
-       |  GROUP BY 1, 2),
-       |coarse AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id,
-       |      ROW_NUMBER() OVER (PARTITION BY q_id
-       |        ORDER BY adc ASC, vec_id ASC) AS crk
-       |    FROM adcx) WHERE crk <= 20),
-       |rer AS (
-       |  SELECT co.q_id, co.vec_id,
-       |    (${dotSql("a.embedding", "q.q_emb")}) / (a.c_norm2 * q.q_norm2) AS cos
-       |  FROM coarse co
-       |  JOIN assigned a ON a.vec_id = co.vec_id
-       |  JOIN qs q ON q.q_id = co.q_id)
-       |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-       |  SELECT q_id, vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_id
-       |      ORDER BY cos DESC, vec_id ASC) AS rank
-       |  FROM rer) WHERE rank <= 5""".stripMargin
-  }
-
-  /** Unrolled exact fixed-point Lloyd training
-    * ([[Similarity.lloydCentroidsExact]] twin): micro-unit
-    * quantization, integer squared-Euclidean assignment, exact integer
-    * sums with explicit floor division, empty cells keeping their
-    * previous centroid. Ends in the `cents` CTE [[ivfScoringSql]]
-    * consumes. */
-  private def lloydCentsSql(iters: Int, trainWhere: String = ""): String = {
-    val setup =
-      s"""WITH f AS (
-        |  SELECT vec_id, list_transform(embedding,
-        |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-        |  FROM embeddings$trainWhere),
-        |c0 AS (SELECT vec_id AS cell_id, fv AS cv
-        |       FROM f ORDER BY vec_id ASC LIMIT 16)""".stripMargin
-    val its = (1 to iters).map { i =>
-      s""",
-         |a$i AS (
-         |  SELECT cell_id, fv FROM (
-         |    SELECT f.vec_id, f.fv, c.cell_id,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id ORDER BY
-         |        list_sum(list_transform(range(1, 65),
-         |          i -> (f.fv[i] - c.cv[i]) * (f.fv[i] - c.cv[i]))) ASC,
-         |        c.cell_id ASC) AS rn
-         |    FROM f CROSS JOIN c${i - 1} c) WHERE rn = 1),
-         |s$i AS (
-         |  SELECT cell_id, p, SUM(fv[CAST(p AS INT) + 1]) AS s, COUNT(*) AS n
-         |  FROM a$i, range(0, 64) t(p) GROUP BY cell_id, p),
-         |n$i AS (
-         |  SELECT cell_id,
-         |    list(CAST((s - ((s % n + n) % n)) // n AS BIGINT) ORDER BY p) AS cv
-         |  FROM s$i GROUP BY cell_id),
-         |c$i AS (SELECT c${i - 1}.cell_id, COALESCE(n$i.cv, c${i - 1}.cv) AS cv
-         |        FROM c${i - 1} LEFT JOIN n$i USING (cell_id))""".stripMargin
-    }.mkString
-    setup + its +
-      s""",
-         |cemb AS (
-         |  SELECT cell_id, list_transform(cv,
-         |    x -> CAST(CAST(x AS DOUBLE) / 1000000.0 AS FLOAT)) AS c_emb
-         |  FROM c$iters),
-         |cents AS (
-         |  SELECT cell_id, c_emb,
-         |    sqrt(${dotSql("c_emb", "c_emb")}) AS c_norm FROM cemb)""".stripMargin
-  }
-
-  /** One plane's SELECT for the `embed_project` oracle: the engine's
-    * md5-derived ±1 signs (seed offset 100 = [[Similarity
-    * .randomProject]]'s default) inlined as an integer literal list,
-    * the same micro-quantize-then-integer-sum arithmetic. */
-  /** The JL projection expression for plane `p` over `src` — the
-    * engine's md5-derived ±1 signs (seed offset 100 =
-    * [[Similarity.randomProject]]'s default, dim 64) inlined as an
-    * integer literal list, same micro-quantize-then-integer-sum
-    * arithmetic. ONE generator shared by the `embed_project` and
-    * `sim_project_rerank` oracles so the plane family and the
-    * quantization constant cannot drift between them. */
-  private def projMicroSql(src: String, p: Int): String = {
-    val signs = Similarity.planeVector(100 + p, 64)
-      .map(v => if (v > 0) "1" else "-1").mkString("[", ", ", "]")
-    s"CAST(list_sum(list_transform(range(1, 65), i -> " +
-      s"CAST(round(CAST($src[i] AS DOUBLE) * 1000000) AS BIGINT) * ($signs)[i])) AS BIGINT)"
-  }
-
-  private def projectPlaneSql(p: Int): String =
-    s"""SELECT vec_id, CAST($p AS INT) AS plane_idx,
-       |  ${projMicroSql("embedding", p)} AS proj_micro
-       |FROM embeddings""".stripMargin
-
-  /** DuckDB literal for hyperplane p (same md5-derived signs as
-    * [[Similarity.planeVector]]). */
-  private def planeSqlList(p: Int): String =
-    Similarity.planeVector(p, 64).map(v => if (v > 0) "1.0" else "-1.0")
-      .mkString("[", ", ", "]")
-
-  /** Bucket id from `nPlanes` sign bits of `emb` against planes
-    * [seedOffset, seedOffset+nPlanes) — SQL twin of lshBucketSeeded. */
-  private def bucketSql(emb: String, nPlanes: Int, seedOffset: Int): String =
-    (0 until nPlanes).map { p =>
-      val proj = s"list_sum(list_transform(range(1, 65), i -> CAST($emb[i] AS DOUBLE) * (${planeSqlList(seedOffset + p)})[i]))"
-      s"(CASE WHEN $proj >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-
-  /** DuckDB list of probed buckets — own bucket + `extraProbes`
-    * flipped lowest-|margin| sign bits (ties toward the lower plane
-    * index via the mask field) — SQL twin of
-    * [[Similarity.lshProbeBuckets]]. */
-  private def probeBucketsSql(emb: String, nPlanes: Int, extraProbes: Int,
-                              seedOffset: Int): String = {
-    val base = bucketSql(emb, nPlanes, seedOffset)
-    val margins = (0 until nPlanes).map { p =>
-      val proj = s"list_sum(list_transform(range(1, 65), i -> CAST($emb[i] AS DOUBLE) * (${planeSqlList(seedOffset + p)})[i]))"
-      s"{'m': abs($proj), 'mask': ${1L << p}}"
-    }.mkString("[", ",\n    ", "]")
-    s"""list_concat([$base],
-       |  list_transform(list_slice(list_sort($margins), 1, $extraProbes),
-       |    s -> xor($base, CAST(s.mask AS BIGINT))))""".stripMargin
-  }
-
-  // =================================================================
-  // oracle SQL fragments
-  // =================================================================
-
-  private val sk1 = TaxiShape.surrogateKeySql _
-
-  private def dimVendorSql =
-    s"""${TaxiShape.stagingSql}, v AS (SELECT DISTINCT vendor_id FROM staging WHERE vendor_id IS NOT NULL)
-       |SELECT ${TaxiShape.surrogateKeySql("vendor_id")} AS vendor_key,
-       |  CAST(vendor_id AS INT) AS vendor_id,
-       |  CASE CAST(vendor_id AS INT) WHEN 1 THEN 'Creative Mobile Technologies' WHEN 2 THEN 'VeriFone Inc' ELSE 'Other' END AS vendor_name
-       |FROM v WHERE CAST(vendor_id AS INT) < 3 ORDER BY vendor_id ASC""".stripMargin
-
-  private def dimRateCodeSql =
-    s"""${TaxiShape.stagingSql}, v AS (SELECT DISTINCT rate_code_id FROM staging WHERE rate_code_id IS NOT NULL)
-       |SELECT ${TaxiShape.surrogateKeySql("rate_code_id")} AS rate_code_key,
-       |  CAST(rate_code_id AS INT) AS rate_code_id,
-       |  CASE CAST(rate_code_id AS INT) WHEN 1 THEN 'Standard rate' WHEN 2 THEN 'JFK' WHEN 3 THEN 'Newark' WHEN 4 THEN 'Nassau or Westchester' WHEN 5 THEN 'Negotiated fare' WHEN 6 THEN 'Group ride' ELSE 'Other' END AS rate_code_description
-       |FROM v WHERE CAST(rate_code_id AS INT) < 7 ORDER BY rate_code_id ASC""".stripMargin
-
-  private def dimPaymentSql =
-    s"""${TaxiShape.stagingSql}, v AS (SELECT DISTINCT payment_type_id FROM staging WHERE payment_type_id IS NOT NULL)
-       |SELECT ${TaxiShape.surrogateKeySql("payment_type_id")} AS payment_type_key,
-       |  CAST(payment_type_id AS INT) AS payment_type_id,
-       |  CASE CAST(payment_type_id AS INT) WHEN 1 THEN 'Credit card' WHEN 2 THEN 'Cash' WHEN 3 THEN 'No charge' WHEN 4 THEN 'Dispute' WHEN 5 THEN 'Unknown' WHEN 6 THEN 'Voided trip' ELSE 'Other' END AS payment_description
-       |FROM v ORDER BY payment_type_id ASC""".stripMargin
-
-  private def dimServiceTypeSql =
-    s"""${TaxiShape.stagingSql}, v AS (SELECT DISTINCT service_type FROM staging WHERE service_type IS NOT NULL)
-       |SELECT CAST(service_type AS INT) AS service_type_id,
-       |  CASE CAST(service_type AS INT) WHEN 1 THEN 'Yellow' WHEN 2 THEN 'Green' ELSE 'Other' END AS service_name
-       |FROM v ORDER BY service_type_id ASC""".stripMargin
-
-  private def dimPickupLocationSql =
-    s"""${TaxiShape.stagingSql}
-       |SELECT DISTINCT pickup_location_id, pickup_latitude, pickup_longitude
-       |FROM staging WHERE pickup_location_id IS NOT NULL
-       |ORDER BY pickup_location_id ASC""".stripMargin
-
-  private def dimDropoffLocationSql =
-    s"""${TaxiShape.stagingSql}
-       |SELECT DISTINCT dropoff_location_id, dropoff_latitude, dropoff_longitude
-       |FROM staging WHERE dropoff_location_id IS NOT NULL
-       |ORDER BY dropoff_location_id ASC""".stripMargin
-
-  private def factTripSql = {
-    val tripId = TaxiShape.surrogateKeySql(
-      "s.vendor_id", "s.rate_code_id", "s.pickup_location_id",
-      "s.dropoff_location_id", "s.payment_type_id", "s.service_type",
-      "s.pickup_datetime", "s.dropoff_datetime")
-    s"""${TaxiShape.stagingSql},
-       |dv AS (SELECT ${TaxiShape.surrogateKeySql("vendor_id")} AS vendor_key, CAST(vendor_id AS INT) AS vendor_id
-       |       FROM (SELECT DISTINCT vendor_id FROM staging WHERE vendor_id IS NOT NULL) WHERE CAST(vendor_id AS INT) < 3),
-       |dr AS (SELECT ${TaxiShape.surrogateKeySql("rate_code_id")} AS rate_code_key, CAST(rate_code_id AS INT) AS rate_code_id
-       |       FROM (SELECT DISTINCT rate_code_id FROM staging WHERE rate_code_id IS NOT NULL) WHERE CAST(rate_code_id AS INT) < 7),
-       |dp AS (SELECT ${TaxiShape.surrogateKeySql("payment_type_id")} AS payment_type_key, CAST(payment_type_id AS INT) AS payment_type_id
-       |       FROM (SELECT DISTINCT payment_type_id FROM staging WHERE payment_type_id IS NOT NULL))
-       |SELECT $tripId AS trip_id, dv.vendor_key, dr.rate_code_key,
-       |  s.pickup_location_id, s.dropoff_location_id, dp.payment_type_key,
-       |  s.service_type AS service_type_id, s.pickup_datetime, s.dropoff_datetime,
-       |  s.passenger_count, s.trip_distance, s.extra, s.mta_tax, s.fare_amount,
-       |  s.tip_amount, s.tolls_amount, s.total_amount, s.improvement_surcharge,
-       |  s.congestion_surcharge
-       |FROM staging s
-       |JOIN dv ON CAST(s.vendor_id AS INT) = dv.vendor_id
-       |JOIN dr ON CAST(s.rate_code_id AS INT) = dr.rate_code_id
-       |JOIN dp ON CAST(s.payment_type_id AS INT) = dp.payment_type_id""".stripMargin
-  }
-
-  // =================================================================
-  // runtime-filter + sketch operators
-  // =================================================================
-
-  /** Bloom-pre-filtered join ([[graft.operators.BloomJoin]]): probe
-    * lineitems that cannot match the selective part build side die at
-    * the scan, before the join's exchange. The bloom is false-positive
-    * -only, so the result is identical to the plain join — which is
-    * exactly what the oracle states. */
-  private def bloomJoin(spark: SparkSession, dir: String): DataFrame = {
-    val probe = Tables.lineitem(spark, dir).select("l_partkey", "l_quantity")
-    val build = Tables.part(spark, dir).filter(col("p_size") < 10)
-      .select("p_partkey", "p_brand")
-    graft.operators.BloomJoin.join(probe, build, "l_partkey", "p_partkey",
-        expectedItems = 4096)
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n_items"), Exact.dsum(col("l_quantity")).as("sum_qty"))
-  }
-
-  /** KMV distinct sketch ([[graft.expressions.KmvDistinctAgg]] — the
-    * UDAF surface): per event type, a k=64 bottom-k sketch of user_id
-    * next to the exact distinct count. The sketch's minima are
-    * md5-derived, so the oracle reproduces estimate AND sketch state
-    * bit-for-bit via window functions. */
-  private def distinctSketch(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    Tables.events(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(SketchAggregates.kmvDistinct(col("user_id"), 64).as("sk"),
-        countDistinct(col("user_id")).as("n_exact"))
-      .select(col("event_type"), col("sk.estimate").as("distinct_est"),
-        array_join(col("sk.kmin"), ",").as("kmin"), col("n_exact"))
-  }
-
-  /** Incremental distinct-count: history and batch sketched
-    * separately, sketches unioned with
-    * [[graft.operators.Incremental.mergeKmv]] — by KMV mergeability
-    * the unioned minima are byte-identical to sketching everything at
-    * once, so the oracle is the whole-data sketch replay. The shape
-    * that keeps "distinct users per day" maintainable at 100 TB:
-    * per-batch partials of ≤ k longs per group, never a re-scan. */
-  private def distinctSketchIncremental(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    val ev = Tables.events(spark, dir)
-    def sketch(df: DataFrame) = df.groupBy(col("event_type"))
-      .agg(SketchAggregates.kmvDistinct(col("user_id"), 64).as("sk"))
-      .select(col("event_type"), col("sk.kmin").as("kmin_arr"))
-    val merged = graft.operators.Incremental.mergeKmv(
-      sketch(ev.filter(pmod(col("event_id"), lit(5)) < 4)),
-      sketch(ev.filter(pmod(col("event_id"), lit(5)) === 4)),
-      Seq("event_type"), "kmin_arr", 64)
-    merged.select(col("event_type"),
-      when(size(col("kmin_arr")) < 64, size(col("kmin_arr")).cast("long"))
-        .otherwise(floor(lit(63D) * lit(1152921504606846976D) /
-          element_at(col("kmin_arr"), 64)).cast("long"))
-        .as("distinct_est"),
-      array_join(col("kmin_arr"), ",").as("kmin"))
-  }
-
-  /** HyperLogLog distinct sketch ([[graft.expressions.HllDistinctAgg]]):
-    * per event type, 2^8 dense byte registers over the md5-hashed
-    * user_id, next to the raw INTEGER estimate (`7213·m³·2^Rmax /
-    * ((10000m+10790)·S)` — the alpha constant in its rational form, so
-    * no floating point anywhere and the oracle reproduces estimate AND
-    * register state bit-for-bit). Registers ship as a joined string
-    * (dense j = 0..255). */
-  private def distinctHll(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    Tables.events(spark, dir)
-      .filter(col("user_id").isNotNull)
-      .groupBy(col("event_type"))
-      .agg(SketchAggregates.hllDistinct(col("user_id"), 8).as("hll"))
-      .select(col("event_type"), col("hll.est_hll").as("est_hll"),
-        col("hll.n_zero").as("n_zero"), col("hll.pow_sum").as("pow_sum"),
-        array_join(col("hll.regs"), ",").as("regs"))
-  }
-
-  /** HLL union algebra: history and batch sketched separately, stored
-    * register arrays combined with [[graft.expressions.SketchAggregates
-    * .hllUnion]] (pointwise max). Registers only ever record the max
-    * rho seen, so the union IS the whole-data sketch byte-for-byte —
-    * which is exactly what the oracle replays. The shape that keeps
-    * "distinct users per day" maintainable at 100 TB: per-batch
-    * partials of 2^p bytes per group, never a re-scan. */
-  private def distinctHllUnion(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    val ev = Tables.events(spark, dir).filter(col("user_id").isNotNull)
-    def sketch(df: DataFrame) = df.groupBy(col("event_type"))
-      .agg(SketchAggregates.hllDistinct(col("user_id"), 8).as("hll"))
-      .select(col("event_type"), col("hll.regs").as("regs"))
-    val zeros = array_repeat(lit(0), 256)
-    val merged = sketch(ev.filter(pmod(col("event_id"), lit(5)) < 4))
-      .join(sketch(ev.filter(pmod(col("event_id"), lit(5)) === 4))
-        .withColumnRenamed("regs", "regs_b"), Seq("event_type"), "full")
-      .select(col("event_type"),
-        SketchAggregates.hllUnion(
-          coalesce(col("regs"), zeros), coalesce(col("regs_b"), zeros), 8).as("u"))
-    merged.select(col("event_type"), col("u.n_zero").as("n_zero"),
-      col("u.pow_sum").as("pow_sum"), array_join(col("u.regs"), ",").as("regs"))
-  }
-
-  /** Incrementally MAINTAINED distinct counts — the sketch-IVM shape
-    * that keeps "distinct users per segment" current on a 100 TB
-    * stream: each batch commits its own 2^8-register HLL partial to a
-    * TxnLog table (one narrow row per group per batch — never a
-    * corpus re-scan), and the read side folds the stored partials by
-    * pointwise max. Register max is EXACTLY the whole-data sketch
-    * (merge is lossless and order-free), so the maintained state
-    * answers with the one-shot statement — which is what the shared
-    * `distinct_hll_union` oracle replays. */
-  private def mvDistinctHll(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("hllmv", dir)
-    val ev = Tables.events(spark, dir).filter(col("user_id").isNotNull)
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 3L) {
-        (0 until 4).foreach { i =>
-          val batch = ev.filter(pmod(col("event_id"), lit(4)) === i)
-            .groupBy(col("event_type"))
-            .agg(SketchAggregates.hllDistinct(col("user_id"), 8).as("hll"))
-            .select(col("event_type"), col("hll.regs").as("regs"))
-          if (i == 0) { TxnLog.overwrite(batch, root, Some("h0")); () }
-          else { TxnLog.append(batch, root, Some(s"h$i")); () }
-        }
-      }
-    }
-    val zeros = array_repeat(lit(0), 256)
-    val merged = TxnLog.read(spark, root)
-      .groupBy("event_type")
-      .agg(aggregate(collect_list(col("regs")), zeros,
-        (acc, r) => zip_with(acc, r, (x, y) => greatest(x, y))).as("mregs"))
-    merged.select(col("event_type"),
-        SketchAggregates.hllUnion(col("mregs"), zeros, 8).as("u"))
-      .select(col("event_type"), col("u.n_zero").as("n_zero"),
-        col("u.pow_sum").as("pow_sum"), array_join(col("u.regs"), ",").as("regs"))
-  }
-
-  /** Broadcast-Bloom decontamination ([[graft.functions.TextFunctions
-    * .contaminationBloom]]): the held-out 20% hash split's shingles
-    * fold into a 2^20-bit Bloom bitset (the default), and the 80% training corpus is
-    * screened against it map-side — scan → project, zero exchanges
-    * (spec-asserted), vs the shuffled shingle join of
-    * [[decontaminate]]. False positives over-flag deterministically;
-    * the oracle replays the bitset as a position set. */
-  private def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), "decon")
-    val words = TextFunctions.bloomWordsOfEval(docs.filter(bucket >= 80))
-    TextFunctions.contaminationBloom(docs.filter(bucket < 80), words)
-  }
-
-  /** Cross-document repeated-substring removal
-    * ([[graft.dedup.Dedup.substrDedup]], the ExactSubstr analogue):
-    * sliding 8-token windows, first occurrence corpus-wide survives,
-    * every later occurrence's covered tokens are excised map-side. */
-  private def substrDedupQuery(spark: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.substrDedup(Tables.documents(spark, dir), w = 8)
-
-  /** ExactSubstr-complete SPAN dedup
-    * ([[graft.dedup.Dedup.substrDedupSpans]]): adjacent duplicate
-    * 8-token windows coalesce into maximal spans (gaps-and-islands
-    * over window starts) and only spans of 20+ total tokens are
-    * erased — long copied regions go, incidental short repeats stay.
-    * The oracle replays the whole chain: same rolling window hashes,
-    * a `pos - row_number()` island key, span filter, and the
-    * byte-exact token rebuild. */
-  private def substrDedupSpansQuery(spark: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.substrDedupSpans(Tables.documents(spark, dir),
-      w = 8, minMatchTokens = 20)
-
-  /** Incremental [[substrDedupQuery]]
-    * ([[graft.dedup.Dedup.substrDedupIncremental]]): docs < 250 form
-    * the accepted window-hash catalog; the batch (>= 250) is screened
-    * against it (catalog hit cuts unconditionally) and deduped within
-    * itself. */
-  private def substrDedupIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    graft.dedup.Dedup.substrDedupIncremental(
-      docs.filter(col("doc_id") >= 250),
-      graft.dedup.Dedup.windowHashCatalog(docs.filter(col("doc_id") < 250)),
-      w = 8)
-  }
-
-  /** Build-if-absent of the bucketed window-hash catalog (bucketed on
-    * exactly the screen-join key `whash`, like the band catalog). */
-  private def ensureWindowCatalogLayout(spark: SparkSession, dir: String): String = {
-    val table = "graft_window_catalog_" + dirFingerprint(dir)
-    if (!spark.catalog.tableExists(table)) {
-      graft.sources.Bucketing.writeBucketed(
-        graft.dedup.Dedup.windowHashCatalog(
-          Tables.documents(spark, dir).filter(col("doc_id") < 250)),
-        table, Seq("whash"), nBuckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Overwrite)
-    }
-    table
-  }
-
-  /** [[substrDedupIncrementalQuery]] with the window-hash catalog
-    * stored BUCKETED on `whash` — the recurring screen join plans
-    * exchange-free on the ever-growing catalog side (PlanSpec-
-    * guarded); only the daily batch shuffles. Same oracle. */
-  private def substrDedupIncrementalBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val table = ensureWindowCatalogLayout(spark, dir)
-    graft.dedup.Dedup.substrDedupIncremental(
-      Tables.documents(spark, dir).filter(col("doc_id") >= 250),
-      spark.table(table), w = 8)
-  }
-
-  /** Span-level exact dedup ([[graft.dedup.Dedup.spanDedup]]): drop
-    * repeated 20-token chunks corpus-wide, rebuild each document from
-    * its surviving chunks. */
-  private def spanDedupQuery(spark: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.spanDedup(Tables.documents(spark, dir), window = 20)
-
-  /** Deterministic shard + shuffle for training export
-    * ([[graft.operators.Sampling.shardShuffle]]). */
-  private def corpusShuffle(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.shardShuffle(
-      Tables.documents(spark, dir).select("doc_id"), "doc_id", nShards = 8, salt = "r4")
-
-  /** Domain-weighted mix ([[graft.pipeline.CorpusPipeline.mixSources]]):
-    * per-source keep rates, reported as kept docs + whitespace tokens
-    * (the budget currency). */
-  private def corpusMix(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    val weights = Map("src0" -> 80, "src1" -> 60, "src2" -> 40, "src3" -> 20)
-    graft.pipeline.CorpusPipeline
-      .mixSources(Tables.documents(spark, dir), weights, defaultPct = 10, salt = "mix")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(TextFunctions.tokens(col("text"))).cast("bigint")).as("n_tokens"))
-  }
-
-  /** Incremental catalog dedup ([[graft.dedup.Dedup.incrementalDedup]]):
-    * docs < 250 form the accepted-fingerprint catalog; the rest are
-    * the incoming batch. Output = the catalog delta. */
-  private def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val catalog = docs.filter(col("doc_id") < 250)
-      .select(md5(col("text")).as("fingerprint")).distinct()
-    graft.dedup.Dedup
-      .incrementalDedup(docs.filter(col("doc_id") >= 250), catalog)
-      .catalogDelta
-  }
-
-  /** Bounded batch replay of [[graft.streaming.StreamingNearDup]]'s
-    * screen decision rule at threshold 1.0 (exact-signature
-    * screening; the cap is set far above any bucket at these SFs so
-    * admission depends only on matching): the streaming query runs
-    * AvailableNow over the parquet source — one batch, so per-bucket
-    * processing is globally doc_id-ordered — into a memory sink. At
-    * est-Jaccard 1.0 a document matches iff its FULL MinHash
-    * signature equals an earlier-ADMITTED doc's; since only each
-    * signature-group's minimum id is ever admitted, the oracle is
-    * closed-form SQL: one verdict per band for every non-min member
-    * of a (band bucket, signature) group, dup_of = the group min.
-    * Sub-1.0 thresholds and the cap path are spec-covered
-    * (StreamingSpec); this row pins the end-to-end decision rule
-    * against DuckDB. */
-  private def streamingNeardupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    // documents.parquet is a bare FILE at these SFs; the file stream
-    // source needs a glob (its base path — the non-glob prefix — must
-    // be a directory), so wrap the name in a {} glob
-    val src = spark.readStream.schema(schema)
-      .parquet(s"$dir/{documents.parquet}")
-      .select(col("doc_id"), col("text"))
-    // stable sink name, previous incarnation dropped first: a memory
-    // sink pins its full result set in driver memory for as long as
-    // the temp view references it, so UUID-per-call names would leak
-    // one verdict set per invocation across a bench sweep. The query
-    // map runs each name at most once concurrently, so the stable
-    // name cannot race with itself.
-    val sink = "graft_neardup_replay_sink"
-    spark.catalog.dropTempView(sink)
-    val q = graft.streaming.StreamingNearDup
-      .nearDupStream(src, threshold = 1.0, bucketCap = 1 << 20)
-      .writeStream.format("memory").queryName(sink).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sink)
-  }
-
-  /** TxnLog end-to-end under the oracle: the documents table is
-    * committed in three id-sliced batches (overwrite + two appends)
-    * into a manifest-log table, and the query returns
-    * [[graft.sources.TxnLog.changesSince]] of version 0 — the rows a
-    * downstream incremental consumer would process, which must be
-    * EXACTLY the two appended slices (never the base slice, never a
-    * duplicate). The table root is fingerprint-keyed and the build
-    * idempotent (txnIds make re-runs no-ops), so bench re-runs time
-    * the read path against a stable table. */
-  /** tmpdir root for a persistent artifact derived from `dir`'s
-    * CURRENT contents — keyed on a content fingerprint (name, size,
-    * mtime of every file), so regenerating the testdata in place
-    * changes the key and the artifact rebuilds instead of silently
-    * serving stale rows (a path-only key survives JVM restarts with
-    * no rebuild trigger). One definition so the keying policy cannot
-    * drift across the four artifact builders. */
-  private def tmpArtifactRoot(prefix: String, dir: String): String = {
-    val sig = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile).sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$sig".getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_${prefix}_$h").getPath
-  }
-
-  private def txnlogChanges(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnlog", dir)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 100), root, Some("base"))
-      TxnLog.append(docs.filter(col("doc_id") >= 100 && col("doc_id") < 300),
-        root, Some("batch-a"))
-      TxnLog.append(docs.filter(col("doc_id") >= 300), root, Some("batch-b"))
-    }
-    TxnLog.changesSince(spark, root, 0L).select(col("doc_id"), col("source"))
-  }
-
-  /** Schema evolution under the oracle ([[graft.sources.TxnLog.read]]'s
-    * widening contract): the base commit carries (doc_id, source), a
-    * later append widens with `lang`; the snapshot read returns the
-    * base rows with NULL lang and the appended rows with theirs — the
-    * lakehouse mergeSchema read, replayed as a UNION with a typed NULL
-    * in DuckDB. */
-  private def txnlogEvolution(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnevo", dir)
-    val docs = Tables.documents(spark, dir)
-    if (TxnLog.latestVersion(spark, root) < 1L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("source")), root, Some("base"))
-      TxnLog.append(docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("source"), col("lang")), root, Some("widen"))
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "lang")
-  }
-
-  /** Copy-on-write row-level DELETE under the oracle
-    * ([[graft.sources.TxnLog.delete]]): three range-sliced commits,
-    * then a right-to-be-forgotten delete whose predicate only touches
-    * the first commit's range — the other directories carry into the
-    * new manifest by reference (TxnLogSpec proves WHICH dirs moved;
-    * this query proves the surviving CONTENT, including the SQL-DELETE
-    * null contract: a NULL-evaluating predicate row is kept, which the
-    * oracle replays as `IS NOT TRUE` — a plain `WHERE NOT(p)` would
-    * wrongly drop it). */
-  private def txnlogDelete(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txndel", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 3L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 150), root, Some("s0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), root, Some("s1"))
-      TxnLog.append(docs.filter(col("doc_id") >= 300), root, Some("s2"))
-      // the erasure runs through the SQL surface — storage of the
-      // statement changes, never the answer: the command lowers onto
-      // the same TxnLog.delete (null contract included)
-      spark.sql(
-        s"DELETE FROM graft.`$root` WHERE doc_id < 150 AND lang = 'en'")
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "lang", "n_chars")
-  }
-
-  /** Row-level UPDATE under the oracle ([[graft.sources.TxnLog.update]]
-    * through the SQL surface): two range-sliced commits, then an
-    * `UPDATE … SET … WHERE` whose predicate touches one residue class
-    * — assignments evaluate against the pre-update row, untouched
-    * dirs carry by reference, and the oracle replays the whole
-    * statement as CASE projections over the source table. */
-  private def txnlogUpdate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnupd", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("u0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("u1"))
-      spark.sql(s"UPDATE graft.`$root` SET n_chars = n_chars + 1000, " +
-        "source = upper(source) WHERE doc_id % 10 = 3")
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** CONVERT-adoption chain under the oracle
-    * ([[graft.sources.TxnLog.convertFromParquet]] through the SQL
-    * surface): a plain parquet directory is adopted by reference
-    * (zero bytes moved), the table then diverges — an append and a
-    * SQL DELETE whose rewrite reads THROUGH the ext reference — and
-    * the final snapshot must be hash-exact with the source recomputed
-    * relationally. The adopted dir itself must stay byte-identical (a
-    * plain reader still sees exactly the original rows). */
-  private def txnlogConvert(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val base = tmpArtifactRoot("txncnv", dir)
-    val pdir = s"$base/plain"
-    val root = s"$base/t"
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      if (!new java.io.File(pdir).exists())
-        docs.filter(col("doc_id") < 250).write.parquet(pdir)
-      spark.sql(s"CONVERT TO GRAFT parquet.`$pdir` AS graft.`$root`")
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("cnv1"))
-      spark.sql(s"DELETE FROM graft.`$root` WHERE doc_id % 10 = 7")
-      // the adopted dir is untouched: the delete rewrote BY REFERENCE
-      require(spark.read.parquet(pdir).count() ==
-        docs.filter(col("doc_id") < 250).count(),
-        "txnlog_convert: the rewrite mutated the adopted parquet dir")
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Merge-on-read DELETE under the oracle
-    * ([[graft.sources.TxnLog.deleteMor]]): the same three-commit
-    * fixture and predicate as `txnlog_delete`, erased via a
-    * deletion-vector commit that writes ZERO data files — the oracle
-    * is byte-for-byte the copy-on-write twin's statement, proving
-    * both paths serve identical survivors (`predicate IS NOT TRUE`
-    * null contract included). The zero-file-write, dir-scoping,
-    * compact-materialization, and fastCount-refusal laws are
-    * TxnLogSpec rows; this is the content gate at data scale. */
-  private def txnlogDeleteMor(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnmor", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 3L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 150), root, Some("s0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), root, Some("s1"))
-      TxnLog.append(docs.filter(col("doc_id") >= 300), root, Some("s2"))
-      TxnLog.deleteMor(spark, root,
-        col("doc_id") < 150 && col("lang") === "en", Some("gdpr-mor-1"))
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "lang", "n_chars")
-  }
-
-  /** CHECK-gated ingest under the oracle
-    * ([[graft.sources.TxnLog.addCheck]]): the table registers a
-    * constraint after its first load, a clean second load passes the
-    * gate, and a poisoned batch is refused WITHOUT moving the table —
-    * the final snapshot must be hash-exact with the untouched source,
-    * proving the gate admits exactly the clean data. Refusal
-    * mechanics (no version, no orphan dir, NULL-passes, schema-blind
-    * refusal, dropCheck) are TxnLogSpec rows. */
-  private def txnlogChecked(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnchk", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    // 0-based versions: overwrite(0) + set_check(1) + append(2)
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 100), root, Some("g0"))
-      TxnLog.addCheck(spark, root, "chars_nonneg", "n_chars >= 0", Some("g-ck"))
-      TxnLog.append(docs.filter(col("doc_id") >= 100), root, Some("g1"))
-      val before = TxnLog.latestVersion(spark, root)
-      val refused =
-        try { TxnLog.append(docs.filter(col("doc_id") < 50)
-          .withColumn("n_chars", lit(-1L)), root, Some("g-bad")); false }
-        catch { case _: IllegalArgumentException => true }
-      require(refused, "poisoned batch was admitted through the CHECK gate")
-      require(TxnLog.latestVersion(spark, root) == before,
-        "table moved on a refused commit")
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** RESTORE under the oracle ([[graft.sources.TxnLog.restore]]):
-    * the three-commit corpus takes a BAD delete (every even doc), and
-    * a metadata-only restore rolls the table back to the pre-delete
-    * version — the final snapshot must be hash-exact with the
-    * untouched source, proving the rollback re-references the old
-    * directories without moving a byte (the zero-data-write,
-    * history-preservation, and vacuum-refusal laws are TxnLogSpec
-    * rows). */
-  private def txnlogRestore(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnrst", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 4L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 150), root, Some("r0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), root, Some("r1"))
-      TxnLog.append(docs.filter(col("doc_id") >= 300), root, Some("r2"))
-      TxnLog.delete(spark, root, col("doc_id") % 2 === 0, Some("oops-1"))
-      TxnLog.restore(spark, root, 2L, Some("undo-1"))
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Partition-scoped compaction under the oracle
-    * ([[graft.sources.TxnLog.compactWhere]] — the `OPTIMIZE ...
-    * WHERE` shape): six range-disjoint micro-appends with stats, a
-    * merge-on-read delete inside the hot range, then a compact
-    * SCOPED to that range — cold dirs must carry by reference, the
-    * scoped rewrite materializes the tombstone, collects stats (so
-    * re-runs no-op — asserted on every execution), and the final
-    * snapshot is content-identical to the source minus the deleted
-    * residue. */
-  private def txnlogCompactWhere(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txncw", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 7L) {
-      (0 until 5).foreach { i =>
-        TxnLog.append(docs.filter(col("doc_id") >= i * 50L &&
-          col("doc_id") < (i + 1) * 50L), root, Some(s"cw$i"),
-          collectStats = true); ()
-      }
-      TxnLog.append(docs.filter(col("doc_id") >= 250L), root, Some("cw5"),
-        collectStats = true)
-      TxnLog.deleteMor(spark, root,
-        col("doc_id") % 10 === 3 && col("doc_id") < 140L, Some("cw-del"))
-      // the scoped rewrite runs through the SQL surface (OPTIMIZE ...
-      // WHERE lowers onto the same TxnLog.compactWhere)
-      val v = spark.sql(
-        s"OPTIMIZE graft.`$root` WHERE doc_id BETWEEN 0 AND 140").head.getLong(0)
-      require(v == 7L, s"txnlog_compact_where: expected version 7, got $v")
-      ()
-    }
-    // idempotence is part of the contract: a re-run of the same scope
-    // must mint nothing (the rewrite carried stats)
-    val latest = TxnLog.latestVersion(spark, root)
-    require(spark.sql(
-      s"OPTIMIZE graft.`$root` WHERE doc_id BETWEEN 0 AND 140").head.getLong(0) == latest,
-      "txnlog_compact_where: scoped re-run minted a version")
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** ZERO-COPY SHALLOW CLONE under the oracle
-    * ([[graft.sources.TxnLog.cloneTable]]): a two-commit source table
-    * is cloned (one metadata write, zero data bytes), then the clone
-    * DIVERGES — an append of re-keyed rows and a copy-on-write delete
-    * — while the source must not move (the builder requires its
-    * version pin). The query reads the diverged clone; the oracle
-    * replays source ∪ appends minus the deleted residue. At 100 TB
-    * this is the dev/experiment-table primitive: the clone costs one
-    * manifest, prunes with the source's carried stats, and rewrites
-    * only what it touches. */
-  private def txnlogClone(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val src = tmpArtifactRoot("txnclnsrc", dir)
-    val cln = tmpArtifactRoot("txncln", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, src) < 1L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") % 2 === 0), src, Some("c0"),
-        collectStats = true)
-      TxnLog.append(docs.filter(col("doc_id") % 2 === 1), src, Some("c1"),
-        collectStats = true)
-      ()
-    }
-    if (TxnLog.latestVersion(spark, cln) < 2L) {
-      if (TxnLog.latestVersion(spark, cln) == -1L) {
-        TxnLog.cloneTable(spark, src, cln); ()
-      }
-      TxnLog.append(docs.filter(col("doc_id") % 10 === 4)
-        .select((col("doc_id") + 2000000L).as("doc_id"),
-          lit("cloned").as("source"), col("n_chars")), cln, Some("cl-a"))
-      TxnLog.delete(spark, cln, col("doc_id") % 10 === 7, Some("cl-d"))
-      // the zero-copy contract: all that divergence minted NOTHING on
-      // the source
-      require(TxnLog.latestVersion(spark, src) == 1L,
-        "txnlog_clone: the clone's writes leaked into the source")
-      ()
-    }
-    TxnLog.read(spark, cln).select("doc_id", "source", "n_chars")
-  }
-
-  /** Copy-on-write MERGE (upsert) under the oracle
-    * ([[graft.sources.TxnLog.merge]]): a two-commit base table takes
-    * one merge carrying updates (every doc_id % 10 == 0 gets its
-    * n_chars bumped) and inserts (fresh ids above the base range) —
-    * the CDC-apply shape. The oracle replays it as anti-join ∪
-    * source. */
-  private def txnlogMerge(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnmrg", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("b0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("b1"))
-      val updates = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 1000L)
-      val inserts = docs.filter(col("doc_id") % 10 === 5)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          lit("merged").as("source"), lit(42L).as("n_chars"))
-      TxnLog.merge(updates.unionByName(inserts), root, Seq("doc_id"), Some("cdc-1"))
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Tri-clause MERGE under the oracle ([[graft.sources.TxnLog.merge]]
-    * with `notMatchedBySourceDelete` — Delta's full `WHEN MATCHED
-    * UPDATE / WHEN NOT MATCHED INSERT / WHEN NOT MATCHED BY SOURCE
-    * DELETE` surface): one commit lands updates, inserts, AND the
-    * disappearance of unmatched rows the clause predicate names — the
-    * snapshot-sync primitive where upsert-then-delete would expose an
-    * inconsistent intermediate version. The oracle replays all three
-    * clauses relationally. */
-  private def txnlogMergeFull(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnmrgf", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("f0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("f1"))
-      val updates = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 1000L)
-      val inserts = docs.filter(col("doc_id") % 10 === 5)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          lit("merged").as("source"), lit(42L).as("n_chars"))
-      // the tri-clause upsert runs through the SQL surface — the full
-      // Delta MERGE statement shape, lowered onto the same TxnLog.merge
-      updates.unionByName(inserts).createOrReplaceTempView("txnmrgf_src")
-      spark.sql(
-        s"""MERGE INTO graft.`$root` AS t USING txnmrgf_src AS s ON t.doc_id = s.doc_id
-           |WHEN MATCHED THEN UPDATE SET *
-           |WHEN NOT MATCHED THEN INSERT *
-           |WHEN NOT MATCHED BY SOURCE AND t.doc_id % 7 = 3 THEN DELETE""".stripMargin)
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** The FULL Delta MERGE clause surface under the oracle
-    * ([[graft.sources.TxnLog.mergeClauses]] through the SQL statement):
-    * conditional matched DELETE, explicit-assignment matched UPDATE
-    * referencing BOTH sides (first-match-wins across the two),
-    * conditional explicit-column INSERT (unnamed columns NULL-fill),
-    * and a conditional NOT MATCHED BY SOURCE UPDATE — all in one
-    * statement, one commit. The oracle replays every clause as CASE
-    * projections over a LEFT JOIN in DuckDB, so the whole
-    * first-match-wins semantics is checked row-for-row. */
-  private def txnlogMergeClauses(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnmrgc", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("c0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("c1"))
-      val updates = docs.filter(col("doc_id") % 10 === 0)
-        .withColumn("n_chars", col("n_chars") + 500L)
-      val inserts = docs.filter(col("doc_id") % 10 === 5)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("source"), col("n_chars"))
-      updates.unionByName(inserts).createOrReplaceTempView("txnmrgc_src")
-      spark.sql(
-        s"""MERGE INTO graft.`$root` AS t USING txnmrgc_src AS s ON t.doc_id = s.doc_id
-           |WHEN MATCHED AND s.n_chars % 3 = 0 THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET n_chars = t.n_chars + s.n_chars,
-           |  source = concat(t.source, '|m')
-           |WHEN NOT MATCHED AND s.doc_id % 2 = 0
-           |  THEN INSERT (doc_id, source) VALUES (s.doc_id, upper(s.source))
-           |WHEN NOT MATCHED BY SOURCE AND t.doc_id % 13 = 7
-           |  THEN UPDATE SET source = 'aged'""".stripMargin)
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Query-position time travel under the oracle: `SELECT … FROM
-    * graft.`/t` VERSION AS OF n` must serve the PINNED snapshot —
-    * bit-identical to the reader-option form — even after a later
-    * destructive commit. The builder proves SQL-form ≡ option-form
-    * in-process; the oracle proves both equal the recomputed v1. */
-  private def txnlogTimetravelSql(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnttsql", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("t0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("t1"))
-      spark.sql(s"DELETE FROM graft.`$root` WHERE doc_id % 2 = 0") // v2 mutilates
-      ()
-    }
-    val viaSql = spark.sql(
-      s"SELECT doc_id, source, n_chars FROM graft.`$root` VERSION AS OF 1")
-    val viaOpt = spark.read.format("graft").option("versionAsOf", 1).load(root)
-      .select("doc_id", "source", "n_chars")
-    require(viaSql.exceptAll(viaOpt).isEmpty && viaOpt.exceptAll(viaSql).isEmpty,
-      "txnlog_timetravel_sql: SQL form diverged from the option form")
-    viaSql
-  }
-
-  /** Named-table lakehouse SQL under the oracle: the same DML chain
-    * users run on Delta — UPDATE, DELETE, MERGE — addressed through a
-    * session-catalog table name (`CREATE TABLE … USING graft
-    * LOCATION`), never a path literal. Proves name resolution routes
-    * to the identical TxnLog operations (the final snapshot is
-    * hash-exact with the relational replay). */
-  private def txnlogNamedSql(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnnamed", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    if (TxnLog.latestVersion(spark, root) < 2L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), root, Some("n0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), root, Some("n1"))
-      spark.sql("DROP TABLE IF EXISTS graft_named_oracle")
-      spark.sql(s"CREATE TABLE graft_named_oracle USING graft LOCATION '$root'")
-      spark.sql(
-        "UPDATE graft_named_oracle SET n_chars = n_chars + 7 WHERE doc_id % 5 = 2")
-      spark.sql("DELETE FROM graft_named_oracle WHERE doc_id % 11 = 3")
-      docs.filter(col("doc_id") % 10 === 4)
-        .select((col("doc_id") + 3000000L).as("doc_id"),
-          lit("named").as("source"), lit(7L).as("n_chars"))
-        .createOrReplaceTempView("txnnamed_src")
-      spark.sql(
-        """MERGE INTO graft_named_oracle AS t USING txnnamed_src AS s
-          |ON t.doc_id = s.doc_id
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      spark.sql("DROP TABLE IF EXISTS graft_named_oracle")
-      ()
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Small-file compaction under the oracle ([[graft.sources.TxnLog.compact]]
-    * plus its [[graft.sources.TxnLog.compactAdvice]] advisor, wired
-    * advice→action the way production would run them): eight
-    * micro-batch appends accumulate the small-file problem, a
-    * row-level DELETE leaves copy-on-write remnant directories, the
-    * advisor must flag the layout, compaction rewrites the snapshot,
-    * and the advisor must then clear. The query returns the
-    * post-compaction snapshot — every surviving row, hash-exact
-    * against the source minus the deleted residue, proving the
-    * rewrite moved bytes without changing one row. File-count
-    * mechanics, CAS abort, and time travel are TxnLogSpec's rows;
-    * this is the content gate at data scale. */
-  private def txnlogCompact(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txncpt", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    // Versions are 0-based: overwrite(0) + 7 appends(1..7) + delete(8)
-    // + compact(9) — a completed root sits at version 9 and must skip
-    // the build branch (every write below is an idempotent-txn no-op
-    // on re-entry, but the pre-compaction advisor require would fire
-    // against the post-compaction snapshot).
-    if (TxnLog.latestVersion(spark, root) < 9L) {
-      TxnLog.overwrite(docs.filter(col("doc_id") % 8 === 0), root, Some("m0"))
-      (1 to 7).foreach { i =>
-        TxnLog.append(docs.filter(col("doc_id") % 8 === i), root, Some(s"m$i")); ()
-      }
-      TxnLog.delete(spark, root, col("doc_id") % 10 === 3, Some("gdpr-cpt"))
-      val before = TxnLog.compactAdvice(spark, root).head
-      require(before.getAs[Int]("compact") == 1,
-        s"advisor should flag 9+ micro-commit dirs: $before")
-      TxnLog.compact(spark, root)
-      val after = TxnLog.compactAdvice(spark, root).head
-      require(after.getAs[Int]("compact") == 0,
-        s"advisor should clear post-compaction: $after")
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Manifest data-skipping under the oracle
-    * ([[graft.sources.TxnLog.readWhere]] over stats collected by
-    * `collectStats` appends): four disjoint doc_id-quartile commits
-    * model the time-ordered append table; a mid-range read must prove
-    * via `pruneDirs` that exactly the two non-overlapping commit
-    * directories are never opened, then return rows hash-exact with
-    * the plain BETWEEN filter. The conservative laws (stat-blind dirs
-    * and unknown columns never skip) are TxnLogSpec's rows. */
-  /** Shared four-quartile stats-on table for the data-skipping and
-    * fast-count gates (idempotent txnIds + CAS commits make racing
-    * builders from concurrent Verify threads safe). Returns (root,
-    * quartile width). */
-  private def ensureTxnskipTable(spark: SparkSession, dir: String): (String, Long) = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnskip", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    // quartile width from the data (one bounded single-row collect so
-    // the commit ranges scale with the SF), floor division both engines
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 4
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 3L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q), root,
-          Some("q0"), collectStats = true)
-        (1 to 3).foreach { i =>
-          val hiB = if (i == 3) Long.MaxValue else (i + 1) * q
-          TxnLog.append(docs.filter(col("doc_id") >= i * q && col("doc_id") < hiB),
-            root, Some(s"q$i"), collectStats = true); ()
-        }
-      }
-    }
-    (root, q)
-  }
-
-  /** Metadata-only schema evolution under the oracle
-    * ([[graft.sources.TxnLog.renameColumn]] / `dropColumn`): the lower
-    * doc_id half loads under the original names, `n_chars` renames to
-    * `len` (one metadata commit, zero data movement), the upper half
-    * appends SPEAKING the new name (bytes on disk stay physical —
-    * uniform), and `source` drops. The final read serves exactly
-    * (doc_id, len) over both halves — which the oracle states as a
-    * plain aliased projection of `documents`. A pruning `require`
-    * proves manifest stats keep skipping THROUGH the mapping. */
-  private def txnlogRename(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnrename", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 2
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 3L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q), root,
-          Some("rn0"), collectStats = true)
-        TxnLog.renameColumn(spark, root, "n_chars", "len", Some("rn1"))
-        TxnLog.append(docs.filter(col("doc_id") >= q)
-          .withColumnRenamed("n_chars", "len"), root,
-          Some("rn2"), collectStats = true)
-        TxnLog.dropColumn(spark, root, "source", Some("rn3")); ()
-      }
-    }
-    // stats written before AND after the rename both prune on the
-    // LOGICAL name (the physOf mapping): a lower-half band must skip
-    // the upper-half dir
-    val (_, skip, snap) = TxnLog.pruneDirs(spark, root, "doc_id", 0L, q - 1)
-    require(snap.size == 2 && skip.size == 1,
-      s"rename must not break stats pruning: snap=$snap skip=$skip")
-    TxnLog.read(spark, root).select("doc_id", "len")
-  }
-
-  /** ADD COLUMN with an initial default under the oracle
-    * ([[graft.sources.TxnLog.addColumn]]): the lower half loads
-    * WITHOUT `lang`, one metadata commit adds it with default 'und'
-    * (zero rewrites — the 100 TB constant backfill), and the upper
-    * half appends carrying real values. The read serves default for
-    * old rows and data for new — a plain CASE on the source. */
-  private def txnlogAddcol(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnaddcol", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), col("lang"))
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 2
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 2L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q).drop("lang"), root,
-          Some("ac0"))
-        TxnLog.addColumn(spark, root, "lang", "'und'", Some("ac1"))
-        TxnLog.append(docs.filter(col("doc_id") >= q), root, Some("ac2")); ()
-      }
-    }
-    TxnLog.read(spark, root).select("doc_id", "n_chars", "lang")
-  }
-
-  /** Hidden partitioning under the oracle
-    * ([[graft.sources.TxnLog]] `days(ts)` transform): the events
-    * table commits once partitioned by the DERIVED day column (Hive
-    * dirs the reader never sees), and a raw-ts range read must map
-    * onto the derived column (partition pruning inside the commit
-    * dir — the `require` proves the plan carries it) while returning
-    * rows hash-exact with the plain BETWEEN. */
-  private def txnlogHidden(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnhidden", dir)
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 0L) {
-        TxnLog.overwrite(ev, root, Some("hp0"), partitionBy = Seq("days(ts)")); ()
-      }
-    }
-    // day-aligned bounds derived from the data (one bounded 1-row
-    // collect) so the window scales with any SF's date span
-    // date_trunc returns a tz-aware timestamp — pin back to NTZ (the
-    // house timestamp domain) before collecting
-    val base = ev.agg(date_trunc("DAY", min(col("ts")))
-        .cast("timestamp_ntz").as("b"))
-      .head.getAs[java.time.LocalDateTime]("b")
-    val (lo, hi) = (base.plusDays(2), base.plusDays(5))
-    val q = TxnLog.readWhere(spark, root, "ts", lo, hi)
-    require(q.queryExecution.executedPlan.toString.contains("__p_days_ts"),
-      "the raw-ts range must map onto the hidden day partition")
-    q.select("event_id", "ts", "user_id", "event_type")
-  }
-
-  private def txnlogSkipping(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val (root, q) = ensureTxnskipTable(spark, dir)
-    val (lo, hi) = (q + q / 2, 2 * q + q / 2) // overlaps quartiles 1 and 2 only
-    val (_, skip, snap) = TxnLog.pruneDirs(spark, root, "doc_id", lo, hi)
-    require(snap.size == 4 && skip.size == 2,
-      s"stats should prune exactly the 2 disjoint quartiles: snap=$snap skip=$skip")
-    TxnLog.readWhere(spark, root, "doc_id", lo, hi)
-      .select("doc_id", "source", "n_chars")
-  }
-
-  /** Clustering advisor under the oracle
-    * ([[graft.sources.TxnLog.clusterAdvice]]): over the shared
-    * four-quartile table, doc_id is range-partitioned by construction
-    * (average keep fraction ≈ 10000/4 bps — healthy) while n_chars
-    * scatters across every commit (≈ 10000 bps — stats prune nothing,
-    * the z-order signal). The oracle recomputes each quartile's
-    * [min, max] from the data and replays the keep-fraction
-    * arithmetic in integers. */
-  private def clusterAdviceQ(spark: SparkSession, dir: String): DataFrame = {
-    val (root, _) = ensureTxnskipTable(spark, dir)
-    graft.sources.TxnLog.clusterAdvice(spark, root)
-  }
-
-  /** Change data feed under the oracle
-    * ([[graft.sources.TxnLog.changeFeed]]): a baseline load, an
-    * append, a merge-on-read erasure, and a keyed MERGE — the feed
-    * since the baseline must replay every row-level change with its
-    * type and version: the append's inserts, the tombstone's deletes
-    * (at the pre-delete image), and the merge's update pre/post
-    * pairs. Cost per commit is its affected dirs, never the
-    * snapshot. */
-  private def ensureTxnCdfTable(spark: SparkSession, dir: String): String = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txncdf", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 2
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 3L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q), root, Some("c0"))
-        TxnLog.append(docs.filter(col("doc_id") >= q), root, Some("c1"))
-        TxnLog.deleteMor(spark, root, col("doc_id") % 10 === 4, Some("c2"))
-        TxnLog.merge(docs.filter(col("doc_id") % 10 === 0)
-          .withColumn("n_chars", col("n_chars") + 1000L),
-          root, Seq("doc_id"), Some("c3")); ()
-      }
-    }
-    root
-  }
-
-  private def txnlogCdf(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.TxnLog.changeFeed(spark, ensureTxnCdfTable(spark, dir), 0L,
-        keyCols = Seq("doc_id"))
-      .select("_commit_version", "_change_type", "doc_id", "source", "n_chars")
-
-  /** Incremental view maintenance under deletes and updates
-    * ([[graft.operators.Incremental.applyChangeFeed]]): the per-source
-    * (count, total chars) rollup is seeded from the CDF fixture's
-    * BASELINE version only, then maintained purely from the change
-    * feed's signed deltas — through the append, the merge-on-read
-    * erasure, and the keyed merge — and must equal the direct
-    * aggregate over the final state, which the oracle states on
-    * `documents`. History is never recomputed: the maintained view's
-    * cost is the feed, not the table. */
-  private def mvIncrementalCdf(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = ensureTxnCdfTable(spark, dir)
-    val base = TxnLog.read(spark, root, asOf = Some(0L))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-    val feed = TxnLog.changeFeed(spark, root, 0L, keyCols = Seq("doc_id"))
-    graft.operators.Incremental.applyChangeFeed(base, feed, Seq("source"),
-      "n_docs", Map("sum_chars" -> "n_chars"))
-  }
-
-  /** CDC replication under the oracle
-    * ([[graft.sources.TxnLog.replicate]]): a replica follows the CDF
-    * fixture's full history — seed, append, merge-on-read erasure,
-    * keyed merge — through the change feed alone (never a source
-    * snapshot copy), and must then READ identical to the source's
-    * final state, which the oracle states directly on `documents`.
-    * Re-runs no-op via per-source-commit txnIds, so the racing
-    * Verify-thread discipline holds by the same protocol. */
-  private def txnlogReplica(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val src = ensureTxnCdfTable(spark, dir)
-    val dst = tmpArtifactRoot("txnreplica", dir)
-    buildLock(dst) {
-      TxnLog.replicate(spark, src, dst, -1L, Seq("doc_id")); ()
-    }
-    TxnLog.read(spark, dst).select("doc_id", "source", "n_chars")
-  }
-
-  /** Row provenance under the oracle
-    * ([[graft.sources.TxnLog.readWithLineage]]): over the shared
-    * four-quartile table, every row must name the commit that loaded
-    * it — version, action, txnId — and the per-commit census must
-    * replay as the quartile slices. The lineage columns are per-dir
-    * literals (zero extra I/O), so the census is one narrow
-    * aggregate. */
-  private def txnlogLineage(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val (root, _) = ensureTxnskipTable(spark, dir)
-    TxnLog.readWithLineage(spark, root)
-      .groupBy("_commit_version", "_commit_action", "_commit_txn")
-      .agg(count(lit(1)).as("n_rows"),
-        min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-      .select(col("_commit_version").as("commit_version"),
-        col("_commit_action").as("commit_action"),
-        col("_commit_txn").as("commit_txn"),
-        col("n_rows"), col("min_id"), col("max_id"))
-  }
-
-  /** Z-order clustering under the oracle
-    * ([[graft.sources.TxnLog.cluster]]): the four append-ordered
-    * doc_id slices are rewritten along the (doc_id, n_chars)
-    * z-curve into 8 stats-on directories, and a RECTANGLE query (a
-    * doc_id band AND an n_chars band) runs through
-    * [[graft.sources.TxnLog.readWhereAll]] — the rewrite must prove
-    * pruning on the non-append column (impossible pre-cluster, the
-    * `require`) while returning rows hash-exact with the plain
-    * two-predicate filter: clustering moves bytes, never answers. */
-  private def txnlogZorder(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnzorder", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 4
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 4L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q), root,
-          Some("z0"), collectStats = true)
-        (1 to 3).foreach { i =>
-          val hiB = if (i == 3) Long.MaxValue else (i + 1) * q
-          TxnLog.append(docs.filter(col("doc_id") >= i * q && col("doc_id") < hiB),
-            root, Some(s"z$i"), collectStats = true); ()
-        }
-        TxnLog.cluster(spark, root, Seq("doc_id", "n_chars"),
-          nDirs = 8, bits = 4, txnId = Some("zcluster")); ()
-      }
-    }
-    // the payoff claim: the non-append column prunes post-cluster
-    val (_, skipN, snapZ) = TxnLog.pruneDirs(spark, root, "n_chars", 100L, 300L)
-    require(skipN.nonEmpty && snapZ.size >= 4,
-      s"z-order should prune on n_chars: skipped ${skipN.size} of ${snapZ.size}")
-    TxnLog.readWhereAll(spark, root,
-      Seq(("doc_id", q / 2, 2 * q + q / 2), ("n_chars", 100L, 300L)))
-      .select("doc_id", "source", "n_chars")
-  }
-
-  /** Hilbert-curve clustering under the oracle
-    * ([[graft.sources.TxnLog.cluster]] with `curve = "hilbert"`): the
-    * same four arrival-ordered appends as `txnlog_zorder`, rewritten
-    * along the Hilbert walk instead of the z-interleave — strictly
-    * better locality at the same bit budget (no diagonal quadrant
-    * jumps), which is why Delta's OPTIMIZE clusters by Hilbert. The
-    * builder REQUIREs the non-append column prunes post-cluster; the
-    * oracle is the plain two-band filter — the curve moves bytes,
-    * never answers. */
-  private def txnlogHilbert(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnhil", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val q = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 4
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 4L) {
-        TxnLog.overwrite(docs.filter(col("doc_id") < q), root,
-          Some("h0"), collectStats = true)
-        (1 to 3).foreach { i =>
-          val hiB = if (i == 3) Long.MaxValue else (i + 1) * q
-          TxnLog.append(docs.filter(col("doc_id") >= i * q && col("doc_id") < hiB),
-            root, Some(s"h$i"), collectStats = true); ()
-        }
-        TxnLog.cluster(spark, root, Seq("doc_id", "n_chars"),
-          nDirs = 8, bits = 4, txnId = Some("hcluster"), curve = "hilbert"); ()
-      }
-    }
-    val (_, skipN, snapZ) = TxnLog.pruneDirs(spark, root, "n_chars", 100L, 300L)
-    require(skipN.nonEmpty && snapZ.size >= 4,
-      s"hilbert should prune on n_chars: skipped ${skipN.size} of ${snapZ.size}")
-    TxnLog.readWhereAll(spark, root,
-      Seq(("doc_id", q / 2, 2 * q + q / 2), ("n_chars", 100L, 300L)))
-      .select("doc_id", "source", "n_chars")
-  }
-
-  /** Z-order over STRING columns under the oracle
-    * ([[graft.sources.TxnLog.cluster]] deriving dictionary-rank
-    * integral keys in-house): four residue-class slices scatter both
-    * lang and source across every dir, the (lang, source) z-curve
-    * rewrite co-locates them, and the rank's order-preservation keeps
-    * the RAW string [min, max] manifest stats tight — so a
-    * lang = 'en' probe provably skips dirs (the `require`) and the
-    * rectangle read equals the plain two-predicate filter: clustering
-    * moves bytes, never answers. */
-  private def txnlogZorderStr(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnzstr", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 4L) {
-        (0 until 4).foreach { i =>
-          val slice = docs.filter(col("doc_id") % 4 === i)
-          if (i == 0) TxnLog.overwrite(slice, root, Some("s0"), collectStats = true)
-          else { TxnLog.append(slice, root, Some(s"s$i"), collectStats = true); () }
-        }
-        TxnLog.cluster(spark, root, Seq("lang", "source"), nDirs = 8, bits = 2,
-          txnId = Some("zstr")); ()
-      }
-    }
-    // the payoff claim: pruning fires on the STRING column itself
-    val (_, skipL, snapL) = TxnLog.pruneDirs(spark, root, "lang", "en", "en")
-    require(skipL.nonEmpty && snapL.size >= 4,
-      s"string z-order should prune on lang: skipped ${skipL.size} of ${snapL.size}")
-    TxnLog.readWhereAll(spark, root,
-      Seq(("lang", "en", "en"), ("source", "src0", "src12")))
-      .select("doc_id", "lang", "source", "n_chars")
-  }
-
-  /** Unified maintenance under the oracle
-    * ([[graft.sources.TxnLog.maintain]]): eight residue-class
-    * micro-appends scatter doc_id AND n_chars and pile up small dirs,
-    * so the first maintain run trips the cluster advisor (which
-    * subsumes compaction); every later run must be the healthy no-op
-    * — the cadence-job law, asserted on EVERY execution. Content is
-    * identical before/after: maintenance moves bytes, never
-    * answers. */
-  private def txnlogMaintain(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnmaintain", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 7L) {
-        (0 until 8).foreach { i =>
-          val slice = docs.filter(col("doc_id") % 8 === i)
-          if (i == 0) TxnLog.overwrite(slice, root, Some("m0"), collectStats = true)
-          else { TxnLog.append(slice, root, Some(s"m$i"), collectStats = true); () }
-        }
-      }
-      val fresh = TxnLog.latestVersion(spark, root) == 7L
-      val actions = TxnLog.maintain(spark, root,
-        zorderBy = Seq("doc_id", "n_chars"), txnId = Some("maint"))
-      if (fresh) require(actions.map(_._1) == Seq("cluster"),
-        s"maintain should cluster the scattered 8-dir table, got $actions")
-      else require(actions.isEmpty,
-        s"maintain on a maintained table must mint nothing, got $actions")
-    }
-    TxnLog.read(spark, root).select("doc_id", "source", "n_chars")
-  }
-
-  /** Bloom point-lookup skipping under the oracle
-    * ([[graft.sources.TxnLog.readPoint]]): eight residue-class
-    * commits scatter doc_id so every dir's [min, max] spans the whole
-    * domain — range stats prune NOTHING (the `require` proves it) —
-    * yet the per-dir Blooms prove most dirs never held the probed key.
-    * The skipped read must return the key's rows hash-exact with the
-    * plain equality filter: Bloom false positives can open an extra
-    * dir, never change the answer. */
-  /** Shared residue-scattered bloom fixture: 8 hash-scattered commits
-    * over documents with per-dir doc_id Blooms; returns (root, probe =
-    * (max+1)/2). Range stats are provably blind on this layout. */
-  private def ensureTxnBloomTable(spark: SparkSession, dir: String): (String, Long) = {
-    import graft.sources.TxnLog
-    val root = tmpArtifactRoot("txnbloom", dir)
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-    val probe = (docs.agg(max("doc_id")).head.getLong(0) + 1) / 2
-    buildLock(root) {
-      if (TxnLog.latestVersion(spark, root) < 7L) {
-        (0 to 7).foreach { i =>
-          val slice = docs.filter(col("doc_id") % 8 === i)
-          if (i == 0) TxnLog.overwrite(slice, root, Some("b0"),
-            collectStats = true, bloomCols = Seq("doc_id"))
-          else TxnLog.append(slice, root, Some(s"b$i"),
-            collectStats = true, bloomCols = Seq("doc_id")); ()
-        }
-      }
-    }
-    (root, probe)
-  }
-
-  private def txnlogBloom(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val (root, probe) = ensureTxnBloomTable(spark, dir)
-    val (_, skipRange, _) = TxnLog.pruneDirs(spark, root, "doc_id", probe, probe)
-    require(skipRange.isEmpty, "scattered layout: range stats must be blind")
-    val (_, skipB, snapB) = TxnLog.prunePoint(spark, root, "doc_id", probe)
-    require(skipB.size >= 6,
-      s"bloom should prune most dirs: skipped ${skipB.size} of ${snapB.size}")
-    TxnLog.readPoint(spark, root, "doc_id", probe)
-      .select("doc_id", "source", "n_chars")
-  }
-
-  /** Multi-key point fetch under the oracle
-    * ([[graft.sources.TxnLog.readPoints]]): three ids spanning at
-    * most three residue classes fetched in ONE read — the Blooms must
-    * still prune dirs holding none of them (the `require`), and the
-    * result is hash-exact with the plain IN filter. */
-  private def txnlogPoints(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val (root, probe) = ensureTxnBloomTable(spark, dir)
-    val ids = Seq(probe, probe + 1, 17L)
-    val (keep, skip, snap) = TxnLog.prunePoints(spark, root, "doc_id", ids)
-    require(skip.nonEmpty && keep.size <= snap.size - skip.size + 3,
-      s"multi-key bloom should prune: keep=${keep.size} skip=${skip.size}")
-    TxnLog.readPoints(spark, root, "doc_id", ids)
-      .select("doc_id", "source", "n_chars")
-  }
-
-  /** Right-to-be-forgotten propagation under the oracle
-    * ([[graft.operators.Forget.forget]]): an erasure request for ten
-    * ids runs against three txn-log tables — the two-commit corpus,
-    * a one-commit derived feature table, and a derived table that
-    * never held the subject's data — and the AUDIT is the query
-    * result: matched counts re-scanned post-delete (always 0), and
-    * version movement proving the no-match table took no commit. The
-    * audit is written once and memoized (re-running forget would be
-    * an idempotent no-op whose re-scan could no longer observe
-    * matched_before). */
-  private def forgetDocs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnLog
-    val base = tmpArtifactRoot("forget", dir)
-    val auditPath = s"$base/audit"
-    if (!new java.io.File(auditPath, "_SUCCESS").isFile) {
-      val docs = Tables.documents(spark, dir)
-      val corpus = s"$base/corpus"; val sigs = s"$base/sigs"; val scores = s"$base/scores"
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250)
-        .select(col("doc_id"), col("source"), col("n_chars")), corpus, Some("c0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250)
-        .select(col("doc_id"), col("source"), col("n_chars")), corpus, Some("c1"))
-      TxnLog.overwrite(docs.select(col("doc_id"),
-        (col("n_chars") * 2L).as("feat")), sigs, Some("s0"))
-      // a derived table the subject never appears in (ids are ≡7 mod 50)
-      TxnLog.overwrite(docs.filter(col("doc_id") % 50 === 8)
-        .select(col("doc_id"), col("n_chars")), scores, Some("z0"))
-      val ids = (7L until 500L by 50L).toSeq
-      graft.operators.Forget.forget(spark, ids,
-        Map("corpus" -> corpus, "sigs" -> sigs, "scores" -> scores))
-        .coalesce(1).write.mode("overwrite").parquet(auditPath)
-    }
-    spark.read.parquet(auditPath)
-      .select("artifact", "matched_before", "remaining_after",
-        "version_before", "version_after", "vacuumed")
-  }
-
-  /** Cross-table dataset releases under the oracle
-    * ([[graft.sources.TxnCatalog]]): release 0 pins (docs < 250,
-    * embeddings < 300); both tables then GROW and release 1 pins the
-    * full state. The query reads every release's view of every member
-    * through the catalog and reports per-(release, table) row counts —
-    * release 0 must keep reporting the pre-growth counts forever
-    * (that's the reproducibility claim), which the oracle replays as
-    * the four known slices. */
-  /** In-process serialization of shared test-artifact builders: two
-    * queries sharing one txn-log root (release_diff + dataset_release;
-    * txnlog_skipping + txnlog_fastcount) may run on concurrent Verify
-    * threads. The CAS/txnId protocol keeps racing builders CORRECT,
-    * but a concurrent build stretches the window between a manifest's
-    * create-exclusive claim and its content landing past readManifest's
-    * bounded patience under load — so same-JVM builders take a per-root
-    * lock and the second one finds the table already built. Cross-JVM
-    * racing (not a shape Verify produces) still rests on the CAS. */
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def buildLock[A](root: String)(body: => A): A =
-    buildLocks.computeIfAbsent(root, _ => new Object).synchronized(body)
-
-  /** Shared two-release catalog for the release-pinning and
-    * release-diff gates. Returns the catalog root. */
-  private def ensureReleaseTables(spark: SparkSession, dir: String): String = {
-    import graft.sources.{TxnCatalog, TxnLog}
-    val base = tmpArtifactRoot("release", dir)
-    val docsRoot = s"$base/docs"; val embRoot = s"$base/emb"
-    val cat = s"$base/catalog"
-    buildLock(base) {
-    if (TxnLog.latestVersion(spark, cat) < 1L) {
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
-      TxnLog.overwrite(docs.filter(col("doc_id") < 250), docsRoot, Some("d0"))
-      TxnLog.overwrite(emb.filter(col("vec_id") < 300), embRoot, Some("e0"))
-      TxnCatalog.publish(spark, cat,
-        Map("docs" -> docsRoot, "emb" -> embRoot), Some("r0"))
-      TxnLog.append(docs.filter(col("doc_id") >= 250), docsRoot, Some("d1"))
-      TxnLog.append(emb.filter(col("vec_id") >= 300), embRoot, Some("e1"))
-      TxnCatalog.publish(spark, cat,
-        Map("docs" -> docsRoot, "emb" -> embRoot), Some("r1"))
-      ()
-    }
-    }
-    cat
-  }
-
-  private def datasetRelease(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxnCatalog
-    val cat = ensureReleaseTables(spark, dir)
-    val perRelease = for {
-      rel <- Seq(0L, 1L)
-      table <- Seq("docs", "emb")
-    } yield TxnCatalog.readTable(spark, cat, table, Some(rel))
-      .agg(count(lit(1)).as("n_rows"))
-      .select(lit(rel).as("release"), lit(table).as("table_name"), col("n_rows"))
-    perRelease.reduce(_.unionByName(_))
-  }
-
-  /** Incremental materialized view under the oracle: two id-sliced
-    * event batches merge through [[graft.streaming.MaterializedView
-    * .mergeBatch]] (sum/min/max measure algebra + TxnLog txnId
-    * idempotence) and the final view must equal the one-shot grouped
-    * aggregate over all events — the IVM correctness claim, checked
-    * against DuckDB instead of only a spec. Integer measures keep the
-    * merge bit-exact. */
-  private def mvMerge(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.MaterializedView
-    val root = tmpArtifactRoot("mv", dir)
-    val ev = Tables.events(spark, dir)
-    // the two predicates TOTALLY partition the table (null event_ids
-    // land in the second slice) — the IVM claim must be tested against
-    // the oracle's unfiltered aggregate, never a silently narrowed input
-    def slice(pred: Column) = ev.filter(pred)
-      .groupBy("event_type").agg(
-        count(lit(1)).as("n"),
-        min(col("user_id")).as("min_user"),
-        max(col("user_id")).as("max_user"))
-    val measures = Map("n" -> "sum", "min_user" -> "min", "max_user" -> "max")
-    if (graft.sources.TxnLog.latestVersion(spark, root) < 1L) {
-      MaterializedView.mergeBatch(root, Seq("event_type"), measures)(
-        slice(coalesce(col("event_id") < 500L, lit(false))), 0L)
-      MaterializedView.mergeBatch(root, Seq("event_type"), measures)(
-        slice(coalesce(col("event_id") >= 500L, lit(true))), 1L)
-    }
-    MaterializedView.read(spark, root)
-      .select(col("event_type"), col("n"), col("min_user"), col("max_user"))
-  }
-
-  /** CSV reader under the oracle: the scalar document columns round-
-    * trip through [[graft.sources.Sinks]]-style CSV (header + explicit
-    * schema on read — the reference's zone-lookup contract) and must
-    * re-read byte-identically vs the parquet originals in DuckDB.
-    * Fingerprint-keyed write, paid once per source snapshot. */
-  private def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val out = tmpArtifactRoot("csv", dir)
-    if (!new java.io.File(out, "_SUCCESS").isFile)
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
-    graft.sources.Sources.csv(spark, out, Some(StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("n_chars", LongType)))))
-  }
-
-  /** Corrupt-record quarantine gate under the oracle
-    * ([[graft.sources.Sources.quarantineSplit]]): a deterministic JSONL
-    * feed is built from the documents table by explicit string concat
-    * (byte-identical to the oracle's SQL concat — no to_json, whose
-    * field ordering the oracle could not replay), with one corruption
-    * class injected per id residue — truncated line (malformed JSON),
-    * bare scalar (non-object), string where the schema says LONG
-    * (type-unconvertible) — plus an unknown-extra-field line that must
-    * PASS (benign drift). The gate splits the feed; the query returns
-    * every line exactly once (conservation) as either its parsed
-    * fields ('ok') or the md5 of its preserved raw line
-    * ('quarantined'). The oracle replays the feed construction and the
-    * documented decision rule, so a parser behavior change on any of
-    * the three corruption classes — or a dropped/duplicated line —
-    * breaks the hash. */
-  private def quarantineSplitQuery(spark: SparkSession, dir: String): DataFrame = {
-    val base = concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
-      lit(",\"source\":\""), col("source"), lit("\"}"))
-    val feed = Tables.documents(spark, dir).select(
-      when(col("doc_id") % 7 === 0, substring(base, 1, 10))
-        .when(col("doc_id") % 7 === 1, col("doc_id").cast("string"))
-        .when(col("doc_id") % 7 === 2,
-          concat(lit("{\"doc_id\":\"x"), col("doc_id").cast("string"),
-            lit("\",\"source\":\""), col("source"), lit("\"}")))
-        .when(col("doc_id") % 7 === 3,
-          concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
-            lit(",\"source\":\""), col("source"), lit("\",\"extra\":1}")))
-        .otherwise(base).as("raw"))
-    val (good, quar) = graft.sources.Sources.quarantineSplit(feed,
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("source", StringType))))
-    good.select(col("doc_id"), col("source"),
-        lit("ok").as("disposition"), lit(null).cast("string").as("raw_md5"))
-      .unionAll(quar.select(lit(null).cast("long").as("doc_id"),
-        lit(null).cast("string").as("source"),
-        lit("quarantined").as("disposition"), md5(col("raw")).as("raw_md5")))
-  }
-
-  /** Dead-letter REPLAY — the second half of the quarantine story:
-    * after the producer bugs are diagnosed, targeted repairs run over
-    * the quarantined raw lines and the SAME gate re-admits what the
-    * repairs fixed. Two of the feed's three corruption classes are
-    * repairable (the stringified-id field is rewritten to a number;
-    * the bare-scalar line is wrapped into an object with a sentinel
-    * source), the truncated class is not and stays dead — so the
-    * output proves conservation ok + recovered + dead = every line,
-    * and that repair NEVER bypasses the gate (recovered rows re-enter
-    * through `quarantineSplit`, not around it). Both passes are
-    * stateless map-side gates — the whole replay is scan→project. */
-  private def quarantineReplay(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val base = concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
-      lit(",\"source\":\""), col("source"), lit("\"}"))
-    val feed = Tables.documents(spark, dir).select(
-      when(col("doc_id") % 7 === 0, substring(base, 1, 10))
-        .when(col("doc_id") % 7 === 1, col("doc_id").cast("string"))
-        .when(col("doc_id") % 7 === 2,
-          concat(lit("{\"doc_id\":\"x"), col("doc_id").cast("string"),
-            lit("\",\"source\":\""), col("source"), lit("\"}")))
-        .when(col("doc_id") % 7 === 3,
-          concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
-            lit(",\"source\":\""), col("source"), lit("\",\"extra\":1}")))
-        .otherwise(base).as("raw"))
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("source", StringType)))
-    val (good, quar) = graft.sources.Sources.quarantineSplit(feed, schema)
-    val repaired = quar.select(
-      when(col("raw").rlike("^\\{\"doc_id\":\"x"),
-        regexp_replace(col("raw"), "^\\{\"doc_id\":\"x(\\d+)\"", "{\"doc_id\":$1"))
-        .when(col("raw").rlike("^\\d+$"),
-          concat(lit("{\"doc_id\":"), col("raw"), lit(",\"source\":\"recovered\"}")))
-        .otherwise(col("raw")).as("raw"))
-    val (rec, dead) = graft.sources.Sources.quarantineSplit(repaired, schema)
-    good.select(col("doc_id"), col("source"), lit("ok").as("disposition"))
-      .unionAll(rec.select(col("doc_id"), col("source"),
-        lit("recovered").as("disposition")))
-      .unionAll(dead.select(lit(null).cast("long").as("doc_id"),
-        lit(null).cast("string").as("source"), lit("dead").as("disposition")))
-  }
-
-  /** JSON-lines reader under the oracle: the FULL document rows —
-    * text included, so JSON string escaping is exercised — written as
-    * JSONL and re-read with an explicit schema must equal the parquet
-    * originals. */
-  private def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val out = tmpArtifactRoot("jsonl", dir)
-    if (!new java.io.File(out, "_SUCCESS").isFile)
-      Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"), col("lang"))
-        .coalesce(1).write.mode("overwrite").json(out)
-    graft.sources.Sources.jsonLines(spark, out, Some(StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType)))))
-  }
-
-  /** ORC reader under the oracle ([[graft.sources.Sinks.orc]] →
-    * [[graft.sources.Sources.orc]]): the full scalar document rows —
-    * text included, so ORC string/long encodings and zstd stripe
-    * compression are exercised — written once per source snapshot
-    * (fingerprint-keyed) and re-read; must equal the parquet
-    * originals byte-for-byte in the DuckDB compare. */
-  private def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpArtifactRoot("orc", dir)
-    if (!new java.io.File(out, "_SUCCESS").isFile)
-      graft.sources.Sinks.orc(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-          .coalesce(1), out)
-    graft.sources.Sources.orc(spark, out)
-  }
+  private[graft] val specByName: Map[String, QuerySpec] = byName(specs)
 
-  /** Incremental MinHash near-dup dedup
-    * ([[graft.dedup.Dedup.incrementalNearDup]]): docs < 250's LSH
-    * bands form the accepted-corpus band catalog; the rest are the
-    * incoming batch, screened band-against-catalog then near-dup'd
-    * within the batch. Output = the append-only catalog delta. */
-  private def dedupIncrementalMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val catalog = graft.dedup.Dedup.lshBands(
-      graft.dedup.Dedup.minhashSignatures(docs.filter(col("doc_id") < 250)))
-    graft.dedup.Dedup
-      .incrementalNearDup(docs.filter(col("doc_id") >= 250), catalog)
-      .catalogDelta
-  }
-
-  /** [[dedupIncrementalMinhash]] with the band catalog stored as a
-    * BUCKETED table — bucketBy (band_idx, band_hash), EXACTLY the
-    * screen-join keys: the recurring screen join plans exchange-free
-    * on the catalog side — only the daily ingest batch shuffles,
-    * never the ever-growing accepted-corpus catalog. This is the
-    * 100 TB re-ingest shape [[graft.dedup.Dedup.incrementalNearDup]]'s
-    * Scaladoc promises; `PlanSpec` asserts the no-Exchange plan.
-    * Layout cost is paid once per source snapshot (same
-    * fingerprint-keyed reuse as `staging_agg_bucketed`). */
-  /** Build-if-absent of the bucketed band-catalog layout; returns the
-    * table name. Bucketed on EXACTLY the screen-join keys — subset-key
-    * bucketing fails Spark's co-partition check and the planner would
-    * shuffle both sides anyway (see Bucketing.writeBucketed). */
-  private def ensureBandCatalogLayout(spark: SparkSession, dir: String): String = {
-    val table = "graft_band_catalog_" + dirFingerprint(dir)
-    if (!spark.catalog.tableExists(table)) {
-      graft.sources.Bucketing.writeBucketed(
-        graft.dedup.Dedup.lshBands(
-          graft.dedup.Dedup.minhashSignatures(
-            Tables.documents(spark, dir).filter(col("doc_id") < 250))),
-        table, Seq("band_idx", "band_hash"), nBuckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Overwrite)
-    }
-    table
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specByName.map { case (n, s) => n -> s.build }
 
-  private def dedupIncrementalMinhashBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val table = ensureBandCatalogLayout(spark, dir)
-    graft.dedup.Dedup
-      .incrementalNearDup(docs.filter(col("doc_id") >= 250), spark.table(table))
-      .catalogDelta
-  }
+  lazy val oracleSql: Map[String, String] =
+    specByName.map { case (n, s) => n -> s.oracle }
 
   /** One-time layout builders behind the layout-carrying queries, for
     * the bench to prime and meter SEPARATELY from query time: the
     * build is the amortized once-per-snapshot cost each operator's doc
     * tells the caller to amortize, so folding it into timed run 1
     * (and tripping the adaptive spread gate every sweep) misreports
-    * both numbers. Keys match [[queries]] keys; each builder is
-    * idempotent (build-if-absent). */
-  val layoutBuilds: Map[String, (SparkSession, String) => Unit] = Map(
-    "staging_agg_bucketed" ->
-      ((s, d) => { ensureStagingBucketedLayout(s, d); () }),
-    "dedup_incremental_minhash_bucketed" ->
-      ((s, d) => { ensureBandCatalogLayout(s, d); () }),
-    "substr_dedup_incremental_bucketed" ->
-      ((s, d) => { ensureWindowCatalogLayout(s, d); () }),
-    "fact_pruned" ->
-      ((s, d) => { ensureFactPrunedLayout(s, d); () }),
-    // the three corpus queries share ONE prepared snapshot: the eager
-    // pipeline is the (amortized, metered) layout build; timed runs
-    // measure the lazy tail each consumer actually pays
-    "corpus_prepare" ->
-      ((s, d) => { corpusListsDir(s, d); () }),
-    "corpus_disposition" ->
-      ((s, d) => { corpusListsDir(s, d); () }),
-    "corpus_funnel" ->
-      ((s, d) => { corpusListsDir(s, d); () }),
-    "sim_ivf_indexed" ->
-      ((s, d) => { ensureIvfIndexLayout(s, d); () }),
-    "sim_ivf_filtered" ->
-      ((s, d) => { ensureIvfIndexLayout(s, d); () }),
-    "sim_ivf_indexed_txn" ->
-      ((s, d) => { ensureIvfIndexTxnLayout(s, d); () }),
-    "ann_recall_indexed" ->
-      ((s, d) => { ensureIvfIndexLayout(s, d); () }),
-    "sim_ivf_indexed_incremental" ->
-      ((s, d) => { ensureIvfIndexIncLayout(s, d); () }),
-    "ivf_index_stats" ->
-      ((s, d) => { ensureIvfIndexLayout(s, d); () }),
-    "ivf_rebuild_advice" ->
-      ((s, d) => { ensureIvfIndexLayout(s, d); () }),
-    "sim_ivf_rebuilt" ->
-      ((s, d) => { ensureIvfIndexRebLayout(s, d); () }),
-    "bm25_indexed" ->
-      ((s, d) => { ensureBm25IndexLayout(s, d); () }),
-    "bm25_deleted" ->
-      ((s, d) => { ensureBm25DeletedLayout(s, d); () }),
-    "phrase_indexed" ->
-      ((s, d) => { ensureBm25IndexLayout(s, d); () }),
-    "sim_ivfpq_indexed" ->
-      ((s, d) => { ensureIvfPqIndexLayout(s, d); () }),
-    "unigram_encode" ->
-      ((s, d) => { ensureUnigramVocabLayout(s, d); () }),
-    "unigram_fertility" ->
-      ((s, d) => { ensureUnigramVocabLayout(s, d); () }),
-  )
-  /** Verified variant ([[graft.dedup.Dedup.incrementalNearDupVerified]]):
-    * same split, but a catalog band collision only drops a batch doc
-    * after exact-Jaccard confirmation against the colliding catalog
-    * doc's shingles — the precision-recovering mode. */
-  private def dedupIncrementalMinhashVerified(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val catalogDocs = docs.filter(col("doc_id") < 250)
-    // Scoped persist: the catalog signatures feed BOTH the band catalog
-    // (screen side) and the shingle catalog (verify side) — without the
-    // cache the catalog's shingling + minhash kernel runs once per
-    // branch inside the screen+verify job. Safe to release immediately:
-    // incrementalNearDupVerified materializes every consumer eagerly
-    // (the screen-hit checkpoint) before returning.
-    val catalogSigs = graft.dedup.Dedup.minhashSignatures(catalogDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.dedup.Dedup
-        .incrementalNearDupVerified(docs.filter(col("doc_id") >= 250),
-          graft.dedup.Dedup.lshBands(catalogSigs),
-          catalogSigs.select(col("doc_id"), col("shingles")))
-        .catalogDelta
-    } finally { catalogSigs.unpersist(blocking = false); () }
+    * both numbers. Each builder is idempotent (build-if-absent). */
+  lazy val layoutBuilds: Map[String, (SparkSession, String) => Unit] =
+    specByName.flatMap { case (n, s) =>
+      s.layout.map(b => n -> ((sp: SparkSession, d: String) => { b(sp, d); () }))
+    }
+
+  /** The eager stage split of the build that produced `dir`'s cached
+    * corpus snapshot — read from the layout itself, so it describes
+    * the run the lists came from even when THIS JVM served them from
+    * cache and never ran the pipeline. A failed layout build throws;
+    * a snapshot without `stages.json` has no split. */
+  def corpusListsStages(spark: SparkSession, dir: String): Map[String, Double] = {
+    val f = new java.io.File(CorpusQueries.corpusListsDir(spark, dir), "stages.json")
+    if (!f.isFile) Map.empty
+    else {
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      import scala.jdk.CollectionConverters._
+      root.fieldNames().asScala.map(k => k -> root.get(k).asDouble()).toMap
+    }
   }
-
-  /** KMV sketch algebra ([[graft.expressions.SketchAggregates]]):
-    * audience overlap of the click/view user sets computed purely from
-    * two 64-value sketches — union, Jaccard, intersection — never
-    * touching the raw ID sets. Jaccard serialized as fixed-point
-    * micros for the comparator. */
-  private def audienceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    import graft.expressions.SketchAggregates
-    val ev = Tables.events(spark, dir)
-    def sketchOf(t: String) = ev.filter(col("event_type") === t)
-      .agg(SketchAggregates.kmvDistinct(col("user_id"), 64).as(s"sk_$t"))
-    val o = sketchOf("click").crossJoin(sketchOf("view"))
-      .select(SketchAggregates.kmvOverlap(col("sk_click"), col("sk_view"), 64).as("o"))
-    o.select(
-      round(col("o.jaccard") * 1e6).cast("long").as("jaccard_micros"),
-      col("o.intersection_est"), col("o.union_est"))
-  }
-
-  /** Token-budget sampling ([[graft.operators.Sampling.weightedSample]]):
-    * keep ~1 document per 2000 tokens of cumulative weight,
-    * deterministic integer arithmetic, inclusion probability ∝ token
-    * count. */
-  private def corpusSampleTokens(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions
-    // text rides through the sampler on purpose: weightedSample windows
-    // over a narrow internal (key, weight, hash) projection and
-    // semi-joins the kept keys back, so the payload column must cross
-    // no exchange — PlanSpec asserts exactly that on this query
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("text"),
-        size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
-    graft.operators.Sampling.weightedSample(
-      docs, "doc_id", "n_tokens", step = 2000L, nShards = 8, salt = "tb")
-  }
-
-  /** Fixed-size per-source sample
-    * ([[graft.operators.Sampling.topKPerStratum]]): the 3 smallest-
-    * hash docs per source — text rides through to prove the payload
-    * stays out of the rank exchange. */
-  private def corpusSamplePerSource(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.topKPerStratum(
-      Tables.documents(spark, dir).select("doc_id", "source", "text"),
-      "doc_id", "source", k = 3, salt = "ps")
-
-  /** Binary-code ANN ([[graft.similarity.Similarity.binarize]] /
-    * `hammingTopK`): sign-bit codes (8 bytes/vector) + Hamming top-5 —
-    * the memory-bound scale path next to the float brute force of
-    * `sim_topk`. */
-  private def simHamming(spark: SparkSession, dir: String): DataFrame = {
-    val codes = Similarity.binarize(
-      Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-    val queries = codes.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("code0").as("q0"), col("code1").as("q1"))
-    Similarity.hammingTopK(codes, queries, k = 5)
-  }
-
-  /** Morton z-values for the (user_id, value) plane
-    * ([[graft.sources.ZOrder]]) — the clustering key behind
-    * 2-dimensional file pruning; the oracle re-derives the bit
-    * interleave from the same shift/mask table. */
-  private def zorderCells(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.ZOrder
-    Tables.events(spark, dir).select(col("event_id"),
-      col("user_id").bitwiseAND(lit(65535L)).as("x"),
-      floor(coalesce(col("value"), lit(0.0))).cast("long")
-        .bitwiseAND(lit(65535L)).as("y"))
-      .withColumn("z", ZOrder.zValue(col("x"), col("y")))
-  }
-
-  // =================================================================
-  // registry
-  // =================================================================
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "staging_agg" -> (stagingAgg(_, _)),
-    "staging_agg_bucketed" -> (stagingAggBucketed(_, _)),
-    "fact_pruned" -> (factPruned(_, _)),
-    "clean_normalize" -> (cleanNormalize(_, _)),
-    "zone_enrich" -> (zoneEnrich(_, _)),
-    // referential-integrity audit: per FK, how many fact rows have no
-    // dim partner — the rows an inner-join enrichment would silently
-    // DROP. The two zone legs prove integrity HOLDS against the real
-    // lookup (orphan count 0 is the audit's green light, not a
-    // vacuous result); the stale-dim leg simulates a dimension that
-    // never learned codes 5-6 and must flag exactly those rows.
-    // Anti-join + one-row reduce per FK, always one report row per
-    // audited key.
-    "fk_orphans" -> ((s, d) => {
-      val l = Tables.lineitem(s, d)
-      val trips = l.select(
-        (col("l_partkey") % 12).cast("int").as("pulocationid"),
-        (col("l_suppkey") % 12).cast("int").as("dolocationid"))
-      val lookup = Tables.supplier(s, d)
-        .select(col("s_suppkey").cast("int").as("LocationID")).distinct()
-      val staging = TaxiShape.staging(s, d)
-      val staleDim = staging.filter(col("payment_type_id") <= 4)
-        .select(col("payment_type_id")).distinct()
-      def audit(fact: DataFrame, keyCol: String, dim: DataFrame,
-                dimKey: String, name: String): DataFrame = {
-        val tot = fact.agg(count(lit(1)).as("n_rows"))
-        fact.join(dim.withColumnRenamed(dimKey, keyCol), Seq(keyCol), "left_anti")
-          .agg(count(lit(1)).as("n_orphans"))
-          .crossJoin(broadcast(tot))
-          .select(lit(name).as("fk"), col("n_rows"), col("n_orphans"),
-            expr("(n_orphans * 10000L) div greatest(n_rows, 1L)").as("orphan_bps"))
-      }
-      audit(trips, "pulocationid", lookup, "LocationID", "pulocationid")
-        .unionByName(audit(trips, "dolocationid", lookup, "LocationID", "dolocationid"))
-        .unionByName(audit(staging.select("payment_type_id"), "payment_type_id",
-          staleDim, "payment_type_id", "payment_type_id"))
-        .orderBy("fk")
-    }),
-    // snapshot reconciliation ([[graft.operators.Reconcile.tableDiff]]):
-    // today's load is yesterday's with doc_id≡3 (mod 11) vanished,
-    // doc_id≡2 (mod 7) re-sourced, and doc_id≡0 (mod 13) re-keyed
-    // high — the diff must name every drifted key with its status and
-    // the exact changed column set, and nothing else. Text rides the
-    // join as its md5 digest only (hashCols) — the wide column never
-    // crosses the exchange.
-    "table_diff" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val right = docs.filter(col("doc_id") % 11 =!= 3)
-        .withColumn("source",
-          when(col("doc_id") % 7 === 2, lit("patched")).otherwise(col("source")))
-        .unionByName(docs.filter(col("doc_id") % 13 === 0)
-          .withColumn("doc_id", col("doc_id") + 1000000L)
-          .withColumn("source", lit("added")))
-      graft.operators.Reconcile.tableDiff(docs, right, Seq("doc_id"),
-        hashCols = Seq("text"))
-    }),
-    "dim_vendor" -> ((s, d) => Warehouse.dimVendor(stagingOf(s, d))),
-    "dim_rate_code" -> ((s, d) => Warehouse.dimRateCode(stagingOf(s, d))),
-    "dim_payment" -> ((s, d) => Warehouse.dimPayment(stagingOf(s, d))),
-    "dim_service_type" -> ((s, d) => Warehouse.dimServiceType(stagingOf(s, d))),
-    "dim_pickup_location" -> ((s, d) => Warehouse.dimPickupLocation(stagingOf(s, d))),
-    "dim_dropoff_location" -> ((s, d) => Warehouse.dimDropoffLocation(stagingOf(s, d))),
-    "fact_trip" -> ((s, d) => Warehouse.factTrip(stagingOf(s, d))),
-    // auto-profiling -> suggested CHECK constraints
-    // ([[graft.validate.Expectations.suggestChecks]]): one profile
-    // pass over documents emits the not-null / widened-range /
-    // IN-domain predicates a human reviews and registers via
-    // TxnLog.addCheck — the first step of the quality loop, with
-    // every suggestion string deterministic and SQL-replayable
-    "suggest_checks" -> ((s, d) =>
-      graft.validate.Expectations.suggestChecks(
-        Tables.documents(s, d)
-          .select("doc_id", "text", "lang", "source", "n_chars"))),
-    "validate_suite" -> (validateSuite(_, _)),
-    "validate_extended" -> (validateExtended(_, _)),
-    "validate_rows" -> (validateRows(_, _)),
-    "union_all" -> (unionAll(_, _)),
-    // wide→long melt of the lineitem measures (the native unpivot
-    // operator — a per-row expansion, no shuffle)
-    "unpivot_measures" -> ((s, d) =>
-      Tables.lineitem(s, d)
-        .select("l_orderkey", "l_linenumber", "l_quantity",
-          "l_extendedprice", "l_discount", "l_tax")
-        .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"),
-            col("l_discount"), col("l_tax")),
-          "measure", "value")),
-    // month-over-month revenue deltas: cents-exact monthly totals,
-    // lag window over the BOUNDED month axis (dozens of rows — the
-    // single-partition window is over aggregates, never facts)
-    "period_over_period" -> (periodOverPeriod(_, _)),
-    "cdc_parse" -> (cdcParse(_, _)),
-    "json_extract" -> (jsonExtract(_, _)),
-    "json_variant" -> (jsonVariant(_, _)),
-    "json_shred" -> (jsonShred(_, _)),
-    "hash_sample" -> (hashSample(_, _)),
-    "profile_events" -> (profileEvents(_, _)),
-    "revenue_by_nation" -> (revenueByNation(_, _)),
-    "q3_priority" -> (q3Priority(_, _)),
-    "parts_by_brand" -> (partsByBrand(_, _)),
-    "semi_join" -> (semiJoin(_, _)),
-    "anti_join" -> (antiJoin(_, _)),
-    "set_ops" -> (setOps(_, _)),
-    "range_join" -> (rangeJoinQuery(_, _)),
-    "bloom_join" -> (bloomJoin(_, _)),
-    "distinct_sketch" -> (distinctSketch(_, _)),
-    "distinct_hll" -> (distinctHll(_, _)),
-    "distinct_hll_union" -> (distinctHllUnion(_, _)),
-    "mv_distinct_hll" -> (mvDistinctHll(_, _)),
-    "decontaminate_bloom" -> (decontaminateBloom(_, _)),
-    "span_dedup" -> (spanDedupQuery(_, _)),
-    "substr_dedup" -> (substrDedupQuery(_, _)),
-    "substr_dedup_spans" -> (substrDedupSpansQuery(_, _)),
-    "substr_dedup_incremental" -> (substrDedupIncrementalQuery(_, _)),
-    "substr_dedup_incremental_bucketed" -> (substrDedupIncrementalBucketed(_, _)),
-    "model_score" -> (modelScore(_, _)),
-    "dp_counts" -> (dpCountsQ(_, _)),
-    "dp_sum" -> (dpSumQ(_, _)),
-    "k_anonymity" -> (kAnonymity(_, _)),
-    "export_shards" -> (exportShards(_, _)),
-    "export_shards_jsonl" -> (exportShardsJsonl(_, _)),
-    "corpus_shuffle" -> (corpusShuffle(_, _)),
-    "corpus_mix" -> (corpusMix(_, _)),
-    "zorder_cells" -> (zorderCells(_, _)),
-    "dedup_incremental" -> (dedupIncremental(_, _)),
-    "streaming_neardup_replay" -> (streamingNeardupReplay(_, _)),
-    "txnlog_changes" -> (txnlogChanges(_, _)),
-    "txnlog_evolution" -> (txnlogEvolution(_, _)),
-    "txnlog_delete" -> (txnlogDelete(_, _)),
-    "txnlog_update" -> (txnlogUpdate(_, _)),
-    "txnlog_convert" -> (txnlogConvert(_, _)),
-    "txnlog_delete_mor" -> (txnlogDeleteMor(_, _)),
-    "txnlog_merge" -> (txnlogMerge(_, _)),
-    "txnlog_merge_full" -> (txnlogMergeFull(_, _)),
-    "txnlog_merge_clauses" -> (txnlogMergeClauses(_, _)),
-    "txnlog_timetravel_sql" -> (txnlogTimetravelSql(_, _)),
-    "txnlog_named_sql" -> (txnlogNamedSql(_, _)),
-    "txnlog_checked" -> (txnlogChecked(_, _)),
-    "txnlog_restore" -> (txnlogRestore(_, _)),
-    "txnlog_clone" -> (txnlogClone(_, _)),
-    "txnlog_compact_where" -> (txnlogCompactWhere(_, _)),
-    "txnlog_compact" -> (txnlogCompact(_, _)),
-    "txnlog_skipping" -> (txnlogSkipping(_, _)),
-    "txnlog_rename" -> (txnlogRename(_, _)),
-    "txnlog_addcol" -> (txnlogAddcol(_, _)),
-    "txnlog_hidden" -> (txnlogHidden(_, _)),
-    // the same mid-range read through `format("graft")` — Catalyst
-    // pushes the BETWEEN to the relation, the relation prunes the two
-    // disjoint quartile dirs off the manifest stats, and the rows are
-    // hash-exact with the native readWhere path (shared oracle shape)
-    "txnlog_connector" -> ((s, d) => {
-      val (root, q) = ensureTxnskipTable(s, d)
-      val (lo, hi) = (q + q / 2, 2 * q + q / 2)
-      s.read.format("graft").load(root)
-        .filter(col("doc_id") >= lo && col("doc_id") <= hi)
-        .select("doc_id", "source", "n_chars")
-    }),
-    "txnlog_zorder" -> (txnlogZorder(_, _)),
-    "txnlog_hilbert" -> (txnlogHilbert(_, _)),
-    "txnlog_zorder_str" -> (txnlogZorderStr(_, _)),
-    "txnlog_maintain" -> (txnlogMaintain(_, _)),
-    "txnlog_bloom" -> (txnlogBloom(_, _)),
-    "txnlog_points" -> (txnlogPoints(_, _)),
-    "txnlog_lineage" -> (txnlogLineage(_, _)),
-    "cluster_advice" -> (clusterAdviceQ(_, _)),
-    "txnlog_cdf" -> (txnlogCdf(_, _)),
-    // the same change feed served through the Delta-CDF read surface
-    // (format("graft") + readChangeFeed/startingVersion options) —
-    // the connector moves plans, never answers
-    "txnlog_cdf_connector" -> ((s, d) => {
-      val root = ensureTxnCdfTable(s, d)
-      s.read.format("graft").option("readChangeFeed", "true")
-        .option("startingVersion", "1").option("keyCols", "doc_id")
-        .load(root)
-        .select("_commit_version", "_change_type", "doc_id", "source", "n_chars")
-    }),
-    // the same feed through the table_changes(...) SQL TVF (Delta's
-    // CDF function shape). No keyCols in the function form, so the
-    // keyed MERGE commit serves as unkeyed delete+insert pairs
-    "txnlog_cdf_sql" -> ((s, d) => {
-      val root = ensureTxnCdfTable(s, d)
-      s.sql(s"SELECT _commit_version, _change_type, doc_id, source, n_chars " +
-        s"FROM table_changes('$root', 1)")
-    }),
-    "txnlog_replica" -> (txnlogReplica(_, _)),
-    "mv_incremental_cdf" -> (mvIncrementalCdf(_, _)),
-    // metadata-only COUNT from the manifest row counts vs the scan:
-    // zero files opened on the fast path, require proves it fired
-    "txnlog_fastcount" -> ((s, d) => {
-      import graft.sources.TxnLog
-      val (root, _) = ensureTxnskipTable(s, d)
-      val meta = TxnLog.fastCount(s, root).getOrElse(sys.error(
-        "every dir was committed with stats — fastCount must take the metadata path"))
-      val scanned = TxnLog.read(s, root).count()
-      import s.implicits._
-      Seq((meta, scanned)).toDF("n_rows_meta", "n_rows_scan")
-    }),
-    "forget_docs" -> (forgetDocs(_, _)),
-    "dataset_release" -> (datasetRelease(_, _)),
-    // what changed between two pinned releases, per member table:
-    // added/removed row counts from exceptAll over the reproducible
-    // pinned reads — the changelog a dataset card cites
-    "release_diff" -> ((s, d) => {
-      import graft.sources.TxnCatalog
-      val cat = ensureReleaseTables(s, d)
-      Seq("docs", "emb").map { t =>
-        val r0 = TxnCatalog.readTable(s, cat, t, Some(0L))
-        val r1 = TxnCatalog.readTable(s, cat, t, Some(1L))
-        r0.agg(count(lit(1)).as("n_release0"))
-          .crossJoin(r1.agg(count(lit(1)).as("n_release1")))
-          .crossJoin(r1.exceptAll(r0).agg(count(lit(1)).as("n_added")))
-          .crossJoin(r0.exceptAll(r1).agg(count(lit(1)).as("n_removed")))
-          .select(lit(t).as("table_name"), col("n_release0"),
-            col("n_release1"), col("n_added"), col("n_removed"))
-      }.reduce(_.unionByName(_)).orderBy("table_name")
-    }),
-    "mv_merge" -> (mvMerge(_, _)),
-    "csv_roundtrip" -> (csvRoundtrip(_, _)),
-    "quarantine_split" -> (quarantineSplitQuery(_, _)),
-    "quarantine_replay" -> (quarantineReplay(_, _)),
-    "jsonl_roundtrip" -> (jsonlRoundtrip(_, _)),
-    "orc_roundtrip" -> (orcRoundtrip(_, _)),
-    "cdc_chunks" -> (cdcChunks(_, _)),
-    "cdc_dedup" -> (cdcDedupQ(_, _)),
-    "dedup_incremental_minhash" -> (dedupIncrementalMinhash(_, _)),
-    "dedup_incremental_minhash_bucketed" -> (dedupIncrementalMinhashBucketed(_, _)),
-    "dedup_incremental_minhash_verified" -> (dedupIncrementalMinhashVerified(_, _)),
-    "audience_overlap" -> (audienceOverlap(_, _)),
-    "corpus_sample_tokens" -> (corpusSampleTokens(_, _)),
-    "corpus_sample_per_source" -> (corpusSamplePerSource(_, _)),
-    "pivot_events" -> (pivotEvents(_, _)),
-    "window_topk" -> (windowTopk(_, _)),
-    "running_total" -> (runningTotal(_, _)),
-    "rollup_agg" -> (rollupAgg(_, _)),
-    // arbitrary GROUPING SETS lattice (the rollup/cube generalization):
-    // the exact set list the caller wants, one shuffle, grouping_id
-    // disambiguates rollup-NULLs from data NULLs
-    "grouping_sets_agg" -> ((s, d) => {
-      val e = Tables.events(s, d)
-        .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
-      e.groupingSets(
-          Seq(Seq(col("event_type")), Seq(col("event_type"), col("day")), Seq()),
-          col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"),
-          Exact.dsum(col("value")).as("sum_value"),
-          grouping_id().cast("long").as("gid"))
-    }),
-    "asof_join" -> (asofJoin(_, _)),
-    "asof_join_tolerance" -> (asofJoinTolerance(_, _)),
-    "stats_summary" -> (statsSummary(_, _)),
-    "lineitem_cov" -> (lineitemCov(_, _)),
-    "value_histogram" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy((floor(col("value") / 5) * 5).cast("double").as("bucket_start"))
-        .agg(count(lit(1)).as("n"))),
-    "user_event_types" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"))
-        // sort makes the collected set deterministic; joined to a plain
-        // string because the driver's pandas comparator cannot sort/hash
-        // array-typed columns (numpy.ndarray is unhashable)
-        .agg(array_join(array_sort(collect_set(col("event_type"))), ",").as("event_types"),
-          count(lit(1)).as("n_events"))),
-    "funnel" -> (funnel(_, _)),
-    // ordered 3-step funnel depth counts (view -> click -> purchase),
-    // each stage one slim per-user min aggregate joined forward
-    "funnel_steps" -> (funnelSteps(_, _)),
-    "percentiles" -> (percentiles(_, _)),
-    // per-group winsorization: clip to exact [p05, p95] — robust
-    // scaling for score columns ahead of thresholding/mixing
-    "value_winsorize" -> ((s, d) =>
-      graft.operators.Robust.winsorize(Tables.events(s, d)
-          .select("event_id", "event_type", "value"),
-          "value", "event_type")
-        .select("event_id", "event_type", "value", "value_w")),
-    // median/MAD robust z per group — the outlier scale heavy tails
-    // can't corrupt; zero-MAD groups honestly score NULL
-    "value_robust_z" -> ((s, d) =>
-      graft.operators.Robust.robustZ(Tables.events(s, d)
-          .select("event_id", "event_type", "value"),
-          "value", "event_type")
-        .select("event_id", "event_type", "value", "robust_z")),
-    // cross-source span-overlap matrix (corpus forensics: which
-    // sources share boilerplate/quoted passages)
-    "source_overlap" -> ((s, d) =>
-      TextFunctions.sourceSpanOverlap(Tables.documents(s, d))),
-    // per-group decile + percent-rank features (distribution-free
-    // scaling; unique total order via the event_id tiebreak)
-    "value_ntile" -> ((s, d) =>
-      graft.operators.Robust.rankTransform(Tables.events(s, d)
-          .select("event_id", "event_type", "value"),
-          "value", "event_type", "event_id")),
-    // prefix-boilerplate verdict: docs sharing their first 80 chars
-    "prefix_dup" -> ((s, d) =>
-      graft.dedup.Dedup.prefixDups(Tables.documents(s, d))),
-    // suffix twin: templated footers / licence trailers
-    "suffix_dup" -> ((s, d) =>
-      graft.dedup.Dedup.suffixDups(Tables.documents(s, d))),
-    // leakage-safe split: near-dup CLUSTERS (not docs) are the split
-    // unit, so a held-out doc's near-twin can never land in train
-    "split_leakage_safe" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.dedup.Dedup.leakageSafeSplit(docs,
-        graft.dedup.Dedup.minhashNearDups(docs).select("doc_a", "doc_b"))
-    }),
-    // edit-distance near-dup pairs over bounded 200-char prefixes,
-    // blocked on the exact first 10 chars (record-linkage blocking —
-    // no all-pairs compare; thresholded banded-DP Levenshtein)
-    "dedup_fuzzy" -> ((s, d) =>
-      graft.dedup.Dedup.editDistancePairs(
-        Tables.documents(s, d)
-          .select(col("doc_id"), substring(col("text"), 1, 200).as("s")),
-        "doc_id", "s", maxDist = 10, blockPrefix = 10)),
-    "retention_cohorts" -> (retentionCohorts(_, _)),
-    "cube_agg" -> (cubeAgg(_, _)),
-    "incremental_agg" -> (incrementalAgg(_, _)),
-    "distinct_sketch_incremental" -> (distinctSketchIncremental(_, _)),
-    "event_pairs" -> (eventPairs(_, _)),
-    "session_paths" -> (sessionPaths(_, _)),
-    "attribution" -> (attribution(_, _)),
-    // MATCH_RECOGNIZE-lite: count non-overlapping occurrences of the
-    // behavioral pattern "one-or-more views, then click, then
-    // purchase" (ADJACENT — an interleaved event breaks the run) in
-    // each user's time-ordered event-type sequence; the per-user
-    // string is bounded by that user's event count, regexp runs
-    // map-side after one groupBy
-    "event_pattern" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
-          e => e.getField("event_type"))).as("seq"))
-        .select(col("user_id"),
-          size(expr("regexp_extract_all(seq, '(view )+click purchase', 0)"))
-            .cast("long").as("n_matches"))
-        .filter(col("n_matches") > 0)
-        .orderBy("user_id")),
-    // first-order Markov transition counts + fixed-point row
-    // probabilities over in-session consecutive event pairs
-    "transition_matrix" -> (transitionMatrix(_, _)),
-    // dbt-style calendar date spine over the fact span
-    "dim_date" -> (dimDate(_, _)),
-    // corpus-uniqueness curation score: fraction of a doc's shingles
-    // with df=1 — catches boilerplate assemblies pairwise dedup misses
-    "ngram_novelty" -> ((s, d) =>
-      TextFunctions.ngramNovelty(Tables.documents(s, d))),
-    "skew_report" -> (skewReport(_, _)),
-    // monitoring -> action: per candidate shuffle key, the salting
-    // verdict and factor at 32-way parallelism (event_type's 5 hot
-    // keys need salting, user_id's 150 balanced keys do not)
-    "skew_advice" -> ((s, d) =>
-      graft.operators.Profiler.skewAdvice(
-          Tables.events(s, d), Seq("user_id", "event_type"), partitions = 32)
-        .orderBy("key_col")),
-    // MinHash banding s-curve in exact basis points — the (bands,
-    // rows) tuning table for the engine's LSH convention
-    "lsh_tuning" -> (lshTuning(_, _)),
-    // exact integer PMI inputs over the top-50 document-frequency terms
-    "term_pairs" -> ((s, d) =>
-      TextFunctions.termCooccurrence(Tables.documents(s, d))),
-    // pseudonymize customer PII: salted sha2 tokens, joins survive
-    "mask_pii" -> ((s, d) =>
-      graft.clean.Clean.pseudonymize(
-        Tables.customer(s, d).select("c_custkey", "c_name", "c_mktsegment"),
-        Seq("c_name"), salt = "graft-salt-v1")),
-    // per-vertex triangle counts over the span-share candidate graph
-    // (clique-like boilerplate families vs star-shaped template hubs)
-    "triangle_count" -> ((s, d) =>
-      graft.operators.Graph.triangleCounts(
-          TextFunctions.spanShareEdges(Tables.documents(s, d)), "a", "b")
-        .select(col("id").as("doc_id"), col("n_triangles"))),
-    // skew-salted join (result ≡ the plain join, which is the oracle):
-    // per-row salt from the unique order key, customer replicated 8×
-    "salted_join" -> ((s, d) =>
-      graft.operators.Joins.saltedJoin(
-        Tables.orders(s, d).select(col("o_custkey").as("custkey"),
-          col("o_orderkey"), col("o_totalprice")),
-        Tables.customer(s, d).select(col("c_custkey").as("custkey"),
-          col("c_name")),
-        key = "custkey", tieCol = "o_orderkey", saltFactor = 8,
-        joinType = "left")),
-    "sessionize" -> (sessionize(_, _)),
-    "events_window_agg" -> (eventsWindowAgg(_, _)),
-    "text_quality" -> (textQuality(_, _)),
-    "quality_gopher" -> (qualityGopher(_, _)),
-    "corpus_stats_by_source" -> (corpusStatsBySource(_, _)),
-    // snapshot drift report ([[graft.operators.Profiler.corpusDrift]]):
-    // per-source doc/token mass of two corpus versions (here: the
-    // even-id half as the "previous" snapshot vs the full corpus),
-    // token shares in millionths, |share delta| = the TV-distance term
-    "corpus_drift" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      graft.operators.Profiler.corpusDrift(
-        docs.filter(col("doc_id") % 2 === 0), docs)
-    }),
-    "corpus_curriculum" -> ((s, d) =>
-      graft.operators.Sampling.quantileBuckets(
-          Tables.documents(s, d).select("doc_id", "n_chars"),
-          scoreCol = "n_chars", nBuckets = 10)),
-    // Misra-Gries frequent-items UDAF in its exact regime (k=32 >= 25
-    // distinct brands): counters provably exact, so the sketch output
-    // hash-matches the full GROUP BY it replaces at scale.
-    // per-source TOKEN-budget mixing (doc-percent mixing can't hit
-    // token targets when lengths differ by source); text rides through
-    // the semi-join, never an exchange
-    "corpus_mix_tokens" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("text"),
-          TextFunctions.wsTokenCount(col("text")).as("n_tokens"))
-      graft.operators.Sampling.budgetPerStratum(docs, "doc_id", "n_tokens",
-          "source", Map("src0" -> 800L, "src1" -> 400L, "src2" -> 0L),
-          defaultBudget = 200L, salt = "mx")
-        .select("doc_id", "source", "text", "n_tokens")
-    }),
-    // one-row corpus health dashboard: volume, token mass, exact dup
-    // rate (fingerprint distinct), length extremes
-    "corpus_health" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(TextFunctions.wsTokenCount(col("text")).as("toks"),
-          TextFunctions.fingerprint(col("text")).as("fp"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum("toks").as("n_tokens"),
-          countDistinct(col("fp")).as("n_distinct_docs"),
-          min("toks").as("min_tokens"),
-          max("toks").as("max_tokens"))
-        .withColumn("dup_rate",
-          (col("n_docs") - col("n_distinct_docs")).cast("double") /
-            col("n_docs").cast("double"))),
-    // ensemble near-dup verdict: lexical (MinHash Jaccard) and
-    // semantic (embedding cosine) evidence joined on the same LSH
-    // candidate pairs; agree = both signals past threshold
-    "dedup_ensemble" -> ((s, d) => {
-      val pairs = Dedup.minhashNearDups(Tables.documents(s, d))
-        .select("doc_a", "doc_b", "jaccard")
-      val e = Tables.embeddings(s, d)
-      val ea = e.select(col("vec_id").as("doc_a"), col("embedding").as("emb_a"),
-        Similarity.norm(col("embedding")).as("na"))
-      val eb = e.select(col("vec_id").as("doc_b"), col("embedding").as("emb_b"),
-        Similarity.norm(col("embedding")).as("nb"))
-      pairs.join(ea, "doc_a").join(eb, "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("jaccard"),
-          round(Similarity.dot(col("emb_a"), col("emb_b")) /
-            (col("na") * col("nb")), 9).as("cos"))
-        .withColumn("agree", col("jaccard") >= 0.5 && col("cos") >= 0.2)
-    }),
-    // mergeable quantile sketch in its exact regime (k=32768 >= group
-    // sizes at verify scale): weighted-sample quantiles == the
-    // ceil(p*n)-th order statistics
-    "quantile_sketch" -> ((s, d) => {
-      import graft.expressions.SketchAggregates
-      Tables.events(s, d).groupBy("event_type")
-        .agg(SketchAggregates.quantileSketch(col("value"), 32768).as("sk"))
-        .select(col("event_type"),
-          SketchAggregates.sketchQuantileDisc(col("sk"), 25).as("p25"),
-          SketchAggregates.sketchQuantileDisc(col("sk"), 50).as("p50"),
-          SketchAggregates.sketchQuantileDisc(col("sk"), 75).as("p75"),
-          SketchAggregates.sketchQuantileDisc(col("sk"), 90).as("p90"))
-    }),
-    // explicit range-partition planner: decile cutpoints from ONE
-    // mergeable KLL sketch (exact regime at verify scale) broadcast
-    // back as the bucket bounds, rows tagged map-side, per-bucket
-    // census proves the balance a 100 TB global sort / sorted export
-    // would get — the deterministic, persistable replacement for
-    // RangePartitioner's per-run reservoir sample (stable shard
-    // boundaries across reruns and appends)
-    // RFM user features with rank-free quintile scores: per-user
-    // recency/frequency/monetary collapse in one agg, quintile
-    // CUTPOINTS come from the mergeable quantile sketch (exact regime
-    // at test scale, range_plan convention) and broadcast back for a
-    // map-side bucket — no global ntile sort, no unpartitioned window
-    // over users
-    "user_rfm" -> ((s, d) => {
-      import graft.expressions.SketchAggregates._
-      val ev = Tables.events(s, d).select(col("user_id"),
-        unix_micros(col("ts").cast("timestamp")).as("__ts_us"),
-        round(col("value") * 100).cast("long").as("__cents"))
-      val g = ev.agg(max(col("__ts_us")).as("__maxus"))
-      val base = ev.groupBy("user_id").agg(
-          max(col("__ts_us")).as("__last_us"),
-          count(lit(1)).as("frequency"),
-          sum(col("__cents")).as("monetary_cents"))
-        .crossJoin(broadcast(g))
-        .withColumn("recency_days",
-          expr("(__maxus - __last_us) div 86400000000L"))
-        .select("user_id", "recency_days", "frequency", "monetary_cents")
-      val cuts = base.agg(
-          quantileSketch(col("recency_days").cast("double"), 32768).as("__skr"),
-          quantileSketch(col("frequency").cast("double"), 32768).as("__skf"),
-          quantileSketch(col("monetary_cents").cast("double"), 32768).as("__skm"))
-        .select(
-          array((1 to 4).map(i => sketchQuantileDisc(col("__skr"), i * 20)): _*).as("__rc"),
-          array((1 to 4).map(i => sketchQuantileDisc(col("__skf"), i * 20)): _*).as("__fc"),
-          array((1 to 4).map(i => sketchQuantileDisc(col("__skm"), i * 20)): _*).as("__mc"))
-      base.crossJoin(broadcast(cuts))
-        .select(col("user_id"), col("recency_days"), col("frequency"),
-          col("monetary_cents"),
-          // low recency is GOOD (5), high frequency/monetary are GOOD
-          (lit(5L) - size(filter(col("__rc"),
-            c => col("recency_days").cast("double") > c)).cast("long")).as("r_score"),
-          (lit(1L) + size(filter(col("__fc"),
-            c => col("frequency").cast("double") > c)).cast("long")).as("f_score"),
-          (lit(1L) + size(filter(col("__mc"),
-            c => col("monetary_cents").cast("double") > c)).cast("long")).as("m_score"))
-        .withColumn("rfm",
-          col("r_score") * 100L + col("f_score") * 10L + col("m_score"))
-    }),
-    "range_plan" -> ((s, d) => {
-      import graft.expressions.SketchAggregates._
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-      val cuts = ev.agg(quantileSketch(col("value"), 32768).as("sk"))
-        .select(array((1 to 9).map(i =>
-          sketchQuantileDisc(col("sk"), i * 10)): _*).as("cuts"))
-      ev.crossJoin(broadcast(cuts))
-        .select(col("value"),
-          size(filter(col("cuts"), c => col("value") > c)).cast("long").as("bucket"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("value")).as("lo"), max(col("value")).as("hi"))
-    }),
-    // bucketized interval-overlap join (no nested loop); intervals are
-    // [ts, ts + floor(value) seconds] per event, two user cohorts
-    "interval_join" -> ((s, d) => {
-      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("lo"),
-        (unix_timestamp(col("ts")) + floor(col("value")).cast("long") * 60).as("hi"))
-      val a = ev.filter(col("user_id") < 3)
-        .select(col("event_id").as("a_id"), col("lo").as("a_lo"), col("hi").as("a_hi"))
-      val b = ev.filter(col("user_id") >= 3 && col("user_id") < 6)
-        .select(col("event_id").as("b_id"), col("lo").as("b_lo"), col("hi").as("b_hi"))
-      graft.operators.Joins.intervalJoin(a, b,
-          "a_lo", "a_hi", "b_lo", "b_hi", bucketWidth = 3600)
-        .select("a_id", "b_id", "a_lo", "a_hi", "b_lo", "b_hi")
-    }),
-    // fixed-point PageRank over the MinHash near-dup graph: integer
-    // micro-unit ranks, floor division each step — engine-exact after
-    // any number of iterations (a floating-point PageRank never
-    // survives a cross-engine hash compare)
-    "pagerank_neardup" -> ((s, d) =>
-      graft.operators.Graph.pageRank(
-          graft.operators.Graph.symmetrize(
-            Dedup.minhashNearDups(Tables.documents(s, d))
-              .select("doc_a", "doc_b"),
-            "doc_a", "doc_b"))
-        .select(col("id").as("doc_id"), col("rank_micro"))),
-    // unicode NFC canonicalization via the native codegen'd
-    // expression: a decomposed suffix (e + combining acute) is
-    // appended so the normalization provably composes it — lengths
-    // shrink by exactly one codepoint per doc
-    "text_nfc" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" cafe\u0301")).as("__raw"))
-        .select(col("doc_id"),
-          graft.expressions.NfcNormalize.nfcNormalize(col("__raw")).as("text_nfc"),
-          length(col("__raw")).cast("bigint").as("len_raw"))
-        .withColumn("len_nfc", length(col("text_nfc")).cast("bigint"))),
-    // exact-phrase search: positional query over the token stream,
-    // computed as a map-side shingle-equality count (zero exchanges) —
-    // the oracle replays the posting-list positional self-join
-    "phrase_search" -> ((s, d) =>
-      graft.functions.TextFunctions.phraseSearch(
-          Tables.documents(s, d), Seq("table", "part"))
-        .orderBy("doc_id")),
-    // the same phrase query SERVED from the positional postings index
-    // (adjacency-join over <= 2 probed buckets, one pinned release) —
-    // storage changes the plan, never the answer
-    "phrase_indexed" -> (phraseIndexed(_, _)),
-    // synchronous label propagation over the same near-dup graph:
-    // 2-core of the near-dup graph: clique-like boilerplate families
-    // survive, star-hub false positives peel (leaves first, then the
-    // hub); 4 synchronous peeling rounds, oracle-unrolled
-    "graph_kcore" -> ((s, d) =>
-      graft.operators.Graph.kCore(
-          Dedup.minhashNearDups(Tables.documents(s, d))
-            .select("doc_a", "doc_b"),
-          "doc_a", "doc_b", k = 2)
-        .select(col("id").as("doc_id"), col("core_degree"))),
-    // contamination blast radius: hop distance from a flagged seed
-    // set over the near-dup graph (multi-source BFS, 3 rounds —
-    // each vertex labeled once at its true minimum distance)
-    "graph_khop" -> ((s, d) =>
-      graft.operators.Graph.bfsHops(
-          Dedup.minhashNearDups(Tables.documents(s, d))
-            .select("doc_a", "doc_b"),
-          "doc_a", "doc_b",
-          Tables.documents(s, d).filter(col("doc_id") % 100 === 0)
-            .select("doc_id"),
-          maxHops = 3)
-        .select(col("id").as("doc_id"), col("hops"))),
-    // communities, not components — a hub bridging two boilerplate
-    // families stays a bridge; 4 deterministic min-tie rounds
-    "label_prop" -> ((s, d) =>
-      graft.operators.Graph.labelPropagation(
-          graft.operators.Graph.symmetrize(
-            Dedup.minhashNearDups(Tables.documents(s, d))
-              .select("doc_a", "doc_b"),
-            "doc_a", "doc_b"))
-        .select(col("id").as("doc_id"), col("label").as("community"))),
-    // per-group 3-sigma outliers with engine-exact integer-moment test
-    "value_outliers" -> ((s, d) =>
-      graft.validate.Expectations.outliers(
-          Tables.events(s, d).select("event_id", "event_type", "value"),
-          "value", Seq("event_type"), z = 3)
-        .select("event_id", "event_type", "value")),
-    // real WAV codec end-to-end: synth square wave → RIFF encode →
-    // decode → features; oracle predicts features in closed form from
-    // doc_id, so a codec bug breaks the hash compare
-    "audio_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.featurizeAudio(
-        graft.multimodal.Multimodal.syntheticAudioAssets(
-          Tables.documents(s, d))).toDF()),
-    // inverted-index keyword search, exact-rational tf-idf score
-    "keyword_search" -> ((s, d) =>
-      TextFunctions.keywordSearch(Tables.documents(s, d),
-        Seq("spark", "merge", "window"), k = 20)),
-    // regular-grid resample + forward fill (gap-filled hourly series)
-    "events_resample" -> ((s, d) =>
-      graft.operators.TimeSeries.resampleFfill(
-        Tables.events(s, d).filter(col("user_id") < 5),
-        "user_id", "ts", "value", "hour")),
-    // SCD Type 2 validity intervals from the event change log
-    "scd2_user_state" -> ((s, d) =>
-      graft.operators.TimeSeries.scd2(
-        Tables.events(s, d).filter(col("user_id") < 10),
-        "user_id", "ts", "event_id", "event_type")),
-    // trailing 7-day rolling sum/count per user (RANGE frame over
-    // epoch micros — deterministic among equal timestamps, no ROWS
-    // order dependence; exact integer-cents sum)
-    "events_rolling" -> ((s, d) =>
-      graft.operators.TimeSeries.rollingAgg(
-        Tables.events(s, d), "user_id", "ts", "value",
-        windowMicros = 7L * 86400L * 1000000L)),
-    // feed-dropout detection: same-key event pairs spaced > 1 hour
-    "events_gaps" -> ((s, d) =>
-      graft.operators.TimeSeries.gaps(
-        Tables.events(s, d), "user_id", "ts", "event_id",
-        minGapMicros = 3600L * 1000000L)),
-    // backfill planner: which DATE ranges are missing (day-of-month %
-    // 7 == 3 days dropped to simulate failed loads) — islands over
-    // distinct days, gaps between consecutive islands
-    "backfill_plan" -> ((s, d) =>
-      graft.operators.TimeSeries.missingRanges(
-          Tables.events(s, d).filter(dayofmonth(col("ts")) % 7 =!= 3), "ts")
-        .orderBy("gap_start")),
-    // anomaly persistence: longest consecutive run of >= 50.00 events
-    // per user (gaps-and-islands; row-number difference, struct-max
-    // argmax winner, ties to the earliest streak)
-    "events_streaks" -> ((s, d) =>
-      graft.operators.TimeSeries.streaks(
-          Tables.events(s, d), "user_id", "ts", "event_id",
-          col("value") >= 50.0)
-        .orderBy("user_id")),
-    // per-user daily quota gate ([[graft.operators.TimeSeries
-    // .rateLimit]]): admit the first 3 events per user per event-time
-    // day, report the per-window admission audit — one shuffle by
-    // user, the rank window strictly per (user, day); streaming twin
-    // in StatefulRateLimit carries two longs per user
-    "rate_limit" -> ((s, d) =>
-      graft.operators.TimeSeries.rateLimit(
-          Tables.events(s, d), "user_id", "ts", "event_id",
-          maxPerWindow = 3)
-        .groupBy("user_id", "window_start")
-        .agg(count(lit(1)).as("n_events"),
-          sum("admitted").cast("long").as("n_admitted"),
-          (count(lit(1)) - sum("admitted")).cast("long").as("n_dropped"))),
-    // per-user drift alarms: one-sided CUSUM in integer cents against
-    // a 55.00 reference, alarm at 400.00 of accumulated excess — the
-    // sequential recurrence runs as two cumulative windows (prefix-sum
-    // identity), one shuffle by user
-    "events_cusum" -> ((s, d) =>
-      graft.operators.TimeSeries.cusum(
-          Tables.events(s, d), "user_id", "ts", "event_id",
-          valueCents = round(col("value") * 100).cast("long"),
-          refCents = 5500L, thresholdCents = 40000L)
-        .orderBy("user_id", "event_id")),
-    // watermark tuning report: per event-time hour, what a 30-minute
-    // watermark replayed in arrival (event_id) order would drop as
-    // late — two-phase sharded prefix max, never a global sort
-    "watermark_audit" -> ((s, d) =>
-      graft.operators.TimeSeries.watermarkAudit(
-        Tables.events(s, d), delayMicros = 1800L * 1000000L,
-        shardWidth = 4096L)),
-    // corpus n-gram count table (LM-data prep): ShingleRows generator
-    // streams windows into a hash agg; min-count pruning after the agg
-    "ngram_counts" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(graft.expressions.TextGenerators.shingleRows(col("text"), 3))
-        .groupBy("shingle").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= 3)),
-    // native Generator (UDTF tier): streams one row per 3-token window
-    // without materializing the per-document shingle array
-    "text_shingles" -> ((s, d) =>
-      Tables.documents(s, d).filter(col("doc_id") < 50)
-        .select(col("doc_id"),
-          graft.expressions.TextGenerators.shingleRows(col("text"), 3))),
-    "heavy_hitters" -> ((s, d) =>
-      Tables.part(s, d)
-        .agg(graft.expressions.SketchAggregates
-          .misraGries(col("p_brand"), 32).as("hh"))
-        .select(posexplode(col("hh")))
-        .select((col("pos") + 1).cast("bigint").as("rank"),
-          col("col.item").as("item"), col("col.cnt").as("cnt"))),
-    // Count-Min frequency sketch (depth 4 × width 32): per-brand point
-    // estimates read back from the ONE stored counter matrix — the
-    // md5-derived buckets make even the collision error deterministic,
-    // so the oracle checks the estimates themselves, not just bounds
-    "freq_sketch" -> ((s, d) => {
-      import graft.expressions.SketchAggregates._
-      val sk = Tables.part(s, d).agg(countMin(col("p_brand"), 4, 32).as("sk"))
-      Tables.part(s, d).select(col("p_brand")).distinct()
-        .crossJoin(broadcast(sk))
-        .select(col("p_brand"),
-          cmEstimate(col("sk"), col("p_brand"), 4, 32).as("est"))
-    }),
-    // pre-flight join-size estimation from two CMS sketches (never
-    // runs the join): fk-join forecast + self-join (F2) skew forecast,
-    // each next to its exact count computed the scalable way (per-key
-    // count vectors joined — one narrow shuffle, no row blowup)
-    "join_size_sketch" -> ((s, d) => {
-      import graft.expressions.SketchAggregates._
-      val (dep, w) = (4, joinSketchWidth)
-      def est(a: DataFrame, ak: Column, b: DataFrame, bk: Column): DataFrame =
-        a.agg(countMin(ak.cast("string"), dep, w).as("ska"))
-          .crossJoin(b.agg(countMin(bk.cast("string"), dep, w).as("skb")))
-          .select(cmJoinSize(col("ska"), col("skb"), dep, w).as("est_rows"))
-      def exact(a: DataFrame, ak: Column, b: DataFrame, bk: Column): DataFrame = {
-        val ca = a.filter(ak.isNotNull).groupBy(ak.as("k")).agg(count(lit(1)).as("na"))
-        val cb = b.filter(bk.isNotNull).groupBy(bk.as("k")).agg(count(lit(1)).as("nb"))
-        ca.join(cb, "k")
-          .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("exact_rows"))
-      }
-      def pair(label: String, a: DataFrame, ak: Column, b: DataFrame, bk: Column) =
-        est(a, ak, b, bk).crossJoin(exact(a, ak, b, bk))
-          .select(lit(label).as("pair"), col("est_rows"), col("exact_rows"))
-      val o = Tables.orders(s, d); val c = Tables.customer(s, d)
-      val e = Tables.events(s, d)
-      pair("customer_orders", o, col("o_custkey"), c, col("c_custkey"))
-        .unionByName(pair("events_self", e, col("user_id"), e, col("user_id")))
-    }),
-    "sim_ivf" -> (simIvf(_, _)),
-    "data_shapley" -> (dataShapley(_, _)),
-    "data_shapley_screened" -> (dataShapleyScreened(_, _)),
-    "sim_ivf_kmeans" -> (simIvfKmeans(_, _)),
-    "sim_ivf_lloyd" -> (simIvfLloyd(_, _)),
-    "kmeanspp_init" -> (kmeansppInit(_, _)),
-    "embed_pca" -> (embedPca(_, _)),
-    "sim_ivf_indexed" -> (simIvfIndexed(_, _)),
-    // FILTERED vector search: the metadata predicate applies inside
-    // the probed partitions (pushed to the scan), ranking over the
-    // survivors — the production ANN-with-WHERE-clause shape
-    "sim_ivf_filtered" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      graft.similarity.IvfIndex.topK(s, ensureIvfIndexLayout(s, d),
-        queries, dim = 64, k = 5, nProbe = 4,
-        predicate = Some(col("vec_id") % 3 === 0))
-    }),
-    "sim_ivf_indexed_txn" -> (simIvfIndexedTxn(_, _)),
-    // the persisted index's ACCEPTANCE number: recall@5 of the
-    // cell-pruned nProbe=4 search against brute-force ground truth —
-    // closes the index lifecycle (build → append → stats → recall)
-    "ann_recall_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val brute = Similarity.bruteForceTopK(
-        e.select("vec_id", "embedding"), queries, k = 5)
-      val approx = graft.similarity.IvfIndex.topK(s,
-        ensureIvfIndexLayout(s, d), queries, dim = 64, k = 5, nProbe = 4)
-      Similarity.recallAtK(brute, approx)
-    }),
-    "sim_ivf_indexed_incremental" -> (simIvfIndexedIncremental(_, _)),
-    "ivf_index_stats" -> (ivfIndexStats(_, _)),
-    "ivf_rebuild_advice" -> (ivfRebuildAdvice(_, _)),
-    "sim_ivf_rebuilt" -> (simIvfRebuilt(_, _)),
-    "sim_ivfpq" -> (simIvfPq(_, _)),
-    "sim_ivfpq_indexed" -> (simIvfPqIndexed(_, _)),
-    "sim_pq" -> (simPq(_, _)),
-    "sim_pq_trained" -> (simPqTrained(_, _)),
-    "sim_opq" -> (simOpq(_, _)),
-    // Okapi BM25 (rational constants k1=6/5, b=3/4; per-term scores
-    // are single long-ratio divisions summed in one fixed-order
-    // projection) over the same literal query as keyword_search
-    // unigram-LM tokenizer training (SentencePiece family) — hard-EM
-    // Viterbi over the word-type table, integer fixed-point log2
-    // costs, 2 EM rounds; the oracle unrolls the whole training
-    "unigram_train" -> ((s, d) =>
-      TextFunctions.unigramTrain(Tables.documents(s, d))),
-    // train -> ENCODE closed for the unigram family (the
-    // bpe_encode twin): per-doc Viterbi token counts + compression,
-    // served from the once-per-snapshot trained vocab layout
-    "unigram_encode" -> ((s, d) =>
-      TextFunctions.unigramEncodeWith(Tables.documents(s, d),
-        s.read.parquet(ensureUnigramVocabLayout(s, d)))),
-    // the BERT-family runtime rule vs the trained model's own decoder:
-    // greedy longest-match and Viterbi token counts per doc over the
-    // SAME vocabulary, ratio in millionths — the fertility cost of
-    // serving with the cheap matcher
-    "wordpiece_encode" -> ((s, d) =>
-      TextFunctions.wordpieceEncodeWith(Tables.documents(s, d),
-        s.read.parquet(ensureUnigramVocabLayout(s, d)))),
-    // tokenizer FAIRNESS across languages — the multilingual-fertility
-    // report (tokens per word, chars per token, both in exact
-    // millionths): a tokenizer trained on a skewed corpus over-
-    // fragments the minority languages, and this is the signal
-    "unigram_fertility" -> ((s, d) => {
-      val enc = TextFunctions.unigramEncodeWith(Tables.documents(s, d),
-        s.read.parquet(ensureUnigramVocabLayout(s, d)))
-      enc.join(Tables.documents(s, d).select("doc_id", "lang"), "doc_id")
-        .groupBy("lang").agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_words").as("n_words"),
-          sum("n_unigram_tokens").as("n_tokens"),
-          sum("n_char_tokens").as("n_chars"))
-        .withColumn("tokens_per_word_fp",
-          expr("(1000000 * n_tokens) div greatest(n_words, 1)"))
-        .withColumn("chars_per_token_fp",
-          expr("(1000000 * n_chars) div greatest(n_tokens, 1)"))
-    }),
-    // deterministic epoch shuffle: a seed-salted md5 key orders every
-    // doc into (shard, pos) — the reproducible global shuffle a
-    // training run resumes from, with NO global sort (one exchange on
-    // shard, a per-shard rank over narrow rows); re-runs and
-    // repartitioned inputs give the identical plan
-    "epoch_shuffle" -> ((s, d) => {
-      val key = md5(concat(lit("epoch0:"), col("doc_id").cast("string")))
-      Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("skey", key)
-        .withColumn("shard", (ascii(substring(col("skey"), 1, 1)) % 8).cast("bigint"))
-        .withColumn("pos", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("shard"))
-            .orderBy(col("skey"), col("doc_id"))).cast("bigint"))
-        .select("doc_id", "shard", "pos")
-    }),
-    "bm25_search" -> ((s, d) =>
-      TextFunctions.bm25Search(Tables.documents(s, d),
-        Seq("spark", "merge", "window"), k = 20)),
-    // AND-semantics retrieval: only docs holding EVERY term compete,
-    // df self-consistently over that set — the strict-match search
-    // mode next to bm25_search's OR ranking
-    "bm25_conjunctive" -> ((s, d) =>
-      TextFunctions.bm25Search(Tables.documents(s, d),
-        Seq("spark", "merge", "window"), k = 20, requireAll = true)),
-    // persisted postings index serving the same query: must be
-    // bit-identical to the ad-hoc scan (shared scoring tail, additive
-    // incremental build) — the same oracle checks both
-    "bm25_deleted" -> (bm25Deleted(_, _)),
-    "bm25_indexed" -> (bm25Indexed(_, _)),
-    // RRF hybrid retrieval ([[graft.operators.Fusion.rrfFuse]]): the
-    // BM25 lexical top-20 fused with a dense top-20 — the query's own
-    // hashed-TF vector against the text_knn document vectors — by
-    // reciprocal rank in integer millionths. Both legs are bounded
-    // top-k lists, so the fusion is corpus-size-independent.
-    "hybrid_search" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, d)
-      val terms = Seq("spark", "merge", "window")
-      // rank on the emitted (rounded) score so the ordering is exactly
-      // reproducible from the bm25_search result itself
-      val lex = TextFunctions.bm25Search(docs, terms, k = 20)
-        .select(col("doc_id"), row_number().over(
-            Window.orderBy(col("score").desc, col("doc_id").asc))
-          .cast("bigint").as("rank"))
-      val cands = TextFunctions.hashedTf(docs)
-        .select(col("doc_id").as("vec_id"),
-          transform(col("vec"), _.cast("float")).as("embedding"))
-      val qv = TextFunctions.hashedTf(
-          s.range(1).select(lit(-1L).as("doc_id"),
-            lit(terms.mkString(" ")).as("text")))
-        .select(col("doc_id").as("q_id"),
-          transform(col("vec"), _.cast("float")).as("q_emb"))
-      val dense = Similarity.bruteForceTopK(cands, qv, k = 20)
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      graft.operators.Fusion.rrfFuse(Seq(lex, dense), topK = 20)
-    }),
-    // corpus-trained bigram-LM quality score in fixed-point millionths
-    // (CCNet-style "how surprising is this doc under the corpus LM")
-    "lm_bigram_score" -> ((s, d) =>
-      TextFunctions.lmBigramScore(Tables.documents(s, d))),
-    // BPE tokenizer training (Sennrich et al. 2016): the first two
-    // learned merges — per-round work is vocabulary-sized, the winner
-    // rides a 1-row broadcast (never the driver)
-    "bpe_merges" -> ((s, d) =>
-      TextFunctions.bpeTrain(Tables.documents(s, d), nMerges = 2)),
-    // the trained tokenizer's emission: top symbols of the final
-    // segmentations after both learned merges are applied
-    "bpe_vocab" -> ((s, d) =>
-      TextFunctions.bpeVocab(Tables.documents(s, d), nMerges = 2, topN = 30)),
-    // the trained tokenizer APPLIED: per-doc token counts under the
-    // learned merge table — encoding joins the corpus word stream to
-    // the vocabulary-sized segmentation table, never re-running merges
-    "bpe_encode" -> ((s, d) =>
-      TextFunctions.bpeEncodeStats(Tables.documents(s, d), nMerges = 2)),
-    // classifier-based quality filtering: fixed-weight linear model
-    // over integer fixed-point ratio features (per-row projection)
-    "quality_score_linear" -> ((s, d) =>
-      TextFunctions.qualityLinear(Tables.documents(s, d))),
-    // reliability curve of the cheap linear scorer against the Gopher
-    // rule gate: ONE scan computes both signals per doc, fixed
-    // 0.2-unit score bins (shift-positive floor division — map-side,
-    // no global rank window), per bin the gopher pass rate in bps
-    "score_calibration" -> ((s, d) => {
-      val scored = TextFunctions
-        .qualityLinear(Tables.documents(s, d), carryCols = Seq("text"))
-        .withColumn("__m", TextFunctions.gopherMeasures(col("text")))
-        .withColumn("__pass",
-          TextFunctions.gopherFlags(col("__m"), minRequiredHits = 1)
-            .getField("keep"))
-      scored
-        // +2e9 keeps the dividend positive so trunc == floor in both
-        // engines (scores are bounded far above -2e9)
-        .withColumn("bin",
-          expr("((score_fp + 2000000000L) div 200000L) - 10000L"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("__pass"), 1L).otherwise(0L)).as("n_pass"))
-        .withColumn("pass_bps", expr("(n_pass * 10000L) div n_docs"))
-        .orderBy("bin")
-    }),
-    // per-DOMAIN calibrated quality cut: each source keeps its own top
-    // 30% by the linear score — a global threshold would skew the mix
-    // against low-scoring domains ([[graft.operators.Robust.calibratedTopPct]])
-    "quality_calibrated" -> ((s, d) => {
-      // source rides the scoring projection (carryCols) — one scan,
-      // no corpus self-join to reattach it
-      val scored = TextFunctions
-        .qualityLinear(Tables.documents(s, d), carryCols = Seq("source"))
-        .select("doc_id", "source", "score_fp")
-      graft.operators.Robust.calibratedTopPct(
-        scored, "score_fp", "source", keepPct = 30, idCol = "doc_id")
-    }),
-    // the sketch-cutoff twin ([[graft.operators.Robust
-    // .calibratedTopPctSketch]]): per-source threshold from a
-    // mergeable quantile sketch broadcast back, map-side filter — no
-    // per-group rank window, so a dominant domain cannot serialize
-    // into one task. Exact regime at this scale (250 docs/source <<
-    // sketchK), so the oracle replays the order-statistic cutoff.
-    "quality_calibrated_sketch" -> ((s, d) => {
-      val scored = TextFunctions
-        .qualityLinear(Tables.documents(s, d), carryCols = Seq("source"))
-        .select("doc_id", "source", "score_fp")
-      graft.operators.Robust.calibratedTopPctSketch(
-          scored, "score_fp", "source", keepPct = 30)
-        .select("doc_id", "source", "score_fp")
-    }),
-    // CCNet head/middle/tail perplexity bucketing + per-bucket
-    // deterministic sampling policy (keep head, sample middle/tail)
-    "corpus_ppl_sample" -> ((s, d) =>
-      TextFunctions.pplSample(Tables.documents(s, d))),
-    // C4-style wordlist safety filter: per-doc blocklist hit counts +
-    // verdict, pure codegen projection
-    "blocklist_filter" -> ((s, d) =>
-      TextFunctions.blocklistFilter(Tables.documents(s, d),
-        Seq("slow", "dup"), maxHits = 2)),
-    // per-doc duplicated 8-token-span fraction (the exact-substring
-    // dedup decision metric)
-    "span_dup_stats" -> ((s, d) =>
-      TextFunctions.dupSpanStats(Tables.documents(s, d))),
-    // feature-hashed TF vectors (hashing trick — no vocab, no model),
-    // serialized for the pandas comparator
-    "text_hash_vector" -> ((s, d) =>
-      TextFunctions.hashedTf(Tables.documents(s, d))
-        .select(col("doc_id"),
-          array_join(transform(col("vec"), _.cast("string")), ",").as("vec_str"))),
-    // text-only similarity search: cosine top-k over the hashed-TF
-    // vectors (integer-valued floats — engine-exact dot products)
-    "text_knn" -> ((s, d) => {
-      val v = TextFunctions.hashedTf(Tables.documents(s, d))
-      val cands = v.select(col("doc_id").as("vec_id"),
-        transform(col("vec"), _.cast("float")).as("embedding"))
-      val queries = cands.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.bruteForceTopK(cands, queries, k = 5)
-    }),
-    // temperature (alpha=1/2) source mixing: budgets derived from
-    // per-source token mass in pure integer arithmetic
-    "corpus_mix_temperature" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          TextFunctions.wsTokenCount(col("text")).as("n_tokens"))
-      graft.operators.Sampling.temperatureMix(docs, "doc_id", "n_tokens",
-          "source", totalBudget = 2000L, salt = "tmx")
-        .select("doc_id", "source", "n_tokens")
-    }),
-    // UniMax allocation (per-language epochs-capped water-filling):
-    // budget = a fifth of the corpus token mass, repeat cap 1/4 epoch
-    // per language — the dominant language lands uncapped on the
-    // water level, low-resource languages contribute their full cap.
-    // The corpus collapses to one row per lang in a map-side-
-    // combinable agg before any window; the one-row total is the only
-    // collect (bounded by construction).
-    "corpus_mix_unimax" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("lang"), TextFunctions.wsTokenCount(col("text")).as("n_tokens"))
-      val total = docs.agg(sum("n_tokens")).head.getLong(0)
-      graft.operators.Sampling.unimaxBudgets(docs, "n_tokens", "lang",
-          totalBudget = total / 5, epochCapMillionths = 250000L)
-        .orderBy("stratum")
-    }),
-    "dedup_exact" -> (dedupExact(_, _)),
-    "dedup_minhash" -> (dedupMinhash(_, _)),
-    "dedup_cross" -> (dedupCross(_, _)),
-    "split_leakage" -> (splitLeakageQ(_, _)),
-    "dedup_containment" -> ((s, d) =>
-      graft.dedup.Dedup.containmentNearDups(Tables.documents(s, d))
-        .filter(col("containment") >= 0.5)),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard(_, _)),
-    "dedup_clusters" -> (dedupClusters(_, _)),
-    // quality-aware canonical selection over the same clusters
-    // ([[graft.dedup.Dedup.canonicalByQuality]]): each cluster keeps
-    // its linear-quality argmax (ties to min id), not the min id
-    "dedup_canonical_quality" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val clusters = Dedup.nearDupClusters(
-        Dedup.minhashNearDups(docs).select("doc_a", "doc_b"))
-      val scores = TextFunctions.qualityLinear(docs).select("doc_id", "score_fp")
-      Dedup.canonicalByQuality(clusters, scores)
-    }),
-    "dedup_simhash" -> (dedupSimhash(_, _)),
-    // exact prefix-filtered set-similarity self-join (AllPairs/PPJoin)
-    // over SHINGLE sets — the exact quantity MinHash estimates, so
-    // this is dedup_minhash's recall-1 twin. 90% is the production
-    // near-dup cut; shingles keep prefix buckets bounded where the
-    // synthetic corpus's 31-word vocabulary would degenerate word
-    // sets to an all-pairs join (44 s → sub-second at sf0.1).
-    "setsim_join" -> ((s, d) =>
-      graft.dedup.Dedup.setSimilarityJoin(
-        graft.core.Tables.documents(s, d), minJaccardPct = 90,
-        setFn = graft.functions.TextFunctions.shingleSet(_))),
-    "text_stats" -> (textStats(_, _)),
-    "text_langid" -> (textLangId(_, _)),
-    "token_count" -> (tokenCount(_, _)),
-    // sequence-length bucketing: per power-of-two bucket, the padding
-    // waste naive pad-to-top batching pays (exact tokens + bps)
-    "length_buckets" -> ((s, d) =>
-      TextFunctions.lengthBuckets(Tables.documents(s, d))),
-    "doc_fingerprint" -> (docFingerprint(_, _)),
-    "doc_rolling_hash" -> (docRollingHash(_, _)),
-    "tfidf_top_terms" -> (tfidfTopTerms(_, _)),
-    "text_chunks" -> (textChunks(_, _)),
-    "text_chunks_overlap" -> (textChunksOverlap(_, _)),
-    "text_scrub" -> (textScrub(_, _)),
-    "doc_pack" -> ((s, d) =>
-      TextFunctions.packDocuments(Tables.documents(s, d),
-        windowTokens = 256, nShards = 8)),
-    // block-diagonal attention-mask map over the same packing
-    // ([[graft.functions.TextFunctions.packAttentionSpans]]): one row
-    // per (shard, window, doc) with the doc's in-window span
-    "pack_attention_spans" -> ((s, d) =>
-      TextFunctions.packAttentionSpans(Tables.documents(s, d),
-        windowTokens = 256, nShards = 8)),
-    "decontaminate" -> (decontaminate(_, _)),
-    "repetition" -> ((s, d) =>
-      TextFunctions.repetition(Tables.documents(s, d))),
-    "corpus_filter" -> ((s, d) =>
-      TextFunctions.corpusFilter(Tables.documents(s, d))),
-    "corpus_prepare" -> (corpusPrepare(_, _)),
-    "corpus_disposition" -> (corpusDisposition(_, _)),
-    "corpus_funnel" -> (corpusFunnel(_, _)),
-    "corpus_export" -> (corpusExport(_, _)),
-    "pack_fragmentation" -> (packFragmentation(_, _)),
-    "l_diversity" -> (lDiversity(_, _)),
-    // t-closeness census over the same QI/sensitive shape: integer-EMD
-    // distance of each class's value-decile distribution from the
-    // population, every class reported with its pass flag
-    "t_closeness" -> ((s, d) => {
-      val e = Tables.events(s, d).select(
-        col("event_type"), to_date(col("ts")).as("day"),
-        floor(col("value") / 10).cast("long").as("value_decile"))
-      graft.validate.Privacy.tCloseness(
-          e, Seq("event_type", "day"), "value_decile", tMillionths = 100000L)
-        .orderBy("event_type", "day")
-    }),
-    "multimodal_features" -> (multimodalFeatures(_, _)),
-    "multimodal_frames" -> (multimodalFrames(_, _)),
-    // consecutive-frame |luma diff| motion proxy over the REAL Y4M
-    // demux; constant-luma synthetic frames make every transition a
-    // closed-form function of (doc_id, frame_idx) for the oracle
-    "video_motion" -> ((s, d) =>
-      Multimodal.frameMotion(Multimodal.frameSample(
-        Multimodal.syntheticVideoAssets(Tables.documents(s, d))))
-        .toDF()),
-    "multimodal_pipeline" -> (multimodalPipeline(_, _)),
-    "image_phash" -> (imagePhash(_, _)),
-    "multimodal_dedup_ensemble" -> (multimodalDedupEnsemble(_, _)),
-    "mv_rewrite" -> (mvRewrite(_, _)),
-    "mv_rollup" -> (mvRollup(_, _)),
-    "mv_rewrite_graft" -> (mvRewriteGraft(_, _)),
-    "nb_classify" -> (nbClassifyQ(_, _)),
-    "text_entropy" -> (textEntropyQ(_, _)),
-    "profile_covariance" -> (profileCovariance(_, _)),
-    "sim_topk" -> (simTopK(_, _)),
-    "sim_rq" -> (simRq(_, _)),
-    // SQ8 scalar quantization: per-dim byte codes on a [min,max] grid
-    // (integer micro arithmetic end to end — the PRODUCTION coarse
-    // budget replays exactly in SQL, not just the exhaustive case),
-    // asymmetric integer dot, exact-cosine re-rank of the top 20
-    "sim_sq8" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Similarity.sq8TopK(
-        e.select("vec_id", "embedding"),
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-        k = 5, coarseK = 20)
-    }),
-    "sim_hamming" -> (simHamming(_, _)),
-    "sim_lsh" -> (simLsh(_, _)),
-    "sim_lsh_multiprobe" -> (simLshMultiprobe(_, _)),
-    // MMR diversity rerank ([[graft.similarity.Similarity.mmrRerank]],
-    // λ=1/2): pick 3 per query from the brute-force top-20, each round
-    // trading relevance against max-similarity to what's already picked
-    "mmr_rerank" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val queries = Tables.embeddings(s, d).filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val cand = Similarity.bruteForceTopK(e, queries, k = 20)
-        .select(col("q_id"), col("vec_id"), col("cos").as("rel"))
-        .join(e, "vec_id")
-      Similarity.mmrRerank(cand, k = 3)
-    }),
-    // recall@k of the LSH index against brute-force ground truth
-    // ([[graft.similarity.Similarity.recallAtK]]) — the acceptance
-    // metric every ANN config ships against; integer millionths
-    "ann_recall" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val cands = e.select("vec_id", "embedding")
-      Similarity.recallAtK(
-        Similarity.bruteForceTopK(cands, queries, k = 5),
-        Similarity.lshTopK(cands, queries, dim = 64, k = 5))
-    }),
-    // rank-AWARE acceptance metric ([[graft.similarity.Similarity
-    // .ndcgAtK]]): nDCG@5 of the same LSH ranking against the same
-    // brute-force truth — recall can't see right-neighbors-wrong-order,
-    // the log2-discounted gain can; exact integer fixed point (the
-    // unigram trainer's 16-step ilog2, replayed in SQL)
-    "ann_ndcg" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val queries = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val cands = e.select("vec_id", "embedding")
-      Similarity.ndcgAtK(
-        Similarity.bruteForceTopK(cands, queries, k = 5),
-        Similarity.lshTopK(cands, queries, dim = 64, k = 5), k = 5)
-    }),
-    // matryoshka truncation eval (Kusupati et al. 2022): how much of
-    // the full-dim top-5 neighborhood survives when embeddings are cut
-    // to their first 16 dims — the accept/reject gate for serving
-    // truncated vectors; both legs are the same brute-force ranker
-    "mrl_recall" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val full = e.select("vec_id", "embedding")
-      val qFull = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      Similarity.recallAtK(
-        Similarity.bruteForceTopK(full, qFull, k = 5),
-        Similarity.bruteForceTopK(
-          full.select(col("vec_id"), slice(col("embedding"), 1, 16).as("embedding")),
-          qFull.select(col("q_id"), slice(col("q_emb"), 1, 16).as("q_emb")),
-          k = 5))
-    }),
-    "embed_diversity" -> (embedDiversity(_, _)),
-    "semantic_dedup" -> (semanticDedup(_, _)),
-    "embed_neardup" -> (embedNearDup(_, _)),
-    // cluster-balanced coverage sampling: nearest-centroid assignment
-    // (broadcast argmin, embeddings never shuffle) capped per cell in
-    // salted-hash order — density-flattening curation before training
-    "embed_cluster_sample" -> ((s, d) =>
-      Similarity.clusterBalancedSample(
-        Tables.embeddings(s, d).select("vec_id", "embedding"),
-        dim = 64, nCells = 8, perCell = 20)),
-    // contrastive hard-negative mining: per-query top-k in the
-    // similar-but-not-duplicate cosine band, banded map-side before
-    // the rank exchange
-    "hard_negatives" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Similarity.hardNegatives(e.select("vec_id", "embedding"),
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-        k = 5, loCos = 0.2, hiCos = 0.4)
-    }),
-    // unit vector serialized as fixed-point micros (round(u*1e6)):
-    // identical double arithmetic both engines, and a string column the
-    // pandas comparator can hash (float formatting differs across
-    // engines, so raw doubles-in-strings would not)
-    // JL ±1 random projection: the pre-LSH dimensionality shrink,
-    // integer-exact micro arithmetic, pure map-side projection
-    "embed_project" -> ((s, d) =>
-      Similarity.randomProject(
-        Tables.embeddings(s, d).select("vec_id", "embedding"),
-        dim = 64, outDim = 8)),
-    // coarse-to-fine ANN: integer projected dot product prunes to 50
-    // per query, exact cosine re-ranks the survivors to top-5
-    "sim_project_rerank" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Similarity.projectedRerankTopK(e.select("vec_id", "embedding"),
-        e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-        dim = 64, outDim = 32, coarseK = 100, k = 5)
-    }),
-    "embed_normalize" -> ((s, d) =>
-      Similarity.l2Normalize(Tables.embeddings(s, d).select("vec_id", "embedding"))
-        .select(col("vec_id"), col("norm"),
-          array_join(transform(col("unit"),
-            u => round(u * 1e6).cast("long").cast("string")), ",").as("unit_fp"))),
-    // q serialized to a string: the driver's pandas comparator cannot
-    // sort/hash array-typed columns
-    "embed_quantize" -> ((s, d) =>
-      Similarity.quantizeInt8(Tables.embeddings(s, d).select("vec_id", "embedding"))
-        .select(col("vec_id"), col("scale"),
-          array_join(transform(col("q"), _.cast("string")), ",").as("q_str"),
-          col("max_abs_err"))),
-    // chunk→doc pooling over the int8-quantized embeddings: integer-
-    // valued sums are exact (order-independent below 2^53), so the
-    // mergeable (n, sums) form hash-compares across engines where a
-    // float mean would be summation-order noise
-    // embedding-distribution drift monitor: per label stratum, the
-    // cosine between the mean vector of the even-id half-snapshot and
-    // the full corpus (counts cancel — cos of sums IS cos of means).
-    // Element sums of float32 values in double are EXACT below 2^29
-    // addends, so the sums are order-stable across engines; the final
-    // cosine folds in index order (the sim_topk discipline). ~1.0 per
-    // stratum = the re-embed/new-batch pipeline didn't move the
-    // distribution; a dipping stratum names where to look.
-    "embed_drift" -> ((s, d) => {
-      val e = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-      val a = Similarity.poolEmbeddings(e.filter(col("vec_id") % 2 === 0), "label")
-        .select(col("group_id"), col("n_vectors").as("n_a"), col("sum_emb").as("sa"))
-      val b = Similarity.poolEmbeddings(e, "label")
-        .select(col("group_id"), col("n_vectors").as("n_b"), col("sum_emb").as("sb"))
-      // double-array dot via the ordered HOF fold (the native float
-      // dot expression wants float inputs; the pooled sums are double)
-      def ddot(x: Column, y: Column): Column =
-        aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, e) => acc + e)
-      a.join(b, Seq("group_id"))
-        .select(col("group_id").as("label"), col("n_a"), col("n_b"),
-          round(ddot(col("sa"), col("sb")) /
-            (sqrt(ddot(col("sa"), col("sa"))) * sqrt(ddot(col("sb"), col("sb")))), 9)
-            .as("cos_means"))
-    }),
-    "embed_pool" -> ((s, d) => {
-      val q = Similarity.quantizeInt8(Tables.embeddings(s, d).select("vec_id", "embedding"))
-        .select((col("vec_id") % 25).as("grp"), col("q").as("embedding"))
-      Similarity.poolEmbeddings(q, "grp")
-        .select(col("group_id"), col("n_vectors"),
-          array_join(transform(col("sum_emb"), v => v.cast("long").cast("string")), ",")
-            .as("sum_fp"))
-    }),
-    // RefinedWeb-style line dedup: the corpus's repeated 6-token
-    // segments (df > 1, capped top-256 by df) are inlined as a literal
-    // vocabulary and stripped from every doc map-side — document-level
-    // dedup either keeps the chrome or drops the page; this rewrites
-    "boilerplate_strip" -> (boilerplateStrip(_, _)),
-    // DSIR hashed importance weights: English docs as the target
-    // distribution, whole corpus as raw; top-100 flagged selected
-    "dsir_weights" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextFunctions.dsirWeights(docs, docs.filter(col("lang") === "en"))
-    }),
-    // URL canonicalization + per-site cap key over deterministic
-    // synthetic crawl URLs (scheme case, default ports, tracking
-    // params, unsorted queries, trailing slashes, fragments)
-    "url_normalize" -> ((s, d) => {
-      val u = syntheticUrls(s, d)
-      u.select(col("doc_id"), col("url"),
-        graft.functions.UrlFunctions.urlNormalize(col("url")).as("url_norm"),
-        graft.functions.UrlFunctions.urlHost(col("url")).as("host"),
-        graft.functions.UrlFunctions.registeredDomain(
-          graft.functions.UrlFunctions.urlHost(col("url"))).as("domain"))
-    }),
-    // per-site crawl cap: canonical host as the stratum, 25 docs kept
-    // per site in salted-hash order (the C4-style domain budget)
-    "url_domain_cap" -> ((s, d) => {
-      val hosts = syntheticUrls(s, d).select(col("doc_id"),
-        graft.functions.UrlFunctions.urlHost(col("url")).as("host"))
-      graft.operators.Sampling.topKPerStratum(hosts, "doc_id", "host",
-        k = 25, salt = "dc")
-    }),
-    // per-REGISTERED-DOMAIN crawl cap capstone — the standard crawl-
-    // curation composition (C4/RefinedWeb: ≤ k pages per registered
-    // domain, deterministic salted-hash order, never an RNG reservoir):
-    // registeredDomain ∘ urlHost as the stratum, topKPerStratum as the
-    // cap, and the page TEXT riding through — the production shape,
-    // with PlanSpec proving the payload never crosses the rank exchange
-    "domain_cap" -> ((s, d) => {
-      val pages = syntheticUrls(s, d, keep = Seq("text"))
-      val withDomain = pages.select(col("doc_id"), col("text"),
-        graft.functions.UrlFunctions.registeredDomain(
-          graft.functions.UrlFunctions.urlHost(col("url"))).as("domain"))
-      graft.operators.Sampling.topKPerStratum(withDomain, "doc_id", "domain",
-        k = 40, salt = "cap")
-    }),
-  )
-
-  /** Deterministic synthetic crawl URLs over the documents table —
-    * every normalization hazard in one construction: uppercase scheme/
-    * host, explicit default ports, a tracking param, an out-of-order
-    * query, optional trailing slash and fragment, and two TLD families
-    * so the registered-domain cut is non-trivial. */
-  private def syntheticUrls(spark: SparkSession, dir: String,
-                            keep: Seq[String] = Nil): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id") +: keep.map(col) :+
-      concat(
-        when(col("doc_id") % 2 === 0, lit("HTTP://")).otherwise(lit("HTTPS://")),
-        lit("WWW."), upper(col("source")),
-        when(col("doc_id") % 2 === 0, lit(".Example.COM:80"))
-          .otherwise(lit(".Sample.CO.UK:443")),
-        lit("/Docs/"), (col("doc_id") % 7).cast("string"),
-        when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
-        lit("?utm_source=feed&b=2&a=1"),
-        when(col("doc_id") % 5 === 0, lit("&fbclid=XYZ")).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("#frag")).otherwise(lit(""))).as("url")
-      : _*)
-
-  /** [[TextFunctions.boilerplateHashes]] (eager, capN-bounded driver
-    * collect — the IVF-centroid inlining convention) feeding the
-    * map-side [[TextFunctions.boilerplateRemove]] rewrite. */
-  private def boilerplateStrip(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    TextFunctions.boilerplateRemove(docs,
-      TextFunctions.boilerplateHashes(docs))
-  }
-
-  /** The MinHash-LSH candidate-pair CTE chain (docs→sigs→bands→capped
-    * buckets→cands), shared verbatim with the dedup_minhash oracle. */
-  private val minhashCandsSql: String =
-    s"""docs AS (
-       |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-       |sigs AS (
-       |  SELECT doc_id, shingles,
-       |    list_transform(range(0, 12), j ->
-       |      list_aggregate(list_transform(shingles,
-       |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-       |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-       |             % 2147483648), 'min')) AS sig
-       |  FROM docs WHERE len(shingles) > 0),
-       |bands AS (
-       |  SELECT doc_id, b AS band_idx,
-       |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-       |  FROM sigs, range(0, 4) AS t(b)),
-       |bsz AS (
-       |  SELECT band_idx, band_hash FROM bands
-       |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-       |bands2 AS (
-       |  SELECT b.doc_id, b.band_idx, b.band_hash
-       |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands2 a JOIN bands2 b
-       |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       |  WHERE a.doc_id < b.doc_id)""".stripMargin
-
-  /** Fixed-point PageRank oracle: the candidate chain, symmetrized
-    * edges, then `iterations` UNROLLED integer-arithmetic rounds (all
-    * floor division, mirrors [[graft.operators.Graph.pageRank]]). */
-  /** Synchronous LPA unrolled: each round re-votes every node's label
-    * as the (count DESC, label ASC) winner among in-neighbors, absent
-    * voters falling back to the previous label — the exact replay of
-    * [[graft.operators.Graph.labelPropagation]]'s struct-max. */
-  private def labelPropSql(iterations: Int): String = {
-    val setup =
-      s"""WITH $minhashCandsSql,
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM cands
-         |          UNION SELECT doc_b, doc_a FROM cands),
-         |it0 AS (SELECT DISTINCT src AS id, CAST(src AS BIGINT) AS label FROM edges)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s""",
-         |it$i AS (SELECT p.id, COALESCE(v.label, p.label) AS label
-         |  FROM it${i - 1} p LEFT JOIN (
-         |    SELECT id, label FROM (
-         |      SELECT c.id, c.label,
-         |        ROW_NUMBER() OVER (PARTITION BY c.id ORDER BY c.cnt DESC, c.label ASC) AS rk
-         |      FROM (SELECT e.dst AS id, q.label, count(*) AS cnt
-         |            FROM edges e JOIN it${i - 1} q ON q.id = e.src
-         |            GROUP BY 1, 2) c) ranked WHERE rk = 1) v ON v.id = p.id)""".stripMargin
-    }.mkString
-    setup + iters +
-      s"\nSELECT id AS doc_id, CAST(label AS BIGINT) AS community FROM it$iterations"
-  }
-
-  /** Unrolled synchronous k-core peeling over the shared near-dup
-    * candidate edges ([[graft.operators.Graph.kCore]] twin): each
-    * round keeps vertices with remaining degree >= k, then restricts
-    * the edge set to kept endpoints. */
-  private def kCoreSql(k: Int, rounds: Int): String = {
-    val setup =
-      s"""WITH $minhashCandsSql,
-         |e0 AS (SELECT doc_a AS src, doc_b AS dst FROM cands
-         |       UNION SELECT doc_b, doc_a FROM cands)""".stripMargin
-    val iters = (1 to rounds).map { i =>
-      s""",
-         |k$i AS (SELECT src AS id FROM e${i - 1} GROUP BY 1 HAVING count(*) >= $k),
-         |e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
-         |  JOIN k$i a ON a.id = e.src JOIN k$i b ON b.id = e.dst)""".stripMargin
-    }.mkString
-    setup + iters +
-      s"\nSELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_degree FROM e$rounds GROUP BY 1"
-  }
-
-  /** BFS hop distances unrolled round by round (the [[kCoreSql]]
-    * convention): frontier i+1 = neighbors of frontier i minus
-    * everything already labeled — each vertex labeled exactly once at
-    * its minimum distance, so the unroll is the algorithm. */
-  private def khopSql(rounds: Int): String = {
-    val setup =
-      s"""WITH $minhashCandsSql,
-         |e AS (SELECT doc_a AS src, doc_b AS dst FROM cands
-         |      UNION SELECT doc_b, doc_a FROM cands),
-         |n0 AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id % 100 = 0),
-         |d0 AS (SELECT id, CAST(0 AS BIGINT) AS hops FROM n0)""".stripMargin
-    val iters = (1 to rounds).map { i =>
-      s""",
-         |f$i AS (SELECT DISTINCT e.dst AS id FROM e JOIN n${i - 1} s ON s.id = e.src),
-         |n$i AS (SELECT f$i.id FROM f$i
-         |  WHERE NOT EXISTS (SELECT 1 FROM d${i - 1} x WHERE x.id = f$i.id)),
-         |d$i AS (SELECT id, hops FROM d${i - 1}
-         |  UNION ALL SELECT id, CAST($i AS BIGINT) FROM n$i)""".stripMargin
-    }.mkString
-    setup + iters + s"\nSELECT id AS doc_id, hops FROM d$rounds"
-  }
-
-  private def pagerankSql(iterations: Int): String = {
-    val setup =
-      s"""WITH $minhashCandsSql,
-         |edges AS (SELECT doc_a AS src, doc_b AS dst FROM cands
-         |          UNION SELECT doc_b, doc_a FROM cands),
-         |nodes AS (SELECT DISTINCT src AS id FROM edges),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |base AS (SELECT CAST(1000000 // count(*) AS BIGINT) AS r0,
-         |                CAST(150000 // count(*) AS BIGINT) AS b FROM nodes),
-         |it0 AS (SELECT id, (SELECT r0 FROM base) AS r FROM nodes)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s""",
-         |it$i AS (SELECT n.id,
-         |    (SELECT b FROM base)
-         |      + CAST((85 * COALESCE(s.cs, 0)) // 100 AS BIGINT) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS id, CAST(SUM(p.r // d.deg) AS BIGINT) AS cs
-         |    FROM edges e JOIN it${i - 1} p ON p.id = e.src
-         |    JOIN deg d ON d.src = e.src
-         |    GROUP BY 1) s USING (id))""".stripMargin
-    }.mkString
-    setup + iters +
-      s"\nSELECT id AS doc_id, CAST(r AS BIGINT) AS rank_micro FROM it$iterations"
-  }
-
-  /** Shared by `staging_agg` and `staging_agg_bucketed` (same
-    * semantics; they differ only in physical layout). */
-  private val stagingAggOracleSql: String =
-    s"""${TaxiShape.stagingSql}
-       |SELECT year, month, dow, vendor_id, rate_code_id, pickup_location_id,
-       |  dropoff_location_id, payment_type_id, pickup_datetime, dropoff_datetime,
-       |  pickup_latitude, pickup_longitude, dropoff_latitude, dropoff_longitude,
-       |  CAST(SUM(CAST(passenger_count AS DECIMAL(18,2))) AS DOUBLE) AS passenger_count,
-       |  CAST(SUM(CAST(trip_distance AS DECIMAL(18,2))) AS DOUBLE) AS trip_distance,
-       |  CAST(SUM(CAST(extra AS DECIMAL(18,2))) AS DOUBLE) AS extra,
-       |  CAST(SUM(CAST(mta_tax AS DECIMAL(18,2))) AS DOUBLE) AS mta_tax,
-       |  CAST(SUM(CAST(fare_amount AS DECIMAL(18,2))) AS DOUBLE) AS fare_amount,
-       |  CAST(SUM(CAST(tip_amount AS DECIMAL(18,2))) AS DOUBLE) AS tip_amount,
-       |  CAST(SUM(CAST(tolls_amount AS DECIMAL(18,2))) AS DOUBLE) AS tolls_amount,
-       |  CAST(SUM(CAST(total_amount AS DECIMAL(18,2))) AS DOUBLE) AS total_amount,
-       |  CAST(SUM(CAST(improvement_surcharge AS DECIMAL(18,2))) AS DOUBLE) AS improvement_surcharge,
-       |  CAST(SUM(CAST(congestion_surcharge AS DECIMAL(18,2))) AS DOUBLE) AS congestion_surcharge
-       |FROM staging
-       |GROUP BY year, month, dow, vendor_id, rate_code_id, pickup_location_id,
-       |  dropoff_location_id, payment_type_id, pickup_datetime, dropoff_datetime,
-       |  pickup_latitude, pickup_longitude, dropoff_latitude, dropoff_longitude""".stripMargin
-
-  /** Shared by `dedup_incremental_minhash` and its `_bucketed`
-    * twin (same semantics; they differ only in the catalog's
-    * physical layout, which the oracle cannot see). */
-  /** Join-size sketch width: the CMS inner-product bound overshoots
-    * by ~N₁·N₂/width per row, so a USEFUL forecast needs width ≳
-    * N₁·N₂ / (tolerance · true-join-size) — 2 MB of counters buys a
-    * ≲1.25× bound on the fk join at sf0.1, where width 64 gave 24×.
-    * The sketch stays a single-row aggregate either way. */
-  private val joinSketchWidth = 65536
-
-  /** CMS counter matrix replay for one (table, key) — the same
-    * Kirsch-Mitzenmacher md5 bucket family as [[graft.expressions
-    * .SketchAggregates.CountMinAgg]] at depth 4 × the given width. */
-  private def cmCntSql(src: String, key: String, width: Int): String =
-    s"""SELECT j, (h1 + j * h2) % 2147483648 % $width AS b,
-       |    CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT
-       |      CAST(concat('0x', substring(md5(CAST($key AS VARCHAR)), 1, 15)) AS BIGINT)
-       |        % 2147483648 AS h1,
-       |      CAST(concat('0x', substring(md5(CAST($key AS VARCHAR)), 16, 15)) AS BIGINT)
-       |        % 2147483648 AS h2
-       |    FROM $src WHERE $key IS NOT NULL), range(0, 4) AS t(j)
-       |  GROUP BY 1, 2""".stripMargin
-
-  /** One labeled (pair, est_rows, exact_rows) SELECT: CMS inner-product
-    * estimate (min over depth rows, absent buckets contribute 0) next
-    * to the exact join size via per-key count vectors. */
-  private def joinSizePairSql(label: String, srcA: String, keyA: String,
-                              srcB: String, keyB: String): String =
-    s"""SELECT '$label' AS pair,
-       |  (SELECT min(sp) FROM (
-       |     SELECT t.j, CAST(coalesce(SUM(a.c * b.c), 0) AS BIGINT) AS sp
-       |     FROM range(0, 4) AS t(j)
-       |     LEFT JOIN (${cmCntSql(srcA, keyA, joinSketchWidth)}) a ON a.j = t.j
-       |     LEFT JOIN (${cmCntSql(srcB, keyB, joinSketchWidth)}) b ON b.j = t.j AND b.b = a.b
-       |     GROUP BY 1)) AS est_rows,
-       |  (SELECT CAST(coalesce(SUM(na * nb), 0) AS BIGINT)
-       |   FROM (SELECT $keyA AS k, count(*) AS na FROM $srcA
-       |         WHERE $keyA IS NOT NULL GROUP BY 1) ca
-       |   JOIN (SELECT $keyB AS k, count(*) AS nb FROM $srcB
-       |         WHERE $keyB IS NOT NULL GROUP BY 1) cb USING (k)) AS exact_rows""".stripMargin
-
-  private val dedupIncrMinhashOracleSql: String =
-    s"""WITH RECURSIVE docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands_all AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |cat AS (SELECT DISTINCT band_idx, band_hash FROM bands_all WHERE doc_id < 250),
-         |bb AS (SELECT doc_id, band_idx, band_hash FROM bands_all WHERE doc_id >= 250),
-         |hit AS (SELECT DISTINCT bb.doc_id FROM bb JOIN cat USING (band_idx, band_hash)),
-         |sb AS (SELECT * FROM bb WHERE doc_id NOT IN (SELECT doc_id FROM hit)),
-         |bsz AS (
-         |  SELECT band_idx, band_hash FROM sb
-         |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |sb2 AS (
-         |  SELECT s.doc_id, s.band_idx, s.band_hash
-         |  FROM sb s JOIN bsz USING (band_idx, band_hash)),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sb2 a JOIN sb2 b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-         |  WHERE a.doc_id < b.doc_id),
-         |ver AS (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cands c JOIN sigs a ON c.doc_a = a.doc_id
-         |    JOIN sigs b ON c.doc_b = b.doc_id
-         |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-         |    / CAST(len(a.shingles) + len(b.shingles)
-         |           - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) >= 0.8),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM ver
-         |      UNION SELECT doc_b, doc_a FROM ver),
-         |reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-         |dropped AS (SELECT src AS doc_id FROM reach GROUP BY src HAVING min(dst) <> src),
-         |rej AS (SELECT doc_id FROM hit UNION ALL SELECT doc_id FROM dropped)
-         |SELECT doc_id, CAST(band_idx AS INT) AS band_idx, band_hash
-         |FROM bb WHERE doc_id NOT IN (SELECT doc_id FROM rej)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "pagerank_neardup" -> pagerankSql(5),
-    "graph_kcore" -> kCoreSql(2, 4),
-    "graph_khop" -> khopSql(3),
-    "label_prop" -> labelPropSql(4),
-    // DuckDB ships nfc_normalize natively; both engines implement
-    // Unicode canonical composition, so the bytes match exactly and
-    // the length drop (one codepoint per doc) proves it actually fired
-    "text_nfc" ->
-      """WITH r AS (
-        |  SELECT doc_id, text || ' caf' || 'e' || chr(769) AS raw FROM documents)
-        |SELECT doc_id, nfc_normalize(raw) AS text_nfc,
-        |  CAST(length(raw) AS BIGINT) AS len_raw,
-        |  CAST(length(nfc_normalize(raw)) AS BIGINT) AS len_nfc
-        |FROM r""".stripMargin,
-    // positional self-join replay of the map-side shingle counter:
-    // adjacent-position tokens must equal the phrase, overlaps count
-    "phrase_search" -> phraseSearchOracleSql,
-    // the index-served twin shares the statement verbatim: positional
-    // postings must change the plan, never the answer
-    "phrase_indexed" -> phraseSearchOracleSql,
-    "q1_agg" ->
-      s"""${TaxiShape.stagingSql}
-         |SELECT year, month, dow, service_type, count(*) AS n_trips,
-         |  CAST(SUM(CAST(passenger_count AS DECIMAL(18,2))) AS DOUBLE) AS sum_passengers,
-         |  CAST(SUM(CAST(fare_amount AS DECIMAL(18,2))) AS DOUBLE) AS sum_fare,
-         |  CAST(SUM(CAST(total_amount AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-         |FROM staging GROUP BY year, month, dow, service_type""".stripMargin,
-    "staging_agg" -> stagingAggOracleSql,
-    // identical semantics, bucketed physical layout — the oracle can't
-    // see layout, so the SQL is the same statement
-    "staging_agg_bucketed" -> stagingAggOracleSql,
-    // the oracle can't see the partitioned layout; the quarter filter
-    // expresses the dim-join semantics directly on the staging dates
-    "fact_pruned" ->
-      s"""${TaxiShape.stagingSql}
-         |SELECT strftime(pickup_datetime, '%Y-%m') AS ym, service_type,
-         |  count(*) AS n_trips,
-         |  CAST(SUM(CAST(total_amount AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-         |FROM staging
-         |WHERE year(pickup_datetime) = 1995 AND quarter(pickup_datetime) = 2
-         |GROUP BY 1, 2""".stripMargin,
-    "clean_normalize" ->
-      """SELECT event_id, event_type, ts, CAST(user_id AS INT) AS user_id, value
-        |FROM events
-        |WHERE event_id IS NOT NULL AND ts IS NOT NULL AND user_id IS NOT NULL
-        |  AND event_type IS NOT NULL AND value IS NOT NULL""".stripMargin,
-    // keyed full-outer diff: IS DISTINCT FROM mirrors <=> exactly;
-    // text compared through md5 on both sides (the hashCols contract)
-    "table_diff" ->
-      """WITH r AS (
-        |  SELECT doc_id, text, lang,
-        |    CASE WHEN doc_id % 7 = 2 THEN 'patched' ELSE source END AS source,
-        |    n_chars
-        |  FROM documents WHERE doc_id % 11 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, lang, 'added', n_chars
-        |  FROM documents WHERE doc_id % 13 = 0),
-        |j AS (
-        |  SELECT coalesce(l.doc_id, r.doc_id) AS doc_id,
-        |    l.doc_id IS NOT NULL AS lp, r.doc_id IS NOT NULL AS rp,
-        |    (l.lang IS DISTINCT FROM r.lang) AS d_lang,
-        |    (l.n_chars IS DISTINCT FROM r.n_chars) AS d_n_chars,
-        |    (l.source IS DISTINCT FROM r.source) AS d_source,
-        |    (md5(l.text) IS DISTINCT FROM md5(r.text)) AS d_text
-        |  FROM documents l FULL OUTER JOIN r ON l.doc_id = r.doc_id)
-        |SELECT doc_id,
-        |  CASE WHEN NOT lp THEN 'added' WHEN NOT rp THEN 'removed'
-        |       WHEN d_lang OR d_n_chars OR d_source OR d_text THEN 'changed' END AS status,
-        |  CASE WHEN lp AND rp AND (d_lang OR d_n_chars OR d_source OR d_text) THEN
-        |    concat_ws(',', CASE WHEN d_lang THEN 'lang' END,
-        |      CASE WHEN d_n_chars THEN 'n_chars' END,
-        |      CASE WHEN d_source THEN 'source' END,
-        |      CASE WHEN d_text THEN 'text' END)
-        |  ELSE '' END AS changed_cols
-        |FROM j
-        |WHERE NOT lp OR NOT rp OR d_lang OR d_n_chars OR d_source OR d_text""".stripMargin,
-    // NOT EXISTS mirrors left_anti exactly (incl. the null-key case);
-    // one UNION ALL leg per audited FK
-    "fk_orphans" ->
-      s"""${TaxiShape.stagingSql},
-         |trips AS (
-         |  SELECT CAST(l_partkey % 12 AS INT) AS pulocationid,
-         |    CAST(l_suppkey % 12 AS INT) AS dolocationid
-         |  FROM lineitem),
-         |lk AS (SELECT DISTINCT CAST(s_suppkey AS INT) AS lid FROM supplier),
-         |stale AS (SELECT DISTINCT payment_type_id FROM staging WHERE payment_type_id <= 4),
-         |tn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM trips),
-         |sn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM staging),
-         |a1 AS (SELECT CAST(count(*) AS BIGINT) AS c FROM trips t
-         |       WHERE NOT EXISTS (SELECT 1 FROM lk WHERE lk.lid = t.pulocationid)),
-         |a2 AS (SELECT CAST(count(*) AS BIGINT) AS c FROM trips t
-         |       WHERE NOT EXISTS (SELECT 1 FROM lk WHERE lk.lid = t.dolocationid)),
-         |a3 AS (SELECT CAST(count(*) AS BIGINT) AS c FROM staging f
-         |       WHERE NOT EXISTS (SELECT 1 FROM stale s
-         |                         WHERE s.payment_type_id = f.payment_type_id))
-         |SELECT 'dolocationid' AS fk, tn.n AS n_rows, a2.c AS n_orphans,
-         |  (a2.c * 10000) // greatest(tn.n, 1) AS orphan_bps FROM tn, a2
-         |UNION ALL
-         |SELECT 'payment_type_id', sn.n, a3.c,
-         |  (a3.c * 10000) // greatest(sn.n, 1) FROM sn, a3
-         |UNION ALL
-         |SELECT 'pulocationid', tn.n, a1.c,
-         |  (a1.c * 10000) // greatest(tn.n, 1) FROM tn, a1
-         |ORDER BY fk""".stripMargin,
-    "zone_enrich" ->
-      """WITH trips AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CAST(l_partkey % 12 AS INT) AS pulocationid,
-        |    CAST(l_suppkey % 12 AS INT) AS dolocationid,
-        |    l_extendedprice AS fare_amount
-        |  FROM lineitem),
-        |lookup AS (
-        |  SELECT CAST(s_suppkey AS INT) AS LocationID,
-        |    CAST(s_suppkey % 180 - 90 AS DOUBLE) AS latitude,
-        |    CAST(s_suppkey % 360 - 180 AS DOUBLE) AS longitude
-        |  FROM supplier)
-        |SELECT t.l_orderkey, t.l_linenumber, t.pulocationid, t.dolocationid,
-        |  t.fare_amount,
-        |  p.latitude AS pickup_latitude, p.longitude AS pickup_longitude,
-        |  d.latitude AS dropoff_latitude, d.longitude AS dropoff_longitude
-        |FROM trips t
-        |JOIN lookup p ON t.pulocationid = p.LocationID
-        |JOIN lookup d ON t.dolocationid = d.LocationID""".stripMargin,
-    "dim_vendor" -> dimVendorSql,
-    "dim_rate_code" -> dimRateCodeSql,
-    "dim_payment" -> dimPaymentSql,
-    "dim_service_type" -> dimServiceTypeSql,
-    "dim_pickup_location" -> dimPickupLocationSql,
-    "dim_dropoff_location" -> dimDropoffLocationSql,
-    "fact_trip" -> factTripSql,
-    // every suggestion string rebuilt from the same profile aggregates
-    "suggest_checks" ->
-      """WITH st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    min(doc_id) AS mni, max(doc_id) AS mxi,
-        |    min(n_chars) AS mnc, max(n_chars) AS mxc
-        |  FROM documents),
-        |langs AS (SELECT
-        |    array_to_string(list('''' || lang || '''' ORDER BY lang), ', ') AS d,
-        |    CAST(count(*) AS BIGINT) AS k
-        |  FROM (SELECT DISTINCT lang FROM documents WHERE lang IS NOT NULL)),
-        |srcs AS (SELECT
-        |    array_to_string(list('''' || source || '''' ORDER BY source), ', ') AS d,
-        |    CAST(count(*) AS BIGINT) AS k
-        |  FROM (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL))
-        |SELECT 'doc_id' AS col_name, 'doc_id_not_null' AS check_name,
-        |  'doc_id IS NOT NULL' AS predicate,
-        |  '0 nulls in ' || n || ' rows' AS rationale FROM st
-        |UNION ALL SELECT 'text', 'text_not_null', 'text IS NOT NULL',
-        |  '0 nulls in ' || n || ' rows' FROM st
-        |UNION ALL SELECT 'lang', 'lang_not_null', 'lang IS NOT NULL',
-        |  '0 nulls in ' || n || ' rows' FROM st
-        |UNION ALL SELECT 'source', 'source_not_null', 'source IS NOT NULL',
-        |  '0 nulls in ' || n || ' rows' FROM st
-        |UNION ALL SELECT 'n_chars', 'n_chars_not_null', 'n_chars IS NOT NULL',
-        |  '0 nulls in ' || n || ' rows' FROM st
-        |UNION ALL SELECT 'doc_id', 'doc_id_range',
-        |  'doc_id BETWEEN ' || (mni - greatest(1, (mxi - mni) * 10 // 100))
-        |    || ' AND ' || (mxi + greatest(1, (mxi - mni) * 10 // 100)),
-        |  'observed [' || mni || ', ' || mxi || '], 10% headroom' FROM st
-        |UNION ALL SELECT 'n_chars', 'n_chars_range',
-        |  'n_chars BETWEEN ' || (mnc - greatest(1, (mxc - mnc) * 10 // 100))
-        |    || ' AND ' || (mxc + greatest(1, (mxc - mnc) * 10 // 100)),
-        |  'observed [' || mnc || ', ' || mxc || '], 10% headroom' FROM st
-        |UNION ALL SELECT 'lang', 'lang_domain', 'lang IN (' || d || ')',
-        |  k || ' distinct values' FROM langs
-        |UNION ALL SELECT 'source', 'source_domain', 'source IN (' || d || ')',
-        |  k || ' distinct values' FROM srcs""".stripMargin,
-    "validate_suite" ->
-      s"""${TaxiShape.stagingSql},
-         |v AS (SELECT staging.* REPLACE (NULLIF(vendor_id, 0) AS vendor_id,
-         |  CASE WHEN payment_type_id = 6 THEN trip_distance * 100 ELSE trip_distance END AS trip_distance)
-         |  FROM staging)
-         |SELECT
-         |  CAST(SUM(CASE WHEN vendor_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_vendor_id,
-         |  CAST(SUM(CASE WHEN rate_code_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_rate_code_id,
-         |  CAST(SUM(CASE WHEN pickup_location_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_pickup_location_id,
-         |  CAST(SUM(CASE WHEN dropoff_location_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_dropoff_location_id,
-         |  CAST(SUM(CASE WHEN payment_type_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_payment_type_id,
-         |  CAST(SUM(CASE WHEN service_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_service_type,
-         |  CAST(SUM(CASE WHEN pickup_latitude IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_pickup_latitude,
-         |  CAST(SUM(CASE WHEN pickup_longitude IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_pickup_longitude,
-         |  CAST(SUM(CASE WHEN dropoff_latitude IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_dropoff_latitude,
-         |  CAST(SUM(CASE WHEN dropoff_longitude IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_dropoff_longitude,
-         |  CAST(SUM(CASE WHEN trip_distance IS NOT NULL AND (trip_distance < 0 OR trip_distance > 100) THEN 1 ELSE 0 END) AS BIGINT) AS between_trip_distance,
-         |  CAST(SUM(CASE WHEN extra IS NOT NULL AND (extra < 0 OR extra > 3) THEN 1 ELSE 0 END) AS BIGINT) AS between_extra
-         |FROM v""".stripMargin,
-    "validate_rows" ->
-      """SELECT event_id, event_type, value,
-        |  array_to_string(list_filter([
-        |    CASE WHEN event_type IS NOT NULL
-        |      AND event_type NOT IN ('click','view','purchase','signup')
-        |      THEN 'in_set_event_type' END,
-        |    CASE WHEN value IS NOT NULL AND (value < 0 OR value > 50)
-        |      THEN 'between_value' END,
-        |    CASE WHEN event_id IS NULL THEN 'not_null_event_id' END
-        |  ], v -> v IS NOT NULL), ',') AS violations,
-        |  len(list_filter([
-        |    CASE WHEN event_type IS NOT NULL
-        |      AND event_type NOT IN ('click','view','purchase','signup')
-        |      THEN 'in_set_event_type' END,
-        |    CASE WHEN value IS NOT NULL AND (value < 0 OR value > 50)
-        |      THEN 'between_value' END,
-        |    CASE WHEN event_id IS NULL THEN 'not_null_event_id' END
-        |  ], v -> v IS NOT NULL)) = 0 AS is_valid
-        |FROM events""".stripMargin,
-    "validate_extended" ->
-      """WITH d AS (
-        |  SELECT * FROM events
-        |  UNION ALL
-        |  SELECT * FROM (SELECT * FROM events ORDER BY event_id LIMIT 7))
-        |SELECT
-        |  CAST(SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS not_null_event_id,
-        |  CAST(SUM(CASE WHEN event_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    - COUNT(DISTINCT event_id) AS BIGINT) AS unique_event_id,
-        |  CAST(SUM(CASE WHEN event_type IS NOT NULL
-        |    AND event_type NOT IN ('click','view','purchase','signup')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS in_set_event_type,
-        |  CAST(SUM(CASE WHEN event_type IS NOT NULL
-        |    AND NOT regexp_matches(event_type, '^[a-z]+$')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS regex_event_type
-        |FROM d""".stripMargin,
-    "union_all" ->
-      """SELECT r_regionkey, r_name FROM region
-        |UNION ALL
-        |SELECT r_regionkey, r_name FROM region WHERE r_regionkey < 3""".stripMargin,
-    "unpivot_measures" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS value FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""".stripMargin,
-    // month-over-month deltas in exact integer cents; the basis-point
-    // change divides MAGNITUDES and re-applies the sign (negative
-    // integer division rounds differently across engines)
-    "period_over_period" ->
-      """WITH m AS (
-        |  SELECT strftime(o_orderdate, '%Y-%m') AS month,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT) AS rev_cents
-        |  FROM orders GROUP BY 1),
-        |l AS (
-        |  SELECT month, rev_cents,
-        |    lag(rev_cents) OVER (ORDER BY month) AS prev_cents
-        |  FROM m)
-        |SELECT month, rev_cents, prev_cents,
-        |  rev_cents - prev_cents AS delta_cents,
-        |  CAST(CASE WHEN prev_cents IS NOT NULL AND prev_cents > 0
-        |    THEN (CASE WHEN rev_cents - prev_cents < 0 THEN -1 ELSE 1 END) *
-        |         ((10000 * abs(rev_cents - prev_cents)) // prev_cents)
-        |  END AS BIGINT) AS pct_bp
-        |FROM l""".stripMargin,
-    "cdc_parse" ->
-      """SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us,
-        |  make_timestamp(epoch_us(ts)) AS event_ts
-        |FROM events""".stripMargin,
-    "revenue_by_nation" ->
-      """SELECT n.n_name AS nation, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |GROUP BY n.n_name""".stripMargin,
-    "q3_priority" ->
-      """SELECT l.l_orderkey, o.o_orderdate, o.o_orderpriority,
-        |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-        |    * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer c
-        |JOIN orders o ON c.c_custkey = o.o_custkey
-        |JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |  AND o.o_orderdate < TIMESTAMP '1995-03-15'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-    "parts_by_brand" ->
-      """SELECT p_brand, count(*) AS n_parts,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS retail_value,
-        |  min(p_size) AS min_size, max(p_size) AS max_size
-        |FROM part GROUP BY p_brand""".stripMargin,
-    "semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-    "anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)""".stripMargin,
-    "set_ops" ->
-      """SELECT custkey, 'intersect' AS op FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  INTERSECT
-        |  SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 100000)
-        |UNION ALL
-        |SELECT custkey, 'except' AS op FROM (
-        |  SELECT o_custkey AS custkey FROM orders
-        |  EXCEPT
-        |  SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 100000)""".stripMargin,
-    // CAST each pivoted SUM: DuckDB returns HUGEINT for integer SUM, which
-    // the driver's pandas comparator materializes as float64 and the hash
-    // compare against Spark's bigint fails.
-    "pivot_events" ->
-      """SELECT CAST(user_id % 10 AS INT) AS user_bucket,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-        |FROM events GROUP BY 1""".stripMargin,
-    "hash_sample" ->
-      """WITH b AS (
-        |  SELECT event_id, event_type,
-        |    CAST(concat('0x', substring(md5(concat(CAST(event_id AS VARCHAR), 'r1')), 1, 15)) AS BIGINT) % 100 AS bucket
-        |  FROM events)
-        |SELECT event_id, event_type, 'uniform20' AS stratum FROM b WHERE bucket < 20
-        |UNION ALL
-        |SELECT event_id, event_type, 'stratified' AS stratum FROM b
-        |WHERE bucket < (CASE WHEN event_type = 'click' THEN 10
-        |                     WHEN event_type = 'purchase' THEN 50 ELSE 0 END)""".stripMargin,
-    "profile_events" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS "column", count(*) AS n_rows,
-           |  CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  count(DISTINCT $c) AS n_distinct,
-           |  CAST(min($c) AS VARCHAR) AS min_value,
-           |  CAST(max($c) AS VARCHAR) AS max_value
-           |FROM events""".stripMargin
-      Seq("event_id", "user_id", "event_type", "value").map(one)
-        .mkString("\nUNION ALL\n")
-    },
-    "json_extract" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events""".stripMargin,
-    // The VARIANT round-trip is construct-then-extract, so the oracle
-    // is the identity on the typed source columns.
-    "json_variant" ->
-      """SELECT event_id, user_id, event_type, value,
-        |  CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events""".stripMargin,
-    // shred → extract inverts construction, so the oracle is the same
-    // identity; val0 extracts element 0 of the shredded [value] array
-    "json_shred" ->
-      """SELECT event_id, user_id, event_type, value, value AS val0,
-        |  CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events""".stripMargin,
-    "window_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "running_total" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-        |FROM orders WHERE o_custkey < 100""".stripMargin,
-    "rollup_agg" ->
-      s"""${TaxiShape.stagingSql}
-         |SELECT year, month, count(*) AS n_trips,
-         |  CAST(SUM(CAST(fare_amount AS DECIMAL(18,2))) AS DOUBLE) AS sum_fare,
-         |  CAST(GROUPING(year) AS INT) AS g_year,
-         |  CAST(GROUPING(month) AS INT) AS g_month
-         |FROM staging GROUP BY ROLLUP(year, month)""".stripMargin,
-    // DuckDB GROUPING(a, b) carries Spark's grouping_id bitmask
-    // convention (1 bit per aggregated-away column)
-    "grouping_sets_agg" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, value FROM events)
-        |SELECT event_type, day, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  CAST(GROUPING(event_type, day) AS BIGINT) AS gid
-        |FROM e GROUP BY GROUPING SETS ((event_type), (event_type, day), ())""".stripMargin,
-    "asof_join" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |p AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id, c.ts, p.purchase_value
-        |FROM clicks c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin,
-    // the tolerance variant: the SAME asof match, then the matched
-    // row's age decides — stale payloads answer NULL
-    "asof_join_tolerance" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |p AS (
-        |  SELECT user_id, ts,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id, c.ts,
-        |  CASE WHEN p.ts >= c.ts - INTERVAL 48 HOURS
-        |    THEN p.purchase_value END AS purchase_value
-        |FROM clicks c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin,
-    "stats_summary" ->
-      """SELECT event_type, count(*) AS n,
-        |  min(value) AS min_value, max(value) AS max_value,
-        |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |    / count(value) AS DOUBLE) AS avg_value,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY event_type""".stripMargin,
-    "value_histogram" ->
-      """SELECT CAST(floor(value / 5) * 5 AS DOUBLE) AS bucket_start, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "user_event_types" ->
-      """SELECT user_id,
-        |  array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_types,
-        |  count(*) AS n_events
-        |FROM events GROUP BY user_id""".stripMargin,
-    "lineitem_cov" ->
-      """WITH s AS (
-        |  SELECT l_returnflag, count(*) AS n,
-        |    SUM(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS sy,
-        |    SUM(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(14,2))) AS sxy
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, n,
-        |  CAST(sx AS DOUBLE) AS sum_qty,
-        |  CAST(sy AS DOUBLE) AS sum_price,
-        |  (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / n) / n AS covar_pop
-        |FROM s""".stripMargin,
-    "funnel" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS first_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS first_purchase_after
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts >= v.first_view
-        |  GROUP BY 1)
-        |SELECT v.user_id, v.first_view, p.first_purchase_after
-        |FROM v LEFT JOIN p ON v.user_id = p.user_id""".stripMargin,
-    "funnel_steps" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t_click
-        |  FROM events e JOIN v USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts >= v.t_view GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase
-        |  FROM events e JOIN c USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts >= c.t_click GROUP BY 1)
-        |SELECT CAST(1 AS BIGINT) AS depth, 'view' AS step,
-        |  CAST((SELECT count(*) FROM v) AS BIGINT) AS n_users
-        |UNION ALL SELECT 2, 'click', CAST((SELECT count(*) FROM c) AS BIGINT)
-        |UNION ALL SELECT 3, 'purchase', CAST((SELECT count(*) FROM p) AS BIGINT)""".stripMargin,
-    "percentiles" ->
-      """SELECT event_type,
-        |  quantile_cont(value, 0.25) AS p25,
-        |  quantile_cont(value, 0.5) AS p50,
-        |  quantile_cont(value, 0.75) AS p75
-        |FROM events GROUP BY event_type""".stripMargin,
-    "value_winsorize" ->
-      """WITH cuts AS (
-        |  SELECT event_type,
-        |    quantile_cont(value, 0.05) AS lo,
-        |    quantile_cont(value, 0.95) AS hi
-        |  FROM events GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN e.value IS NULL THEN NULL
-        |       ELSE least(greatest(e.value, c.lo), c.hi) END AS value_w
-        |FROM events e JOIN cuts c USING (event_type)""".stripMargin,
-    "value_robust_z" ->
-      """WITH med AS (
-        |  SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY 1),
-        |mad AS (
-        |  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-        |  FROM events e JOIN med m USING (event_type) GROUP BY 1)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN e.value IS NULL OR mad.mad = 0 THEN NULL
-        |       ELSE (e.value - med.med) / mad.mad END AS robust_z
-        |FROM events e JOIN med USING (event_type) JOIN mad USING (event_type)""".stripMargin,
-    // unique ordering (value, event_id tiebreak) makes ntile and
-    // percent_rank deterministic in both engines; NULL values are
-    // excluded (the engines disagree on NULL sort order)
-    "value_ntile" ->
-      """SELECT event_id, event_type, value,
-        |  CAST(ntile(10) OVER (PARTITION BY event_type ORDER BY value, event_id) AS INT) AS decile,
-        |  percent_rank() OVER (PARTITION BY event_type ORDER BY value, event_id) AS pct_rank
-        |FROM events WHERE value IS NOT NULL""".stripMargin,
-    "suffix_dup" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, md5(right(text, 80)) AS prefix_hash FROM documents),
-        |g AS (
-        |  SELECT prefix_hash, count(*) AS n_docs, min(doc_id) AS keep_id
-        |  FROM keyed GROUP BY 1)
-        |SELECT k.doc_id, k.prefix_hash, g.n_docs,
-        |  (g.n_docs > 1 AND k.doc_id <> g.keep_id) AS is_prefix_dup
-        |FROM keyed k JOIN g USING (prefix_hash)""".stripMargin,
-    "prefix_dup" ->
-      """WITH keyed AS (
-        |  SELECT doc_id, md5(substr(text, 1, 80)) AS prefix_hash FROM documents),
-        |g AS (
-        |  SELECT prefix_hash, count(*) AS n_docs, min(doc_id) AS keep_id
-        |  FROM keyed GROUP BY 1)
-        |SELECT k.doc_id, k.prefix_hash, g.n_docs,
-        |  (g.n_docs > 1 AND k.doc_id <> g.keep_id) AS is_prefix_dup
-        |FROM keyed k JOIN g USING (prefix_hash)""".stripMargin,
-    "dedup_fuzzy" ->
-      """WITH d AS (
-        |  SELECT doc_id, substring(text, 1, 10) AS blk,
-        |    substring(text, 1, 200) AS s
-        |  FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
-        |FROM d a JOIN d b USING (blk)
-        |WHERE a.doc_id < b.doc_id AND levenshtein(a.s, b.s) <= 10""".stripMargin,
-    // both engines truncate weeks to ISO Monday; the week index is
-    // exact integer day arithmetic
-    "retention_cohorts" ->
-      """WITH f AS (
-        |  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |  FROM events GROUP BY 1)
-        |SELECT f.cohort_week,
-        |  CAST(date_diff('day', f.cohort_week, date_trunc('week', e.ts)) // 7 AS BIGINT) AS weeks_since,
-        |  count(DISTINCT e.user_id) AS n_users
-        |FROM events e JOIN f USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
-    // triangle set is orientation-independent: the oracle enumerates
-    // by id order (a<b<c), the engine by degree order — same triangles,
-    // same per-vertex counts
-    "triangle_count" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |sp0 AS (SELECT DISTINCT doc_id, array_to_string(toks[u.i : u.i+7], ' ') AS sp
-         |        FROM t, unnest(generate_series(1, len(toks) - 7)) AS u(i)),
-         |sp AS (SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(sp), 1, 15)) AS BIGINT) AS sp_h
-         |  FROM sp0),
-         |sel AS (SELECT sp_h FROM sp GROUP BY 1
-         |        HAVING count(DISTINCT doc_id) BETWEEN 2 AND 20),
-         |e AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-         |      FROM sp a JOIN sp b USING (sp_h) JOIN sel USING (sp_h)
-         |      WHERE a.doc_id < b.doc_id),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |        FROM e e1 JOIN e e2 ON e2.a = e1.b
-         |        JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |v AS (SELECT x AS id FROM tri
-         |      UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |SELECT id AS doc_id, count(*) AS n_triangles FROM v GROUP BY 1""".stripMargin,
-    "term_pairs" ->
-      s"""WITH dt AS (
-         |  SELECT DISTINCT doc_id, t.term FROM (
-         |    SELECT doc_id, unnest($toksSql) AS term FROM documents) t
-         |  WHERE t.term <> ''),
-         |top AS (
-         |  SELECT term, count(*) AS df FROM dt GROUP BY 1
-         |  ORDER BY df DESC, term ASC LIMIT 50),
-         |m AS (SELECT dt.doc_id, dt.term, top.df FROM dt JOIN top USING (term))
-         |SELECT a.term AS term_a, b.term AS term_b,
-         |  a.df AS n_a, b.df AS n_b, count(*) AS n_both
-         |FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-         |GROUP BY 1, 2, 3, 4""".stripMargin,
-    "event_pairs" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT DISTINCT user_id, event_type,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g)
-        |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |  count(*) AS n_sessions
-        |FROM s a JOIN s b ON a.user_id = b.user_id
-        |  AND a.session_id = b.session_id AND a.event_type < b.event_type
-        |GROUP BY 1, 2""".stripMargin,
-    // the merge of history + batch partials must equal the one-shot
-    // aggregate — which is what the oracle computes directly
-    "incremental_agg" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  min(ts) AS first_ts, max(ts) AS last_ts
-        |FROM events GROUP BY 1""".stripMargin,
-    "mask_pii" ->
-      """SELECT c_custkey,
-        |  sha256(concat('graft-salt-v1', c_name)) AS c_name,
-        |  c_mktsegment
-        |FROM customer""".stripMargin,
-    "salted_join" ->
-      """SELECT o.o_custkey AS custkey, o.o_orderkey, o.o_totalprice, c.c_name
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
-    "cube_agg" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(year(ts) AS INT) AS year, value FROM events)
-        |SELECT event_type, year, count(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  CAST(GROUPING(event_type) AS INT) AS g_type,
-        |  CAST(GROUPING(year) AS INT) AS g_year
-        |FROM e GROUP BY CUBE(event_type, year)""".stripMargin,
-    // closed-form motion: frame f's constant fill is (id*31+f*7)%256
-    // over (id%16+8)x(id%12+6) pixels; transitions exist for
-    // f = 1 .. id%8 (assets carry id%8+1 frames)
-    "video_motion" ->
-      """SELECT doc_id AS asset_id, CAST(u.f AS INTEGER) AS frame_idx,
-        |  CAST((doc_id % 16 + 8) * (doc_id % 12 + 6)
-        |    * abs(((doc_id * 31 + u.f * 7) % 256)
-        |        - ((doc_id * 31 + (u.f - 1) * 7) % 256)) AS BIGINT) AS sum_abs_diff,
-        |  CAST((doc_id % 16 + 8) * (doc_id % 12 + 6) AS BIGINT) AS n_bytes
-        |FROM documents, unnest(generate_series(1, doc_id % 8)) AS u(f)""".stripMargin,
-    "source_overlap" ->
-      s"""WITH t AS (SELECT source, $toksSql AS toks FROM documents),
-         |sp0 AS (SELECT DISTINCT source, array_to_string(toks[u.i : u.i+7], ' ') AS sp
-         |        FROM t, unnest(generate_series(1, len(toks) - 7)) AS u(i)),
-         |sp AS (SELECT DISTINCT source,
-         |    CAST(concat('0x', substring(md5(sp), 1, 15)) AS BIGINT) AS sp_h
-         |  FROM sp0)
-         |SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_shared
-         |FROM sp a JOIN sp b ON a.sp_h = b.sp_h AND a.source < b.source
-         |GROUP BY 1, 2""".stripMargin,
-    "sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  count(*) AS n_events, min(ts) AS session_start, max(ts) AS session_end
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "session_paths" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g),
-        |p AS (
-        |  SELECT user_id, session_id,
-        |    string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-        |  FROM s GROUP BY 1, 2)
-        |SELECT path, count(*) AS n_sessions FROM p
-        |GROUP BY 1 ORDER BY n_sessions DESC, path ASC LIMIT 20""".stripMargin,
-    // non-overlapping greedy scan is left-to-right in both regex
-    // engines; the pattern has no alternation so RE2 == java.util.regex
-    "event_pattern" ->
-      """WITH seqs AS (
-        |  SELECT user_id, string_agg(event_type, ' ' ORDER BY ts, event_id) AS seq
-        |  FROM events GROUP BY 1)
-        |SELECT user_id,
-        |  CAST(len(regexp_extract_all(seq, '(view )+click purchase')) AS BIGINT) AS n_matches
-        |FROM seqs
-        |WHERE len(regexp_extract_all(seq, '(view )+click purchase')) > 0
-        |ORDER BY user_id""".stripMargin,
-    // last-touch replay: running last_value IGNORE NULLS per carried
-    // column over the same (ts, event_id) ordering — identical null
-    // pattern means all three come from the same touch row
-    "attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |t AS (
-        |  SELECT user_id, event_id, event_type, ts_us,
-        |    last_value(CASE WHEN event_type IN ('click','view') THEN event_id END IGNORE NULLS) OVER w AS touch_event_id,
-        |    last_value(CASE WHEN event_type IN ('click','view') THEN event_type END IGNORE NULLS) OVER w AS touch_type,
-        |    last_value(CASE WHEN event_type IN ('click','view') THEN ts_us END IGNORE NULLS) OVER w AS touch_us
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id AS purchase_event_id, user_id, touch_event_id,
-        |  touch_type, ts_us - touch_us AS gap_us
-        |FROM t
-        |WHERE event_type = 'purchase' AND touch_us IS NOT NULL
-        |  AND ts_us - touch_us <= 86400000000""".stripMargin,
-    // same gap-sessionization CTEs as session_paths, then LAG within
-    // the session and exact fixed-point row normalization
-    "transition_matrix" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g),
-        |pr AS (
-        |  SELECT LAG(event_type) OVER (PARTITION BY user_id, session_id
-        |      ORDER BY ts, event_id) AS from_type,
-        |    event_type AS to_type
-        |  FROM s),
-        |c AS (
-        |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM pr WHERE from_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS row_total FROM c GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.n,
-        |  CAST((1000000 * c.n) // t.row_total AS BIGINT) AS p_fp
-        |FROM c JOIN t USING (from_type)""".stripMargin,
-    // DuckDB dayofweek is 0=Sunday..6; Spark is 1=Sunday..7 — shift
-    "dim_date" ->
-      """WITH span AS (
-        |  SELECT CAST(min(o_orderdate) AS DATE) AS lo,
-        |    CAST(max(o_orderdate) AS DATE) AS hi
-        |  FROM orders),
-        |d AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d FROM span)
-        |SELECT CAST(strftime(d, '%Y%m%d') AS BIGINT) AS date_key,
-        |  strftime(d, '%Y-%m-%d') AS date_iso,
-        |  CAST(year(d) AS BIGINT) AS year,
-        |  monthname(d) AS month_name,
-        |  CAST(month(d) AS BIGINT) AS month,
-        |  dayname(d) AS dow_name,
-        |  CAST(dayofweek(d) + 1 AS BIGINT) AS dow,
-        |  dayofweek(d) IN (0, 6) AS is_weekend
-        |FROM d""".stripMargin,
-    // novelty: distinct-shingle posting md5-folded to longs, df
-    // aggregate, per-doc df=1 fraction in fixed point
-    "ngram_novelty" ->
-      s"""WITH sp AS (
-         |  SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS sh_h
-         |  FROM (SELECT doc_id, unnest($shinglesSql) AS sh FROM documents)),
-         |dfc AS (SELECT sh_h, count(*) AS df FROM sp GROUP BY 1),
-         |pd AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-         |  FROM sp JOIN dfc USING (sh_h) GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(pd.n_shingles, 0) AS BIGINT) AS n_shingles,
-         |  CAST(coalesce(pd.n_unique, 0) AS BIGINT) AS n_unique,
-         |  CAST(CASE WHEN coalesce(pd.n_shingles, 0) > 0
-         |    THEN (1000000 * pd.n_unique) // pd.n_shingles
-         |    ELSE 0 END AS BIGINT) AS novelty_fp
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN pd USING (doc_id)""".stripMargin,
-    "skew_report" ->
-      """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
-        |t AS (SELECT user_id AS top_key, n AS top_n FROM c
-        |      ORDER BY n DESC, user_id DESC LIMIT 1),
-        |a AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows, count(*) AS n_keys FROM c)
-        |SELECT n_rows, n_keys, top_key, top_n,
-        |  top_n * 10000 // n_rows AS top_share_bp,
-        |  top_n * n_keys * 100 // n_rows AS skew_x100
-        |FROM a, t""".stripMargin,
-    // advice replay: ceil arithmetic per audited key column, UNION ALL
-    "skew_advice" ->
-      """WITH u AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS top_n FROM events GROUP BY user_id
-        |  ORDER BY 1 DESC LIMIT 1),
-        |ua AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |              CAST(count(DISTINCT user_id) AS BIGINT) AS n_keys FROM events),
-        |e AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS top_n FROM events GROUP BY event_type
-        |  ORDER BY 1 DESC LIMIT 1),
-        |ea AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |              CAST(count(DISTINCT event_type) AS BIGINT) AS n_keys FROM events),
-        |rows_ AS (
-        |  SELECT 'user_id' AS key_col, ua.n_rows, ua.n_keys, u.top_n FROM ua, u
-        |  UNION ALL
-        |  SELECT 'event_type', ea.n_rows, ea.n_keys, e.top_n FROM ea, e)
-        |SELECT key_col, n_rows, n_keys, top_n,
-        |  (n_rows + 31) // 32 AS ideal_rows,
-        |  top_n > 2 * ((n_rows + 31) // 32) AS skewed,
-        |  CASE WHEN top_n > 2 * ((n_rows + 31) // 32)
-        |    THEN (top_n + (n_rows + 31) // 32 - 1) // ((n_rows + 31) // 32)
-        |    ELSE 1 END AS salt_factor,
-        |  CASE WHEN top_n > 2 * ((n_rows + 31) // 32)
-        |    THEN 'top ' || top_n || ' > 2 x ideal ' || ((n_rows + 31) // 32)
-        |    ELSE 'balanced' END AS reason
-        |FROM rows_ ORDER BY key_col""".stripMargin,
-    "lsh_tuning" ->
-      """WITH g AS (SELECT CAST(i * 500 AS BIGINT) AS s_bp FROM range(1, 20) t(i)),
-        |p AS (SELECT s_bp,
-        |    CAST((s_bp * s_bp * s_bp) // 100000000 AS BIGINT) AS s3_bp
-        |  FROM g)
-        |SELECT s_bp, s3_bp,
-        |  CAST(10000 - ((10000 - s3_bp) * (10000 - s3_bp) * (10000 - s3_bp)
-        |    * (10000 - s3_bp)) // 1000000000000 AS BIGINT) AS p_candidate_bp
-        |FROM p""".stripMargin,
-    "text_quality" ->
-      s"""SELECT doc_id,
-         |  n_tokens < ${TextFunctions.minTokens} AS too_short,
-         |  CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |    < ${TextFunctions.minStopwordRatio} AS low_stopword_ratio,
-         |  CAST(n_punct AS DOUBLE) / CAST(len_chars AS DOUBLE)
-         |    > ${TextFunctions.maxPunctRatio} AS high_punct_ratio,
-         |  CAST(10
-         |    - CASE WHEN n_tokens < ${TextFunctions.minTokens} THEN 4 ELSE 0 END
-         |    - CASE WHEN CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-         |        < ${TextFunctions.minStopwordRatio} THEN 3 ELSE 0 END
-         |    - CASE WHEN CAST(n_punct AS DOUBLE) / CAST(len_chars AS DOUBLE)
-         |        > ${TextFunctions.maxPunctRatio} THEN 3 ELSE 0 END AS DOUBLE) / 10.0 AS quality_score
-         |FROM (
-         |  SELECT doc_id,
-         |    CAST(length(text) AS BIGINT) AS len_chars,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct
-         |  FROM documents)""".stripMargin,
-    "corpus_mix_tokens" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'mx')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |    SUM(n_tokens) OVER (PARTITION BY source ORDER BY hv, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM d)
-        |SELECT c.doc_id, c.source, t.text, c.n_tokens
-        |FROM c JOIN documents t ON c.doc_id = t.doc_id
-        |WHERE cum <= CASE c.source WHEN 'src0' THEN 800 WHEN 'src1' THEN 400
-        |                           WHEN 'src2' THEN 0 ELSE 200 END""".stripMargin,
-    "corpus_health" ->
-      s"""SELECT count(*) AS n_docs,
-         |  CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS n_tokens,
-         |  count(DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))) AS n_distinct_docs,
-         |  CAST(MIN(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS min_tokens,
-         |  CAST(MAX(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS max_tokens,
-         |  CAST(count(*) - count(DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) AS dup_rate
-         |FROM documents""".stripMargin,
-    "dedup_ensemble" -> {
-      val dotAb = dotSql("ea.embedding", "eb.embedding")
-      val na = dotSql("ea.embedding", "ea.embedding")
-      val nb = dotSql("eb.embedding", "eb.embedding")
-      s"""WITH $minhashCandsSql,
-         |jac AS (
-         |  SELECT c.doc_a, c.doc_b,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |      / CAST(len(sa.shingles) + len(sb.shingles)
-         |          - len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) AS jaccard
-         |  FROM cands c
-         |  JOIN sigs sa ON c.doc_a = sa.doc_id
-         |  JOIN sigs sb ON c.doc_b = sb.doc_id)
-         |SELECT j.doc_a, j.doc_b, j.jaccard,
-         |  round($dotAb / (sqrt($na) * sqrt($nb)), 9) AS cos,
-         |  (j.jaccard >= 0.5 AND round($dotAb / (sqrt($na) * sqrt($nb)), 9) >= 0.2) AS agree
-         |FROM jac j
-         |JOIN embeddings ea ON j.doc_a = ea.vec_id
-         |JOIN embeddings eb ON j.doc_b = eb.vec_id""".stripMargin
-    },
-    "quantile_sketch" ->
-      """WITH r AS (SELECT event_type, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events)
-        |SELECT event_type,
-        |  max(CASE WHEN rn = (n * 25 + 99) // 100 THEN value END) AS p25,
-        |  max(CASE WHEN rn = (n * 50 + 99) // 100 THEN value END) AS p50,
-        |  max(CASE WHEN rn = (n * 75 + 99) // 100 THEN value END) AS p75,
-        |  max(CASE WHEN rn = (n * 90 + 99) // 100 THEN value END) AS p90
-        |FROM r GROUP BY 1""".stripMargin,
-    // decile cutpoints = order statistics at rank (n*p+99)//100 (the
-    // sketch's exact regime), kept WITH multiplicity (a duplicated
-    // cut value narrows a bucket to empty, and the replay must agree)
-    // quintile cutpoints replayed as order statistics at rank
-    // (n*p+99)//100 (the range_plan disc-quantile convention), then
-    // the same strictly-below bucket count
-    "user_rfm" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |base AS (
-        |  SELECT user_id,
-        |    CAST(((SELECT max(ts_us) FROM ev) - max(ts_us)) // 86400000000 AS BIGINT) AS recency_days,
-        |    CAST(count(*) AS BIGINT) AS frequency,
-        |    CAST(SUM(cents) AS BIGINT) AS monetary_cents
-        |  FROM ev GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |ranks AS (SELECT p, (n * p + 99) // 100 AS rn
-        |  FROM nn, (VALUES (20),(40),(60),(80)) t(p)),
-        |rc AS (SELECT list(b.recency_days ORDER BY ranks.p) AS cuts FROM ranks
-        |  JOIN (SELECT recency_days, ROW_NUMBER() OVER (ORDER BY recency_days) AS rn
-        |        FROM base) b ON b.rn = ranks.rn),
-        |fc AS (SELECT list(b.frequency ORDER BY ranks.p) AS cuts FROM ranks
-        |  JOIN (SELECT frequency, ROW_NUMBER() OVER (ORDER BY frequency) AS rn
-        |        FROM base) b ON b.rn = ranks.rn),
-        |mc AS (SELECT list(b.monetary_cents ORDER BY ranks.p) AS cuts FROM ranks
-        |  JOIN (SELECT monetary_cents, ROW_NUMBER() OVER (ORDER BY monetary_cents) AS rn
-        |        FROM base) b ON b.rn = ranks.rn),
-        |s AS (
-        |  SELECT user_id, recency_days, frequency, monetary_cents,
-        |    CAST(5 - len(list_filter(rc.cuts, x -> recency_days > x)) AS BIGINT) AS r_score,
-        |    CAST(1 + len(list_filter(fc.cuts, x -> frequency > x)) AS BIGINT) AS f_score,
-        |    CAST(1 + len(list_filter(mc.cuts, x -> monetary_cents > x)) AS BIGINT) AS m_score
-        |  FROM base, rc, fc, mc)
-        |SELECT user_id, recency_days, frequency, monetary_cents,
-        |  r_score, f_score, m_score,
-        |  CAST(r_score * 100 + f_score * 10 + m_score AS BIGINT) AS rfm
-        |FROM s""".stripMargin,
-    "range_plan" ->
-      """WITH v AS (SELECT value FROM events WHERE value IS NOT NULL),
-        |r AS (SELECT value, ROW_NUMBER() OVER (ORDER BY value) AS rn FROM v),
-        |nn AS (SELECT count(*) AS n FROM v),
-        |ranks AS (SELECT p, (n * p + 99) // 100 AS rn
-        |  FROM nn, (VALUES (10),(20),(30),(40),(50),(60),(70),(80),(90)) t(p)),
-        |cuts AS (SELECT list(r.value ORDER BY ranks.p) AS cuts
-        |  FROM ranks JOIN r ON r.rn = ranks.rn)
-        |SELECT CAST(len(list_filter(cuts, x -> value > x)) AS BIGINT) AS bucket,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  min(value) AS lo, max(value) AS hi
-        |FROM v, cuts GROUP BY 1""".stripMargin,
-    "interval_join" ->
-      """WITH ev AS (SELECT event_id, user_id,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS lo,
-        |    CAST(floor(epoch(ts)) AS BIGINT) + CAST(floor(value) AS BIGINT) * 60 AS hi
-        |  FROM events),
-        |a AS (SELECT event_id AS a_id, lo AS a_lo, hi AS a_hi
-        |      FROM ev WHERE user_id < 3),
-        |b AS (SELECT event_id AS b_id, lo AS b_lo, hi AS b_hi
-        |      FROM ev WHERE user_id >= 3 AND user_id < 6)
-        |SELECT a_id, b_id, a_lo, a_hi, b_lo, b_hi
-        |FROM a JOIN b ON a_lo <= b_hi AND b_lo <= a_hi""".stripMargin,
-    "value_outliers" ->
-      """WITH c AS (SELECT event_id, event_type, value,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc FROM events),
-        |st AS (SELECT event_type, count(*) AS n,
-        |    CAST(SUM(vc) AS BIGINT) AS s,
-        |    CAST(SUM(vc * vc) AS BIGINT) AS ss
-        |  FROM c GROUP BY 1)
-        |SELECT event_id, event_type, value
-        |FROM c JOIN st USING (event_type)
-        |WHERE CAST(vc * n - s AS DOUBLE) * CAST(vc * n - s AS DOUBLE)
-        |  > 9.0 * (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
-        |           - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))""".stripMargin,
-    "audio_features" ->
-      """SELECT doc_id AS asset_id,
-        |  CAST(doc_id % 400 + 100 AS BIGINT) AS n_samples,
-        |  CAST(1 AS INTEGER) AS n_channels,
-        |  CAST(8000 AS INTEGER) AS sample_rate,
-        |  CAST((doc_id % 400 + 100) * 1000 AS DOUBLE) / 8000 AS duration_ms,
-        |  CAST((doc_id % 5 + 1) * 4000 AS DOUBLE) AS rms,
-        |  CAST((doc_id % 400 + 100 - 1) // (doc_id % 37 + 8) AS BIGINT) AS zero_crossings,
-        |  CAST((doc_id % 5 + 1) * 4000 AS INTEGER) AS peak
-        |FROM documents""".stripMargin,
-    "keyword_search" ->
-      s"""WITH posting AS (
-         |  SELECT doc_id, term FROM (
-         |    SELECT doc_id, unnest($toksSql) AS term FROM documents)
-         |  WHERE term IN ('spark', 'merge', 'window')),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM posting GROUP BY 1, 2),
-         |dfs AS (SELECT
-         |    count(*) FILTER (term = 'spark') AS df_spark,
-         |    count(*) FILTER (term = 'merge') AS df_merge,
-         |    count(*) FILTER (term = 'window') AS df_window
-         |  FROM tf),
-         |n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-         |doctf AS (SELECT doc_id,
-         |    CAST(coalesce(sum(tf) FILTER (term = 'spark'), 0) AS BIGINT) AS tf_spark,
-         |    CAST(coalesce(sum(tf) FILTER (term = 'merge'), 0) AS BIGINT) AS tf_merge,
-         |    CAST(coalesce(sum(tf) FILTER (term = 'window'), 0) AS BIGINT) AS tf_window
-         |  FROM tf GROUP BY 1),
-         |scored AS (SELECT doc_id, tf_spark, tf_merge, tf_window,
-         |    CAST(tf_spark * (n + 1) * (df_merge + 1) * (df_window + 1)
-         |       + tf_merge * (n + 1) * (df_spark + 1) * (df_window + 1)
-         |       + tf_window * (n + 1) * (df_spark + 1) * (df_merge + 1) AS BIGINT) AS score_num,
-         |    CAST((df_spark + 1) * (df_merge + 1) * (df_window + 1) AS BIGINT) AS denom
-         |  FROM doctf, dfs, n)
-         |SELECT doc_id, tf_spark, tf_merge, tf_window, score_num,
-         |  CAST(score_num AS DOUBLE) / CAST(denom AS DOUBLE) AS score
-         |FROM scored WHERE score_num > 0
-         |ORDER BY score_num DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // Okapi BM25 with rational constants: each term's score is one
-    // division of two exactly-computed BIGINTs; the 3-term sum is a
-    // fixed-order double expression (same association both engines)
-    "bm25_search" ->
-      s"""WITH $bm25CtesSql
-         |SELECT doc_id, dl, tf_spark, tf_merge, tf_window,
-         |  round(score_raw, 9) AS score
-         |FROM scored WHERE score_raw > 0
-         |ORDER BY score_raw DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // AND-retrieval: the same scoring chain over only the all-term
-    // docs, df self-consistently the competing set's size
-    "bm25_conjunctive" ->
-      s"""WITH ${bm25CtesFor("documents", conjunctive = true)}
-         |SELECT doc_id, dl, tf_spark, tf_merge, tf_window,
-         |  round(score_raw, 9) AS score
-         |FROM scored WHERE score_raw > 0
-         |ORDER BY score_raw DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // post-erasure index ≡ an index that never held the victims: the
-    // same chain over the surviving corpus (df = posting-list length
-    // shrinks with the delete; N/total_dl shrink via the negative
-    // stats delta)
-    "bm25_deleted" ->
-      s"""WITH ${bm25CtesFor("(SELECT * FROM documents WHERE doc_id % 10 <> 7)")}
-         |SELECT doc_id, dl, tf_spark, tf_merge, tf_window,
-         |  round(score_raw, 9) AS score
-         |FROM scored WHERE score_raw > 0
-         |ORDER BY score_raw DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // the index-served path answers to the SAME statement: postings /
-    // stats / df / dl are all additive, so build-then-append must be
-    // bit-identical to the ad-hoc full-corpus scan
-    "bm25_indexed" ->
-      s"""WITH $bm25CtesSql
-         |SELECT doc_id, dl, tf_spark, tf_merge, tf_window,
-         |  round(score_raw, 9) AS score
-         |FROM scored WHERE score_raw > 0
-         |ORDER BY score_raw DESC, doc_id ASC LIMIT 20""".stripMargin,
-    // RRF hybrid retrieval: both legs replayed from their shared CTE
-    // chains (lexical = the bm25_search statement ranked on its
-    // emitted rounded score; dense = the text_knn vectors against the
-    // literal query's own hashed-TF vector), fused in integer
-    // millionths by floor division — exactly Fusion.rrfFuse
-    "hybrid_search" -> {
-      val hv = (a: String, b: String) => dotSql(a, b)
-      s"""WITH $bm25CtesSql,
-         |$hashedVecCtesSql,
-         |lex AS (
-         |  SELECT doc_id,
-         |    ROW_NUMBER() OVER (ORDER BY round(score_raw, 9) DESC, doc_id) AS rank
-         |  FROM (SELECT doc_id, score_raw FROM scored WHERE score_raw > 0
-         |        ORDER BY score_raw DESC, doc_id LIMIT 20)),
-         |qb AS (SELECT
-         |    CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) % 64 AS bucket,
-         |    count(*) AS c
-         |  FROM (SELECT unnest(['spark', 'merge', 'window']) AS t) GROUP BY 1),
-         |qv AS (SELECT list(CAST(coalesce(qb.c, 0) AS BIGINT) ORDER BY t.i) AS q_vec
-         |  FROM range(0, 64) t(i) LEFT JOIN qb ON t.i = qb.bucket),
-         |dense AS (
-         |  SELECT doc_id, rank FROM (
-         |    SELECT v.doc_id,
-         |      ROW_NUMBER() OVER (ORDER BY
-         |        ${hv("v.vec", "q.q_vec")}
-         |          / (sqrt(${hv("v.vec", "v.vec")}) * sqrt(${hv("q.q_vec", "q.q_vec")}))
-         |        DESC, v.doc_id ASC) AS rank
-         |    FROM v, qv q) WHERE rank <= 20),
-         |contrib AS (
-         |  SELECT doc_id, CAST(1000000 // (60 + rank) AS BIGINT) AS rrf_fp FROM lex
-         |  UNION ALL
-         |  SELECT doc_id, CAST(1000000 // (60 + rank) AS BIGINT) FROM dense),
-         |fused AS (
-         |  SELECT doc_id, count(*) AS n_lists, CAST(SUM(rrf_fp) AS BIGINT) AS rrf_fp
-         |  FROM contrib GROUP BY 1 ORDER BY rrf_fp DESC, doc_id LIMIT 20)
-         |SELECT doc_id, n_lists, rrf_fp,
-         |  ROW_NUMBER() OVER (ORDER BY rrf_fp DESC, doc_id) AS rank
-         |FROM fused""".stripMargin
-    },
-    // BPE training, 2 unrolled rounds: the merge application is the
-    // same left-to-right non-overlapping fold as the engine's, run by
-    // list_reduce over a '|'-delimited accumulator (symbols are
-    // [a-z]+ fusions, so the delimiter can't collide)
-    "bpe_merges" ->
-      """WITH words AS (
-        |  SELECT w AS word, count(*) AS freq
-        |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        |        FROM documents)
-        |  GROUP BY 1),
-        |segs1 AS (
-        |  SELECT word, freq,
-        |    list_transform(range(1, length(word)+1),
-        |      i -> substring(word, i, 1)) AS syms
-        |  FROM words),
-        |x1 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs1),
-        |pairs1 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x1 GROUP BY 1, 2),
-        |win1 AS (SELECT l, r, pair_count FROM pairs1
-        |         ORDER BY pair_count DESC, l, r LIMIT 1),
-        |segs2 AS (
-        |  SELECT word, freq,
-        |    string_split(list_reduce(syms, (acc, x) ->
-        |      CASE WHEN regexp_extract(acc, '[^|]*$') = w.l AND x = w.r
-        |           THEN regexp_replace(acc, '[^|]*$', w.l || w.r)
-        |           ELSE acc || '|' || x END), '|') AS syms
-        |  FROM segs1, win1 w),
-        |x2 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs2),
-        |pairs2 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x2 GROUP BY 1, 2),
-        |win2 AS (SELECT l, r, pair_count FROM pairs2
-        |         ORDER BY pair_count DESC, l, r LIMIT 1)
-        |SELECT CAST(1 AS BIGINT) AS iter, l AS sym_left, r AS sym_right, pair_count
-        |FROM win1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), l, r, pair_count FROM win2""".stripMargin,
-    "bpe_vocab" ->
-      """WITH words AS (
-        |  SELECT w AS word, count(*) AS freq
-        |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        |        FROM documents)
-        |  GROUP BY 1),
-        |segs1 AS (
-        |  SELECT word, freq,
-        |    list_transform(range(1, length(word)+1),
-        |      i -> substring(word, i, 1)) AS syms
-        |  FROM words),
-        |x1 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs1),
-        |pairs1 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x1 GROUP BY 1, 2),
-        |win1 AS (SELECT l, r FROM pairs1
-        |         ORDER BY pair_count DESC, l, r LIMIT 1),
-        |segs2 AS (
-        |  SELECT word, freq,
-        |    string_split(list_reduce(syms, (acc, x) ->
-        |      CASE WHEN regexp_extract(acc, '[^|]*$') = w.l AND x = w.r
-        |           THEN regexp_replace(acc, '[^|]*$', w.l || w.r)
-        |           ELSE acc || '|' || x END), '|') AS syms
-        |  FROM segs1, win1 w),
-        |x2 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs2),
-        |pairs2 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x2 GROUP BY 1, 2),
-        |win2 AS (SELECT l, r FROM pairs2
-        |         ORDER BY pair_count DESC, l, r LIMIT 1),
-        |segs3 AS (
-        |  SELECT word, freq,
-        |    string_split(list_reduce(syms, (acc, x) ->
-        |      CASE WHEN regexp_extract(acc, '[^|]*$') = w.l AND x = w.r
-        |           THEN regexp_replace(acc, '[^|]*$', w.l || w.r)
-        |           ELSE acc || '|' || x END), '|') AS syms
-        |  FROM segs2, win2 w)
-        |SELECT sym, CAST(sum(freq) AS BIGINT) AS cnt
-        |FROM (SELECT freq, unnest(syms) AS sym FROM segs3)
-        |GROUP BY 1 ORDER BY cnt DESC, sym ASC LIMIT 30""".stripMargin,
-    // the trained tokenizer applied per doc: the same 2-round merge
-    // chain as bpe_vocab down to segs3, then the corpus word stream
-    // joins the vocabulary-sized (word → token count) table
-    "bpe_encode" ->
-      """WITH words AS (
-        |  SELECT w AS word, count(*) AS freq
-        |  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-        |        FROM documents)
-        |  GROUP BY 1),
-        |segs1 AS (
-        |  SELECT word, freq,
-        |    list_transform(range(1, length(word)+1),
-        |      i -> substring(word, i, 1)) AS syms
-        |  FROM words),
-        |x1 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs1),
-        |pairs1 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x1 GROUP BY 1, 2),
-        |win1 AS (SELECT l, r FROM pairs1
-        |         ORDER BY pair_count DESC, l, r LIMIT 1),
-        |segs2 AS (
-        |  SELECT word, freq,
-        |    string_split(list_reduce(syms, (acc, x) ->
-        |      CASE WHEN regexp_extract(acc, '[^|]*$') = w.l AND x = w.r
-        |           THEN regexp_replace(acc, '[^|]*$', w.l || w.r)
-        |           ELSE acc || '|' || x END), '|') AS syms
-        |  FROM segs1, win1 w),
-        |x2 AS (
-        |  SELECT freq, unnest(list_transform(range(1, len(syms)),
-        |    j -> struct_pack(l := syms[j], r := syms[j+1]))) AS p
-        |  FROM segs2),
-        |pairs2 AS (
-        |  SELECT p.l AS l, p.r AS r, CAST(sum(freq) AS BIGINT) AS pair_count
-        |  FROM x2 GROUP BY 1, 2),
-        |win2 AS (SELECT l, r FROM pairs2
-        |         ORDER BY pair_count DESC, l, r LIMIT 1),
-        |segs3 AS (
-        |  SELECT word, freq,
-        |    string_split(list_reduce(syms, (acc, x) ->
-        |      CASE WHEN regexp_extract(acc, '[^|]*$') = w.l AND x = w.r
-        |           THEN regexp_replace(acc, '[^|]*$', w.l || w.r)
-        |           ELSE acc || '|' || x END), '|') AS syms
-        |  FROM segs2, win2 w),
-        |lens AS (
-        |  SELECT word, CAST(len(syms) AS BIGINT) AS n_syms,
-        |    CAST(length(word) AS BIGINT) AS n_chars
-        |  FROM segs3),
-        |docw AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-        |  FROM documents),
-        |pd AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |    CAST(sum(n_syms) AS BIGINT) AS n_bpe_tokens,
-        |    CAST(sum(n_chars) AS BIGINT) AS n_char_tokens
-        |  FROM docw JOIN lens USING (word) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(pd.n_words, 0) AS BIGINT) AS n_words,
-        |  CAST(coalesce(pd.n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens,
-        |  CAST(coalesce(pd.n_char_tokens, 0) AS BIGINT) AS n_char_tokens,
-        |  CAST(CASE WHEN coalesce(pd.n_bpe_tokens, 0) > 0
-        |    THEN (1000000 * pd.n_char_tokens) // pd.n_bpe_tokens
-        |    ELSE 0 END AS BIGINT) AS compression_fp
-        |FROM (SELECT DISTINCT doc_id FROM documents) d
-        |LEFT JOIN pd USING (doc_id)""".stripMargin,
-    // fixed-weight linear quality model: integer fixed-point ratio
-    // features, integer score — bit-exact in both engines
-    "quality_score_linear" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum,
-         |    CAST(length(text) AS BIGINT) AS len_chars
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN n_tokens > 0 THEN (1000000 * n_stopwords) // n_tokens
-         |      ELSE 0 END AS BIGINT) AS stop_fp,
-         |    CAST(CASE WHEN len_chars > 0 THEN (1000000 * n_punct) // len_chars
-         |      ELSE 0 END AS BIGINT) AS punct_fp,
-         |    CAST(CASE WHEN n_tokens > 0
-         |      THEN abs((1000000 * token_len_sum) // n_tokens - 5000000)
-         |      ELSE 5000000 END AS BIGINT) AS len_dev_fp
-         |  FROM f)
-         |SELECT doc_id, stop_fp, punct_fp, len_dev_fp,
-         |  CAST(400000 + 3 * stop_fp - 10 * punct_fp - len_dev_fp // 5 AS BIGINT) AS score_fp,
-         |  (400000 + 3 * stop_fp - 10 * punct_fp - len_dev_fp // 5) > 0 AS keep
-         |FROM r""".stripMargin,
-    // the same linear score, then the per-source integer CEILING rank
-    // cut (rank*100 <= n*30 + 99 ⇔ rank <= ceil(n*0.3): a small domain
-    // keeps at least its best row) replayed with the same tie-break
-    "quality_calibrated" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, source,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum,
-         |    CAST(length(text) AS BIGINT) AS len_chars
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id, source,
-         |    CAST(CASE WHEN n_tokens > 0 THEN (1000000 * n_stopwords) // n_tokens
-         |      ELSE 0 END AS BIGINT) AS stop_fp,
-         |    CAST(CASE WHEN len_chars > 0 THEN (1000000 * n_punct) // len_chars
-         |      ELSE 0 END AS BIGINT) AS punct_fp,
-         |    CAST(CASE WHEN n_tokens > 0
-         |      THEN abs((1000000 * token_len_sum) // n_tokens - 5000000)
-         |      ELSE 5000000 END AS BIGINT) AS len_dev_fp
-         |  FROM f),
-         |s AS (
-         |  SELECT doc_id, source,
-         |    CAST(400000 + 3 * stop_fp - 10 * punct_fp - len_dev_fp // 5 AS BIGINT) AS score_fp
-         |  FROM r),
-         |k AS (
-         |  SELECT doc_id, source, score_fp,
-         |    row_number() OVER (PARTITION BY source ORDER BY score_fp DESC, doc_id ASC) AS rn,
-         |    count(*) OVER (PARTITION BY source) AS n
-         |  FROM s)
-         |SELECT doc_id, source, score_fp FROM k WHERE rn * 100 <= n * 30 + 99""".stripMargin,
-    // sketch-cutoff twin in the sketch's EXACT regime: the cutoff is
-    // the smallest score the rank path would keep — the ascending
-    // order statistic at n - ceil(n*30/100) + 1 — and every row at or
-    // above it (ties included) survives: the score-threshold
-    // semantics the scale path applies map-side
-    "quality_calibrated_sketch" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, source,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum,
-         |    CAST(length(text) AS BIGINT) AS len_chars
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id, source,
-         |    CAST(CASE WHEN n_tokens > 0 THEN (1000000 * n_stopwords) // n_tokens
-         |      ELSE 0 END AS BIGINT) AS stop_fp,
-         |    CAST(CASE WHEN len_chars > 0 THEN (1000000 * n_punct) // len_chars
-         |      ELSE 0 END AS BIGINT) AS punct_fp,
-         |    CAST(CASE WHEN n_tokens > 0
-         |      THEN abs((1000000 * token_len_sum) // n_tokens - 5000000)
-         |      ELSE 5000000 END AS BIGINT) AS len_dev_fp
-         |  FROM f),
-         |s AS (
-         |  SELECT doc_id, source,
-         |    CAST(400000 + 3 * stop_fp - 10 * punct_fp - len_dev_fp // 5 AS BIGINT) AS score_fp
-         |  FROM r),
-         |k AS (
-         |  SELECT doc_id, source, score_fp,
-         |    row_number() OVER (PARTITION BY source ORDER BY score_fp ASC) AS rn,
-         |    count(*) OVER (PARTITION BY source) AS n
-         |  FROM s),
-         |c AS (
-         |  SELECT source,
-         |    max(CASE WHEN rn = n - (n * 30 + 99) // 100 + 1 THEN score_fp END) AS cut
-         |  FROM k GROUP BY 1)
-         |SELECT k.doc_id, k.source, k.score_fp
-         |FROM k JOIN c USING (source) WHERE k.score_fp >= c.cut""".stripMargin,
-    // wordlist filter: n_blocked counts token hits (multiplicity),
-    // n_blocked_distinct counts blocklist terms present (iterate the
-    // SMALL fixed list against the token set — multiset-semantics-proof
-    // in both engines)
-    "blocklist_filter" ->
-      s"""SELECT doc_id,
-         |  CAST(len(list_filter($toksSql, t -> list_contains(['slow', 'dup'], t))) AS BIGINT) AS n_blocked,
-         |  CAST(len(list_filter(['slow', 'dup'], w -> list_contains($toksSql, w))) AS BIGINT) AS n_blocked_distinct,
-         |  len(list_filter($toksSql, t -> list_contains(['slow', 'dup'], t))) <= 2 AS keep
-         |FROM documents""".stripMargin,
-    // CCNet bucketing: the lm_bigram_score chain reduced to an integer
-    // ranking key, exact-quantile cut points, hash-sampled keep policy
-    "corpus_ppl_sample" -> {
-      val probs = (1 until 3).map(i => i.toDouble / 3).mkString(", ")
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |bg AS (SELECT doc_id, toks[u.i] || ' ' || toks[u.i+1] AS bigram,
-         |         toks[u.i] AS prefix
-         |       FROM t, unnest(generate_series(1, len(toks) - 1)) AS u(i)),
-         |c2 AS (SELECT bigram, count(*) AS c2 FROM bg GROUP BY 1),
-         |c1 AS (SELECT prefix, count(*) AS c1 FROM bg GROUP BY 1),
-         |pd AS (SELECT b.doc_id, count(*) AS n_bigrams,
-         |    CAST(SUM((1000000 * c2.c2) // c1.c1) AS BIGINT) AS sum_p_fp
-         |  FROM bg b JOIN c2 USING (bigram) JOIN c1 ON b.prefix = c1.prefix
-         |  GROUP BY 1),
-         |keyed AS (
-         |  SELECT d.doc_id,
-         |    CAST(CASE WHEN coalesce(pd.n_bigrams, 0) > 0
-         |      THEN (1000000 * pd.sum_p_fp) // pd.n_bigrams
-         |      ELSE -1 END AS BIGINT) AS avg_fp
-         |  FROM (SELECT DISTINCT doc_id FROM documents) d
-         |  LEFT JOIN pd USING (doc_id)),
-         |c AS (SELECT quantile_cont(avg_fp, [$probs]) AS cuts FROM keyed),
-         |b AS (
-         |  SELECT doc_id, avg_fp,
-         |    CAST(1 + len(list_filter(c.cuts, x -> x < CAST(avg_fp AS DOUBLE))) AS BIGINT) AS bucket
-         |  FROM keyed, c)
-         |SELECT doc_id, avg_fp, bucket,
-         |  (CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100) <
-         |    (CASE WHEN bucket = 3 THEN 100 WHEN bucket = 2 THEN 50 ELSE 10 END) AS keep
-         |FROM b""".stripMargin
-    },
-    // cluster-balanced coverage sample: nearest-centroid assignment
-    // (same argmin convention as sim_ivf) capped per cell in
-    // deterministic hash order
-    "embed_cluster_sample" -> {
-      val dotEC = dotSql("e.embedding", "c.c_emb")
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS c_emb,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS c_norm
-         |  FROM embeddings ORDER BY vec_id ASC LIMIT 8),
-         |assigned AS (
-         |  SELECT vec_id, cell_id FROM (
-         |    SELECT e.vec_id, c.cell_id,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |        -($dotEC) / (sqrt(${dotSql("e.embedding", "e.embedding")}) * c.c_norm) ASC,
-         |        c.cell_id ASC) AS rn
-         |    FROM embeddings e CROSS JOIN cents c)
-         |  WHERE rn = 1)
-         |SELECT vec_id, cell_id FROM (
-         |  SELECT vec_id, cell_id,
-         |    ROW_NUMBER() OVER (PARTITION BY cell_id ORDER BY
-         |      CAST(concat('0x', substring(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-         |      vec_id ASC) AS rn
-         |  FROM assigned)
-         |WHERE rn <= 20""".stripMargin
-    },
-    // bigram-LM quality score: MLE p(w2|w1) in fixed-point millionths
-    // via integer floor division — the per-doc SUM is integer, so
-    // accumulation order cannot diverge the engines
-    "lm_bigram_score" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |bg AS (SELECT doc_id, toks[u.i] || ' ' || toks[u.i+1] AS bigram,
-         |         toks[u.i] AS prefix
-         |       FROM t, unnest(generate_series(1, len(toks) - 1)) AS u(i)),
-         |c2 AS (SELECT bigram, count(*) AS c2 FROM bg GROUP BY 1),
-         |c1 AS (SELECT prefix, count(*) AS c1 FROM bg GROUP BY 1),
-         |pd AS (SELECT b.doc_id, count(*) AS n_bigrams,
-         |    CAST(SUM((1000000 * c2.c2) // c1.c1) AS BIGINT) AS sum_p_fp
-         |  FROM bg b JOIN c2 USING (bigram) JOIN c1 ON b.prefix = c1.prefix
-         |  GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(pd.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         |  CAST(coalesce(pd.sum_p_fp, 0) AS BIGINT) AS sum_p_fp,
-         |  CASE WHEN coalesce(pd.n_bigrams, 0) > 0
-         |    THEN CAST(pd.sum_p_fp AS DOUBLE) / CAST(pd.n_bigrams AS DOUBLE)
-         |    ELSE 0.0 END AS avg_p_fp
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN pd USING (doc_id)""".stripMargin,
-    // duplicated 8-token-span stats: DISTINCT spans per doc, md5-folded
-    // to a BIGINT before counting (identical fold both engines, so even
-    // a hash collision cannot diverge the comparison)
-    "span_dup_stats" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |sp0 AS (SELECT DISTINCT doc_id, array_to_string(toks[u.i : u.i+7], ' ') AS sp
-         |        FROM t, unnest(generate_series(1, len(toks) - 7)) AS u(i)),
-         |sp AS (SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(sp), 1, 15)) AS BIGINT) AS sp_h
-         |  FROM sp0),
-         |w AS (SELECT doc_id, count(*) OVER (PARTITION BY sp_h) AS nd FROM sp),
-         |pd AS (SELECT doc_id, count(*) AS n_spans,
-         |    CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans
-         |  FROM w GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(coalesce(pd.n_spans, 0) AS BIGINT) AS n_spans,
-         |  CAST(coalesce(pd.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-         |  CASE WHEN coalesce(pd.n_spans, 0) > 0
-         |    THEN CAST(pd.n_dup_spans AS DOUBLE) / CAST(pd.n_spans AS DOUBLE)
-         |    ELSE 0.0 END AS dup_frac
-         |FROM (SELECT DISTINCT doc_id FROM documents) d
-         |LEFT JOIN pd USING (doc_id)""".stripMargin,
-    // feature hashing: same md5-bucket derivation, dense 64-vector
-    // assembled with an ordered list aggregate over a (doc x bucket)
-    // grid left-joined to the counts
-    "text_hash_vector" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($toksSql) AS t FROM documents),
-         |b AS (SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) % 64 AS bucket,
-         |    count(*) AS c
-         |  FROM tok GROUP BY 1, 2),
-         |grid AS (SELECT d.doc_id, t.i
-         |  FROM (SELECT DISTINCT doc_id FROM documents) d, range(0, 64) t(i)),
-         |v AS (SELECT g.doc_id,
-         |    list(CAST(coalesce(b.c, 0) AS BIGINT) ORDER BY g.i) AS vec
-         |  FROM grid g LEFT JOIN b ON g.doc_id = b.doc_id AND g.i = b.bucket
-         |  GROUP BY g.doc_id)
-         |SELECT doc_id,
-         |  array_to_string(list_transform(vec, x -> CAST(x AS VARCHAR)), ',') AS vec_str
-         |FROM v""".stripMargin,
-    "text_knn" -> {
-      val hv = (a: String, b: String) => dotSql(a, b)
-      s"""WITH $hashedVecCtesSql,
-         |q AS (SELECT doc_id AS q_id, vec AS q_vec FROM v WHERE doc_id < 5),
-         |pairs AS (
-         |  SELECT q.q_id, v.doc_id AS vec_id,
-         |    ${hv("v.vec", "q.q_vec")}
-         |      / (sqrt(${hv("v.vec", "v.vec")}) * sqrt(${hv("q.q_vec", "q.q_vec")})) AS cos
-         |  FROM v, q WHERE v.doc_id <> q.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    // temperature (alpha=1/2) mixing: integer-derived per-source
-    // budgets (floor-sqrt weights), then the same greedy hash-order
-    // cumulative fill as corpus_mix_tokens
-    "corpus_mix_temperature" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'tmx')), 1, 15)) AS BIGINT) AS hv
-         |  FROM documents),
-         |t AS (SELECT source, CAST(SUM(n_tokens) AS BIGINT) AS ws FROM d GROUP BY 1),
-         |q AS (SELECT source, CAST(floor(sqrt(CAST(ws AS DOUBLE))) AS BIGINT) AS sq FROM t),
-         |z AS (SELECT CAST(SUM(sq) AS BIGINT) AS z FROM q),
-         |b AS (SELECT source, (2000 * sq) // z AS budget FROM q, z),
-         |c AS (SELECT doc_id, source, n_tokens,
-         |    SUM(n_tokens) OVER (PARTITION BY source ORDER BY hv, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM d)
-         |SELECT c.doc_id, c.source, c.n_tokens
-         |FROM c JOIN b USING (source) WHERE c.cum <= b.budget""".stripMargin,
-    // UniMax water-filling replayed: capped iff prefix(cap) +
-    // cap*(sources after) <= B — the division-free "water level >=
-    // cap" test; uncapped split the rest evenly, remainder one token
-    // apiece in (cap, lang) order
-    "corpus_mix_unimax" ->
-      s"""WITH t AS (
-         |  SELECT lang AS stratum, CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS weight
-         |  FROM documents GROUP BY 1),
-         |b AS (SELECT CAST(SUM(weight) // 5 AS BIGINT) AS total FROM t),
-         |r AS (
-         |  SELECT stratum, weight, (weight * 250000) // 1000000 AS cap,
-         |    ROW_NUMBER() OVER (ORDER BY (weight * 250000) // 1000000, stratum) AS rn,
-         |    SUM((weight * 250000) // 1000000) OVER (ORDER BY (weight * 250000) // 1000000, stratum
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-         |    COUNT(*) OVER () AS k
-         |  FROM t),
-         |f AS (SELECT r.*, b.total, (p + cap * (k - rn) <= b.total) AS capped FROM r, b),
-         |g AS (SELECT f.*,
-         |    MAX(CASE WHEN capped THEN rn ELSE 0 END) OVER () AS j,
-         |    MAX(CASE WHEN capped THEN p ELSE 0 END) OVER () AS pj
-         |  FROM f),
-         |a AS (SELECT stratum, weight, cap,
-         |    CAST(CASE WHEN capped THEN cap ELSE
-         |      LEAST(cap, (total - pj) // (k - j) +
-         |        CASE WHEN rn - j <= (total - pj) % (k - j) THEN 1 ELSE 0 END)
-         |    END AS BIGINT) AS budget
-         |  FROM g)
-         |SELECT stratum, weight, cap, budget,
-         |  CAST((budget * 1000000) // GREATEST(weight, 1) AS BIGINT) AS epochs_millionths
-         |FROM a ORDER BY stratum""".stripMargin,
-    "events_resample" ->
-      """WITH base AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS bucket_sum,
-        |    count(*) AS n_events
-        |  FROM events WHERE user_id < 5 GROUP BY 1, 2),
-        |span AS (SELECT user_id, min(bucket) AS mn, max(bucket) AS mx
-        |         FROM base GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |    unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
-        |  FROM span)
-        |SELECT g.user_id, g.bucket,
-        |  CAST(coalesce(b.n_events, 0) AS BIGINT) AS n_events,
-        |  b.bucket_sum IS NULL AS gap,
-        |  last_value(b.bucket_sum IGNORE NULLS) OVER (
-        |    PARTITION BY g.user_id ORDER BY g.bucket
-        |    ROWS UNBOUNDED PRECEDING) AS filled_sum
-        |FROM grid g LEFT JOIN base b USING (user_id, bucket)""".stripMargin,
-    "scd2_user_state" ->
-      """WITH ordered AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER w AS prev,
-        |    ROW_NUMBER() OVER w AS rn
-        |  FROM events WHERE user_id < 10
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs AS (SELECT user_id, ts, event_id, event_type FROM ordered
-        |  WHERE rn = 1 OR prev IS DISTINCT FROM event_type)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-        |FROM runs""".stripMargin,
-    "events_rolling" ->
-      """SELECT event_id, ts, user_id, event_type, value, props,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS rolling_sum,
-        |  count(*) OVER w AS rolling_n
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "watermark_audit" ->
-      """WITH b AS (
-        |  SELECT CAST(event_id AS BIGINT) AS a, epoch_us(ts) AS t,
-        |    CAST(event_id AS BIGINT) // 4096 AS s
-        |  FROM events WHERE event_id IS NOT NULL AND ts IS NOT NULL),
-        |l AS (
-        |  SELECT t, s,
-        |    max(t) OVER (PARTITION BY s ORDER BY a
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm_in
-        |  FROM b),
-        |sm AS (SELECT s, max(t) AS smax FROM b GROUP BY s),
-        |sc AS (SELECT s, max(smax) OVER (ORDER BY s
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm_carry FROM sm),
-        |w AS (
-        |  SELECT l.t,
-        |    greatest(coalesce(l.pm_in, -4000000000000000000),
-        |             coalesce(sc.pm_carry, -4000000000000000000)) AS pm
-        |  FROM l JOIN sc USING (s)),
-        |g AS (
-        |  SELECT t // 3600000000 AS h,
-        |    CASE WHEN pm > -4000000000000000000 AND t < pm - 1800000000
-        |         THEN 1 ELSE 0 END AS late
-        |  FROM w)
-        |SELECT CAST(h * 3600000000 AS BIGINT) AS window_start_us,
-        |  count(*) AS n_events,
-        |  CAST(SUM(late) AS BIGINT) AS n_late,
-        |  CAST((SUM(late) * 10000) // greatest(count(*), 1) AS BIGINT) AS late_bps
-        |FROM g GROUP BY h""".stripMargin,
-    "events_gaps" ->
-      """WITH l AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    lag(epoch_us(ts)) OVER w AS prev_us,
-        |    lag(event_id) OVER w AS prev_event_id
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id))
-        |SELECT user_id, prev_event_id, event_id, ts_us - prev_us AS gap_us
-        |FROM l WHERE ts_us - prev_us > 3600000000""".stripMargin,
-    // islands replay: rank-difference grouping; within an island the
-    // (ts, event_id) order IS the rn order, so arg_min/arg_max on rn
-    // pick the engine's struct-min start and struct-max end exactly
-    "events_streaks" ->
-      """WITH b AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS rn
-        |  FROM events),
-        |h AS (
-        |  SELECT user_id, event_id, ts_us, rn,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS rh
-        |  FROM b WHERE value >= 50),
-        |i AS (
-        |  SELECT user_id, rn - rh AS grp,
-        |    CAST(count(*) AS BIGINT) AS streak_len,
-        |    MIN(ts_us) AS s_us,
-        |    arg_min(event_id, rn) AS start_event_id,
-        |    arg_max(event_id, rn) AS end_event_id
-        |  FROM h GROUP BY 1, 2)
-        |SELECT user_id, streak_len, start_event_id, end_event_id
-        |FROM i
-        |QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
-        |  ORDER BY streak_len DESC, s_us ASC, start_event_id ASC) = 1
-        |ORDER BY user_id""".stripMargin,
-    // quota admission replay: first-3-per-(user, day) by (ts, id) rank
-    "rate_limit" ->
-      """WITH w AS (
-        |  SELECT user_id, event_id, ts, date_trunc('day', ts) AS window_start,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |                       ORDER BY ts, event_id) AS rn
-        |  FROM events)
-        |SELECT user_id, window_start, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(count(*) FILTER (rn <= 3) AS BIGINT) AS n_admitted,
-        |  CAST(count(*) FILTER (rn > 3) AS BIGINT) AS n_dropped
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    // CUSUM replay: S_i = P_i - min(0, running min of P); both windows
-    // MUST share the (ts, event_id) ordering — an event_id-only min
-    // would silently assume arrival order == time
-    "events_cusum" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_id,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) - 5500 AS d
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, ts, event_id,
-        |    SUM(d) OVER w AS pp
-        |  FROM x WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |s AS (
-        |  SELECT user_id, event_id,
-        |    pp - LEAST(0, MIN(pp) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS cusum
-        |  FROM p)
-        |SELECT user_id, event_id, CAST(cusum AS BIGINT) AS cusum FROM s
-        |WHERE cusum >= 40000 ORDER BY user_id, event_id""".stripMargin,
-    "ngram_counts" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |g AS (SELECT toks[u.i] || ' ' || toks[u.i+1] || ' ' || toks[u.i+2] AS shingle
-         |      FROM t, unnest(generate_series(1, len(toks) - 2)) AS u(i))
-         |SELECT shingle, count(*) AS cnt FROM g
-         |GROUP BY 1 HAVING count(*) >= 3""".stripMargin,
-    "text_shingles" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks
-         |           FROM documents WHERE doc_id < 50)
-         |SELECT doc_id, CAST(u.i - 1 AS INTEGER) AS pos,
-         |  toks[u.i] || ' ' || toks[u.i+1] || ' ' || toks[u.i+2] AS shingle
-         |FROM t, unnest(generate_series(1, len(toks) - 2)) AS u(i)""".stripMargin,
-    "heavy_hitters" ->
-      """SELECT CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, item ASC) AS BIGINT) AS rank,
-        |  item, cnt
-        |FROM (SELECT p_brand AS item, count(*) AS cnt FROM part GROUP BY 1)""".stripMargin,
-    // CMS estimates recomputed from first principles: per-(row j,
-    // bucket) counter sums over the same md5 bucket family, then the
-    // min over rows at each brand's buckets
-    // pre-flight join-size forecast: CMS inner-product upper bound
-    // (min over depth rows) vs the exact per-key-count join size
-    "join_size_sketch" ->
-      (joinSizePairSql("customer_orders", "orders", "o_custkey",
-        "customer", "c_custkey") +
-        "\nUNION ALL\n" +
-        joinSizePairSql("events_self", "events", "user_id",
-          "events", "user_id")),
-    "freq_sketch" ->
-      """WITH h AS (
-        |  SELECT p_brand,
-        |    CAST(concat('0x', substring(md5(p_brand), 1, 15)) AS BIGINT)
-        |      % 2147483648 AS h1,
-        |    CAST(concat('0x', substring(md5(p_brand), 16, 15)) AS BIGINT)
-        |      % 2147483648 AS h2
-        |  FROM part),
-        |cnt AS (
-        |  SELECT j, (h1 + j * h2) % 2147483648 % 32 AS b,
-        |    CAST(count(*) AS BIGINT) AS c
-        |  FROM h, range(0, 4) AS t(j) GROUP BY 1, 2),
-        |d AS (SELECT DISTINCT p_brand, h1, h2 FROM h)
-        |SELECT d.p_brand, min(cnt.c) AS est
-        |FROM d JOIN cnt ON cnt.b = (d.h1 + cnt.j * d.h2) % 2147483648 % 32
-        |GROUP BY 1""".stripMargin,
-    "corpus_curriculum" ->
-      s"""WITH c AS (SELECT quantile_cont(n_chars,
-         |    [${(1 until 10).map(i => i / 10.0).mkString(", ")}]) AS cuts
-         |  FROM documents)
-         |SELECT doc_id, n_chars,
-         |  CAST(1 + len(list_filter(c.cuts, x -> x < CAST(n_chars AS DOUBLE))) AS BIGINT) AS bucket
-         |FROM documents, c""".stripMargin,
-    "corpus_stats_by_source" ->
-      s"""SELECT source, lang,
-         |  count(*) AS n_docs,
-         |  CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS sum_tokens,
-         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-         |  CAST(GROUPING(source, lang) AS BIGINT) AS grp
-         |FROM documents GROUP BY ROLLUP(source, lang)""".stripMargin,
-    // snapshot drift: even-id half vs full corpus, shares in
-    // millionths via floor division, zero-guarded like the engine
-    "corpus_drift" ->
-      s"""WITH sa AS (
-         |  SELECT source, count(*) AS docs_a,
-         |    CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS tokens_a
-         |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-         |sb AS (
-         |  SELECT source, count(*) AS docs_b,
-         |    CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS tokens_b
-         |  FROM documents GROUP BY 1),
-         |j AS (
-         |  SELECT coalesce(sa.source, sb.source) AS source,
-         |    CAST(coalesce(docs_a, 0) AS BIGINT) AS docs_a,
-         |    CAST(coalesce(docs_b, 0) AS BIGINT) AS docs_b,
-         |    CAST(coalesce(tokens_a, 0) AS BIGINT) AS tokens_a,
-         |    CAST(coalesce(tokens_b, 0) AS BIGINT) AS tokens_b
-         |  FROM sa FULL OUTER JOIN sb ON sa.source = sb.source),
-         |t AS (SELECT CAST(SUM(tokens_a) AS BIGINT) AS ta,
-         |             CAST(SUM(tokens_b) AS BIGINT) AS tb FROM j)
-         |SELECT source, docs_a, docs_b, tokens_a, tokens_b,
-         |  CAST(CASE WHEN ta > 0 THEN (1000000 * tokens_a) // ta ELSE 0 END AS BIGINT) AS share_a_fp,
-         |  CAST(CASE WHEN tb > 0 THEN (1000000 * tokens_b) // tb ELSE 0 END AS BIGINT) AS share_b_fp,
-         |  CAST(abs(CASE WHEN ta > 0 THEN (1000000 * tokens_a) // ta ELSE 0 END
-         |         - CASE WHEN tb > 0 THEN (1000000 * tokens_b) // tb ELSE 0 END) AS BIGINT) AS share_delta_fp
-         |FROM j, t""".stripMargin,
-    // linear score + gopher keep recomputed per doc (the two queries'
-    // own oracle bodies), joined on doc_id, binned with the same
-    // shift-positive floor division
-    "score_calibration" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum,
-         |    CAST(length(text) AS BIGINT) AS len_chars
-         |  FROM documents),
-         |sc AS (
-         |  SELECT doc_id,
-         |    400000 + 3 * (CASE WHEN n_tokens > 0 THEN (1000000 * n_stopwords) // n_tokens ELSE 0 END)
-         |      - 10 * (CASE WHEN len_chars > 0 THEN (1000000 * n_punct) // len_chars ELSE 0 END)
-         |      - (CASE WHEN n_tokens > 0
-         |          THEN abs((1000000 * token_len_sum) // n_tokens - 5000000)
-         |          ELSE 5000000 END) // 5 AS score_fp
-         |  FROM f),
-         |gm AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(toks, w -> CAST(length(w) AS BIGINT))) AS BIGINT) AS word_len_sum,
-         |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) AS BIGINT) AS n_symbols,
-         |    CAST(len(lines) AS BIGINT) AS n_lines,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]'))) AS BIGINT) AS n_bullet_lines,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '(\\.\\.\\.|…)$$'))) AS BIGINT) AS n_ellipsis_lines,
-         |    CAST(len(list_filter(${markersSqlList(TextFunctions.gopherRequiredStops)},
-         |      w -> list_contains(toks, w))) AS BIGINT) AS req_stop_hits
-         |  FROM (SELECT doc_id, text, $toksSql AS toks,
-         |          string_split(text, chr(10)) AS lines FROM documents)),
-         |gk AS (
-         |  SELECT doc_id,
-         |    (n_words >= ${TextFunctions.gopherMinWords} AND n_words <= ${TextFunctions.gopherMaxWords})
-         |      AND (word_len_sum >= n_words * ${TextFunctions.gopherMinMeanWordLen}
-         |           AND word_len_sum <= n_words * ${TextFunctions.gopherMaxMeanWordLen})
-         |      AND n_symbols * 10 <= n_words
-         |      AND n_bullet_lines * 10 <= n_lines * 9
-         |      AND n_ellipsis_lines * 10 <= n_lines * 3
-         |      AND n_alpha_words * 10 >= n_words * 8
-         |      AND req_stop_hits >= 1 AS pass
-         |  FROM gm)
-         |SELECT ((sc.score_fp + 2000000000) // 200000) - 10000 AS bin,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(count(*) FILTER (gk.pass) AS BIGINT) AS n_pass,
-         |  CAST((count(*) FILTER (gk.pass) * 10000) // count(*) AS BIGINT) AS pass_bps
-         |FROM sc JOIN gk USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "quality_gopher" ->
-      s"""WITH m AS (
-         |  SELECT doc_id,
-         |    CAST(len(toks) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(toks, w -> CAST(length(w) AS BIGINT))) AS BIGINT) AS word_len_sum,
-         |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) AS BIGINT) AS n_symbols,
-         |    CAST(len(lines) AS BIGINT) AS n_lines,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]'))) AS BIGINT) AS n_bullet_lines,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '(\\.\\.\\.|…)$$'))) AS BIGINT) AS n_ellipsis_lines,
-         |    CAST(len(list_filter(${markersSqlList(TextFunctions.gopherRequiredStops)},
-         |      w -> list_contains(toks, w))) AS BIGINT) AS req_stop_hits
-         |  FROM (SELECT doc_id, text, $toksSql AS toks,
-         |          string_split(text, chr(10)) AS lines FROM documents))
-         |SELECT doc_id, n_words, word_len_sum, n_alpha_words, n_symbols,
-         |  n_lines, n_bullet_lines, n_ellipsis_lines, req_stop_hits,
-         |  n_words >= ${TextFunctions.gopherMinWords} AND n_words <= ${TextFunctions.gopherMaxWords} AS word_count_ok,
-         |  word_len_sum >= n_words * ${TextFunctions.gopherMinMeanWordLen}
-         |    AND word_len_sum <= n_words * ${TextFunctions.gopherMaxMeanWordLen} AS word_len_ok,
-         |  n_symbols * 10 <= n_words AS symbol_ok,
-         |  n_bullet_lines * 10 <= n_lines * 9 AS bullet_ok,
-         |  n_ellipsis_lines * 10 <= n_lines * 3 AS ellipsis_ok,
-         |  n_alpha_words * 10 >= n_words * 8 AS alpha_ok,
-         |  (n_words >= ${TextFunctions.gopherMinWords} AND n_words <= ${TextFunctions.gopherMaxWords})
-         |    AND (word_len_sum >= n_words * ${TextFunctions.gopherMinMeanWordLen}
-         |         AND word_len_sum <= n_words * ${TextFunctions.gopherMaxMeanWordLen})
-         |    AND n_symbols * 10 <= n_words
-         |    AND n_bullet_lines * 10 <= n_lines * 9
-         |    AND n_ellipsis_lines * 10 <= n_lines * 3
-         |    AND n_alpha_words * 10 >= n_words * 8
-         |    AND req_stop_hits >= 1 AS keep,
-         |  req_stop_hits >= 1 AS stopword_ok
-         |FROM m""".stripMargin,
-    "events_window_agg" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |  count(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_hash, count(*) AS n_copies,
-        |  min(doc_id) AS keep_id
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-    "dedup_minhash" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |bsz AS (
-         |  SELECT band_idx, band_hash FROM bands
-         |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |bands2 AS (
-         |  SELECT b.doc_id, b.band_idx, b.band_hash
-         |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands2 a JOIN bands2 b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-         |  WHERE a.doc_id < b.doc_id)
-         |SELECT c.doc_a, c.doc_b,
-         |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_inter,
-         |  CAST(len(sa.shingles) + len(sb.shingles)
-         |    - len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_union,
-         |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |    / CAST(len(sa.shingles) + len(sb.shingles)
-         |        - len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) AS jaccard
-         |FROM cands c
-         |JOIN sigs sa ON c.doc_a = sa.doc_id
-         |JOIN sigs sb ON c.doc_b = sb.doc_id""".stripMargin,
-    // containment re-scoring of the same LSH candidates
-    "dedup_containment" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |bsz AS (
-         |  SELECT band_idx, band_hash FROM bands
-         |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |bands2 AS (
-         |  SELECT b.doc_id, b.band_idx, b.band_hash
-         |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands2 a JOIN bands2 b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-         |  WHERE a.doc_id < b.doc_id),
-         |scored AS (
-         |  SELECT c.doc_a, c.doc_b,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_inter,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |      / CAST(len(sa.shingles) + len(sb.shingles)
-         |          - len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) AS jaccard,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |      / CAST(least(len(sa.shingles), len(sb.shingles)) AS DOUBLE) AS containment
-         |  FROM cands c
-         |  JOIN sigs sa ON c.doc_a = sa.doc_id
-         |  JOIN sigs sb ON c.doc_b = sb.doc_id)
-         |SELECT * FROM scored WHERE containment >= 0.5""".stripMargin,
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashCcCtesSql
-         |SELECT doc_id, cluster_id, cluster_id = doc_id AS keep
-         |FROM cc""".stripMargin,
-    // same clusters, but the kept member is the cluster's QUALITY
-    // argmax (linear score, ties to min doc_id) — the canonical chain
-    // plus the quality_score_linear features joined on narrow ids
-    "dedup_canonical_quality" ->
-      s"""WITH RECURSIVE $minhashCcCtesSql,
-         |f AS (
-         |  SELECT doc_id,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum,
-         |    CAST(length(text) AS BIGINT) AS len_chars
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id,
-         |    CAST(CASE WHEN n_tokens > 0 THEN (1000000 * n_stopwords) // n_tokens
-         |      ELSE 0 END AS BIGINT) AS stop_fp,
-         |    CAST(CASE WHEN len_chars > 0 THEN (1000000 * n_punct) // len_chars
-         |      ELSE 0 END AS BIGINT) AS punct_fp,
-         |    CAST(CASE WHEN n_tokens > 0
-         |      THEN abs((1000000 * token_len_sum) // n_tokens - 5000000)
-         |      ELSE 5000000 END AS BIGINT) AS len_dev_fp
-         |  FROM f),
-         |q AS (SELECT doc_id,
-         |    CAST(400000 + 3 * stop_fp - 10 * punct_fp - len_dev_fp // 5 AS BIGINT) AS score_fp
-         |  FROM r),
-         |m AS (SELECT cc.doc_id, cc.cluster_id, q.score_fp
-         |  FROM cc JOIN q USING (doc_id)),
-         |best AS (SELECT cluster_id, doc_id AS canonical_id FROM (
-         |  SELECT cluster_id, doc_id,
-         |    ROW_NUMBER() OVER (PARTITION BY cluster_id
-         |      ORDER BY score_fp DESC, doc_id ASC) AS rn
-         |  FROM m) WHERE rn = 1)
-         |SELECT m.doc_id, m.cluster_id, m.score_fp, b.canonical_id,
-         |  m.doc_id = b.canonical_id AS keep
-         |FROM m JOIN best b USING (cluster_id)""".stripMargin,
-    "split_leakage_safe" ->
-      s"""WITH RECURSIVE docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |bsz AS (
-         |  SELECT band_idx, band_hash FROM bands
-         |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |bands2 AS (
-         |  SELECT b.doc_id, b.band_idx, b.band_hash
-         |  FROM bands b JOIN bsz USING (band_idx, band_hash)),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM bands2 a JOIN bands2 b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-         |  WHERE a.doc_id < b.doc_id),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM cands
-         |      UNION SELECT doc_b, doc_a FROM cands),
-         |reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-         |cc AS (SELECT src AS doc_id, min(dst) AS cluster_id
-         |       FROM reach GROUP BY src)
-         |SELECT d.doc_id,
-         |  coalesce(cc.cluster_id, d.doc_id) AS cluster_id,
-         |  CASE WHEN CAST(concat('0x', substring(md5(concat(
-         |         CAST(coalesce(cc.cluster_id, d.doc_id) AS VARCHAR), '')), 1, 15))
-         |       AS BIGINT) % 100 < 90
-         |    THEN 'train' ELSE 'heldout' END AS split
-         |FROM documents d LEFT JOIN cc USING (doc_id)""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, $shinglesSql AS sh FROM documents WHERE doc_id < 40),
-         |d AS (SELECT * FROM docs WHERE len(sh) > 0)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |    / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS jaccard
-         |FROM d a, d b WHERE a.doc_id < b.doc_id""".stripMargin,
-    "text_stats" ->
-      s"""SELECT doc_id, len_chars, n_tokens, n_stopwords, n_punct, token_len_sum,
-         |  CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
-         |  CAST(token_len_sum AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_token_len
-         |FROM (
-         |  SELECT doc_id,
-         |    CAST(length(text) AS BIGINT) AS len_chars,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_filter($toksSql, t -> list_contains($stopwordsSql, t))) AS BIGINT) AS n_stopwords,
-         |    CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |    CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS token_len_sum
-         |  FROM documents)""".stripMargin,
-    "text_langid" -> {
-      val scoreCols = TextFunctions.langMarkers.map { case (l, m) =>
-        s"CAST(len(list_filter($toksSql, t -> list_contains(${markersSqlList(m)}, t))) AS BIGINT) AS s_$l"
-      }.mkString(",\n    ")
-      s"""WITH s AS (
-         |  SELECT doc_id, lang,
-         |    $scoreCols
-         |  FROM documents)
-         |SELECT doc_id, lang, s_en, s_de, s_fr, s_es,
-         |  CASE WHEN s_en + s_de + s_fr + s_es = 0 THEN 'und'
-         |       WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
-         |       WHEN s_de >= greatest(s_en, s_fr, s_es) THEN 'de'
-         |       WHEN s_fr >= greatest(s_en, s_de, s_es) THEN 'fr'
-         |       ELSE 'es' END AS lang_pred
-         |FROM s""".stripMargin
-    },
-    "length_buckets" ->
-      s"""WITH d AS (
-         |  SELECT CAST(len($toksSql) AS BIGINT) AS n FROM documents),
-         |b AS (
-         |  SELECT CASE WHEN n <= 1 THEN n
-         |              ELSE CAST(1 AS BIGINT) << length(bin(n - 1)) END AS bucket_top, n
-         |  FROM d)
-         |SELECT bucket_top, count(*) AS n_docs,
-         |  CAST(SUM(n) AS BIGINT) AS total_tokens,
-         |  CAST(bucket_top * count(*) - SUM(n) AS BIGINT) AS padding_tokens,
-         |  CAST((bucket_top * count(*) - SUM(n)) * 10000 // greatest(bucket_top * count(*), 1) AS BIGINT) AS waste_bps
-         |FROM b GROUP BY bucket_top""".stripMargin,
-    "token_count" ->
-      s"""SELECT doc_id,
-         |  CAST(len($toksSql) AS BIGINT) AS ws_tokens,
-         |  CAST(len(regexp_extract_all(text, '${TextFunctions.bpeTokenPattern}')) AS BIGINT) AS bpe_tokens
-         |FROM documents""".stripMargin,
-    "doc_rolling_hash" ->
-      s"""SELECT doc_id,
-         |  list_reduce(
-         |    list_transform($toksSql,
-         |      t -> CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) % 2147483648),
-         |    (acc, x) -> (acc * 31 + x) % 2147483648) AS rolling_hash
-         |FROM documents""".stripMargin,
-    "tfidf_top_terms" ->
-      s"""WITH terms AS (
-         |  SELECT doc_id, unnest($toksSql) AS term FROM documents),
-         |t AS (SELECT doc_id, term, count(*) AS tf FROM terms
-         |      WHERE length(term) > 0 GROUP BY 1, 2),
-         |d AS (SELECT term, count(*) AS df FROM t GROUP BY 1),
-         |n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-         |s AS (SELECT t.doc_id, t.term, t.tf, d.df,
-         |    CAST(t.tf * (n.n + 1) AS DOUBLE) / CAST(d.df + 1 AS DOUBLE) AS tfidf
-         |  FROM t JOIN d USING(term), n)
-         |SELECT doc_id, term, tf, df, tfidf, rank FROM (
-         |  SELECT *, ROW_NUMBER() OVER (
-         |    PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank
-         |  FROM s)
-         |WHERE rank <= 5""".stripMargin,
-    "text_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id, toks,
-         |    unnest(range(0, CAST(ceil(len(toks) / 32.0) AS INT))) AS i
-         |  FROM t)
-         |SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-         |  array_to_string(list_slice(toks, i*32 + 1, least((i+1)*32, len(toks))), ' ') AS chunk_text,
-         |  CAST(len(list_slice(toks, i*32 + 1, least((i+1)*32, len(toks)))) AS BIGINT) AS n_chunk_tokens
-         |FROM c""".stripMargin,
-    // overlapping windows every 24 tokens; the last window is the
-    // first one reaching the end (no redundant sub-window tails)
-    "text_chunks_overlap" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id, toks,
-         |    unnest(range(0, CASE WHEN len(toks) <= 32 THEN 1
-         |      ELSE CAST(ceil((len(toks) - 32) / 24.0) AS INT) + 1 END)) AS i
-         |  FROM t)
-         |SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-         |  CAST(i * 24 AS INT) AS start_tok,
-         |  array_to_string(list_slice(toks, i*24 + 1, least(i*24 + 32, len(toks))), ' ') AS chunk_text,
-         |  CAST(len(list_slice(toks, i*24 + 1, least(i*24 + 32, len(toks)))) AS BIGINT) AS n_chunk_tokens
-         |FROM c""".stripMargin,
-    "text_scrub" ->
-      """SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '[0-9]{4,}', '[NUM]', 'g') AS scrubbed
-        |FROM documents""".stripMargin,
-    "doc_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
-        |FROM documents""".stripMargin,
-    "range_join" ->
-      """SELECT e.event_id, n.n_nationkey, e.value
-        |FROM events e JOIN nation n
-        |  ON e.value >= n.n_nationkey * 2.0
-        | AND e.value <= n.n_nationkey * 2.0 + 3.0""".stripMargin,
-    // The bloom pre-filter is false-positive-only; the exact join after
-    // it makes the result identical to the plain join the oracle runs.
-    "bloom_join" ->
-      """SELECT p.p_brand, COUNT(*) AS n_items,
-        |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE p.p_size < 10
-        |GROUP BY p.p_brand""".stripMargin,
-    // KMV sketch: k smallest distinct 60-bit md5 hashes per group;
-    // estimate = (k-1) * 2^60 / h_k (exact count when < k distinct).
-    // Same double arithmetic both engines; minima serialized as a
-    // joined string so the pandas comparator can hash them.
-    // brute-force exact shingle-Jaccard join replay — the engine's
-    // prefix filter must lose NOTHING vs this; empty-shingle docs
-    // (< 3 tokens) are excluded on both sides (a 0/0 Jaccard is not
-    // a 90% duplicate)
-    "setsim_join" ->
-      s"""WITH d0 AS (
-         |  SELECT doc_id, $shinglesSql AS toks FROM documents),
-         |d AS (SELECT * FROM d0 WHERE len(toks) > 0),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    len(list_intersect(a.toks, b.toks)) AS i,
-         |    len(a.toks) AS na, len(b.toks) AS nb
-         |  FROM d a JOIN d b ON a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, CAST(i AS BIGINT) AS n_inter,
-         |  CAST(na + nb - i AS BIGINT) AS n_union
-         |FROM p WHERE 100 * i >= 90 * (na + nb - i)""".stripMargin,
-    "distinct_sketch" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |r AS (
-        |  SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-        |  FROM h),
-        |x AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
-        |      FROM events WHERE user_id IS NOT NULL GROUP BY event_type)
-        |SELECT r.event_type,
-        |  CAST(CASE WHEN max(r.rn) < 64 THEN max(r.rn)
-        |       ELSE FLOOR(63 * 1152921504606846976.0
-        |                  / max(CASE WHEN r.rn = 64 THEN r.hv END)) END AS BIGINT)
-        |    AS distinct_est,
-        |  string_agg(r.hv, ',' ORDER BY r.hv) AS kmin,
-        |  any_value(x.n_exact) AS n_exact
-        |FROM r JOIN x ON r.event_type = x.event_type
-        |WHERE r.rn <= 64
-        |GROUP BY r.event_type""".stripMargin,
-    // KMV mergeability makes the incremental sketch bit-identical to
-    // the whole-data sketch — same replay as distinct_sketch
-    "distinct_sketch_incremental" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |r AS (
-        |  SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-        |  FROM h)
-        |SELECT r.event_type,
-        |  CAST(CASE WHEN max(r.rn) < 64 THEN max(r.rn)
-        |       ELSE FLOOR(63 * 1152921504606846976.0
-        |                  / max(CASE WHEN r.rn = 64 THEN r.hv END)) END AS BIGINT)
-        |    AS distinct_est,
-        |  string_agg(r.hv, ',' ORDER BY r.hv) AS kmin
-        |FROM r
-        |WHERE r.rn <= 64
-        |GROUP BY r.event_type""".stripMargin,
-    // HLL p=8: bucket = top 8 of the 60-bit hash (floor-div by 2^52),
-    // rho = 53 - bit_length(tail) via the exact bin() string (never
-    // floor(log2()) — fp rounding can cross the integer boundary),
-    // raw estimate in HUGEINT with alpha as 7213m/(10000m+10790);
-    // nested floor-divisions equal the engine's single BigInt division.
-    "distinct_hll" ->
-      """WITH h AS (
-        |  SELECT event_type,
-        |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |b AS (
-        |  SELECT event_type, CAST(hv // 4503599627370496 AS INT) AS j,
-        |         hv % 4503599627370496 AS w
-        |  FROM h),
-        |r AS (
-        |  SELECT event_type, j,
-        |    MAX(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS reg
-        |  FROM b GROUP BY event_type, j),
-        |et AS (SELECT DISTINCT event_type FROM h),
-        |dense AS (
-        |  SELECT et.event_type, g.j, COALESCE(r.reg, 0) AS reg
-        |  FROM et CROSS JOIN (SELECT CAST(k AS INT) AS j FROM range(256) t(k)) g
-        |  LEFT JOIN r ON r.event_type = et.event_type AND r.j = g.j),
-        |agg AS (
-        |  SELECT event_type,
-        |    string_agg(CAST(reg AS VARCHAR), ',' ORDER BY j) AS regs,
-        |    CAST(SUM(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |    CAST(SUM(CAST(POW(2, 53 - reg) AS BIGINT)) AS BIGINT) AS pow_sum
-        |  FROM dense GROUP BY event_type)
-        |SELECT event_type,
-        |  CAST(CAST(7213 AS HUGEINT) * 256 * 256 * 256 * 9007199254740992
-        |       // (CAST(10000 AS HUGEINT) * 256 + 10790)
-        |       // CAST(pow_sum AS HUGEINT) AS BIGINT) AS est_hll,
-        |  n_zero, pow_sum, regs
-        |FROM agg""".stripMargin,
-    // HLL register max is trivially mergeable — the engine's two-half
-    // pointwise-max union must equal the whole-data registers
-    // byte-for-byte, so the oracle IS the whole-data replay.
-    "distinct_hll_union" -> hllUnionOracleSql,
-    // the incrementally MAINTAINED sketch answers with the one-shot
-    // statement: register max is lossless, storage changes the plan
-    "mv_distinct_hll" -> hllUnionOracleSql,
-    // Span dedup: first (doc_id, idx) occurrence of each 20-token chunk
-    // hash wins; docs rebuild from surviving chunks (empty string when
-    // every chunk was seen earlier).
-    "span_dedup" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |chunks AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(0, CAST(ceil(len(t) / 20.0) AS INT))) AS idx
-        |  FROM toks),
-        |hashed AS (
-        |  SELECT doc_id, idx,
-        |    md5(array_to_string(t[idx*20+1 : idx*20+20], ' ')) AS h
-        |  FROM chunks),
-        |win AS (
-        |  SELECT doc_id, idx,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, idx) AS rn
-        |  FROM hashed),
-        |kept AS (SELECT doc_id, idx FROM win WHERE rn = 1)
-        |SELECT tk.doc_id,
-        |  coalesce(array_to_string(
-        |    flatten(list(tk.t[k.idx*20+1 : k.idx*20+20] ORDER BY k.idx)
-        |            FILTER (k.idx IS NOT NULL)), ' '), '') AS text_dedup,
-        |  CAST(count(k.idx) AS INT) AS n_chunks_kept
-        |FROM toks tk LEFT JOIN kept k ON tk.doc_id = k.doc_id
-        |GROUP BY tk.doc_id""".stripMargin,
-    // export → read-back inverts, so the oracle is the identity on
-    // the exported columns (manifest fingerprints are spec-tier)
-    "export_shards" ->
-      """SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
-        |FROM documents""".stripMargin,
-    // JSONL export → schema-pinned read-back inverts identically
-    "export_shards_jsonl" ->
-      """SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-        |  CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens
-        |FROM documents""".stripMargin,
-    // class sizes replayed from the same QI grouping; exposure share
-    // seeded Laplace release: the noise LUT literals are generated by
-    // the SAME Scala function the engine uses, so they cannot drift;
-    // bucket = md5-derived uniform over (group, seed)
-    "dp_counts" -> {
-      val lut = graft.validate.Privacy.laplaceLutMicro(500000L, 512)
-        .mkString("[", ", ", "]")
-      s"""WITH g AS (
-         |  SELECT lang, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(CAST(concat('0x', substring(md5(concat(COALESCE(lang, ''), 'dp')), 1, 15)) AS BIGINT) % 512 AS INTEGER) AS bucket
-         |  FROM documents GROUP BY 1)
-         |SELECT lang,
-         |  CAST(n * 1000000 + ($lut)[bucket + 1] AS BIGINT) AS noisy_count_micro,
-         |  CAST(500000 AS BIGINT) AS epsilon_micro
-         |FROM g""".stripMargin
-    },
-    // bounded-sum DP release: clamp bounds the sensitivity at the cap;
-    // the noise LUT is the dp_counts table scaled by cap/1
-    "dp_sum" -> {
-      val lut = graft.validate.Privacy
-        .laplaceLutMicro(500000L, 512, sensMicro = 80000000L)
-        .mkString("[", ", ", "]")
-      s"""WITH g AS (
-         |  SELECT event_type,
-         |    CAST(SUM(GREATEST(0, LEAST(80000000,
-         |      CAST(round(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT)))) AS BIGINT) AS s,
-         |    CAST(CAST(concat('0x', substring(md5(concat(COALESCE(event_type, ''), 'dp-sum')), 1, 15)) AS BIGINT) % 512 AS INTEGER) AS bucket
-         |  FROM events GROUP BY 1)
-         |SELECT event_type,
-         |  CAST(s + ($lut)[bucket + 1] AS BIGINT) AS noisy_sum_micro,
-         |  CAST(500000 AS BIGINT) AS epsilon_micro,
-         |  CAST(80000000 AS BIGINT) AS cap_micro
-         |FROM g""".stripMargin
-    },
-    // is one integral division of non-negative longs (// == div)
-    "k_anonymity" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(floor(value / 10) AS BIGINT) AS value_decile
-        |  FROM events),
-        |c AS (
-        |  SELECT event_type, day, value_decile, count(*) AS class_size
-        |  FROM e GROUP BY 1, 2, 3)
-        |SELECT CAST(SUM(class_size) AS BIGINT) AS n_rows,
-        |  count(*) AS n_classes,
-        |  CAST(SUM(CASE WHEN class_size < 5 THEN 1 ELSE 0 END) AS BIGINT) AS violating_classes,
-        |  CAST(SUM(CASE WHEN class_size < 5 THEN class_size ELSE 0 END) AS BIGINT) AS exposed_rows,
-        |  CAST((SUM(CASE WHEN class_size < 5 THEN class_size ELSE 0 END) * 10000)
-        |       // SUM(class_size) AS BIGINT) AS exposed_bps,
-        |  CAST(MIN(class_size) AS BIGINT) AS min_class_size,
-        |  SUM(CASE WHEN class_size < 5 THEN 1 ELSE 0 END) = 0 AS k_anonymous
-        |FROM c""".stripMargin,
-    // the deterministic fake model is a pure function of the text, so
-    // the oracle replays it row-wise — what's actually being verified
-    // is the batching plumbing (grouping, zip alignment, micro units)
-    "model_score" ->
-      """SELECT doc_id,
-        |  CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT) % 1000000 AS score_micros
-        |FROM documents""".stripMargin,
-    // the bucketed-catalog twin is value-identical by construction —
-    // same oracle (layout changes the plan, never the answer)
-    "substr_dedup_incremental_bucketed" -> substrIncrOracleSql,
-    // incremental variant: catalog hit cuts unconditionally, plus the
-    // within-batch first-occurrence rule
-    "substr_dedup_incremental" -> substrIncrOracleSql,
-    // ExactSubstr-style sliding-window removal replayed exactly: same
-    // 60-bit window hash, same scalar occurrence key doc_id*2^20+pos,
-    // same coverage rule (token dies iff a redundant window covers it)
-    "substr_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts FROM documents),
-        |occ AS (
-        |  SELECT doc_id, i - 1 AS pos,
-        |    CAST(concat('0x', substring(md5(array_to_string(list_slice(ts, i, i + 7), ' ')), 1, 15)) AS BIGINT) AS whash,
-        |    doc_id * 1048576 + (i - 1) AS occ_key
-        |  FROM d, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |  WHERE len(ts) >= 8),
-        |el AS (SELECT whash, min(occ_key) AS min_key, count(*) AS n_occ FROM occ GROUP BY whash),
-        |cut AS (SELECT doc_id, list_sort(list(pos)) AS cuts
-        |        FROM occ JOIN el USING (whash)
-        |        WHERE n_occ >= 2 AND occ_key <> min_key
-        |        GROUP BY doc_id),
-        |r AS (SELECT d.doc_id, ts,
-        |        CASE WHEN cuts IS NULL THEN CAST([] AS BIGINT[]) ELSE cuts END AS cuts
-        |      FROM d LEFT JOIN cut USING (doc_id)),
-        |k AS (SELECT doc_id, ts,
-        |        list_filter(range(0, len(ts)), i ->
-        |          len(list_filter(cuts, s -> i >= s AND i < s + 8)) = 0) AS keep
-        |      FROM r)
-        |SELECT doc_id,
-        |  COALESCE(array_to_string(list_transform(keep, i -> ts[CAST(i + 1 AS INT)]), ' '), '') AS text_dedup,
-        |  CAST(len(ts) AS BIGINT) AS n_tokens,
-        |  CAST(len(ts) - len(keep) AS BIGINT) AS n_removed
-        |FROM k""".stripMargin,
-    "substr_dedup_spans" ->
-      """WITH d AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS ts FROM documents),
-        |occ AS (
-        |  SELECT doc_id, i - 1 AS pos,
-        |    CAST(concat('0x', substring(md5(array_to_string(list_slice(ts, i, i + 7), ' ')), 1, 15)) AS BIGINT) AS whash,
-        |    doc_id * 1048576 + (i - 1) AS occ_key
-        |  FROM d, unnest(generate_series(1, len(ts) - 7)) AS u(i)
-        |  WHERE len(ts) >= 8),
-        |el AS (SELECT whash, min(occ_key) AS min_key, count(*) AS n_occ FROM occ GROUP BY whash),
-        |dup AS (SELECT doc_id, pos FROM occ JOIN el USING (whash)
-        |        WHERE n_occ >= 2 AND occ_key <> min_key),
-        |isl AS (SELECT doc_id, pos,
-        |          pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |        FROM dup),
-        |sp AS (SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
-        |       FROM isl GROUP BY doc_id, grp
-        |       HAVING max(pos) + 7 - min(pos) + 1 >= 20),
-        |spl AS (SELECT doc_id, list_sort(list([s, e])) AS spans, count(*) AS n_sp
-        |        FROM sp GROUP BY doc_id),
-        |r AS (SELECT d.doc_id, ts,
-        |        CASE WHEN spans IS NULL THEN CAST([] AS BIGINT[][]) ELSE spans END AS spans,
-        |        COALESCE(n_sp, 0) AS n_sp
-        |      FROM d LEFT JOIN spl USING (doc_id)),
-        |k AS (SELECT doc_id, ts, n_sp,
-        |        list_filter(range(0, len(ts)), i ->
-        |          len(list_filter(spans, sp2 -> i >= sp2[1] AND i <= sp2[2])) = 0) AS keep
-        |      FROM r)
-        |SELECT doc_id,
-        |  COALESCE(array_to_string(list_transform(keep, i -> ts[CAST(i + 1 AS INT)]), ' '), '') AS text_dedup,
-        |  CAST(len(ts) AS BIGINT) AS n_tokens,
-        |  CAST(len(ts) - len(keep) AS BIGINT) AS n_removed,
-        |  CAST(n_sp AS BIGINT) AS n_spans
-        |FROM k""".stripMargin,
-    "corpus_shuffle" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'r4')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents)
-        |SELECT doc_id, CAST(hv % 8 AS INT) AS shard,
-        |  row_number() OVER (PARTITION BY hv % 8 ORDER BY hv, doc_id) AS pos
-        |FROM h""".stripMargin,
-    // Sign-bit codes replayed with a seeded list_reduce fold (prepended
-    // BIGINT 0 matches Spark aggregate's explicit zero), Hamming via
-    // bit_count(xor) on each 32-bit half.
-    "sim_hamming" ->
-      """WITH codes AS (
-        |  SELECT vec_id,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      list_transform(embedding[1:32], v -> CASE WHEN v > 0 THEN 1 ELSE 0 END),
-        |      (acc, b) -> acc * 2 + b) AS code0,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      list_transform(embedding[33:64], v -> CASE WHEN v > 0 THEN 1 ELSE 0 END),
-        |      (acc, b) -> acc * 2 + b) AS code1
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, code0 AS q0, code1 AS q1
-        |      FROM codes WHERE vec_id < 10),
-        |d AS (SELECT q.q_id, c.vec_id,
-        |    CAST(bit_count(xor(c.code0, q.q0))
-        |       + bit_count(xor(c.code1, q.q1)) AS INT) AS hamming
-        |  FROM codes c, q WHERE c.vec_id <> q.q_id),
-        |r AS (SELECT q_id, vec_id, hamming,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY hamming, vec_id) AS rnk
-        |  FROM d)
-        |SELECT q_id, vec_id, hamming, rnk FROM r WHERE rnk <= 5""".stripMargin,
-    // Weighted systematic sampling replayed exactly: same salted hash
-    // order, same per-shard integer cumsum, same floor-division test.
-    "corpus_sample_tokens" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'tb')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |    SUM(n_tokens) OVER (PARTITION BY hv % 8 ORDER BY hv, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM d)
-        |SELECT c.doc_id, c.source, t.text, c.n_tokens
-        |FROM c JOIN documents t ON c.doc_id = t.doc_id
-        |WHERE (cum // 2000) > ((cum - n_tokens) // 2000)""".stripMargin,
-    // fixed-size per-stratum sample: same salted-hash rank, text joined
-    // back by key exactly as the semi-join does
-    "corpus_sample_per_source" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'ps')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY hv, doc_id) AS rn
-        |  FROM d)
-        |SELECT r.doc_id, r.source, t.text
-        |FROM r JOIN documents t ON r.doc_id = t.doc_id
-        |WHERE r.rn <= 3""".stripMargin,
-    // KMV set algebra replayed in SQL: k-min lists per audience, union
-    // sketch via list ops, Beyer-et-al. Jaccard from the union sketch.
-    "audience_overlap" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-        |  FROM events WHERE user_id IS NOT NULL AND event_type IN ('click', 'view')),
-        |r AS (SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn FROM h),
-        |s AS (SELECT event_type, list(hv ORDER BY hv) AS kmin
-        |      FROM r WHERE rn <= 64 GROUP BY event_type),
-        |c AS (SELECT
-        |    (SELECT kmin FROM s WHERE event_type = 'click') AS ka,
-        |    (SELECT kmin FROM s WHERE event_type = 'view') AS kb),
-        |e AS (SELECT ka, kb,
-        |    list_slice(list_sort(list_distinct(ka || kb)), 1, 64) AS uk FROM c),
-        |f AS (SELECT
-        |    CASE WHEN len(uk) < 64 THEN CAST(len(uk) AS BIGINT)
-        |         ELSE CAST(FLOOR(63 * 1152921504606846976.0 / uk[64]) AS BIGINT) END AS union_est,
-        |    CASE WHEN len(uk) = 0 THEN 0.0
-        |         ELSE CAST(len(list_filter(uk, v -> list_contains(ka, v)
-        |                                        AND list_contains(kb, v))) AS DOUBLE)
-        |              / CAST(len(uk) AS DOUBLE) END AS j
-        |  FROM e)
-        |SELECT CAST(round(j * 1e6) AS BIGINT) AS jaccard_micros,
-        |  CAST(FLOOR(j * CAST(union_est AS DOUBLE)) AS BIGINT) AS intersection_est,
-        |  union_est
-        |FROM f""".stripMargin,
-    "dedup_incremental" ->
-      """WITH cat AS (
-        |  SELECT DISTINCT md5(text) AS fingerprint FROM documents WHERE doc_id < 250),
-        |fp AS (
-        |  SELECT md5(text) AS fingerprint, min(doc_id) AS doc_id
-        |  FROM documents WHERE doc_id >= 250 GROUP BY 1)
-        |SELECT fp.fingerprint, fp.doc_id
-        |FROM fp ANTI JOIN cat ON fp.fingerprint = cat.fingerprint""".stripMargin,
-    // incremental MinHash near-dup: catalog = bands of docs < 250;
-    // batch docs sharing ANY band with the catalog are dropped, the
-    // rest run the capped within-batch LSH → jaccard ≥ 0.8 → CC keep-
-    // min pipeline; output = the fresh docs' band rows (catalog delta)
-    // bipartite near-dup audit: candidates only ACROSS the id split,
-    // per-side bucket caps, exact-Jaccard scores
-    "dedup_cross" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands_all AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |ba AS (SELECT * FROM bands_all WHERE doc_id < 250),
-         |bb AS (SELECT * FROM bands_all WHERE doc_id >= 250),
-         |sza AS (SELECT band_idx, band_hash FROM ba
-         |        GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |szb AS (SELECT band_idx, band_hash FROM bb
-         |        GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM (SELECT ba.* FROM ba JOIN sza USING (band_idx, band_hash)) a
-         |  JOIN (SELECT bb.* FROM bb JOIN szb USING (band_idx, band_hash)) b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash)
-         |SELECT c.doc_a, c.doc_b,
-         |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_inter,
-         |  CAST(len(sa.shingles) + len(sb.shingles)
-         |       - len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_union,
-         |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |    / CAST(len(sa.shingles) + len(sb.shingles)
-         |           - len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) AS jaccard
-         |FROM cands c
-         |JOIN sigs sa ON c.doc_a = sa.doc_id
-         |JOIN sigs sb ON c.doc_b = sb.doc_id""".stripMargin,
-    // split leakage: the dedup_cross pair construction with the salted
-    // split bucket as the boundary (train vs val/test), jaccard >= 0.8,
-    // and the eval side's split label on each flagged row
-    "split_leakage" ->
-      s"""WITH sp AS (
-         |  SELECT doc_id, text,
-         |    CASE WHEN b < 10 THEN 'val' WHEN b < 20 THEN 'test'
-         |         ELSE 'train' END AS split
-         |  FROM (SELECT doc_id, text,
-         |          CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'split')), 1, 15)) AS BIGINT) % 100 AS b
-         |        FROM documents)),
-         |docs AS (
-         |  SELECT doc_id, split, $shinglesSql AS shingles FROM sp),
-         |sigs AS (
-         |  SELECT doc_id, split, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands_all AS (
-         |  SELECT doc_id, split, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |ba AS (SELECT * FROM bands_all WHERE split = 'train'),
-         |bb AS (SELECT * FROM bands_all WHERE split <> 'train'),
-         |sza AS (SELECT band_idx, band_hash FROM ba
-         |        GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |szb AS (SELECT band_idx, band_hash FROM bb
-         |        GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM (SELECT ba.* FROM ba JOIN sza USING (band_idx, band_hash)) a
-         |  JOIN (SELECT bb.* FROM bb JOIN szb USING (band_idx, band_hash)) b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash),
-         |scored AS (
-         |  SELECT c.doc_a, c.doc_b, sb.split,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_inter,
-         |    CAST(len(sa.shingles) + len(sb.shingles)
-         |         - len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) AS n_union,
-         |    CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-         |      / CAST(len(sa.shingles) + len(sb.shingles)
-         |             - len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) AS jaccard
-         |  FROM cands c
-         |  JOIN sigs sa ON c.doc_a = sa.doc_id
-         |  JOIN sigs sb ON c.doc_b = sb.doc_id)
-         |SELECT doc_b AS doc_id, split, doc_a AS train_partner,
-         |  n_inter, n_union, jaccard
-         |FROM scored WHERE jaccard >= 0.8""".stripMargin,
-    // the TxnLog table was built from id-sliced commits of documents;
-    // changesSince(0) must be exactly the two appended slices
-    "txnlog_changes" ->
-      "SELECT doc_id, source FROM documents WHERE doc_id >= 100",
-    // content-defined chunking: the same LBFS-style boundary rule
-    // replayed row-wise — window string_agg rebuilds each w-token
-    // window, the cumulative boundary count assigns chunk ids
-    "cdc_chunks" ->
-      s"""WITH d AS (SELECT doc_id, $toksSql AS ts FROM documents),
-         |tok AS (SELECT doc_id, i AS pos, ts[i] AS tok, len(ts) AS n
-         |        FROM d, unnest(generate_series(1, len(ts))) AS u(i)),
-         |win AS (SELECT doc_id, pos, tok, n,
-         |    string_agg(tok, ' ') OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wnd,
-         |    count(*) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wlen
-         |  FROM tok),
-         |b AS (SELECT doc_id, pos, tok,
-         |    (pos = n OR (wlen = 4 AND
-         |      CAST(concat('0x', substring(md5(wnd), 1, 15)) AS BIGINT) % 8 = 0)) AS is_b
-         |  FROM win),
-         |cid AS (SELECT doc_id, pos, tok,
-         |    COALESCE(SUM(CASE WHEN is_b THEN 1 ELSE 0 END) OVER (
-         |      PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_idx
-         |  FROM b)
-         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-         |  CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(concat('0x', substring(md5(string_agg(tok, ' ' ORDER BY pos)), 1, 15)) AS BIGINT) AS chunk_hash
-         |FROM cid GROUP BY doc_id, chunk_idx""".stripMargin,
-    // chunk-level CDC dedup: first occurrence (doc_id, chunk_idx) of
-    // each chunk hash wins; every doc rebuilds from survivors
-    "cdc_dedup" ->
-      s"""WITH d AS (SELECT doc_id, $toksSql AS ts FROM documents),
-         |tok AS (SELECT doc_id, i AS pos, ts[i] AS tok, len(ts) AS n
-         |        FROM d, unnest(generate_series(1, len(ts))) AS u(i)),
-         |win AS (SELECT doc_id, pos, tok, n,
-         |    string_agg(tok, ' ') OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wnd,
-         |    count(*) OVER (PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wlen
-         |  FROM tok),
-         |b AS (SELECT doc_id, pos, tok,
-         |    (pos = n OR (wlen = 4 AND
-         |      CAST(concat('0x', substring(md5(wnd), 1, 15)) AS BIGINT) % 8 = 0)) AS is_b
-         |  FROM win),
-         |cid AS (SELECT doc_id, pos, tok,
-         |    COALESCE(SUM(CASE WHEN is_b THEN 1 ELSE 0 END) OVER (
-         |      PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_idx
-         |  FROM b),
-         |ch AS (SELECT doc_id, chunk_idx,
-         |    string_agg(tok, ' ' ORDER BY pos) AS chunk,
-         |    CAST(concat('0x', substring(md5(string_agg(tok, ' ' ORDER BY pos)), 1, 15)) AS BIGINT) AS h
-         |  FROM cid GROUP BY doc_id, chunk_idx),
-         |keep AS (SELECT doc_id, chunk_idx, chunk FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id, chunk_idx) AS rn
-         |    FROM ch) WHERE rn = 1)
-         |SELECT doc.doc_id,
-         |  COALESCE(k.text_dedup, '') AS text_dedup,
-         |  COALESCE(k.nk, 0) AS n_chunks_kept
-         |FROM documents doc LEFT JOIN (
-         |  SELECT doc_id, string_agg(chunk, ' ' ORDER BY chunk_idx) AS text_dedup,
-         |    CAST(count(*) AS INT) AS nk
-         |  FROM keep GROUP BY doc_id) k USING (doc_id)""".stripMargin,
-    // CSV/JSONL round-trips must re-read byte-identically
-    "csv_roundtrip" ->
-      "SELECT doc_id, lang, source, n_chars FROM documents",
-    "jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang FROM documents",
-    "orc_roundtrip" ->
-      "SELECT doc_id, text, source, n_chars FROM documents",
-    // quarantine gate conservation: the oracle rebuilds the same
-    // byte-identical JSONL feed and replays the documented decision
-    // rule — residues 0 (truncated), 1 (bare scalar), 2 (long field
-    // carrying a string) quarantine with the raw line preserved;
-    // residue 3 (unknown extra field) and clean lines pass parsed
-    "quarantine_split" ->
-      """WITH feed AS (
-        |  SELECT doc_id, source,
-        |    CASE
-        |      WHEN doc_id % 7 = 0 THEN substr(base, 1, 10)
-        |      WHEN doc_id % 7 = 1 THEN CAST(doc_id AS VARCHAR)
-        |      WHEN doc_id % 7 = 2 THEN '{"doc_id":"x' || CAST(doc_id AS VARCHAR)
-        |        || '","source":"' || source || '"}'
-        |      WHEN doc_id % 7 = 3 THEN '{"doc_id":' || CAST(doc_id AS VARCHAR)
-        |        || ',"source":"' || source || '","extra":1}'
-        |      ELSE base END AS raw,
-        |    doc_id % 7 IN (0, 1, 2) AS is_quar
-        |  FROM (SELECT doc_id, source,
-        |          '{"doc_id":' || CAST(doc_id AS VARCHAR)
-        |          || ',"source":"' || source || '"}' AS base
-        |        FROM documents))
-        |SELECT CASE WHEN is_quar THEN NULL ELSE doc_id END AS doc_id,
-        |  CASE WHEN is_quar THEN NULL ELSE source END AS source,
-        |  CASE WHEN is_quar THEN 'quarantined' ELSE 'ok' END AS disposition,
-        |  CASE WHEN is_quar THEN md5(raw) ELSE NULL END AS raw_md5
-        |FROM feed""".stripMargin,
-    // repair replay: residue 2 (stringified id) and 1 (bare scalar)
-    // are repairable and re-admit THROUGH the gate; residue 0
-    // (truncated) stays dead — conservation over all four classes
-    "quarantine_replay" ->
-      """SELECT doc_id, source, 'ok' AS disposition FROM documents
-        |WHERE doc_id % 7 NOT IN (0, 1, 2)
-        |UNION ALL
-        |SELECT doc_id, source, 'recovered' FROM documents WHERE doc_id % 7 = 2
-        |UNION ALL
-        |SELECT doc_id, 'recovered', 'recovered' FROM documents WHERE doc_id % 7 = 1
-        |UNION ALL
-        |SELECT CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR), 'dead'
-        |FROM documents WHERE doc_id % 7 = 0""".stripMargin,
-    // widening append: base rows read back with NULL in the new column
-    "txnlog_evolution" ->
-      """SELECT doc_id, source, CAST(NULL AS VARCHAR) AS lang
-        |FROM documents WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, source, lang FROM documents WHERE doc_id % 2 = 1""".stripMargin,
-    // copy-on-write DELETE: survivors are `predicate IS NOT TRUE`
-    // (NULL-lang rows in the deleted id range must SURVIVE)
-    "txnlog_delete" ->
-      """SELECT doc_id, source, lang, n_chars FROM documents
-        |WHERE NOT COALESCE(doc_id < 150 AND lang = 'en', FALSE)""".stripMargin,
-    // merge-on-read DELETE: a zero-data-write deletion-vector commit
-    // must serve survivors identical to the copy-on-write twin
-    "txnlog_delete_mor" ->
-      """SELECT doc_id, source, lang, n_chars FROM documents
-        |WHERE NOT COALESCE(doc_id < 150 AND lang = 'en', FALSE)""".stripMargin,
-    // copy-on-write MERGE replay: target anti-join source ∪ source
-    "txnlog_merge" ->
-      """WITH src AS (
-        |  SELECT doc_id, source, n_chars + 1000 AS n_chars
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, 'merged' AS source,
-        |    CAST(42 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 10 = 5)
-        |SELECT d.doc_id, d.source, d.n_chars FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM src)
-        |UNION ALL
-        |SELECT doc_id, source, n_chars FROM src""".stripMargin,
-    // tri-clause MERGE replay: matched rows replaced, unmatched
-    // source inserted, and unmatched TARGET rows the third clause
-    // names (doc_id % 7 = 3) removed — all in one commit
-    "txnlog_update" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 10 = 3 THEN upper(source) ELSE source END AS source,
-        |  CASE WHEN doc_id % 10 = 3 THEN n_chars + 1000 ELSE n_chars END AS n_chars
-        |FROM documents""".stripMargin,
-    "txnlog_convert" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id % 10 <> 7""".stripMargin,
-    "txnlog_merge_full" ->
-      """WITH src AS (
-        |  SELECT doc_id, source, n_chars + 1000 AS n_chars
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, 'merged' AS source,
-        |    CAST(42 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 10 = 5)
-        |SELECT d.doc_id, d.source, d.n_chars FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM src)
-        |  AND NOT (d.doc_id % 7 = 3)
-        |UNION ALL
-        |SELECT doc_id, source, n_chars FROM src""".stripMargin,
-    // full clause-surface MERGE: conditional matched DELETE beats the
-    // unconditional UPDATE (first-match-wins), conditional explicit-
-    // column INSERT NULL-fills n_chars, NMBS conditional UPDATE ages
-    // the untouched remainder — replayed clause-for-clause as CASE
-    // projections over a LEFT JOIN
-    "txnlog_merge_clauses" ->
-      """WITH src AS (
-        |  SELECT doc_id, source, n_chars + 500 AS n_chars
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, source, n_chars
-        |  FROM documents WHERE doc_id % 10 = 5)
-        |SELECT t.doc_id,
-        |  CASE WHEN s.doc_id IS NOT NULL THEN t.source || '|m'
-        |       WHEN t.doc_id % 13 = 7 THEN 'aged'
-        |       ELSE t.source END AS source,
-        |  CASE WHEN s.doc_id IS NOT NULL THEN t.n_chars + s.n_chars
-        |       ELSE t.n_chars END AS n_chars
-        |FROM documents t LEFT JOIN src s USING (doc_id)
-        |WHERE NOT (s.doc_id IS NOT NULL AND s.n_chars % 3 = 0)
-        |UNION ALL
-        |SELECT doc_id, upper(source) AS source, CAST(NULL AS BIGINT) AS n_chars
-        |FROM src WHERE doc_id >= 1000000 AND doc_id % 2 = 0""".stripMargin,
-    // VERSION AS OF 1 pins the pre-delete snapshot = the whole source
-    "txnlog_timetravel_sql" ->
-      "SELECT doc_id, source, n_chars FROM documents",
-    // the named-table DML chain replayed relationally: UPDATE %5=2,
-    // DELETE %11=3, then an insert-only MERGE of re-keyed rows
-    "txnlog_named_sql" ->
-      """WITH afterupd AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 5 = 2 THEN n_chars + 7 ELSE n_chars END AS n_chars
-        |  FROM documents),
-        |afterdel AS (SELECT * FROM afterupd WHERE NOT (doc_id % 11 = 3))
-        |SELECT doc_id, source, n_chars FROM afterdel
-        |UNION ALL
-        |SELECT doc_id + 3000000 AS doc_id, 'named' AS source,
-        |  CAST(7 AS BIGINT) AS n_chars
-        |FROM documents WHERE doc_id % 10 = 4""".stripMargin,
-    // the CHECK gate admits exactly the clean loads; the poisoned
-    // batch never lands — final snapshot = the untouched source
-    "txnlog_checked" ->
-      "SELECT doc_id, source, n_chars FROM documents",
-    // a metadata-only RESTORE undoes the bad delete: final snapshot =
-    // the untouched source
-    "txnlog_restore" ->
-      "SELECT doc_id, source, n_chars FROM documents",
-    // the diverged shallow clone = source ∪ re-keyed appends, minus
-    // the clone-side delete; the builder separately REQUIRES the
-    // source never minted a version (the zero-copy contract)
-    "txnlog_clone" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, 'cloned', n_chars FROM documents
-        |  WHERE doc_id % 10 = 4
-        |) WHERE doc_id % 10 <> 7""".stripMargin,
-    // compaction is a pure rewrite: post-compact snapshot = source
-    // minus the deleted residue, not one row moved or duplicated
-    "txnlog_compact" ->
-      "SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 10 <> 3",
-    // scoped compaction: identical law, scoped to the hot range — the
-    // cold dirs ride by reference and only the in-scope tombstone
-    // materializes
-    "txnlog_compact_where" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE NOT (doc_id % 10 = 3 AND doc_id < 140)""".stripMargin,
-    // the fast path and the scan must agree: both are count(documents)
-    "txnlog_fastcount" ->
-      "SELECT count(*) AS n_rows_meta, count(*) AS n_rows_scan FROM documents",
-    // islands replay over the same filtered day set
-    "backfill_plan" ->
-      """WITH days AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
-        |  WHERE day(ts) % 7 <> 3),
-        |i AS (
-        |  SELECT day - CAST(ROW_NUMBER() OVER (ORDER BY day) AS INTEGER) AS grp, day
-        |  FROM days),
-        |isl AS (SELECT grp, MIN(day) AS island_start, MAX(day) AS island_end
-        |        FROM i GROUP BY 1),
-        |g AS (SELECT island_end,
-        |        LEAD(island_start) OVER (ORDER BY island_start) AS next_start
-        |      FROM isl)
-        |SELECT island_end + 1 AS gap_start, next_start - 1 AS gap_end,
-        |  CAST(date_diff('day', island_end, next_start) - 1 AS BIGINT) AS n_days_missing
-        |FROM g WHERE next_start IS NOT NULL ORDER BY 1""".stripMargin,
-    // data skipping never changes the answer: the pruned read equals
-    // the plain BETWEEN over the same quartile arithmetic
-    "txnlog_skipping" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id BETWEEN (SELECT q + q // 2 FROM m)
-        |                 AND (SELECT 2 * q + q // 2 FROM m)""".stripMargin,
-    // schema evolution moves METADATA, never answers: rename + drop +
-    // a post-rename append read back as a plain aliased projection
-    "txnlog_rename" ->
-      "SELECT doc_id, n_chars AS len FROM documents",
-    // ADD COLUMN's initial default serves for pre-DDL rows, real
-    // values after — one CASE on the append boundary
-    "txnlog_addcol" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 2 AS q FROM documents)
-        |SELECT doc_id, n_chars,
-        |  CASE WHEN doc_id < (SELECT q FROM m) THEN 'und' ELSE lang END AS lang
-        |FROM documents""".stripMargin,
-    // hidden partitioning moves FILES, never answers: the raw-ts
-    // range over the day-partitioned layout equals the plain BETWEEN
-    "txnlog_hidden" ->
-      """WITH m AS (SELECT date_trunc('day', MIN(ts)) AS base FROM events)
-        |SELECT event_id, ts, user_id, event_type FROM events
-        |WHERE ts >= (SELECT base + INTERVAL 2 DAY FROM m)
-        |  AND ts <= (SELECT base + INTERVAL 5 DAY FROM m)""".stripMargin,
-    // the DataSource connector moves plans, never answers: the pruned
-    // format("graft") read equals the same plain BETWEEN
-    "txnlog_connector" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id BETWEEN (SELECT q + q // 2 FROM m)
-        |                 AND (SELECT 2 * q + q // 2 FROM m)""".stripMargin,
-    // z-order clustering moves bytes, never answers: the rectangle
-    // read over the clustered layout equals the plain two-band filter
-    "txnlog_zorder" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id BETWEEN (SELECT q // 2 FROM m)
-        |                 AND (SELECT 2 * q + q // 2 FROM m)
-        |  AND n_chars BETWEEN 100 AND 300""".stripMargin,
-    // the hilbert rewrite obeys the same law: layout, never answers
-    "txnlog_hilbert" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id BETWEEN (SELECT q // 2 FROM m)
-        |                 AND (SELECT 2 * q + q // 2 FROM m)
-        |  AND n_chars BETWEEN 100 AND 300""".stripMargin,
-    // string z-order: the dictionary-rank rewrite never changes
-    // answers — the rectangle over (lang, source) is a plain filter
-    "txnlog_zorder_str" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-        |WHERE lang = 'en' AND source >= 'src0' AND source <= 'src12'""".stripMargin,
-    // unified maintenance (advise -> cluster/compact/vacuum) moves
-    // bytes, never answers: content identity with the source
-    "txnlog_maintain" ->
-      "SELECT doc_id, source, n_chars FROM documents",
-    // a rollup maintained purely from signed feed deltas equals the
-    // recompute over the final state
-    "mv_incremental_cdf" ->
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN doc_id % 10 = 0 THEN n_chars + 1000
-        |                ELSE n_chars END) AS BIGINT) AS sum_chars
-        |FROM documents WHERE doc_id % 10 <> 4
-        |GROUP BY source""".stripMargin,
-    // a replica maintained purely from the change feed reads
-    // identical to the source's final state
-    "txnlog_replica" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN doc_id % 10 = 0 THEN n_chars + 1000 ELSE n_chars END AS n_chars
-        |FROM documents WHERE doc_id % 10 <> 4""".stripMargin,
-    // the change feed replays as its known slices: append inserts,
-    // tombstone deletes (pre-delete image), merge update pairs
-    "txnlog_cdf" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 2 AS q FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS _commit_version, 'insert' AS _change_type,
-        |  doc_id, source, n_chars
-        |FROM documents WHERE doc_id >= (SELECT q FROM m)
-        |UNION ALL
-        |SELECT 2, 'delete', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 4
-        |UNION ALL
-        |SELECT 3, 'update_preimage', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 0
-        |UNION ALL
-        |SELECT 3, 'update_postimage', doc_id, source, n_chars + 1000
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-    // the CDF relation serves the identical feed (shared statement)
-    "txnlog_cdf_connector" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 2 AS q FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS _commit_version, 'insert' AS _change_type,
-        |  doc_id, source, n_chars
-        |FROM documents WHERE doc_id >= (SELECT q FROM m)
-        |UNION ALL
-        |SELECT 2, 'delete', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 4
-        |UNION ALL
-        |SELECT 3, 'update_preimage', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 0
-        |UNION ALL
-        |SELECT 3, 'update_postimage', doc_id, source, n_chars + 1000
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-    // the TVF form has no keyCols, so the keyed MERGE commit replays
-    // as unkeyed delete+insert pairs at the same version
-    "txnlog_cdf_sql" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 2 AS q FROM documents)
-        |SELECT CAST(1 AS BIGINT) AS _commit_version, 'insert' AS _change_type,
-        |  doc_id, source, n_chars
-        |FROM documents WHERE doc_id >= (SELECT q FROM m)
-        |UNION ALL
-        |SELECT 2, 'delete', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 4
-        |UNION ALL
-        |SELECT 3, 'delete', doc_id, source, n_chars
-        |FROM documents WHERE doc_id % 10 = 0
-        |UNION ALL
-        |SELECT 3, 'insert', doc_id, source, n_chars + 1000
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-    // the advisor's keep-fraction arithmetic replayed from the
-    // quartile slicing: doc_id healthy, n_chars scattered
-    "cluster_advice" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents),
-        |sl AS (SELECT doc_id, n_chars,
-        |  CASE WHEN doc_id < (SELECT q FROM m) THEN 0
-        |       WHEN doc_id < (SELECT 2 * q FROM m) THEN 1
-        |       WHEN doc_id < (SELECT 3 * q FROM m) THEN 2 ELSE 3 END AS d
-        |  FROM documents),
-        |pr AS (SELECT d, min(doc_id) AS mn_i, max(doc_id) AS mx_i,
-        |              min(n_chars) AS mn_c, max(n_chars) AS mx_c
-        |       FROM sl GROUP BY d),
-        |a AS (SELECT
-        |  CAST(max(mx_i) - min(mn_i) + 1 AS BIGINT) AS wi,
-        |  CAST(SUM(mx_i - mn_i + 1) AS BIGINT) AS si,
-        |  CAST(max(mx_c) - min(mn_c) + 1 AS BIGINT) AS wc,
-        |  CAST(SUM(mx_c - mn_c + 1) AS BIGINT) AS sc,
-        |  CAST(count(*) AS BIGINT) AS nd FROM pr)
-        |SELECT 'doc_id' AS col_name, nd AS n_dirs, wi AS table_width,
-        |  si AS sum_dir_width,
-        |  CAST(si * 10000 // (wi * nd) AS BIGINT) AS overlap_bps,
-        |  CAST(CASE WHEN si * 10000 // (wi * nd) >= 5000 THEN 1 ELSE 0 END AS INT) AS scattered
-        |FROM a
-        |UNION ALL
-        |SELECT 'n_chars', nd, wc, sc,
-        |  CAST(sc * 10000 // (wc * nd) AS BIGINT),
-        |  CAST(CASE WHEN sc * 10000 // (wc * nd) >= 5000 THEN 1 ELSE 0 END AS INT)
-        |FROM a""".stripMargin,
-    // per-commit provenance census replays as the quartile slices the
-    // fixture loaded (txnIds q0..q3, v0 an overwrite)
-    "txnlog_lineage" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 4 AS q FROM documents),
-        |sl AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id < (SELECT q FROM m) THEN 0
-        |         WHEN doc_id < (SELECT 2 * q FROM m) THEN 1
-        |         WHEN doc_id < (SELECT 3 * q FROM m) THEN 2
-        |         ELSE 3 END AS v
-        |  FROM documents)
-        |SELECT CAST(v AS BIGINT) AS commit_version,
-        |  CASE WHEN v = 0 THEN 'overwrite' ELSE 'append' END AS commit_action,
-        |  'q' || CAST(v AS VARCHAR) AS commit_txn,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM sl GROUP BY v""".stripMargin,
-    // bloom skipping opens fewer dirs, never changes the answer: the
-    // point read equals the plain equality filter
-    "txnlog_bloom" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id = (SELECT (MAX(doc_id) + 1) // 2 FROM documents)""".stripMargin,
-    // multi-key fetch: bloom-pruned dirs, plain IN semantics
-    "txnlog_points" ->
-      """WITH m AS (SELECT (MAX(doc_id) + 1) // 2 AS q FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents
-        |WHERE doc_id IN ((SELECT q FROM m), (SELECT q + 1 FROM m), 17)""".stripMargin,
-    // release 0 keeps reporting the pre-growth cut forever — the
-    // reproducibility claim, replayed as the four known slices
-    "dataset_release" ->
-      """SELECT CAST(0 AS BIGINT) AS release, 'docs' AS table_name,
-        |  CAST(count(*) AS BIGINT) AS n_rows FROM documents WHERE doc_id < 250
-        |UNION ALL
-        |SELECT CAST(0 AS BIGINT), 'emb', CAST(count(*) AS BIGINT)
-        |FROM embeddings WHERE vec_id < 300
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), 'docs', CAST(count(*) AS BIGINT) FROM documents
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), 'emb', CAST(count(*) AS BIGINT) FROM embeddings""".stripMargin,
-    // the appends-only history means removed = 0; added = the post-r0
-    // slices
-    "release_diff" ->
-      """SELECT 'docs' AS table_name,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents WHERE doc_id < 250) AS n_release0,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_release1,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents WHERE doc_id >= 250) AS n_added,
-        |  CAST(0 AS BIGINT) AS n_removed
-        |UNION ALL
-        |SELECT 'emb',
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings WHERE vec_id < 300),
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings),
-        |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings WHERE vec_id >= 300),
-        |  CAST(0 AS BIGINT)
-        |ORDER BY table_name""".stripMargin,
-    // erasure-propagation audit replay: matched counts from the
-    // documents table, version movement from the known commit plan
-    // (corpus 2 commits + delete, sigs 1 + delete, scores untouched)
-    "forget_docs" ->
-      """WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-        |  WHERE doc_id IN (7,57,107,157,207,257,307,357,407,457))
-        |SELECT 'corpus' AS artifact, m.n AS matched_before,
-        |  CAST(0 AS BIGINT) AS remaining_after,
-        |  CAST(1 AS BIGINT) AS version_before,
-        |  CAST(2 AS BIGINT) AS version_after, CAST(0 AS INT) AS vacuumed
-        |FROM m
-        |UNION ALL
-        |SELECT 'sigs', m.n, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(1 AS BIGINT), CAST(0 AS INT) FROM m
-        |UNION ALL
-        |SELECT 'scores', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-        |  CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS INT) FROM m""".stripMargin,
-    // the incrementally-merged view must equal the one-shot aggregate
-    "mv_merge" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  min(user_id) AS min_user, max(user_id) AS max_user
-        |FROM events GROUP BY 1""".stripMargin,
-    "dedup_incremental_minhash" -> dedupIncrMinhashOracleSql,
-    // identical semantics, bucketed catalog layout
-    "dedup_incremental_minhash_bucketed" -> dedupIncrMinhashOracleSql,
-    // streaming screen replay at threshold 1.0: a doc matches iff its
-    // full signature equals an earlier-admitted doc's, so the admitted
-    // doc per (band bucket, signature) group is the group min and
-    // every later member emits one verdict per band
-    "streaming_neardup_replay" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands_all AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash, sig
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |grp AS (
-         |  SELECT band_idx, band_hash, sig, min(doc_id) AS dup_of
-         |  FROM bands_all GROUP BY band_idx, band_hash, sig)
-         |SELECT b.doc_id, CAST(b.band_idx AS INT) AS band_idx, g.dup_of,
-         |  CAST(1.0 AS DOUBLE) AS est_jaccard
-         |FROM bands_all b JOIN grp g
-         |  ON b.band_idx = g.band_idx AND b.band_hash = g.band_hash
-         |    AND b.sig = g.sig
-         |WHERE b.doc_id > g.dup_of""".stripMargin,
-    // verified variant: identical pipeline, but a catalog band
-    // collision only drops the batch doc after exact-Jaccard
-    // confirmation against the colliding catalog doc's shingle set
-    "dedup_incremental_minhash_verified" ->
-      s"""WITH RECURSIVE docs AS (
-         |  SELECT doc_id, $shinglesSql AS shingles FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, shingles,
-         |    list_transform(range(0, 12), j ->
-         |      list_aggregate(list_transform(shingles,
-         |        s -> (CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 2147483648
-         |              + j * (CAST(concat('0x', substring(md5(s), 16, 15)) AS BIGINT) % 2147483648))
-         |             % 2147483648), 'min')) AS sig
-         |  FROM docs WHERE len(shingles) > 0),
-         |bands_all AS (
-         |  SELECT doc_id, b AS band_idx,
-         |    concat_ws(',', sig[b*3+1], sig[b*3+2], sig[b*3+3]) AS band_hash
-         |  FROM sigs, range(0, 4) AS t(b)),
-         |cat AS (SELECT DISTINCT doc_id, band_idx, band_hash
-         |        FROM bands_all WHERE doc_id < 250),
-         |bb AS (SELECT doc_id, band_idx, band_hash FROM bands_all WHERE doc_id >= 250),
-         |hitp AS (
-         |  SELECT DISTINCT bb.doc_id AS b_id, cat.doc_id AS c_id
-         |  FROM bb JOIN cat
-         |    ON bb.band_idx = cat.band_idx AND bb.band_hash = cat.band_hash),
-         |hit AS (
-         |  SELECT DISTINCT h.b_id AS doc_id
-         |  FROM hitp h JOIN sigs a ON h.b_id = a.doc_id
-         |    JOIN sigs c ON h.c_id = c.doc_id
-         |  WHERE CAST(len(list_intersect(a.shingles, c.shingles)) AS DOUBLE)
-         |    / CAST(len(a.shingles) + len(c.shingles)
-         |           - len(list_intersect(a.shingles, c.shingles)) AS DOUBLE) >= 0.8),
-         |sb AS (SELECT * FROM bb WHERE doc_id NOT IN (SELECT doc_id FROM hit)),
-         |bsz AS (
-         |  SELECT band_idx, band_hash FROM sb
-         |  GROUP BY band_idx, band_hash HAVING count(*) <= 1000),
-         |sb2 AS (
-         |  SELECT s.doc_id, s.band_idx, s.band_hash
-         |  FROM sb s JOIN bsz USING (band_idx, band_hash)),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM sb2 a JOIN sb2 b
-         |    ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-         |  WHERE a.doc_id < b.doc_id),
-         |ver AS (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cands c JOIN sigs a ON c.doc_a = a.doc_id
-         |    JOIN sigs b ON c.doc_b = b.doc_id
-         |  WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-         |    / CAST(len(a.shingles) + len(b.shingles)
-         |           - len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) >= 0.8),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM ver
-         |      UNION SELECT doc_b, doc_a FROM ver),
-         |reach(src, dst) AS (
-         |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-         |  UNION
-         |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-         |dropped AS (SELECT src AS doc_id FROM reach GROUP BY src HAVING min(dst) <> src),
-         |rej AS (SELECT doc_id FROM hit UNION ALL SELECT doc_id FROM dropped)
-         |SELECT doc_id, CAST(band_idx AS INT) AS band_idx, band_hash
-         |FROM bb WHERE doc_id NOT IN (SELECT doc_id FROM rej)""".stripMargin,
-    "zorder_cells" -> {
-      val z = graft.sources.ZOrder.zValueSql("x", "y")
-      s"""WITH c AS (
-         |  SELECT event_id,
-         |    user_id & 65535 AS x,
-         |    CAST(floor(coalesce(value, 0.0)) AS BIGINT) & 65535 AS y
-         |  FROM events)
-         |SELECT event_id, x, y, $z AS z FROM c""".stripMargin
-    },
-    "corpus_mix" ->
-      """WITH b AS (
-        |  SELECT source, text,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'mix')), 1, 15)) AS BIGINT) % 100 AS bucket
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(SUM(CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS BIGINT)) AS BIGINT) AS n_tokens
-        |FROM b
-        |WHERE bucket < (CASE source WHEN 'src0' THEN 80 WHEN 'src1' THEN 60
-        |                WHEN 'src2' THEN 40 WHEN 'src3' THEN 20 ELSE 10 END)
-        |GROUP BY source""".stripMargin,
-    "embed_normalize" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding,
-        |    sqrt(list_sum(list_transform(embedding,
-        |      v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) AS norm
-        |  FROM embeddings)
-        |SELECT vec_id, norm,
-        |  array_to_string(list_transform(embedding, v ->
-        |    CAST(CAST(round(CASE WHEN norm = 0.0 THEN CAST(v AS DOUBLE)
-        |                         ELSE CAST(v AS DOUBLE) / norm END * 1e6) AS BIGINT) AS VARCHAR)), ',') AS unit_fp
-        |FROM n""".stripMargin,
-    // JL ±1 random projection: per-plane sign literals replayed, one
-    // quantization round then pure integer sums — hash-exact
-    "embed_project" ->
-      (0 until 8).map(projectPlaneSql).mkString("\nUNION ALL\n"),
-    // int8 scalar quantization: identical arithmetic step-for-step
-    "embed_quantize" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    list_aggregate(list_transform(embedding, v -> abs(CAST(v AS DOUBLE))), 'max') / 127.0 AS scale
-        |  FROM embeddings),
-        |q AS (
-        |  SELECT vec_id, embedding, scale,
-        |    CASE WHEN scale = 0.0 THEN list_transform(embedding, v -> 0)
-        |         ELSE list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) / scale) AS INT))
-        |    END AS qv
-        |  FROM s)
-        |SELECT vec_id, scale,
-        |  array_to_string(qv, ',') AS q_str,
-        |  list_aggregate(list_transform(range(1, len(embedding)+1),
-        |    i -> abs(CAST(embedding[i] AS DOUBLE) - qv[i] * scale)), 'max') AS max_abs_err
-        |FROM q""".stripMargin,
-    // chunk→doc pooling of the quantized embeddings: same quantization
-    // replay as embed_quantize, then per-(group, position) integer sums
-    // drift replay: exact per-(label, pos) float32-in-double sums,
-    // cosine folded in index order on both engines
-    "embed_drift" ->
-      """WITH pos AS (
-        |  SELECT label, CAST(r.i AS INT) AS i,
-        |    SUM(CAST(embedding[CAST(r.i AS INT)] AS DOUBLE))
-        |      FILTER (vec_id % 2 = 0) AS sa,
-        |    SUM(CAST(embedding[CAST(r.i AS INT)] AS DOUBLE)) AS sb
-        |  FROM embeddings, range(1, 65) r(i) GROUP BY 1, 2),
-        |cnt AS (SELECT label,
-        |    CAST(count(*) FILTER (vec_id % 2 = 0) AS BIGINT) AS n_a,
-        |    CAST(count(*) AS BIGINT) AS n_b
-        |  FROM embeddings GROUP BY 1),
-        |v AS (SELECT label, list(sa ORDER BY i) AS va, list(sb ORDER BY i) AS vb
-        |      FROM pos GROUP BY label)
-        |SELECT label, n_a, n_b,
-        |  round(list_sum(list_transform(range(1, 65), j -> va[j] * vb[j])) /
-        |    (sqrt(list_sum(list_transform(range(1, 65), j -> va[j] * va[j]))) *
-        |     sqrt(list_sum(list_transform(range(1, 65), j -> vb[j] * vb[j])))), 9) AS cos_means
-        |FROM v JOIN cnt USING (label)
-        |WHERE n_a > 0""".stripMargin,
-    "embed_pool" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    list_aggregate(list_transform(embedding, v -> abs(CAST(v AS DOUBLE))), 'max') / 127.0 AS scale
-        |  FROM embeddings),
-        |qz AS (
-        |  SELECT vec_id % 25 AS group_id,
-        |    CASE WHEN scale = 0.0 THEN list_transform(embedding, v -> 0)
-        |         ELSE list_transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) / scale) AS INT))
-        |    END AS q
-        |  FROM s),
-        |ex AS (
-        |  SELECT group_id, CAST(r.pos AS INT) AS pos, q[CAST(r.pos AS INT)] AS v
-        |  FROM qz, range(1, 65) r(pos)),
-        |ag AS (
-        |  SELECT group_id, pos, CAST(sum(v) AS BIGINT) AS sv, count(*) AS n
-        |  FROM ex GROUP BY group_id, pos)
-        |SELECT group_id, CAST(min(n) AS BIGINT) AS n_vectors,
-        |  array_to_string(list(CAST(sv AS VARCHAR) ORDER BY pos), ',') AS sum_fp
-        |FROM ag GROUP BY group_id""".stripMargin,
-    // streaming sequence packing: per-shard running token total → window cuts
-    "doc_pack" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_tok
-         |  FROM t)
-         |SELECT doc_id, shard, n_tokens, start_tok,
-         |  CAST(start_tok // 256 AS BIGINT) AS bin_id,
-         |  CAST(start_tok % 256 AS BIGINT) AS offset_in_bin
-         |FROM p""".stripMargin,
-    // the same packing expanded to per-window segments: a doc spans
-    // windows start//256 .. (end-1)//256, clipped to each window
-    "pack_attention_spans" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_tok
-         |  FROM t),
-         |x AS (
-         |  SELECT doc_id, shard, n_tokens, start_tok,
-         |    unnest(generate_series(start_tok // 256,
-         |      (start_tok + n_tokens - 1) // 256)) AS bin_id
-         |  FROM p WHERE n_tokens > 0)
-         |SELECT shard, CAST(bin_id AS BIGINT) AS bin_id, doc_id,
-         |  CAST(greatest(start_tok - bin_id * 256, 0) AS BIGINT) AS seg_start,
-         |  CAST(least(start_tok + n_tokens - bin_id * 256, 256)
-         |    - greatest(start_tok - bin_id * 256, 0) AS BIGINT) AS seg_len
-         |FROM x""".stripMargin,
-    // Gopher-style repetition metrics: non-distinct 2-grams hashed and
-    // counted with two hash aggregates
-    "repetition" ->
-      s"""WITH g AS (
-         |  SELECT doc_id, CAST(concat('0x', substring(md5(gr), 1, 15)) AS BIGINT) AS h
-         |  FROM (SELECT doc_id,
-         |          unnest(list_transform(range(1, len($toksSql)),
-         |            i -> $toksSql[i] || ' ' || $toksSql[i+1])) AS gr
-         |        FROM documents)),
-         |per AS (SELECT doc_id, h, count(*) AS c FROM g GROUP BY doc_id, h),
-         |rep AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_2grams,
-         |          CAST(count(*) AS BIGINT) AS n_distinct,
-         |          CAST(max(c) AS BIGINT) AS top_count
-         |        FROM per GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(r.n_2grams, 0) AS BIGINT) AS n_2grams,
-         |  CAST(COALESCE(r.n_distinct, 0) AS BIGINT) AS n_distinct,
-         |  CASE WHEN COALESCE(r.n_2grams, 0) = 0 THEN 0.0
-         |       ELSE CAST(r.n_2grams - r.n_distinct AS DOUBLE) / CAST(r.n_2grams AS DOUBLE)
-         |  END AS dup_2gram_frac,
-         |  CASE WHEN COALESCE(r.n_2grams, 0) = 0 THEN 0.0
-         |       ELSE CAST(r.top_count AS DOUBLE) / CAST(r.n_2grams AS DOUBLE)
-         |  END AS top_2gram_frac
-         |FROM documents d LEFT JOIN rep r ON d.doc_id = r.doc_id""".stripMargin,
-    // composite C4-style filter: length + exact-dup representative +
-    // repetition dominance, with per-rule audit flags
-    "corpus_filter" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    len($toksSql) >= 20 AS len_ok,
-         |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS not_dup
-         |  FROM documents),
-         |g AS (
-         |  SELECT doc_id, CAST(concat('0x', substring(md5(gr), 1, 15)) AS BIGINT) AS h
-         |  FROM (SELECT doc_id,
-         |          unnest(list_transform(range(1, len($toksSql)),
-         |            i -> $toksSql[i] || ' ' || $toksSql[i+1])) AS gr
-         |        FROM documents)),
-         |per AS (SELECT doc_id, h, count(*) AS c FROM g GROUP BY doc_id, h),
-         |rep AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_2grams,
-         |          CAST(max(c) AS BIGINT) AS top_count
-         |        FROM per GROUP BY doc_id),
-         |r2 AS (
-         |  SELECT d.doc_id,
-         |    CASE WHEN COALESCE(r.n_2grams, 0) = 0 THEN 0.0
-         |         ELSE CAST(r.top_count AS DOUBLE) / CAST(r.n_2grams AS DOUBLE)
-         |    END < 0.2 AS rep_ok
-         |  FROM documents d LEFT JOIN rep r ON d.doc_id = r.doc_id)
-         |SELECT f.doc_id, f.len_ok, f.not_dup, r2.rep_ok,
-         |  f.len_ok AND f.not_dup AND r2.rep_ok AS keep
-         |FROM f JOIN r2 ON f.doc_id = r2.doc_id""".stripMargin,
-    // decontamination: 80/20 md5-bucket split, train-shingle hash set,
-    // per-test-doc matched fraction (same 60-bit md5 hash both engines)
-    "decontaminate" ->
-      s"""WITH split AS (
-         |  SELECT doc_id, text,
-         |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'decon')), 1, 15)) AS BIGINT) % 100 AS bucket
-         |  FROM documents),
-         |tr AS (SELECT doc_id, text FROM split WHERE bucket < 80),
-         |te AS (SELECT doc_id, text FROM split WHERE bucket >= 80),
-         |tsh AS (SELECT DISTINCT CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h
-         |        FROM (SELECT unnest($shinglesSql) AS sh FROM tr)),
-         |tesh AS (SELECT doc_id, CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h
-         |         FROM (SELECT doc_id, unnest($shinglesSql) AS sh FROM te)),
-         |tot AS (SELECT doc_id, CAST(len($shinglesSql) AS BIGINT) AS n_shingles FROM te),
-         |m AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched
-         |      FROM tesh WHERE h IN (SELECT h FROM tsh) GROUP BY doc_id)
-         |SELECT t.doc_id, t.n_shingles,
-         |  CAST(COALESCE(m.n_matched, 0) AS BIGINT) AS n_matched,
-         |  CASE WHEN t.n_shingles = 0 THEN 0.0
-         |       ELSE CAST(COALESCE(m.n_matched, 0) AS DOUBLE) / CAST(t.n_shingles AS DOUBLE)
-         |  END AS contamination
-         |FROM tot t LEFT JOIN m ON t.doc_id = m.doc_id""".stripMargin,
-    // Bloom decontamination replayed exactly: the bitset is the
-    // distinct eval-probe position set (a bit is set iff some eval
-    // shingle probes it), and a corpus shingle is flagged iff all 3
-    // Kirsch-Mitzenmacher positions (two md5 halves) are present —
-    // false positives reproduce identically.
-    "decontaminate_bloom" ->
-      s"""WITH split AS (
-         |  SELECT doc_id, text,
-         |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'decon')), 1, 15)) AS BIGINT) % 100 AS bucket
-         |  FROM documents),
-         |tr AS (SELECT doc_id, text FROM split WHERE bucket < 80),
-         |te AS (SELECT doc_id, text FROM split WHERE bucket >= 80),
-         |evsh AS (SELECT DISTINCT sh FROM (SELECT unnest($shinglesSql) AS sh FROM te)),
-         |pos AS (
-         |  SELECT DISTINCT (h1 + i * h2) % 1048576 AS p
-         |  FROM (SELECT
-         |          CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h1,
-         |          CAST(concat('0x', substring(md5(sh), 16, 15)) AS BIGINT) AS h2
-         |        FROM evsh)
-         |  CROSS JOIN range(3) t(i)),
-         |csh AS (SELECT doc_id, sh FROM (SELECT doc_id, unnest($shinglesSql) AS sh FROM tr)),
-         |probe AS (
-         |  SELECT doc_id, sh, (h1 + i * h2) % 1048576 AS p
-         |  FROM (SELECT doc_id, sh,
-         |          CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h1,
-         |          CAST(concat('0x', substring(md5(sh), 16, 15)) AS BIGINT) AS h2
-         |        FROM csh)
-         |  CROSS JOIN range(3) t(i)),
-         |hits AS (
-         |  SELECT doc_id, sh, count(*) AS nhit
-         |  FROM probe JOIN pos USING (p)
-         |  GROUP BY doc_id, sh),
-         |flg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_flagged
-         |        FROM hits WHERE nhit = 3 GROUP BY doc_id),
-         |tot AS (SELECT doc_id, CAST(len($shinglesSql) AS BIGINT) AS n_shingles FROM tr),
-         |scored AS (
-         |  SELECT t.doc_id, t.n_shingles,
-         |    CAST(COALESCE(f.n_flagged, 0) AS BIGINT) AS n_flagged,
-         |    CASE WHEN t.n_shingles = 0 THEN 0.0
-         |         ELSE CAST(COALESCE(f.n_flagged, 0) AS DOUBLE) / CAST(t.n_shingles AS DOUBLE)
-         |    END AS bloom_frac
-         |  FROM tot t LEFT JOIN flg f ON t.doc_id = f.doc_id)
-         |SELECT doc_id, n_shingles, n_flagged, bloom_frac,
-         |  bloom_frac > 0.1 AS flagged
-         |FROM scored""".stripMargin,
-    // one-call corpus prep: the corpus_filter, dedup_clusters,
-    // decontaminate and doc_pack oracle fragments chained into a
-    // single CTE pipeline over the 80% hash-split corpus (eval = the
-    // held-out 20%), mirroring CorpusPipeline.prepare stage for stage
-    "corpus_prepare" -> (corpusStagesCtesSql + s""",
-         |fin AS (SELECT d.doc_id, d.text FROM dd d JOIN clean USING (doc_id)),
-         |tk AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM fin),
-         |pk AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_tok
-         |  FROM tk)
-         |SELECT p.doc_id, p.shard, p.n_tokens, p.start_tok,
-         |  CAST(p.start_tok // 256 AS BIGINT) AS bin_id,
-         |  CAST(p.start_tok % 256 AS BIGINT) AS offset_in_bin,
-         |  f.text
-         |FROM pk p JOIN fin f ON p.doc_id = f.doc_id""".stripMargin),
-    // the capstone chain prepare→pack→exportJsonl→read-back is the
-    // identity on the packed frame, so the oracle IS corpus_prepare's
-    // staged replay (export changes the medium, never the rows)
-    "corpus_export" -> (corpusStagesCtesSql + s""",
-         |fin AS (SELECT d.doc_id, d.text FROM dd d JOIN clean USING (doc_id)),
-         |tk AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM fin),
-         |pk AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_tok
-         |  FROM tk)
-         |SELECT p.doc_id, p.shard, p.n_tokens, p.start_tok,
-         |  CAST(p.start_tok // 256 AS BIGINT) AS bin_id,
-         |  CAST(p.start_tok % 256 AS BIGINT) AS offset_in_bin,
-         |  f.text
-         |FROM pk p JOIN fin f ON p.doc_id = f.doc_id""".stripMargin),
-    // fragmentation over the same packing CTEs: a doc crosses a window
-    // iff its first and last tokens land in different 256-token bins
-    "pack_fragmentation" -> (corpusStagesCtesSql + s""",
-         |fin AS (SELECT d.doc_id, d.text FROM dd d JOIN clean USING (doc_id)),
-         |tk AS (
-         |  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         |    CAST(len($toksSql) AS BIGINT) AS n_tokens
-         |  FROM fin),
-         |pk AS (
-         |  SELECT doc_id, shard, n_tokens,
-         |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-         |      - n_tokens AS BIGINT) AS start_tok
-         |  FROM tk)
-         |SELECT shard, count(*) AS n_docs,
-         |  CAST(SUM(CASE WHEN start_tok // 256 <> (start_tok + n_tokens - 1) // 256
-         |       THEN 1 ELSE 0 END) AS BIGINT) AS n_crossing,
-         |  CAST((SUM(CASE WHEN start_tok // 256 <> (start_tok + n_tokens - 1) // 256
-         |       THEN 1 ELSE 0 END) * 10000) // greatest(count(*), 1) AS BIGINT) AS crossing_bps
-         |FROM pk GROUP BY shard""".stripMargin),
-    // l-diversity classes replayed with the same QI grouping and
-    // distinct count
-    "l_diversity" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(floor(value / 10) AS BIGINT) AS value_decile
-        |  FROM events),
-        |c AS (
-        |  SELECT event_type, day,
-        |    count(*) AS class_size,
-        |    CAST(count(DISTINCT value_decile) AS BIGINT) AS sensitive_distinct
-        |  FROM e GROUP BY 1, 2)
-        |SELECT event_type, day, class_size, sensitive_distinct
-        |FROM c WHERE sensitive_distinct < 3""".stripMargin,
-    // integer EMD replay: scaled CDF gap prefix per (class, bin) over
-    // the dense class x bin grid, mean |prefix| in millionths
-    "t_closeness" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(floor(value / 10) AS BIGINT) AS bin
-        |  FROM events),
-        |cb AS (SELECT event_type, day, bin, CAST(count(*) AS BIGINT) AS c FROM e GROUP BY 1,2,3),
-        |g  AS (SELECT bin, CAST(count(*) AS BIGINT) AS gc FROM e GROUP BY 1),
-        |n  AS (SELECT CAST(count(*) AS BIGINT) AS nt, CAST(count(DISTINCT bin) AS BIGINT) AS m FROM e),
-        |cls AS (SELECT event_type, day, CAST(SUM(c) AS BIGINT) AS nc FROM cb GROUP BY 1,2),
-        |dense AS (
-        |  SELECT cls.event_type, cls.day, g.bin, g.gc, cls.nc, COALESCE(cb.c, 0) AS c
-        |  FROM cls CROSS JOIN g
-        |  LEFT JOIN cb ON cb.event_type = cls.event_type AND cb.day = cls.day AND cb.bin = g.bin),
-        |p AS (
-        |  SELECT event_type, day, nc, bin,
-        |    SUM(c * (SELECT nt FROM n) - gc * nc) OVER (PARTITION BY event_type, day
-        |      ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-        |  FROM dense)
-        |SELECT event_type, day, nc AS class_size,
-        |  CAST(SUM(ABS(pre)) * 1000000 // (GREATEST((SELECT m FROM n) - 1, 1) * nc * (SELECT nt FROM n)) AS BIGINT) AS emd_millionths,
-        |  CAST(SUM(ABS(pre)) * 1000000 // (GREATEST((SELECT m FROM n) - 1, 1) * nc * (SELECT nt FROM n)) < 100000 AS BOOLEAN) AS t_close
-        |FROM p GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin,
-    // per-doc provenance over the same staged CTEs: quality gate →
-    // duplicate (with the representative kept instead) →
-    // contamination, in the pipeline's own stage order
-    // disposition counts — the funnel report, same staged CTEs
-    "corpus_funnel" -> (corpusStagesCtesSql + """
-         |, disp AS (
-         |  SELECT CASE WHEN NOT (f.len_ok AND f.not_dup AND r.rep_ok) THEN 'quality'
-         |       WHEN dup.rep IS NOT NULL THEN 'duplicate'
-         |       WHEN cl.doc_id IS NULL THEN 'contaminated'
-         |       ELSE 'kept' END AS disposition
-         |  FROM corpus c
-         |  JOIN flt f ON c.doc_id = f.doc_id
-         |  JOIN repok r ON c.doc_id = r.doc_id
-         |  LEFT JOIN (SELECT src, CAST(min(dst) AS BIGINT) AS rep
-         |             FROM reach GROUP BY src HAVING min(dst) <> src) dup
-         |    ON c.doc_id = dup.src
-         |  LEFT JOIN clean cl ON c.doc_id = cl.doc_id)
-         |SELECT disposition, count(*) AS n_docs FROM disp GROUP BY disposition""".stripMargin),
-    "corpus_disposition" -> (corpusStagesCtesSql + """
-         |SELECT c.doc_id,
-         |  CASE WHEN NOT (f.len_ok AND f.not_dup AND r.rep_ok) THEN 'quality'
-         |       WHEN dup.rep IS NOT NULL THEN 'duplicate'
-         |       WHEN cl.doc_id IS NULL THEN 'contaminated'
-         |       ELSE 'kept' END AS disposition,
-         |  dup.rep AS dup_of
-         |FROM corpus c
-         |JOIN flt f ON c.doc_id = f.doc_id
-         |JOIN repok r ON c.doc_id = r.doc_id
-         |LEFT JOIN (SELECT src, CAST(min(dst) AS BIGINT) AS rep
-         |           FROM reach GROUP BY src HAVING min(dst) <> src) dup
-         |  ON c.doc_id = dup.src
-         |LEFT JOIN clean cl ON c.doc_id = cl.doc_id""".stripMargin),
-    "multimodal_features" ->
-      """SELECT doc_id AS asset_id,
-        |  ['image','audio','video'][CAST(doc_id % 3 + 1 AS INT)] AS media_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS content_hash
-        |FROM documents""".stripMargin,
-    // closed-form prediction of the DECODED Y4M frames: asset id
-    // carries id%8+1 constant-luma (id*31+f*7 mod 256) planes of
-    // (id%16+8)x(id%12+6) — the oracle states what every decoded byte
-    // must be, the engine proves it by demuxing the real container
-    "multimodal_frames" ->
-      """WITH a AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 16 + 8 AS BIGINT) * CAST(doc_id % 12 + 6 AS BIGINT) AS plane,
-        |    CAST(doc_id % 8 + 1 AS INT) AS n_frames
-        |  FROM documents),
-        |f AS (SELECT doc_id, plane, unnest(range(0, n_frames)) AS i FROM a)
-        |SELECT doc_id AS asset_id, CAST(i AS INT) AS frame_idx,
-        |  CAST(plane AS BIGINT) AS n_frame_bytes,
-        |  CAST(((doc_id * 31 + i * 7) % 256) * plane AS BIGINT) AS sum_bytes,
-        |  CAST((doc_id * 31 + i * 7) % 256 AS INT) AS min_byte,
-        |  CAST((doc_id * 31 + i * 7) % 256 AS INT) AS max_byte
-        |FROM f""".stripMargin,
-    // full decode->resize->featurize replay: prefix-XOR via a bit_xor
-    // window, nearest-neighbor resize via a list_transform index map,
-    // hash over the lowercase hex rendering (DuckDB md5 is VARCHAR-only)
-    // integer NB: counts, smoothing, three log2 chains, argmin — the
-    // full train-and-serve replay
-    "nb_classify" -> nbSql,
-    // token entropy: both log2 chains replayed, floor-division rollup
-    "text_entropy" -> textEntropySql,
-    // exact integer moments: six pairwise n*cov + per-column n*var
-    "profile_covariance" -> profileCovarianceSql,
-    // the rewrite must change the plan, never the answer: the oracle
-    // is the natural base-table aggregate
-    "mv_rewrite" ->
-      """SELECT lang, source,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    // rollup: the per-lang aggregate re-aggregated from the
-    // (lang, source) view still equals the natural statement
-    "mv_rollup" ->
-      """SELECT lang,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1""".stripMargin,
-    // same law over the TxnLog-backed base table: the O(1)-guarded
-    // view serve changes the plan, never the answer
-    "mv_rewrite_graft" ->
-      """SELECT lang, source,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    // perceptual-hash image dedup: PNG is lossless, so the decoded
-    // plane is the prefix-XOR of the text bytes tiled to (w, h); the
-    // oracle replays resize, floor-mean aHash, pigeonhole bands, and
-    // the popcount verify — every pair the engine emits from REAL
-    // codec bytes must fall out of this closed form
-    "image_phash" ->
-      s"""WITH $imagePhashPairCtesSql
-        |SELECT asset_a, asset_b,
-        |  CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(ph_a, ph_b)) <= 3""".stripMargin,
-    "multimodal_dedup_ensemble" ->
-      s"""WITH RECURSIVE $minhashCandCtesSql,
-        |$imagePhashPairCtesSql,
-        |ipairs AS (
-        |  SELECT DISTINCT least(asset_a // 2, asset_b // 2) AS doc_a,
-        |    greatest(asset_a // 2, asset_b // 2) AS doc_b
-        |  FROM cand
-        |  WHERE bit_count(xor(ph_a, ph_b)) <= 3
-        |    AND asset_a // 2 <> asset_b // 2),
-        |edges AS (SELECT doc_a, doc_b FROM cands
-        |          UNION SELECT doc_a, doc_b FROM ipairs),
-        |e AS (SELECT doc_a AS a, doc_b AS b FROM edges
-        |      UNION SELECT doc_b, doc_a FROM edges),
-        |reach(src, dst) AS (
-        |  SELECT a, a FROM (SELECT DISTINCT a FROM e)
-        |  UNION
-        |  SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-        |cc AS (SELECT src AS doc_id, min(dst) AS cluster_id
-        |  FROM reach GROUP BY src),
-        |tev AS (SELECT DISTINCT doc_id FROM
-        |  (SELECT doc_a AS doc_id FROM cands UNION ALL SELECT doc_b FROM cands)),
-        |iev AS (SELECT DISTINCT doc_id FROM
-        |  (SELECT doc_a AS doc_id FROM ipairs UNION ALL SELECT doc_b FROM ipairs))
-        |SELECT cc.doc_id, cc.cluster_id,
-        |  CAST(CASE WHEN tev.doc_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS text_dup,
-        |  CAST(CASE WHEN iev.doc_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS image_dup
-        |FROM cc LEFT JOIN tev USING (doc_id) LEFT JOIN iev USING (doc_id)""".stripMargin,
-    "multimodal_pipeline" ->
-      """WITH base AS (
-        |  SELECT doc_id AS asset_id,
-        |    ['image','audio','video'][CAST(doc_id % 3 + 1 AS INT)] AS media_type,
-        |    text,
-        |    CAST(doc_id % 64 + 16 AS INT) AS w,
-        |    CAST(doc_id % 48 + 12 AS INT) AS h
-        |  FROM documents),
-        |bytes AS (
-        |  SELECT asset_id, media_type, w, h, i, ord(substr(text, CAST(i AS INT), 1)) AS b
-        |  FROM (SELECT *, unnest(range(1, length(text)+1)) AS i FROM base)),
-        |dec AS (
-        |  SELECT asset_id, media_type, w, h, i,
-        |    bit_xor(b) OVER (PARTITION BY asset_id ORDER BY i) AS d
-        |  FROM bytes),
-        |declist AS (
-        |  SELECT asset_id, media_type, w, h, list(d ORDER BY i) AS dl
-        |  FROM dec GROUP BY asset_id, media_type, w, h),
-        |resized AS (
-        |  SELECT asset_id, media_type,
-        |    list_transform(range(0, 192), p ->
-        |      dl[CAST(((least(h-1, (p // 16) * h // 12) * w
-        |               + least(w-1, (p % 16) * w // 16)) % len(dl)) + 1 AS INT)]) AS r
-        |  FROM declist)
-        |SELECT asset_id, media_type,
-        |  CAST(len(r) AS BIGINT) AS n_bytes,
-        |  CAST(list_sum(r) AS DOUBLE) / 192.0 AS mean_byte,
-        |  md5(array_to_string(list_transform(r, v -> format('{:02x}', v)), '')) AS content_hash
-        |FROM resized""".stripMargin,
-    "dedup_simhash" -> {
-      // 60-bit simhash rebuilt in SQL: token md5 -> 60-bit int (first
-      // 15 hex chars), per-bit +/-1 votes, sign-packed. Bit powers are
-      // exact BIGINT literals.
-      val sigTerms = (0 until 60).map { b =>
-        val pow = (1L << b).toString
-        s"""(CASE WHEN list_sum(list_transform(hs,
-           |      h -> CASE WHEN (h // $pow) % 2 = 1 THEN 1 ELSE -1 END)) > 0
-           |    THEN $pow ELSE 0 END)""".stripMargin
-      }.mkString(" +\n    ")
-      val blockDivisors = (0 until 4).map(b => (1L << (15 * b)).toString)
-      s"""WITH h AS (
-         |  SELECT doc_id, list_transform($toksSql,
-         |    t -> CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT)) AS hs
-         |  FROM documents),
-         |sigs AS (
-         |  SELECT doc_id, CAST($sigTerms AS BIGINT) AS sig FROM h),
-         |blocks AS (
-         |  SELECT doc_id, sig, t.i AS block_idx,
-         |    (sig // (${blockDivisors.mkString("[", ", ", "]")})[CAST(t.i AS INT) + 1]) % 32768 AS block_val
-         |  FROM sigs, range(0, 4) t(i))
-         |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         |  CAST(bit_count(xor(x.sig, y.sig)) AS INT) AS hamming
-         |FROM blocks x JOIN blocks y
-         |  ON x.block_idx = y.block_idx AND x.block_val = y.block_val
-         |WHERE x.doc_id < y.doc_id
-         |  AND bit_count(xor(x.sig, y.sig)) <= 3""".stripMargin
-    },
-    "sim_ivf" -> ivfScoringSql(
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS c_emb,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS c_norm
-         |  FROM embeddings ORDER BY vec_id ASC LIMIT 16)""".stripMargin),
-    // exact fixed-point Lloyd training unrolled (2 iterations), then
-    // the same IVF scoring chain — the trained-centroid twin that IS
-    // hash-checkable (see SparkEntry.simIvfKmeans for why the ML
-    // trainer is not)
-    "sim_ivf_lloyd" -> ivfScoringSql(lloydCentsSql(2)),
-    "kmeanspp_init" -> kmeansppSql(8, 8, 3, 2),
-    "embed_pca" -> pcaSql(3),
-    // the persisted index serves the SAME exact-Lloyd IVF search its
-    // build trained — one oracle for both (storage changes the plan,
-    // never the answer; the build/probe shared expression is the proof)
-    "sim_ivf_indexed" -> ivfScoringSql(lloydCentsSql(2)),
-    // filtered search: the same probing, candidates restricted to the
-    // predicate's survivors BEFORE ranking (exact post-filter k)
-    "sim_ivf_filtered" ->
-      ivfScoringSql(lloydCentsSql(2), " AND a.vec_id % 3 = 0"),
-    // storage mode (TxnLog-backed cells) must not change a result bit
-    "sim_ivf_indexed_txn" -> ivfScoringSql(lloydCentsSql(2)),
-    // rebuild heals append drift COMPLETELY: the engine path is
-    // subset-train → append → rebuild-from-own-cells, but the result
-    // must equal a fresh FULL-corpus build bit-for-bit — so the
-    // full-corpus Lloyd replay is the oracle (vs the incremental
-    // query, which answers to the subset-trained replay)
-    "sim_ivf_rebuilt" -> ivfScoringSql(lloydCentsSql(2)),
-    // recall@5 of the indexed search: the whole sim_ivf_indexed
-    // statement embedded as a derived table (its WITH scope is
-    // independent), intersected with brute-force truth
-    "ann_recall_indexed" -> {
-      val dotEq = dotSql("e.embedding", "bq.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("bq.q_emb", "bq.q_emb")
-      s"""WITH bq AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |bp2 AS (
-         |  SELECT bq.q_id, e.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM embeddings e, bq WHERE e.vec_id <> bq.q_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM bp2) WHERE rank <= 5),
-         |approx AS (SELECT q_id, vec_id FROM (
-         |${ivfScoringSql(lloydCentsSql(2))}
-         |) ivf),
-         |hit AS (SELECT t.q_id, count(*) AS n_hit
-         |  FROM truth t JOIN approx a ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-         |  GROUP BY 1),
-         |tsz AS (SELECT q_id, count(*) AS n_truth FROM truth GROUP BY 1),
-         |asz AS (SELECT q_id, count(*) AS n_approx FROM approx GROUP BY 1)
-         |SELECT t.q_id, t.n_truth,
-         |  CAST(coalesce(a.n_approx, 0) AS BIGINT) AS n_approx,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  CAST((1000000 * coalesce(h.n_hit, 0)) // t.n_truth AS BIGINT) AS recall_fp
-         |FROM tsz t LEFT JOIN asz a USING (q_id) LEFT JOIN hit h USING (q_id)""".stripMargin
-    },
-    // incremental index: the quantizer trained on the base subset only,
-    // every vector (base + appended) searchable — assignment w.r.t. the
-    // STORED centroids is what the maintenance path guarantees
-    "sim_ivf_indexed_incremental" ->
-      ivfScoringSql(lloydCentsSql(2, " WHERE vec_id < 250")),
-    // index health: the same cosine assignment as the scoring oracle,
-    // reduced to per-cell populations + integral-division share
-    "ivf_index_stats" -> ivfStatsOracleSql,
-    // the stats replay wrapped in the decision rule's exact-integer
-    // threshold arithmetic (nCells = 16, maxImbalanceBps = 30000,
-    // maxEmptyCells = 0 — the registered query's defaults)
-    "ivf_rebuild_advice" ->
-      s"""WITH stats_out AS ($ivfStatsOracleSql)
-         |SELECT CAST(16 AS BIGINT) AS n_cells,
-         |  count(*) AS populated_cells,
-         |  CAST(16 AS BIGINT) - count(*) AS empty_cells,
-         |  CAST(SUM(n_vectors) AS BIGINT) AS total_vectors,
-         |  MAX(share_bps) AS max_share_bps,
-         |  MAX(share_bps) * 16 AS imbalance_bps,
-         |  CAST(MAX(share_bps) * 16 > 30000
-         |       OR CAST(16 AS BIGINT) - count(*) > 0 AS INT) AS rebuild,
-         |  CASE
-         |    WHEN MAX(share_bps) * 16 > 30000
-         |         AND CAST(16 AS BIGINT) - count(*) > 0 THEN 'hot-cell+empty-cells'
-         |    WHEN MAX(share_bps) * 16 > 30000 THEN 'hot-cell'
-         |    WHEN CAST(16 AS BIGINT) - count(*) > 0 THEN 'empty-cells'
-         |    ELSE 'balanced' END AS reason
-         |FROM stats_out""".stripMargin,
-    // IVF-PQ composition: Lloyd training + cosine assignment/probing
-    // (shared cents/assigned/probed shapes), PQ codes + ADC restricted
-    // to probed pairs, exact-cosine rerank of the ADC top-20 — every
-    // stage replayed verbatim; `f` (micro fixed-point vectors) is
-    // shared between the Lloyd trainer and the PQ subvector slicer
-    "unigram_train" -> unigramTrainSql(),
-    "unigram_encode" -> unigramEncodeSql(),
-    "wordpiece_encode" -> wordpieceEncodeSql(),
-    // the encode statement embedded as a derived table, rolled up by
-    // language (the ann_recall_indexed embedding convention)
-    "unigram_fertility" ->
-      s"""SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(e.n_words) AS BIGINT) AS n_words,
-         |  CAST(SUM(e.n_unigram_tokens) AS BIGINT) AS n_tokens,
-         |  CAST(SUM(e.n_char_tokens) AS BIGINT) AS n_chars,
-         |  CAST((1000000 * SUM(e.n_unigram_tokens)) // greatest(SUM(e.n_words), 1) AS BIGINT) AS tokens_per_word_fp,
-         |  CAST((1000000 * SUM(e.n_char_tokens)) // greatest(SUM(e.n_unigram_tokens), 1) AS BIGINT) AS chars_per_token_fp
-         |FROM (
-         |${unigramEncodeSql()}
-         |) e JOIN documents d USING (doc_id)
-         |GROUP BY 1""".stripMargin,
-    // both engines md5 the same bytes; hex strings compare binary
-    "epoch_shuffle" ->
-      """WITH k AS (
-        |  SELECT doc_id, md5('epoch0:' || CAST(doc_id AS VARCHAR)) AS skey
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(ascii(substr(skey, 1, 1)) % 8 AS BIGINT) AS shard,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY ascii(substr(skey, 1, 1)) % 8
-        |    ORDER BY skey, doc_id) AS BIGINT) AS pos
-        |FROM k""".stripMargin,
-    "sim_ivfpq" -> simIvfPqOracleSql,
-    // the persisted-codes serving path must be bit-identical: same
-    // quantizers, same integer ADC, same rerank — the oracle statement
-    // is shared verbatim (the sim_ivf_indexed convention)
-    "sim_ivfpq_indexed" -> simIvfPqOracleSql,
-    // PQ-ADC: fixed-point subvectors, integer code assignment (ties ->
-    // lower centroid id), integer ADC sums — replayed exactly
-    "sim_pq" -> {
-      val sq16 = (a: String, b: String) =>
-        s"list_sum(list_transform(range(1, 17), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
-      s"""WITH f AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |sub AS (
-         |  SELECT vec_id, CAST(t.j AS INTEGER) AS sub_id,
-         |    fv[t.j*16+1 : t.j*16+16] AS sv
-         |  FROM f, range(0, 4) t(j)),
-         |cb AS (
-         |  SELECT sub_id, vec_id AS cent_id, sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id ASC LIMIT 16)),
-         |codes AS (
-         |  SELECT vec_id, sub_id, cent_id FROM (
-         |    SELECT s.vec_id, s.sub_id, c.cent_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub_id ORDER BY
-         |        ${sq16("s.sv", "c.cv")} ASC, c.cent_id ASC) AS rn
-         |    FROM sub s JOIN cb c USING (sub_id)) WHERE rn = 1),
-         |dtab AS (
-         |  SELECT s.vec_id AS q_id, s.sub_id, c.cent_id,
-         |    CAST(${sq16("s.sv", "c.cv")} AS BIGINT) AS d
-         |  FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 10),
-         |adc AS (
-         |  SELECT t.q_id, k.vec_id, CAST(SUM(t.d) AS BIGINT) AS adc
-         |  FROM codes k JOIN dtab t ON k.sub_id = t.sub_id AND k.cent_id = t.cent_id
-         |  WHERE k.vec_id <> t.q_id GROUP BY 1, 2)
-         |SELECT q_id, vec_id, rank, adc FROM (
-         |  SELECT q_id, vec_id, adc,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY adc ASC, vec_id ASC) AS BIGINT) AS rank
-         |  FROM adc) WHERE rank <= 5""".stripMargin
-    },
-    "sim_pq_trained" -> pqTrainedSql(2),
-    "sim_opq" -> {
-      val sq16 = (a: String, b: String) =>
-        s"list_sum(list_transform(range(1, 17), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
-      s"""WITH f0 AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |e AS (SELECT vec_id, t.j AS p, fv[CAST(t.j + 1 AS INT)] AS v
-         |      FROM f0, range(0, 64) t(j)),
-         |vr AS (
-         |  SELECT p,
-         |    CAST(count(*) AS HUGEINT) * SUM(CAST(v AS HUGEINT) * CAST(v AS HUGEINT))
-         |      - SUM(CAST(v AS HUGEINT)) * SUM(CAST(v AS HUGEINT)) AS var_n
-         |  FROM e GROUP BY p),
-         |gate AS (
-         |  SELECT max(sv) * 4 >= SUM(sv) * 2 AS skewed
-         |  FROM (SELECT p // 16 AS sub, SUM(var_n) AS sv FROM vr GROUP BY 1)),
-         |rk AS (SELECT p, row_number() OVER (ORDER BY var_n DESC, p ASC) - 1 AS r FROM vr),
-         |pm AS (SELECT (CASE WHEN (r // 4) % 2 = 0 THEN r % 4 ELSE 3 - (r % 4) END) * 16
-         |         + (r // 4) AS newpos, p AS olddim FROM rk),
-         |ol AS (SELECT list(olddim ORDER BY newpos) AS olds FROM pm),
-         |f AS (
-         |  SELECT vec_id,
-         |    CASE WHEN skewed
-         |      THEN list_transform(range(0, 64),
-         |             q -> fv[CAST(olds[CAST(q + 1 AS INT)] + 1 AS INT)])
-         |      ELSE fv END AS fv
-         |  FROM f0, ol, gate),
-         |sub AS (
-         |  SELECT vec_id, CAST(t.j AS INTEGER) AS sub_id,
-         |    fv[t.j*16+1 : t.j*16+16] AS sv
-         |  FROM f, range(0, 4) t(j)),
-         |cb AS (
-         |  SELECT sub_id, vec_id AS cent_id, sv AS cv FROM sub
-         |  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id ASC LIMIT 16)),
-         |codes AS (
-         |  SELECT vec_id, sub_id, cent_id FROM (
-         |    SELECT s.vec_id, s.sub_id, c.cent_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub_id ORDER BY
-         |        ${sq16("s.sv", "c.cv")} ASC, c.cent_id ASC) AS rn
-         |    FROM sub s JOIN cb c USING (sub_id)) WHERE rn = 1),
-         |dtab AS (
-         |  SELECT s.vec_id AS q_id, s.sub_id, c.cent_id,
-         |    CAST(${sq16("s.sv", "c.cv")} AS BIGINT) AS d
-         |  FROM sub s JOIN cb c USING (sub_id) WHERE s.vec_id < 10),
-         |adc AS (
-         |  SELECT t.q_id, k.vec_id, CAST(SUM(t.d) AS BIGINT) AS adc
-         |  FROM codes k JOIN dtab t ON k.sub_id = t.sub_id AND k.cent_id = t.cent_id
-         |  WHERE k.vec_id <> t.q_id GROUP BY 1, 2)
-         |SELECT q_id, vec_id, rank, adc FROM (
-         |  SELECT q_id, vec_id, adc,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY adc ASC, vec_id ASC) AS BIGINT) AS rank
-         |  FROM adc) WHERE rank <= 5""".stripMargin
-    },
-    "semantic_dedup" -> {
-      val cosExpr =
-        s"round(${dotSql("b.embedding", "r.rep_emb")} / (b.nrm * r.rep_norm), 9)"
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding, ${bucketSql("embedding", 6, 0)} AS bucket,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings),
-         |reps AS (
-         |  SELECT bucket, vec_id AS rep_id, embedding AS rep_emb,
-         |    nrm AS rep_norm FROM (
-         |    SELECT *, ROW_NUMBER() OVER (
-         |        PARTITION BY bucket ORDER BY nrm DESC, vec_id ASC) AS rn
-         |    FROM b) WHERE rn = 1)
-         |SELECT b.vec_id, CAST(b.bucket AS BIGINT) AS bucket, r.rep_id,
-         |  $cosExpr AS cos,
-         |  (b.vec_id = r.rep_id OR $cosExpr < 0.2) AS keep
-         |FROM b JOIN reps r USING (bucket)""".stripMargin
-    },
-    "embed_diversity" -> {
-      s"""WITH b AS (
-         |  SELECT vec_id, ${bucketSql("embedding", 6, 0)} AS bucket,
-         |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings)
-         |SELECT vec_id, CAST(bucket AS BIGINT) AS bucket,
-         |  CAST(rnk AS BIGINT) AS bucket_rank FROM (
-         |  SELECT vec_id, bucket,
-         |    ROW_NUMBER() OVER (PARTITION BY bucket ORDER BY nrm DESC, vec_id ASC) AS rnk
-         |  FROM b) WHERE rnk <= 3""".stripMargin
-    },
-    "sim_lsh" -> {
-      val dotEq = dotSql("cb.embedding", "qb.q_emb")
-      val normE = dotSql("cb.embedding", "cb.embedding")
-      val normQ = dotSql("qb.q_emb", "qb.q_emb")
-      s"""WITH qb AS (
-         |  SELECT vec_id AS q_id, embedding AS q_emb,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings WHERE vec_id < 10),
-         |cb AS (
-         |  SELECT vec_id, embedding,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings),
-         |pairs AS (
-         |  SELECT qb.q_id, cb.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM cb JOIN qb USING (bucket) WHERE cb.vec_id <> qb.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    "sim_lsh_multiprobe" -> {
-      val dotEq = dotSql("cb.embedding", "qp.q_emb")
-      val normE = dotSql("cb.embedding", "cb.embedding")
-      val normQ = dotSql("qp.q_emb", "qp.q_emb")
-      s"""WITH qb AS (
-         |  SELECT vec_id AS q_id, embedding AS q_emb,
-         |    ${probeBucketsSql("embedding", 8, 2, 0)} AS probes
-         |  FROM embeddings WHERE vec_id < 10),
-         |qp AS (SELECT q_id, q_emb, unnest(probes) AS bucket FROM qb),
-         |cb AS (
-         |  SELECT vec_id, embedding,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings),
-         |pairs AS (
-         |  SELECT qp.q_id, cb.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM cb JOIN qp USING (bucket) WHERE cb.vec_id <> qp.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    "embed_neardup" -> {
-      val buckets = (0 until 4).map(t => bucketSql("embedding", 6, t * 6))
-        .mkString("[", ",\n      ", "]")
-      val dotXY = dotSql("x.embedding", "y.embedding")
-      s"""WITH v AS (
-         |  SELECT vec_id, embedding, sqrt(${dotSql("embedding", "embedding")}) AS nrm,
-         |    $buckets AS bks
-         |  FROM embeddings),
-         |b AS (
-         |  SELECT vec_id, embedding, nrm, t.i AS table_idx, bks[CAST(t.i AS INT) + 1] AS bucket
-         |  FROM v, range(0, 4) t(i))
-         |SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b,
-         |  round($dotXY / (x.nrm * y.nrm), 9) AS cos
-         |FROM b x JOIN b y ON x.table_idx = y.table_idx AND x.bucket = y.bucket
-         |WHERE x.vec_id < y.vec_id
-         |  AND $dotXY / (x.nrm * y.nrm) >= 0.4""".stripMargin
-    },
-    "sim_topk" -> bruteTopKSql,
-    // RQ replayed at the PRODUCTION budget: two additive first-k
-    // codebooks, deterministic assignments, the nC1 x nC2
-    // reconstruction LUT, integer ADC, exact-cosine rerank
-    "sim_rq" -> {
-      val dotEq = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      s"""WITH f AS MATERIALIZED (
-         |  SELECT vec_id, embedding, list_transform(embedding,
-         |    v -> CAST(round(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS fv
-         |  FROM embeddings),
-         |q AS (SELECT vec_id AS q_id, embedding AS q_emb, fv AS qv FROM f WHERE vec_id < 10),
-         |cb1 AS (SELECT vec_id AS c1_id, fv AS c1 FROM f ORDER BY vec_id ASC LIMIT 16),
-         |a1 AS MATERIALIZED (
-         |  SELECT vec_id, c1_id, list_transform(range(1, 65), i -> fv[i] - c1[i]) AS rv
-         |  FROM (
-         |    SELECT f.vec_id, f.fv, c.c1_id, c.c1,
-         |      ROW_NUMBER() OVER (PARTITION BY f.vec_id
-         |        ORDER BY list_sum(list_transform(range(1, 65), i -> (f.fv[i] - c.c1[i]) * (f.fv[i] - c.c1[i]))) ASC, c.c1_id ASC) AS rn
-         |    FROM f CROSS JOIN cb1 c) WHERE rn = 1),
-         |cb2 AS (SELECT vec_id AS c2_id, rv AS c2 FROM a1 ORDER BY vec_id ASC LIMIT 16),
-         |a2 AS MATERIALIZED (
-         |  SELECT vec_id, c1_id, c2_id FROM (
-         |    SELECT r.vec_id, r.c1_id, c.c2_id,
-         |      ROW_NUMBER() OVER (PARTITION BY r.vec_id
-         |        ORDER BY list_sum(list_transform(range(1, 65), i -> (r.rv[i] - c.c2[i]) * (r.rv[i] - c.c2[i]))) ASC, c.c2_id ASC) AS rn
-         |    FROM a1 r CROSS JOIN cb2 c) WHERE rn = 1),
-         |lut AS MATERIALIZED (
-         |  SELECT q.q_id, c1.c1_id, c2.c2_id, list_sum(list_transform(range(1, 65), i -> (q.qv[i] - (c1.c1[i] + c2.c2[i])) * (q.qv[i] - (c1.c1[i] + c2.c2[i])))) AS d
-         |  FROM q CROSS JOIN cb1 c1 CROSS JOIN cb2 c2),
-         |adc AS (
-         |  SELECT l.q_id, a.vec_id, l.d
-         |  FROM a2 a JOIN lut l ON l.c1_id = a.c1_id AND l.c2_id = a.c2_id
-         |  WHERE a.vec_id <> l.q_id),
-         |coarse AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d ASC, vec_id ASC) AS crank
-         |  FROM adc) WHERE crank <= 20),
-         |pairs AS (SELECT c.q_id, c.vec_id,
-         |  $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM coarse c JOIN embeddings e ON e.vec_id = c.vec_id
-         |  JOIN q ON q.q_id = c.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    // SQ8 replayed at the PRODUCTION budget: micro-unit quantization,
-    // integer code/dequant floor divisions, integer ADC, then the
-    // exact-cosine re-rank — every stage bit-exact cross-engine
-    "sim_sq8" -> {
-      val dotEq = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |ce AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-         |  CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) AS vm
-         |  FROM embeddings),
-         |grid AS (SELECT pos, MIN(vm) AS mn, MAX(vm) AS mx FROM ce GROUP BY 1),
-         |deq AS (SELECT vec_id, ce.pos,
-         |  mn + (LEAST(GREATEST(((vm - mn) * 255) // GREATEST(mx - mn, 1), 0), 255)
-         |        * (mx - mn)) // 255 AS dv
-         |  FROM ce JOIN grid ON grid.pos = ce.pos),
-         |qe AS (SELECT q_id, generate_subscripts(q_emb, 1) AS pos,
-         |  CAST(round(CAST(unnest(q_emb) AS DOUBLE) * 1000000.0) AS BIGINT) AS qm
-         |  FROM q),
-         |adc AS (SELECT qe.q_id, deq.vec_id, CAST(SUM(qm * dv) AS BIGINT) AS adc
-         |  FROM deq JOIN qe ON qe.pos = deq.pos AND deq.vec_id <> qe.q_id
-         |  GROUP BY 1, 2),
-         |coarse AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adc DESC, vec_id ASC) AS crank
-         |  FROM adc) WHERE crank <= 20),
-         |pairs AS (SELECT c.q_id, c.vec_id,
-         |  $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM coarse c JOIN embeddings e ON e.vec_id = c.vec_id
-         |  JOIN q ON q.q_id = c.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    // MMR at λ=1/2, 3 unrolled greedy rounds (the bpe_merges
-    // discipline): comparison key is rel − maxsim, one double
-    // subtraction of engine-exact cosines; rel is the top-20 list's
-    // rounded cosine on BOTH sides
-    "mmr_rerank" -> {
-      def cosS(a: String, b: String) =
-        s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |bp AS (
-         |  SELECT q.q_id, e.vec_id, e.embedding,
-         |    ${cosS("e.embedding", "q.q_emb")} AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |cand AS (SELECT q_id, vec_id, embedding, round(cos, 9) AS rel FROM (
-         |  SELECT q_id, vec_id, embedding, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM bp) WHERE rank <= 20),
-         |s1 AS (SELECT q_id, vec_id, embedding, rel FROM (
-         |  SELECT q_id, vec_id, embedding, rel,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rel DESC, vec_id ASC) AS rn
-         |  FROM cand) WHERE rn = 1),
-         |r2 AS (
-         |  SELECT c.q_id, c.vec_id, c.embedding, c.rel,
-         |    ${cosS("c.embedding", "s1.embedding")} AS maxsim
-         |  FROM cand c JOIN s1 ON c.q_id = s1.q_id AND c.vec_id <> s1.vec_id),
-         |s2 AS (SELECT q_id, vec_id, embedding, rel FROM (
-         |  SELECT q_id, vec_id, embedding, rel,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rel - maxsim DESC, vec_id ASC) AS rn
-         |  FROM r2) WHERE rn = 1),
-         |r3 AS (
-         |  SELECT c.q_id, c.vec_id, c.rel,
-         |    greatest(${cosS("c.embedding", "s1.embedding")},
-         |             ${cosS("c.embedding", "s2.embedding")}) AS maxsim
-         |  FROM cand c
-         |  JOIN s1 ON c.q_id = s1.q_id AND c.vec_id <> s1.vec_id
-         |  JOIN s2 ON c.q_id = s2.q_id AND c.vec_id <> s2.vec_id),
-         |s3 AS (SELECT q_id, vec_id, rel FROM (
-         |  SELECT q_id, vec_id, rel,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rel - maxsim DESC, vec_id ASC) AS rn
-         |  FROM r3) WHERE rn = 1)
-         |SELECT q_id, vec_id, CAST(1 AS BIGINT) AS pick, rel FROM s1
-         |UNION ALL SELECT q_id, vec_id, CAST(2 AS BIGINT), rel FROM s2
-         |UNION ALL SELECT q_id, vec_id, CAST(3 AS BIGINT), rel FROM s3""".stripMargin
-    },
-    // recall@k: both ranking chains replayed (brute truth + LSH
-    // bucket-restricted approx), intersected on (q_id, vec_id),
-    // recall in integer millionths by floor division
-    // truncated-prefix replay: the approx leg is the same brute ranker
-    // over the first 16 dims (range(1, 17) in the dot/norm sums)
-    "mrl_recall" -> {
-      def dot16(a: String, b: String) =
-        s"list_sum(list_transform(range(1, 17), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-      val dotF = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      val dotT = dot16("e.embedding", "q.q_emb")
-      val normET = dot16("e.embedding", "e.embedding")
-      val normQT = dot16("q.q_emb", "q.q_emb")
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |bp AS (
-         |  SELECT q.q_id, e.vec_id, $dotF / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM bp) WHERE rank <= 5),
-         |tp AS (
-         |  SELECT q.q_id, e.vec_id, $dotT / (sqrt($normET) * sqrt($normQT)) AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |approx AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM tp) WHERE rank <= 5),
-         |hit AS (SELECT t.q_id, count(*) AS n_hit
-         |  FROM truth t JOIN approx a ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-         |  GROUP BY 1),
-         |tsz AS (SELECT q_id, count(*) AS n_truth FROM truth GROUP BY 1),
-         |asz AS (SELECT q_id, count(*) AS n_approx FROM approx GROUP BY 1)
-         |SELECT t.q_id, t.n_truth,
-         |  CAST(coalesce(a.n_approx, 0) AS BIGINT) AS n_approx,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  CAST((1000000 * coalesce(h.n_hit, 0)) // t.n_truth AS BIGINT) AS recall_fp
-         |FROM tsz t LEFT JOIN asz a USING (q_id) LEFT JOIN hit h USING (q_id)""".stripMargin
-    },
-    "ann_recall" -> {
-      val dotEq = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      val dotL = dotSql("cb.embedding", "qb.q_emb")
-      val normCb = dotSql("cb.embedding", "cb.embedding")
-      val normQb = dotSql("qb.q_emb", "qb.q_emb")
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |bp AS (
-         |  SELECT q.q_id, e.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |truth AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM bp) WHERE rank <= 5),
-         |qb AS (
-         |  SELECT vec_id AS q_id, embedding AS q_emb,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings WHERE vec_id < 10),
-         |cb AS (
-         |  SELECT vec_id, embedding,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings),
-         |lp AS (
-         |  SELECT qb.q_id, cb.vec_id,
-         |    $dotL / (sqrt($normCb) * sqrt($normQb)) AS cos
-         |  FROM cb JOIN qb USING (bucket) WHERE cb.vec_id <> qb.q_id),
-         |approx AS (SELECT q_id, vec_id FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM lp) WHERE rank <= 5),
-         |hit AS (SELECT t.q_id, count(*) AS n_hit
-         |  FROM truth t JOIN approx a ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-         |  GROUP BY 1),
-         |tsz AS (SELECT q_id, count(*) AS n_truth FROM truth GROUP BY 1),
-         |asz AS (SELECT q_id, count(*) AS n_approx FROM approx GROUP BY 1)
-         |SELECT t.q_id, t.n_truth,
-         |  CAST(coalesce(a.n_approx, 0) AS BIGINT) AS n_approx,
-         |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-         |  CAST((1000000 * coalesce(h.n_hit, 0)) // t.n_truth AS BIGINT) AS recall_fp
-         |FROM tsz t LEFT JOIN asz a USING (q_id) LEFT JOIN hit h USING (q_id)""".stripMargin
-    },
-    // nDCG@5: the same truth/approx ranking chains, then per-term
-    // graded gains discounted by the 16-step integer log2 (one UNION
-    // feeds both DCG and IDCG through a single replayed chain)
-    "ann_ndcg" -> {
-      val dotEq = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      val dotL = dotSql("cb.embedding", "qb.q_emb")
-      val normCb = dotSql("cb.embedding", "cb.embedding")
-      val normQb = dotSql("qb.q_emb", "qb.q_emb")
-      val lg = (1 to 16).map(j =>
-        s"""g$j AS (SELECT side, q_id, rel,
-           |  CASE WHEN ((x*x) >> 20) >= 2097152 THEN ((x*x) >> 20) >> 1 ELSE (x*x) >> 20 END AS x,
-           |  CASE WHEN ((x*x) >> 20) >= 2097152 THEN acc*2+1 ELSE acc*2 END AS acc, msb
-           |  FROM g${j - 1})""".stripMargin).mkString(",\n")
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |bp AS (
-         |  SELECT q.q_id, e.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |truth AS (SELECT q_id, vec_id, rank FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM bp) WHERE rank <= 5),
-         |qb AS (
-         |  SELECT vec_id AS q_id, embedding AS q_emb,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings WHERE vec_id < 10),
-         |cb AS (
-         |  SELECT vec_id, embedding,
-         |    ${bucketSql("embedding", 8, 0)} AS bucket
-         |  FROM embeddings),
-         |lp AS (
-         |  SELECT qb.q_id, cb.vec_id,
-         |    $dotL / (sqrt($normCb) * sqrt($normQb)) AS cos
-         |  FROM cb JOIN qb USING (bucket) WHERE cb.vec_id <> qb.q_id),
-         |approx AS (SELECT q_id, vec_id, rank FROM (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM lp) WHERE rank <= 5),
-         |terms AS (
-         |  SELECT 'a' AS side, a.q_id,
-         |    CAST(coalesce(6 - t.rank, 0) AS BIGINT) AS rel,
-         |    CAST(a.rank AS BIGINT) AS r
-         |  FROM approx a LEFT JOIN truth t ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-         |  UNION ALL
-         |  SELECT 't' AS side, q_id, CAST(6 - rank AS BIGINT) AS rel,
-         |    CAST(rank AS BIGINT) AS r FROM truth),
-         |g0 AS (SELECT side, q_id, rel,
-         |  (CAST(r + 1 AS BIGINT) << 20) >> (length(bin(r + 1)) - 1) AS x,
-         |  CAST(0 AS BIGINT) AS acc,
-         |  CAST(length(bin(r + 1)) - 1 AS BIGINT) AS msb FROM terms),
-         |$lg,
-         |gains AS (SELECT side, q_id,
-         |  (rel * 65536000000) // (msb * 65536 + acc) AS gain FROM g16),
-         |agg AS (SELECT q_id,
-         |  SUM(gain) FILTER (WHERE side = 'a') AS dcg,
-         |  SUM(gain) FILTER (WHERE side = 't') AS idcg
-         |  FROM gains GROUP BY 1)
-         |SELECT q_id, CAST(coalesce(dcg, 0) AS BIGINT) AS dcg_fp,
-         |  CAST(idcg AS BIGINT) AS idcg_fp,
-         |  CAST((1000000 * coalesce(dcg, 0)) // idcg AS BIGINT) AS ndcg_fp
-         |FROM agg""".stripMargin
-    },
-    // exact KNN-Shapley recurrence replayed verbatim: same rounded
-    // cosine ranking, same positive integer divisions (// == div on
-    // positive operands), same integer suffix sum
-    "data_shapley" -> {
-      val dotTQ = dotSql("t.embedding", "q.q_emb")
-      val normT = dotSql("t.embedding", "t.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      s"""WITH e AS (SELECT vec_id, embedding, CAST(vec_id % 3 AS INT) AS label FROM embeddings),
-         |q AS (SELECT vec_id AS q_id, embedding AS q_emb, label AS q_label FROM e WHERE vec_id < 10),
-         |sc AS (
-         |  SELECT t.vec_id, q.q_id,
-         |    CAST(t.label = q.q_label AS INT) AS a,
-         |    round($dotTQ / (sqrt($normT) * sqrt($normQ)), 9) AS cos
-         |  FROM e t, q WHERE t.vec_id >= 10),
-         |r AS (
-         |  SELECT vec_id, q_id, a,
-         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rnk,
-         |    count(*) OVER (PARTITION BY q_id) AS n,
-         |    lead(a) OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS a_next
-         |  FROM sc),
-         |c AS (
-         |  SELECT vec_id, q_id, rnk,
-         |    CASE WHEN a_next IS NULL THEN (CAST(a AS BIGINT) * 1000000000000) // n
-         |         ELSE (CASE WHEN a > a_next THEN 1 WHEN a < a_next THEN -1 ELSE 0 END)
-         |              * ((1000000000000 * least(5, rnk)) // (5 * rnk)) END AS contrib
-         |  FROM r),
-         |s AS (
-         |  SELECT vec_id, q_id,
-         |    SUM(contrib) OVER (PARTITION BY q_id ORDER BY rnk DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sv
-         |  FROM c)
-         |SELECT vec_id, CAST(SUM(sv) AS BIGINT) AS shapley_micros
-         |FROM s GROUP BY vec_id""".stripMargin
-    },
-    // ANN-screened Shapley: the sim_project_rerank screen (same plane
-    // literals, same raw-cos cut) restricted to train ids, then the
-    // data_shapley recurrence over ONLY the screened candidates with
-    // n = each test point's candidate count
-    "data_shapley_screened" -> {
-      val cpCols = (0 until 32)
-        .map(p => projMicroSql("embedding", p) + s" AS p$p").mkString(",\n  ")
-      val coarseSum = (0 until 32).map(p => s"cp.p$p * qp.p$p").mkString(" + ")
-      val dotEq = dotSql("t.embedding", "q.embedding")
-      val normT = dotSql("t.embedding", "t.embedding")
-      val normQ = dotSql("q.embedding", "q.embedding")
-      s"""WITH cp AS (SELECT vec_id,
-         |  $cpCols
-         |FROM embeddings WHERE vec_id >= 10),
-         |qp AS (SELECT vec_id,
-         |  $cpCols
-         |FROM embeddings WHERE vec_id < 10),
-         |coarse AS (
-         |  SELECT qp.vec_id AS q_id, cp.vec_id, ($coarseSum) AS coarse
-         |  FROM cp, qp),
-         |surv AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY coarse DESC, vec_id ASC) AS crank
-         |    FROM coarse) WHERE crank <= 100),
-         |fine AS (
-         |  SELECT s.q_id, s.vec_id,
-         |    $dotEq / (sqrt($normT) * sqrt($normQ)) AS cos
-         |  FROM surv s
-         |  JOIN embeddings t ON t.vec_id = s.vec_id
-         |  JOIN embeddings q ON q.vec_id = s.q_id),
-         |sc AS (
-         |  SELECT vec_id, q_id, round(cos, 9) AS cos,
-         |    CAST((vec_id % 3) = (q_id % 3) AS INT) AS a FROM (
-         |    SELECT q_id, vec_id, cos,
-         |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |    FROM fine) WHERE rank <= 50),
-         |r AS (
-         |  SELECT vec_id, q_id, a,
-         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rnk,
-         |    count(*) OVER (PARTITION BY q_id) AS n,
-         |    lead(a) OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS a_next
-         |  FROM sc),
-         |c AS (
-         |  SELECT vec_id, q_id, rnk,
-         |    CASE WHEN a_next IS NULL THEN (CAST(a AS BIGINT) * 1000000000000) // n
-         |         ELSE (CASE WHEN a > a_next THEN 1 WHEN a < a_next THEN -1 ELSE 0 END)
-         |              * ((1000000000000 * least(5, rnk)) // (5 * rnk)) END AS contrib
-         |  FROM r),
-         |s AS (
-         |  SELECT vec_id, q_id,
-         |    SUM(contrib) OVER (PARTITION BY q_id ORDER BY rnk DESC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sv
-         |  FROM c)
-         |SELECT vec_id, CAST(SUM(sv) AS BIGINT) AS shapley_micros
-         |FROM s GROUP BY vec_id""".stripMargin
-    },
-    // full-probe IVF (nProbe = nCells) scores every pair exactly once,
-    // so the result is brute-force top-k regardless of the ML-trained
-    // centroids — the same oracle verifies the exact-at-full-probe
-    // invariant end-to-end (see simIvfKmeans scaladoc)
-    "sim_ivf_kmeans" -> bruteTopKSql,
-    // coarse-to-fine over the JL projection: integer coarse scores are
-    // replayed from the same plane literals as embed_project, the fine
-    // stage is sim_topk's cosine restricted to the coarse survivors
-    "sim_project_rerank" -> {
-      val cpCols = (0 until 32)
-        .map(p => projMicroSql("embedding", p) + s" AS p$p").mkString(",\n  ")
-      val coarseSum = (0 until 32).map(p => s"cp.p$p * qp.p$p").mkString(" + ")
-      val dotEq = dotSql("e.embedding", "q.embedding")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.embedding", "q.embedding")
-      s"""WITH cp AS (SELECT vec_id,
-         |  $cpCols
-         |FROM embeddings),
-         |qp AS (SELECT * FROM cp WHERE vec_id < 10),
-         |coarse AS (
-         |  SELECT qp.vec_id AS q_id, cp.vec_id, ($coarseSum) AS coarse
-         |  FROM cp, qp WHERE cp.vec_id <> qp.vec_id),
-         |surv AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY coarse DESC, vec_id ASC) AS crank
-         |    FROM coarse) WHERE crank <= 100),
-         |pairs AS (
-         |  SELECT s.q_id, s.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM surv s
-         |  JOIN embeddings e ON e.vec_id = s.vec_id
-         |  JOIN embeddings q ON q.vec_id = s.q_id)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM pairs) WHERE rank <= 5""".stripMargin
-    },
-    // sim_topk banded to the hard-negative zone before ranking — same
-    // dot-product fold, same tie-breaks
-    "hard_negatives" -> {
-      val dotEq = dotSql("e.embedding", "q.q_emb")
-      val normE = dotSql("e.embedding", "e.embedding")
-      val normQ = dotSql("q.q_emb", "q.q_emb")
-      s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-         |pairs AS (
-         |  SELECT q.q_id, e.vec_id,
-         |    $dotEq / (sqrt($normE) * sqrt($normQ)) AS cos
-         |  FROM embeddings e, q WHERE e.vec_id <> q.q_id),
-         |banded AS (SELECT * FROM pairs WHERE cos >= 0.2 AND cos < 0.4)
-         |SELECT q_id, vec_id, rank, round(cos, 9) AS cos FROM (
-         |  SELECT q_id, vec_id, cos,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC) AS rank
-         |  FROM banded) WHERE rank <= 5""".stripMargin
-    },
-    // same 6-token non-overlapping segmentation, same 60-bit md5 fold,
-    // same (df desc, hash asc) capped boilerplate cut, then the same
-    // list-filter rewrite — the bad list rides in on a one-row cross
-    "boilerplate_strip" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS t FROM documents),
-         |cs AS (SELECT doc_id,
-         |  list_transform(range(0, CAST(ceil(len(t) / 6.0) AS INT)),
-         |    i -> array_to_string(t[i*6+1:i*6+6], ' ')) AS segs FROM tk),
-         |sp AS (SELECT doc_id, unnest(list_distinct(segs)) AS seg FROM cs),
-         |dfc AS (SELECT CAST(concat('0x', substring(md5(seg), 1, 15)) AS BIGINT) AS seg_h,
-         |    count(*) AS df FROM sp GROUP BY 1),
-         |bad AS (SELECT seg_h FROM dfc WHERE df > 1
-         |  ORDER BY df DESC, seg_h ASC LIMIT 256),
-         |badl AS (SELECT coalesce(list(seg_h), []) AS bl FROM bad),
-         |r AS (SELECT doc_id, segs,
-         |    list_filter(segs, s -> NOT list_contains(bl,
-         |      CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT))) AS keep
-         |  FROM cs, badl)
-         |SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_segments,
-         |  CAST(len(segs) - len(keep) AS BIGINT) AS n_removed,
-         |  array_to_string(keep, ' ') AS text_clean
-         |FROM r""".stripMargin,
-    // hashed-bucket unigram distributions with add-1 smoothing in
-    // fixed-point millionths; score = Σ_tokens (p_en − p_raw); top-100
-    // by (score desc, doc_id) flagged selected
-    "dsir_weights" ->
-      s"""WITH tb AS (
-         |  SELECT doc_id,
-         |    CAST(CAST(concat('0x', substring(md5(t), 1, 15)) AS BIGINT) % 64 AS INT) AS b
-         |  FROM (SELECT doc_id, unnest($toksSql) AS t FROM documents)),
-         |rc AS (SELECT b, count(*) AS c_r FROM tb GROUP BY 1),
-         |tc AS (SELECT b, count(*) AS c_t FROM tb
-         |  WHERE doc_id IN (SELECT doc_id FROM documents WHERE lang = 'en') GROUP BY 1),
-         |rt AS (SELECT sum(c_r) AS n_r FROM rc),
-         |tt AS (SELECT coalesce(sum(c_t), 0) AS n_t FROM tc),
-         |probs AS (
-         |  SELECT rc.b,
-         |    (1000000 * (coalesce(tc.c_t, 0) + 1)) // (tt.n_t + 64) AS p_t_fp,
-         |    (1000000 * (rc.c_r + 1)) // (rt.n_r + 64) AS p_r_fp
-         |  FROM rc LEFT JOIN tc USING (b), rt, tt),
-         |perdoc AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |    CAST(sum(p_t_fp - p_r_fp) AS BIGINT) AS score_fp
-         |  FROM tb JOIN probs USING (b) GROUP BY 1),
-         |sel AS (SELECT doc_id FROM perdoc ORDER BY score_fp DESC, doc_id ASC LIMIT 100)
-         |SELECT doc_id, n_tokens, score_fp,
-         |  doc_id IN (SELECT doc_id FROM sel) AS selected
-         |FROM perdoc""".stripMargin,
-    // the same URL construction, then the normal form replayed rule by
-    // rule: lowercase scheme/authority, default-port strip, tracking-
-    // param drop + bytewise sort, trailing-slash collapse
-    "url_normalize" ->
-      """WITH u0 AS (
-        |  SELECT doc_id,
-        |    concat(
-        |      CASE WHEN doc_id % 2 = 0 THEN 'HTTP://' ELSE 'HTTPS://' END,
-        |      'WWW.', upper(source),
-        |      CASE WHEN doc_id % 2 = 0 THEN '.Example.COM:80' ELSE '.Sample.CO.UK:443' END,
-        |      '/Docs/', CAST(doc_id % 7 AS VARCHAR),
-        |      CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END,
-        |      '?utm_source=feed&b=2&a=1',
-        |      CASE WHEN doc_id % 5 = 0 THEN '&fbclid=XYZ' ELSE '' END,
-        |      CASE WHEN doc_id % 4 = 0 THEN '#frag' ELSE '' END) AS url
-        |  FROM documents),
-        |parts AS (
-        |  SELECT doc_id, url,
-        |    regexp_replace(trim(url), '#.*$', '') AS u
-        |  FROM u0),
-        |pieces AS (
-        |  SELECT doc_id, url, u,
-        |    lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-        |    lower(regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)) AS auth,
-        |    regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS raw_path,
-        |    regexp_extract(u, '\?([^#]*)', 1) AS raw_query
-        |  FROM parts),
-        |norm AS (
-        |  SELECT doc_id, url, scheme,
-        |    CASE WHEN scheme = 'http' THEN regexp_replace(auth, ':80$', '')
-        |         WHEN scheme = 'https' THEN regexp_replace(auth, ':443$', '')
-        |         ELSE auth END AS auth_n,
-        |    regexp_replace(auth, ':[0-9]+$', '') AS host,
-        |    CASE WHEN regexp_replace(raw_path, '/+$', '') = '' THEN '/'
-        |         ELSE regexp_replace(raw_path, '/+$', '') END AS path_n,
-        |    list_sort(list_filter(string_split(raw_query, '&'),
-        |      p -> p <> '' AND NOT regexp_matches(
-        |        regexp_extract(p, '^([^=]*)', 1), '^(utm_[^=]*|fbclid|gclid|ref)$'))) AS params
-        |  FROM pieces),
-        |dom AS (
-        |  SELECT doc_id, url, scheme, auth_n, host, path_n, params,
-        |    string_split(host, '.') AS ls
-        |  FROM norm)
-        |SELECT doc_id, url,
-        |  concat(scheme, '://', auth_n, path_n,
-        |    CASE WHEN len(params) > 0 THEN concat('?', array_to_string(params, '&'))
-        |         ELSE '' END) AS url_norm,
-        |  host,
-        |  CASE WHEN len(ls) <= 1 THEN host
-        |       WHEN len(ls) >= 3 AND concat(ls[-2], '.', ls[-1]) IN
-        |         ('co.uk', 'org.uk', 'ac.uk', 'com.au', 'co.jp', 'com.br', 'co.in', 'com.cn')
-        |         THEN concat(ls[-3], '.', ls[-2], '.', ls[-1])
-        |       ELSE concat(ls[-2], '.', ls[-1]) END AS domain
-        |FROM dom""".stripMargin,
-    // the parsed host equals its closed-form construction; cap = the
-    // corpus_sample_per_source salted-hash rank with host as stratum
-    "url_domain_cap" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    concat('www.', lower(source),
-        |      CASE WHEN doc_id % 2 = 0 THEN '.example.com' ELSE '.sample.co.uk' END) AS host,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'dc')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, host,
-        |    row_number() OVER (PARTITION BY host ORDER BY hv, doc_id) AS rn
-        |  FROM d)
-        |SELECT doc_id, host FROM r WHERE rn <= 25""".stripMargin,
-    // registered-domain cut of the synthetic URL families (even ids →
-    // example.com, odd → sample.co.uk), same salted-hash rank replay
-    "domain_cap" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'example.com'
-        |         ELSE 'sample.co.uk' END AS domain,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), 'cap')), 1, 15)) AS BIGINT) AS hv
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, text, domain,
-        |    row_number() OVER (PARTITION BY domain ORDER BY hv, doc_id) AS rn
-        |  FROM d)
-        |SELECT doc_id, text, domain FROM r WHERE rn <= 40""".stripMargin,
-  )
 }

@@ -22,29 +22,23 @@ object Parallelism {
     * file arrives as ONE partition. Repartition up to the cluster's
     * default parallelism when the input has fewer partitions; a no-op
     * on inputs that are already well-split (the 100 TB case, where the
-    * scan itself produces thousands of splits). */
-  def ensure(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * scan itself produces thousands of splits).
+    *
+    * With no `cols` the split is round-robin. Inputs with a
+    * high-cardinality key pass it as `cols` to hash-partition instead,
+    * which skips the defensive whole-row local sort every keyless
+    * `repartition(n)` pays (spark.sql.execution.sortBeforeRepartition,
+    * on by default since SPARK-23207 — hash placement is already
+    * deterministic under task retry, so no sort is needed). */
+  def ensure(df: org.apache.spark.sql.DataFrame, cols: String*)
+      : org.apache.spark.sql.DataFrame = {
     // Streaming frames can't expose an RDD pre-start (and micro-batch
     // parallelism is the source's concern) — pass through untouched.
     if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** Keyed twin of [[ensure]] for inputs with a high-cardinality key:
-    * hash-repartitions on `cols` instead of round-robin, which skips
-    * the defensive whole-row local sort every keyless `repartition(n)`
-    * pays (spark.sql.execution.sortBeforeRepartition, on by default
-    * since SPARK-23207 — hash placement is already deterministic under
-    * task retry, so no sort is needed). Same scale contract: a no-op
-    * whenever the scan already splits to the cluster parallelism. */
-  def ensureBy(df: org.apache.spark.sql.DataFrame, cols: String*)
-      : org.apache.spark.sql.DataFrame = {
-    if (df.isStreaming) return df
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target)
-      df.repartition(target, cols.map(org.apache.spark.sql.functions.col): _*)
-    else df
+    if (df.rdd.getNumPartitions >= target) df
+    else if (cols.isEmpty) df.repartition(target)
+    else df.repartition(target, cols.map(org.apache.spark.sql.functions.col): _*)
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Session factory mirroring the reference's Spark tuning
@@ -40,6 +42,19 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "200")
       .config("spark.ui.retainedTasks", "1000")
+
+  /** Warm-up before timing: JIT, codegen, parquet-reader init and the
+    * page cache are not operator cost, so run one shuffle and read
+    * every lake table under `dir` once. A table that fails to read is
+    * logged by name; its queries then fail on their own. */
+  def warmUp(spark: SparkSession, dir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id % 7)").collect()
+    Tables.lakeTables.foreach { t =>
+      try spark.read.parquet(s"$dir/$t.parquet").count()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[warm-up] lake table $t failed to read: ${e.getMessage}") }
+    }
+  }
 
   def defaultCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)

@@ -10,6 +10,10 @@ import org.apache.spark.sql.types.LongType
   * way: batch_processing_optimized.py:226).
   */
 object Tables {
+  /** Every lake table, by file name. */
+  val lakeTables: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -25,7 +29,7 @@ object Tables {
     * work that a single-row-group local file would serialize on one
     * task. No-op at scale. */
   def lineitem(spark: SparkSession, dir: String): DataFrame  =
-    Parallelism.ensureBy(load(spark, dir, "lineitem"), "l_orderkey")
+    Parallelism.ensure(load(spark, dir, "lineitem"), "l_orderkey")
   /** `ts` is TIMESTAMP(NANOS) in the parquet; with
     * `spark.sql.legacy.parquet.nanosAsLong=true` it arrives as a long
     * which we truncate to micros (`div 1000` — integer division; a
@@ -58,6 +62,6 @@ object Tables {
     * pruning and filter pushdown pass through the exchange, so each
     * consumer still scans only what it uses. */
   def documents(spark: SparkSession, dir: String): DataFrame =
-    Parallelism.ensureBy(load(spark, dir, "documents"), "doc_id")
+    Parallelism.ensure(load(spark, dir, "documents"), "doc_id")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 }

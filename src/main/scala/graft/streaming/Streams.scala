@@ -11,8 +11,8 @@ import org.apache.spark.sql.Row
   * streaming_processing/streaming_to_minio_fixed.py and
   * streaming_to_datalake.py). Every transform is a pure
   * `DataFrame => DataFrame` usable on both streaming and batch frames —
-  * batch parity of the same logic is oracle-checked via
-  * `SparkEntry.queries("cdc_parse")`.
+  * batch parity of the same logic is oracle-checked by the `cdc_parse`
+  * query (`graft.catalog.ParityQueries`).
   *
   * Scale notes: all transforms here are stateless per-row projections
   * (no shuffle); the sink partitions by `date_partition` so downstream

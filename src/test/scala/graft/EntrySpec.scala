@@ -15,16 +15,22 @@ class EntrySpec extends SparkSpec {
     }
   }
 
-  test("every oracle key has a matching query") {
-    val queries = SparkEntry.queries.keySet
-    val oracle = SparkEntry.oracleSql.keySet
-    assert(oracle == queries, s"queries without oracle SQL: ${queries -- oracle}; " +
-      s"oracle SQL without a query: ${oracle -- queries}")
-    // every per-query side table is keyed by a registered query name
-    def strays(keys: Iterable[String]): Set[String] = keys.toSet -- queries
-    assert(strays(SparkEntry.layoutBuilds.keys).isEmpty, strays(SparkEntry.layoutBuilds.keys))
-    assert(strays(Bench.lintExempt.keys).isEmpty, strays(Bench.lintExempt.keys))
-    assert(strays(Bench.scalingExempt.keys).isEmpty, strays(Bench.scalingExempt.keys))
+  test("a duplicated query name fails the catalog index and is named") {
+    val q1 = SparkEntry.specByName("q1_agg")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.byName(Seq(q1, SparkEntry.specByName("fact_trip"), q1.copy(oracle = "SELECT 1")))
+    }
+    assert(e.getMessage.contains("q1_agg"), e.getMessage)
+    assert(!e.getMessage.contains("fact_trip"), e.getMessage)
+  }
+
+  test("every spec carries oracle SQL and every layout build runs at sf0.001") {
+    val dir = "/root/testdata/sf0.001"
+    assert(SparkEntry.specs.size == SparkEntry.queries.size)
+    SparkEntry.specs.foreach { s =>
+      assert(s.oracle.trim.nonEmpty, s"query ${s.name} has empty oracle SQL")
+      s.layout.foreach(build => build(spark, dir))
+    }
   }
 
   test("corpus lists layout carries the stage split of the build that made it") {
@@ -37,6 +43,12 @@ class EntrySpec extends SparkSpec {
     assert(s1.values.forall(_ >= 0.0))
     // second read = pure cache hit, same persisted split
     assert(SparkEntry.corpusListsStages(spark, dir) == s1)
+  }
+
+  test("a failed corpus lists build propagates instead of reading as no split") {
+    intercept[Exception] {
+      SparkEntry.corpusListsStages(spark, "/nonexistent/graft_sf_dir")
+    }
   }
 
   test("variant schema inference merges heterogeneous payload schemas") {
