@@ -511,9 +511,7 @@ object CorpusQueries {
         |  FROM documents)
         |SELECT doc_id, CAST(hv % 8 AS INT) AS shard,
         |  row_number() OVER (PARTITION BY hv % 8 ORDER BY hv, doc_id) AS pos
-        |FROM h""".stripMargin,
-      lintExempt = Map("wide-shuffle" ->
-        "shard-shuffle IS the operator: redistributing payload rows is the point")),
+        |FROM h""".stripMargin),
     QuerySpec("corpus_mix", corpusMix,
       """WITH b AS (
         |  SELECT source, text,
@@ -1055,9 +1053,7 @@ object CorpusQueries {
          |SELECT doc_id, shard, n_tokens, start_tok,
          |  CAST(start_tok // 256 AS BIGINT) AS bin_id,
          |  CAST(start_tok % 256 AS BIGINT) AS offset_in_bin
-         |FROM p""".stripMargin,
-      lintExempt = Map("wide-shuffle" ->
-        "sequence packing redistributes document text into shards by design")),
+         |FROM p""".stripMargin),
     // block-diagonal attention-mask map over the same packing
     // ([[graft.functions.TextFunctions.packAttentionSpans]]): one row
     // per (shard, window, doc) with the doc's in-window span

@@ -1072,8 +1072,6 @@ object DedupQueries {
          |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
          |    / CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE) AS jaccard
          |FROM d a, d b WHERE a.doc_id < b.doc_id""".stripMargin,
-      lintExempt = Map("cartesian" ->
-        "documented O(n^2) exact-Jaccard baseline (maxId-bounded)"),
       scalingExempt = Some(
         "documented O(n^2) exact Jaccard baseline (maxId-bounded)")),
     QuerySpec("dedup_clusters", dedupClusters,

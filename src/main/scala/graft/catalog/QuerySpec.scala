@@ -12,9 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   `build`'s (the driver sorts columns by name before comparing)
   * @param layout the query's one-time, idempotent layout build, which
   *   Bench primes and meters separately from the timed runs
-  * @param lintExempt PlanLint findings expected by design: rule → why.
-  *   A finding matching an entry is recorded as exempt; any other
-  *   finding is a defect to fix
   * @param scalingExempt why the query's scaling ratio is exempt from
   *   the ≲-linear expectation (quadratic baselines, fixed-query-set
   *   brute force); the ratio is still recorded
@@ -24,5 +21,4 @@ final case class QuerySpec(
     build: (SparkSession, String) => DataFrame,
     oracle: String,
     layout: Option[(SparkSession, String) => Any] = None,
-    lintExempt: Map[String, String] = Map.empty,
     scalingExempt: Option[String] = None)

@@ -446,8 +446,6 @@ object SimilarityQueries {
          |  FROM pairs) WHERE rank <= 5""".stripMargin
     }),
     QuerySpec("sim_topk", simTopK, bruteTopKSql,
-      lintExempt = Map("cartesian" ->
-        "brute-force cosine baseline: every doc scored against a bounded query set"),
       scalingExempt = Some(
         "brute-force float cosine top-k baseline")),
     // RQ replayed at the PRODUCTION budget: two additive first-k
@@ -565,8 +563,6 @@ object SimilarityQueries {
         |    row_number() OVER (PARTITION BY q_id ORDER BY hamming, vec_id) AS rnk
         |  FROM d)
         |SELECT q_id, vec_id, hamming, rnk FROM r WHERE rnk <= 5""".stripMargin,
-      lintExempt = Map("cartesian" ->
-        "brute-force Hamming baseline: bounded query set vs corpus"),
       scalingExempt = Some(
         "brute-force Hamming top-k baseline")),
     QuerySpec("sim_lsh", simLsh, {

@@ -55,7 +55,7 @@ object Sampling {
     df.select(col(keyCol), h.as("h"))
       .withColumn("shard", (col("h") % nShards).cast("int"))
       .withColumn("pos", row_number().over(
-        Window.partitionBy(col("shard")).orderBy(col("h"), col(keyCol))))
+        Window.partitionBy(col("shard")).orderBy(col("h"), col(keyCol))).cast("long"))
       .drop("h")
   }
 

@@ -929,7 +929,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("hamming", ham)
     joined.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("vec_id"))))
+        Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("vec_id"))).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("vec_id"), col("hamming"), col("rnk"))
   }

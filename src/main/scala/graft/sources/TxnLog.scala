@@ -79,6 +79,34 @@ object TxnLog {
   /** Marker prefix of an external (cloned-in) manifest dir entry. */
   private[graft] val ExtPrefix = "ext:"
 
+  /** Inferred parquet schema of each local commit dir read so far,
+    * keyed by qualified path. A `data/<uuid>` dir is write-once (every
+    * write mints a fresh uuid, and vacuum only deletes), so its schema
+    * never changes once inferred; bounded by clearing when full. */
+  private val dirSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val MaxDirSchemas = 4096
+
+  /** One manifest dir entry's raw parquet frame. A plain `spark.read
+    * .parquet` runs one footer-inference job per call; a local dir's
+    * schema is inferred once per process and later reads pass it
+    * back, so they plan with no job. `ext:` entries
+    * ([[convertFromParquet]], [[cloneTable]]) name directories a
+    * foreign writer may still add files to, so they infer every time. */
+  private def readDir(spark: SparkSession, root: String, d: String): DataFrame = {
+    val path = dataPath(root, d)
+    if (d.startsWith(ExtPrefix)) return spark.read.parquet(path)
+    val key = fileSystem(spark, root).makeQualified(new Path(path)).toString
+    val known = dirSchemas.get(key)
+    if (known != null) spark.read.schema(known).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      if (dirSchemas.size >= MaxDirSchemas) dirSchemas.clear()
+      dirSchemas.put(key, df.schema)
+      df
+    }
+  }
+
   /** Per-column [min, max] of one committed directory, as recorded in
     * the manifest. `tpe` is "long" or "string" — the two families the
     * pruner understands; everything else is simply not collected
@@ -228,7 +256,7 @@ object TxnLog {
   private def dirFrame(spark: SparkSession, root: String, d: String,
                        m: Option[Commit],
                        partFilters: Seq[(String, Column)] = Nil): DataFrame = {
-    val raw = spark.read.parquet(dataPath(root, d))
+    val raw = readDir(spark, root, d)
     // hidden-partition pruning: the mapped predicate references the
     // derived Hive partition column, so Spark's partition pruning
     // skips files INSIDE this commit dir. Applied only when the dir
@@ -909,7 +937,7 @@ object TxnLog {
     fs.delete(new Path(staging), true) // _SUCCESS leftovers
     // stats are the POINT of clustering — always collected, read back
     // from the promoted dirs (manifest certifies disk)
-    val statsMap = newDirs.map(d => d -> dirStats(spark, s"$root/data/$d")).toMap
+    val statsMap = newDirs.map(d => d -> dirStats(spark, root, d)).toMap
     // data content is the already-gated snapshot verbatim — CHECK
     // constraints hold by construction, no re-validation scan
     var attempt = 0
@@ -1217,7 +1245,12 @@ object TxnLog {
   private def dirFrameFiles(spark: SparkSession, root: String, d: String,
                             m: Option[Commit], files: Seq[String]): DataFrame = {
     val base = dataPath(root, d)
-    val raw = spark.read.parquet(files.map(f => s"$base/$f"): _*)
+    val paths = files.map(f => s"$base/$f")
+    // a local dir's files share its (cached) schema; an ext: dir's
+    // subset infers from its own files, as a foreign writer may differ
+    val raw =
+      if (d.startsWith(ExtPrefix)) spark.read.parquet(paths: _*)
+      else spark.read.schema(readDir(spark, root, d).schema).parquet(paths: _*)
     val logical = logicalFrame(raw,
       m.map(_.colmap).getOrElse(Map.empty), m.map(_.dropped).getOrElse(Seq.empty),
       m.map(_.defaults).getOrElse(Map.empty))
@@ -1354,10 +1387,10 @@ object TxnLog {
     * (~8 KB/col/dir). The distinct-position collect is bounded by
     * BloomBits, never row count. NULLs set no bits (a point lookup is
     * never a null probe — use a scan for IS NULL). */
-  private def dirBloom(spark: SparkSession, path: String, column: String): ColStat = {
+  private def dirBloom(spark: SparkSession, root: String, d: String, column: String): ColStat = {
     import org.apache.spark.sql.functions.explode
-    val df = spark.read.parquet(path)
-    require(df.columns.contains(column), s"TxnLog: no bloom column '$column' in $path")
+    val df = readDir(spark, root, d)
+    require(df.columns.contains(column), s"TxnLog: no bloom column '$column' in ${dataPath(root, d)}")
     val words = new Array[Long](BloomBits / 64)
     df.select(explode(graft.functions.TextFunctions.bloomPositions(
         col(column).cast("string"), BloomBits, BloomK)).as("p"))
@@ -1792,7 +1825,7 @@ object TxnLog {
       val retired = latest.get.dropped.toSet
       val seen = scala.collection.mutable.LinkedHashSet.empty[String]
       snap.foreach(d =>
-        spark.read.parquet(dataPath(root, d)).schema.fieldNames
+        readDir(spark, root, d).schema.fieldNames
           .filterNot(retired).foreach(p => seen += inverse.getOrElse(p, p)))
       seen.toIndexedSeq
     }
@@ -2476,7 +2509,7 @@ object TxnLog {
       s"TxnLog.convertFromParquet: no readable parquet schema at $parquetDir")
     val d = s"$ExtPrefix$parquetDir"
     val stats =
-      if (collectStats) Map(d -> dirStats(spark, parquetDir))
+      if (collectStats) Map(d -> dirStats(spark, root, d))
       else Map.empty[String, Map[String, ColStat]]
     val fs = fileSystem(spark, root)
     val published = tryPublish(fs, root,
@@ -2568,7 +2601,7 @@ object TxnLog {
       // a re-read of the log plus a plan over the full snapshot
       snapshot.headOption match {
         case Some(one) => logicalFrame(
-          spark.read.parquet(dataPath(root, one)),
+          readDir(spark, root, one),
           tip.colmap, tip.dropped, tip.defaults).limit(0)
         case None => read(spark, root).limit(0)
       }
@@ -2589,10 +2622,12 @@ object TxnLog {
     *    tombstone predicate, AT THE PRIOR VERSION, as `delete`
     *    (reads only covered dirs);
     *  - `replace` (copy-on-write delete/merge) → the affected old
-    *    dirs diffed against the rewrite dir: without `keyCols`, as
-    *    `delete` + `insert` (exceptAll both ways — multiset-exact);
-    *    with `keyCols`, rows sharing a key on both sides pair into
-    *    `update_preimage`/`update_postimage` and only keyless
+    *    dirs diffed against the rewrite dir as ONE signed multiset
+    *    diff ([[replaceFeed]]: old rows −1, new rows +1, one
+    *    aggregate — a single exchange, multiset-exact): without
+    *    `keyCols`, as `delete` + `insert`; with `keyCols`, rows
+    *    sharing a non-null key on both sides pair into
+    *    `update_preimage`/`update_postimage` and only unpaired
     *    residue stays delete/insert;
     *  - `set_check`/`drop_check` → skipped (metadata-only);
     *  - `overwrite`/`restore` → REFUSED loudly, like
@@ -2664,7 +2699,7 @@ object TxnLog {
           // rewrite dropped rows carrying the wide column): align BOTH
           // sides to the union schema with typed null-fill — the same
           // allowMissingColumns semantics read() gives a snapshot —
-          // so the exceptAll diffs never throw on a missing column
+          // so the signed diff groups both sides by the same columns
           val unionCols = (old0.columns ++ neu0.columns.filterNot(
             old0.columns.contains(_: String))).toIndexedSeq
           val colType = (old0.schema ++ neu0.schema)
@@ -2674,22 +2709,7 @@ object TxnLog {
             df.select(unionCols.map(cn =>
               if (have(cn)) col(cn) else lit(null).cast(colType(cn)).as(cn)): _*)
           }
-          val old = aligned(old0)
-          val neu = aligned(neu0)
-          val deleted = old.exceptAll(neu)
-          val inserted = neu.exceptAll(old)
-          if (keyCols.isEmpty)
-            Some(tag(deleted, "delete", c.version)
-              .unionByName(tag(inserted, "insert", c.version)))
-          else {
-            val delKeys = deleted.select(keyCols.map(col): _*)
-            val insKeys = inserted.select(keyCols.map(col): _*)
-            val both = delKeys.intersect(insKeys)
-            Some(tag(deleted.join(both, keyCols, "left_semi"), "update_preimage", c.version)
-              .unionByName(tag(inserted.join(both, keyCols, "left_semi"), "update_postimage", c.version))
-              .unionByName(tag(deleted.join(both, keyCols, "left_anti"), "delete", c.version))
-              .unionByName(tag(inserted.join(both, keyCols, "left_anti"), "insert", c.version)))
-          }
+          Some(replaceFeed(aligned(old0), aligned(neu0), keyCols, c.version))
         case _ => None // set_check / drop_check / add_column: metadata-only
       }
     }
@@ -2699,6 +2719,46 @@ object TxnLog {
       s"TxnLog: no change feed in ($sinceVersion, $latest] at $root")
     feeds.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(tag(read(spark, root).limit(0), "insert", latest))
+  }
+
+  /** The `replace` arm of [[changeFeed]]: the affected old rows
+    * diffed against the rewrite's rows, both already aligned to one
+    * column list, as ONE signed multiset diff. Old rows count −1 and
+    * new rows +1; grouping by every column leaves `n = #new − #old`
+    * per distinct row, and each row with `n ≠ 0` is emitted `|n|`
+    * times — `exceptAll` both ways in one aggregate. Without
+    * `keyCols`, `n < 0` rows are `delete` and `n > 0` rows `insert`.
+    * With `keyCols` the signed union is hash-partitioned on the key,
+    * so the aggregate and the per-key window that finds a key's
+    * negative and positive rows share that one exchange: a key
+    * holding both pairs into `update_preimage`/`update_postimage`,
+    * unless a key part is NULL (SQL equality never matches NULL, so
+    * such rows stay `delete`/`insert`). Output columns: the aligned
+    * columns, then `_change_type`, `_commit_version`. */
+  private[graft] def replaceFeed(old: DataFrame, neu: DataFrame, keyCols: Seq[String],
+                                 version: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{abs, explode, max => smax, min => smin, sequence, sum}
+    val cols = old.columns.toIndexedSeq.map(col)
+    val signed = old.withColumn("__graft_sign", lit(-1))
+      .unionByName(neu.withColumn("__graft_sign", lit(1)))
+    val n = col("__graft_n")
+    val diff = (if (keyCols.isEmpty) signed else signed.repartition(keyCols.map(col): _*))
+      .groupBy(cols: _*).agg(sum("__graft_sign").as("__graft_n"))
+      .filter(n =!= 0)
+    val unpaired = when(n < 0, "delete").otherwise("insert")
+    val changeType =
+      if (keyCols.isEmpty) unpaired
+      else {
+        val byKey = Window.partitionBy(keyCols.map(col): _*)
+        val paired = keyCols.map(col(_).isNotNull).reduce(_ && _) &&
+          smin(n).over(byKey) < 0 && smax(n).over(byKey) > 0
+        when(paired, when(n < 0, "update_preimage").otherwise("update_postimage"))
+          .otherwise(unpaired)
+      }
+    diff.withColumn("_change_type", changeType)
+      .withColumn("__graft_copy", explode(sequence(lit(1L), abs(n)))) // |n| copies
+      .select(cols :+ col("_change_type") :+ lit(version).as("_commit_version"): _*)
   }
 
   /** Incremental cross-table replication — [[changeFeed]]'s consumer
@@ -2877,7 +2937,7 @@ object TxnLog {
           // checks are written in LOGICAL names — evaluate them over
           // the dir's logical view
           val dirDf = logicalFrame(
-            spark.read.parquet(s"$root/data/$dir"), colmap0, dropped0, defaults0)
+            readDir(spark, root, dir), colmap0, dropped0, defaults0)
           val aggs = checks.toSeq.sortBy(_._1).map { case (n, p) =>
             count(when(coalesce(not(
               org.apache.spark.sql.functions.expr(p)), lit(false)), 1)).as(n)
@@ -2909,11 +2969,11 @@ object TxnLog {
     // discipline), and the read-back picks up partition columns too
     val newStats = {
       val rangeStats =
-        if (collectStats) dirStats(spark, s"$root/data/$dir") else Map.empty[String, ColStat]
+        if (collectStats) dirStats(spark, root, dir) else Map.empty[String, ColStat]
       // bloom columns arrive logical; the written dir (and the stats
       // key the pruners resolve through physOf) are physical
       rangeStats ++ bloomCols.map(c => colmap0.getOrElse(c, c)).map(p =>
-        s"$BloomKeyPrefix$p" -> dirBloom(spark, s"$root/data/$dir", p))
+        s"$BloomKeyPrefix$p" -> dirBloom(spark, root, dir, p))
     }
     var attempt = 0
     while (attempt < MaxRetries) {
@@ -3011,10 +3071,11 @@ object TxnLog {
     * types are not collected — conservative, never wrong). All-null
     * columns are omitted (no usable range). One narrow agg over the
     * new directory only. */
-  private def dirStats(spark: SparkSession, path: String): Map[String, ColStat] = {
+  private def dirStats(spark: SparkSession, root: String, d: String): Map[String, ColStat] = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions.{max => smax, min => smin, input_file_name}
-    val df = spark.read.parquet(path)
+    val path = dataPath(root, d)
+    val df = readDir(spark, root, d)
     val statCols = df.schema.fields.filter(f => f.dataType match {
       case LongType | IntegerType | ShortType | ByteType | StringType
            | DoubleType | FloatType => true

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.sources.TxnLog
+import org.apache.spark.sql.DataFrame
 
 class TxnLogSpec extends SparkSpec {
   import spark.implicits._
@@ -1096,6 +1097,142 @@ class TxnLogSpec extends SparkSpec {
     assert(post.toSeq == Seq((2L, "B2", 7L)), s"postimage: ${post.toSeq}")
     assert(!feed.contains("delete") && !feed.contains("insert"),
       s"keyed rewrite must pair into updates: ${feed.keys}")
+  }
+
+  /** The `replace` feed's earlier formulation, kept as the reference
+    * the signed diff must reproduce: `exceptAll` both ways, the keys
+    * present on both sides via `intersect`, then semi/anti joins
+    * (using-joins: `===`, so a NULL key part never pairs). */
+  private def exceptAllFeed(old: DataFrame, neu: DataFrame, keyCols: Seq[String],
+                            v: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    def tag(df: DataFrame, tpe: String) =
+      df.withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(v))
+    val deleted = old.exceptAll(neu)
+    val inserted = neu.exceptAll(old)
+    if (keyCols.isEmpty) tag(deleted, "delete").unionByName(tag(inserted, "insert"))
+    else {
+      val both = deleted.select(keyCols.map(col): _*)
+        .intersect(inserted.select(keyCols.map(col): _*))
+      tag(deleted.join(both, keyCols, "left_semi"), "update_preimage")
+        .unionByName(tag(inserted.join(both, keyCols, "left_semi"), "update_postimage"))
+        .unionByName(tag(deleted.join(both, keyCols, "left_anti"), "delete"))
+        .unionByName(tag(inserted.join(both, keyCols, "left_anti"), "insert"))
+    }
+  }
+
+  /** Rows (all columns, name-sorted) → multiplicity. */
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] = {
+    import org.apache.spark.sql.functions.col
+    val cols = df.columns.sorted.toIndexedSeq
+    df.select(cols.map(col): _*).collect().toSeq.map(_.toSeq)
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+  }
+
+  private def assertSameFeed(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(multiset(got) == multiset(want),
+      s"\n got  ${multiset(got)}\n want ${multiset(want)}")
+  }
+
+  test("changeFeed replace diff equals the exceptAll + intersect + semi/anti formulation as multisets") {
+    val old1 = Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
+    val cases: Seq[(String, DataFrame, DataFrame, Seq[String])] = Seq(
+      // one of two identical rows rewritten: the other copy cancels
+      ("one duplicate rewritten", old1,
+        Seq((1L, "a"), (1L, "z"), (2L, "b"), (3L, "c")).toDF("id", "s"), Seq("id")),
+      // both copies replaced by one row: two preimages, one postimage
+      ("both duplicates rewritten", old1,
+        Seq((1L, "z"), (2L, "b")).toDF("id", "s"), Seq("id")),
+      ("duplicates unkeyed", old1,
+        Seq((1L, "a"), (1L, "z"), (1L, "z"), (3L, "c")).toDF("id", "s"), Nil),
+      // NULL keys never pair: delete + insert, while key 3 pairs
+      ("null key",
+        Seq((None, "a"), (None, "a"), (Some(3L), "c")).toDF("id", "s"),
+        Seq((None, "b"), (Some(3L), "d")).toDF("id", "s"), Seq("id")),
+      ("null key unkeyed",
+        Seq((None, "a"), (Some(3L), "c")).toDF("id", "s"),
+        Seq((None, "b"), (Some(3L), "d")).toDF("id", "s"), Nil),
+      // a two-part key with one NULL part stays unpaired
+      ("two-column key, one null part",
+        Seq((Some(1L), None, "a"), (Some(1L), Some(2L), "x"), (None, Some(2L), "n"))
+          .toDF("k1", "k2", "v"),
+        Seq((Some(1L), None, "b"), (Some(1L), Some(2L), "y"), (None, Some(2L), "m"))
+          .toDF("k1", "k2", "v"), Seq("k1", "k2")),
+      ("pure delete and pure insert", old1,
+        Seq((1L, "a"), (1L, "a"), (4L, "d")).toDF("id", "s"), Seq("id")),
+      ("empty rewrite", old1, old1.limit(0), Seq("id")))
+    cases.foreach { case (name, old, neu, keys) =>
+      withClue(s"$name: ") {
+        assertSameFeed(TxnLog.replaceFeed(old, neu, keys, 7L), exceptAllFeed(old, neu, keys, 7L))
+      }
+    }
+    // the keyed diff is one exchange: aggregate and pairing window
+    // share the key partitioning, no broadcast joins
+    val plan = TxnLog.replaceFeed(old1, old1.limit(1), Seq("id"), 7L)
+      .queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
+  test("changeFeed over real rewrites matches the reference: duplicates, null keys, widened schema") {
+    import org.apache.spark.sql.functions.{col, lit}
+    def check(root: String, v: Long, keys: Seq[String]): Unit = {
+      val neu = TxnLog.read(spark, root, asOf = Some(v))
+      val cols = neu.columns.toIndexedSeq
+      val old = TxnLog.read(spark, root, asOf = Some(v - 1))
+      val oldAligned = old.select(cols.map(c =>
+        if (old.columns.contains(c)) col(c)
+        else lit(null).cast(neu.schema(c).dataType).as(c)): _*)
+      // read() of whole snapshots: dirs carried by reference cancel
+      // out of the multiset diff, so this equals the affected-dir diff
+      val got = TxnLog.changeFeed(spark, root, v - 1, keyCols = keys)
+      assertSameFeed(got.select((cols ++ Seq("_change_type", "_commit_version")).map(col): _*),
+        exceptAllFeed(oldAligned, neu, keys, v))
+    }
+    val dups = Files.createTempDirectory("graft_txn").toString + "/t"
+    TxnLog.overwrite(Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("id", "s"), dups) // v0
+    TxnLog.merge(Seq((1L, "z")).toDF("id", "s"), dups, Seq("id"))                 // v1
+    check(dups, 1L, Seq("id"))
+    check(dups, 1L, Nil)
+    val nulls = Files.createTempDirectory("graft_txn").toString + "/t"
+    TxnLog.overwrite(Seq((None, Some(1L), "a"), (Some(1L), None, "b"), (Some(1L), Some(1L), "c"))
+      .toDF("k1", "k2", "v"), nulls)                                               // v0
+    TxnLog.update(spark, nulls, Seq("v" -> lit("u")), col("v").isin("a", "b", "c")) // v1
+    check(nulls, 1L, Seq("k1", "k2"))
+    check(nulls, 1L, Seq("k1"))
+    // the widened-schema replace of the schema-evolution test above
+    val wide = Files.createTempDirectory("graft_txn").toString + "/t"
+    TxnLog.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), wide)
+    TxnLog.append(Seq((10L, "x", 100L)).toDF("id", "s", "extra"), wide)
+    TxnLog.merge(Seq((2L, "B2", 7L)).toDF("id", "s", "extra"), wide, Seq("id"))
+    check(wide, 2L, Seq("id"))
+    check(wide, 2L, Nil)
+  }
+
+  test("schema cache: a repeat read plans with no Spark job; convertFromParquet dirs still see a foreign writer's new column") {
+    val root = Files.createTempDirectory("graft_txn").toString + "/t"
+    TxnLog.overwrite(Seq((1L, "a")).toDF("id", "s"), root, collectStats = true)
+    TxnLog.append(Seq((2L, "b")).toDF("id", "s"), root)
+    TxnLog.read(spark, root)
+    val (again, m) = graft.core.Metrics.metered(TxnLog.read(spark, root))
+    assert(m.jobs == 0, s"a repeat read ran ${m.jobs} job(s) to build")
+    assert(again.orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    // ext: dirs are a foreign writer's directory: never cached
+    val tmp = Files.createTempDirectory("graft_txn").toString
+    val pq = s"$tmp/pq"
+    Seq((1L, "a")).toDF("id", "s").coalesce(1).write.parquet(pq)
+    val conv = s"$tmp/conv"
+    TxnLog.convertFromParquet(spark, pq, conv)
+    assert(TxnLog.read(spark, conv).columns.toSeq == Seq("id", "s"))
+    // another writer drops in a file with a new column; its name sorts
+    // first, so footer inference reads it
+    val side = s"$tmp/side"
+    Seq((2L, "b", 20L)).toDF("id", "s", "extra").coalesce(1).write.parquet(side)
+    val part = new java.io.File(side).listFiles.filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(pq, "a-foreign.parquet"))
+    val after = TxnLog.read(spark, conv)
+    assert(after.columns.toSeq == Seq("id", "s", "extra"))
+    assert(after.count() == 2)
   }
 
   test("readWithLineage stamps rows with their creating commit; rewrites re-stamp; time travel recovers originals") {
