@@ -237,7 +237,7 @@ object DedupQueries {
     * (StreamingSpec); this row pins the end-to-end decision rule
     * against DuckDB. */
   private def streamingNeardupReplay(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.load(spark, dir, "documents").schema
     // documents.parquet is a bare FILE at these SFs; the file stream
     // source needs a glob (its base path — the non-glob prefix — must
     // be a directory), so wrap the name in a {} glob

@@ -29,7 +29,14 @@ object Parallelism {
     * which skips the defensive whole-row local sort every keyless
     * `repartition(n)` pays (spark.sql.execution.sortBeforeRepartition,
     * on by default since SPARK-23207 — hash placement is already
-    * deterministic under task retry, so no sort is needed). */
+    * deterministic under task retry, so no sort is needed).
+    *
+    * Unconditional: every call compiles the input's physical plan to
+    * count its partitions. A caller whose consumers are cheap per byte
+    * decides first whether the input is worth it — [[Tables.lineitem]]
+    * skips the call for a file under `spark.sql.files.openCostInBytes`;
+    * [[Tables.documents]] and the text/vector call sites, whose
+    * consumers are CPU-heavy per byte, always call it. */
   def ensure(df: org.apache.spark.sql.DataFrame, cols: String*)
       : org.apache.spark.sql.DataFrame = {
     // Streaming frames can't expose an RDD pre-start (and micro-batch

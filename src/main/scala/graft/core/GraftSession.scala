@@ -43,14 +43,16 @@ object GraftSession {
       .config("spark.ui.retainedStages", "200")
       .config("spark.ui.retainedTasks", "1000")
 
-  /** Warm-up before timing: JIT, codegen, parquet-reader init and the
-    * page cache are not operator cost, so run one shuffle and read
-    * every lake table under `dir` once. A table that fails to read is
-    * logged by name; its queries then fail on their own. */
+  /** Warm-up before timing: JIT, codegen, parquet-reader init, the
+    * page cache and the lake tables' footer-schema inference are not
+    * operator cost, so run one shuffle and read every lake table under
+    * `dir` once through [[Tables.load]] (which fills its schema cache).
+    * A table that fails to read is logged by name; its queries then
+    * fail on their own. */
   def warmUp(spark: SparkSession, dir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
     Tables.lakeTables.foreach { t =>
-      try spark.read.parquet(s"$dir/$t.parquet").count()
+      try Tables.load(spark, dir, t).count()
       catch { case NonFatal(e) =>
         System.err.println(s"[warm-up] lake table $t failed to read: ${e.getMessage}") }
     }

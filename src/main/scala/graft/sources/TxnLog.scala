@@ -79,32 +79,19 @@ object TxnLog {
   /** Marker prefix of an external (cloned-in) manifest dir entry. */
   private[graft] val ExtPrefix = "ext:"
 
-  /** Inferred parquet schema of each local commit dir read so far,
-    * keyed by qualified path. A `data/<uuid>` dir is write-once (every
-    * write mints a fresh uuid, and vacuum only deletes), so its schema
-    * never changes once inferred; bounded by clearing when full. */
-  private val dirSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val MaxDirSchemas = 4096
-
   /** One manifest dir entry's raw parquet frame. A plain `spark.read
     * .parquet` runs one footer-inference job per call; a local dir's
-    * schema is inferred once per process and later reads pass it
-    * back, so they plan with no job. `ext:` entries
+    * schema is inferred once per process ([[graft.core.ParquetSchemas]],
+    * keyed by qualified path alone: a `data/<uuid>` dir is write-once —
+    * every write mints a fresh uuid, and vacuum only deletes) and later
+    * reads pass it back, so they plan with no job. `ext:` entries
     * ([[convertFromParquet]], [[cloneTable]]) name directories a
     * foreign writer may still add files to, so they infer every time. */
   private def readDir(spark: SparkSession, root: String, d: String): DataFrame = {
     val path = dataPath(root, d)
-    if (d.startsWith(ExtPrefix)) return spark.read.parquet(path)
-    val key = fileSystem(spark, root).makeQualified(new Path(path)).toString
-    val known = dirSchemas.get(key)
-    if (known != null) spark.read.schema(known).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      if (dirSchemas.size >= MaxDirSchemas) dirSchemas.clear()
-      dirSchemas.put(key, df.schema)
-      df
-    }
+    if (d.startsWith(ExtPrefix)) spark.read.parquet(path)
+    else graft.core.ParquetSchemas.read(spark,
+      fileSystem(spark, root).makeQualified(new Path(path)).toString, -1L, -1L)
   }
 
   /** Per-column [min, max] of one committed directory, as recorded in
@@ -1375,7 +1362,7 @@ object TxnLog {
     * collide with [min, max] stats on the same column). */
   private val BloomKeyPrefix = "__bloom_"
   private[graft] val BloomBits = 1 << 15
-  private val BloomK = 4
+  private[graft] val BloomK = 4
 
   /** One column's per-dir Bloom, built from the freshly WRITTEN
     * directory (manifest certifies disk, like [[dirStats]]): every
@@ -1409,15 +1396,24 @@ object TxnLog {
     * from Spark's CAST for timestamp/date/decimal/float values, and a
     * Bloom probing the WRONG string wrongly proves absence — the
     * one-sided-error guarantee only holds when writer and reader hash
-    * identical bytes. Bounded: one local 1-row job per point lookup.
-    * NULL probes nothing (the writer set no bits for NULLs — callers
-    * keep every dir, and the exact predicate decides). */
-  private def bloomProbes(spark: SparkSession, value: Any): Option[Seq[Long]] = {
+    * identical bytes. The frame is a local relation ([[driverEval]]),
+    * so a lookup runs no job for its probes. NULL probes nothing (the
+    * writer set no bits for NULLs — callers keep every dir, and the
+    * exact predicate decides). */
+  private[graft] def bloomProbes(spark: SparkSession, value: Any): Option[Seq[Long]] = {
     if (value == null) return None
-    val row = spark.range(1).select(
-      graft.functions.TextFunctions.bloomPositions(
-        lit(value).cast("string"), BloomBits, BloomK).as("p")).head
-    Option(row.getAs[scala.collection.Seq[Long]]("p")).map(_.toSeq)
+    Option(driverEval(spark, probeExpr(value)).getAs[scala.collection.Seq[Long]](0))
+      .map(_.toSeq)
+  }
+
+  private def probeExpr(value: Any): Column =
+    graft.functions.TextFunctions.bloomPositions(lit(value).cast("string"), BloomBits, BloomK)
+
+  /** One column expression evaluated over a one-row local relation —
+    * folded on the driver by `ConvertToLocalRelation`, so no job. */
+  private def driverEval(spark: SparkSession, c: Column): org.apache.spark.sql.Row = {
+    import spark.implicits._
+    Seq(1).toDF("one").select(c).head
   }
 
   /** Point-lookup read with Bloom dir skipping — the data-skipping
@@ -1527,11 +1523,9 @@ object TxnLog {
     val probesPer: Seq[Option[Seq[Long]]] =
       if (nonNull.isEmpty) Seq.empty
       else {
-        val row = spark.range(1).select(
-          org.apache.spark.sql.functions.array(nonNull.map(v =>
-            graft.functions.TextFunctions.bloomPositions(
-              lit(v).cast("string"), BloomBits, BloomK)): _*).as("p")).head
-        Option(row.getAs[scala.collection.Seq[scala.collection.Seq[Long]]]("p"))
+        val row = driverEval(spark,
+          org.apache.spark.sql.functions.array(nonNull.map(probeExpr): _*))
+        Option(row.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](0))
           .map(_.map(ps => Option(ps).map(_.toSeq)).toSeq)
           .getOrElse(nonNull.map(_ => None))
       }

@@ -20,11 +20,14 @@ import graft.core.Tables
 object TaxiShape {
 
   def staging(spark: SparkSession, dir: String): DataFrame = {
-    // Tables.lineitem arrives parallelism-bootstrapped (single-row-
-    // group local file → hash repartition on the join key, no-op at
-    // scale), so the whole map side of this join — the 26-column
-    // projection with its two date_format calls, plus every consumer's
-    // per-row work up to its first exchange — runs cluster-wide.
+    // Tables.lineitem arrives parallelism-bootstrapped when its file
+    // is at least spark.sql.files.openCostInBytes (4 MB) long: a
+    // single-row-group local file is then hash-repartitioned on the
+    // join key (no-op at scale), so the whole map side of this join —
+    // the 26-column projection with its two date_format calls, plus
+    // every consumer's per-row work up to its first exchange — runs
+    // cluster-wide. A smaller file is read as one task, which is
+    // cheaper than the exchange at that size.
     val l = Tables.lineitem(spark, dir)
     val o = Tables.orders(spark, dir)
     l.join(o, l("l_orderkey") === o("o_orderkey"), "inner")

@@ -83,8 +83,10 @@ class PlanSpec extends SparkSpec {
   test("zone_enrich: both lookup joins broadcast, no planner shuffle exchange") {
     val p = plan("zone_enrich")
     assert("BroadcastHashJoin".r.findAllIn(p).size == 2, p)
-    // the joins themselves force no distribution; the only exchange is
-    // the staging input's explicit parallelism bootstrap
+    // the joins themselves force no distribution; the staging input's
+    // lineitem bootstrap (REPARTITION origin) appears only when the file
+    // reaches spark.sql.files.openCostInBytes, so at sf0.001 the plan
+    // has no shuffle exchange at all
     assert(!p.contains("ENSURE_REQUIREMENTS"), p)
   }
 

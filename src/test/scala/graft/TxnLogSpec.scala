@@ -880,6 +880,25 @@ class TxnLogSpec extends SparkSpec {
     assert(keepC.size <= 1) // at most the stat-blind dir survives
   }
 
+  test("bloom probes evaluate on the driver with no job and match the engine-job reference") {
+    import org.apache.spark.sql.functions.lit
+    // the former probe: the same expression over a spark.range(1) job
+    def reference(v: Any): Option[Seq[Long]] =
+      if (v == null) None
+      else Option(spark.range(1).select(graft.functions.TextFunctions.bloomPositions(
+        lit(v).cast("string"), TxnLog.BloomBits, TxnLog.BloomK)).head.getSeq[Long](0))
+        .map(_.toSeq)
+    val values: Seq[Any] = Seq(null, 42L, "trip-7",
+      java.sql.Timestamp.valueOf("2024-03-01 02:17:00"),
+      java.time.LocalDateTime.parse("2024-03-01T02:17:00.123"),
+      BigDecimal("12.50").bigDecimal)
+    values.foreach { v =>
+      val (ps, m) = graft.core.Metrics.metered(TxnLog.bloomProbes(spark, v))
+      assert(m.jobs == 0, s"probing $v ran ${m.jobs} job(s)")
+      assert(ps == reference(v), s"probe positions differ for $v")
+    }
+  }
+
   test("bloom probes hash the writer's CAST rendering: timestamp point lookups are never wrongly skipped") {
     val root = Files.createTempDirectory("graft_txn").toString + "/t"
     // String.valueOf(java.sql.Timestamp) renders "…:17:00.0" while the
