@@ -103,11 +103,13 @@ object Tables {
     if (length.exists(_ < spark.sessionState.conf.filesOpenCostInBytes)) df
     else Parallelism.ensure(df, "l_orderkey")
   }
-  /** `ts` is TIMESTAMP(NANOS) in the parquet; with
-    * `spark.sql.legacy.parquet.nanosAsLong=true` it arrives as a long
-    * which we truncate to micros (`div 1000` — integer division; a
-    * double division would lose precision above 2^53 ns) to match
-    * DuckDB's nanos→micros read-truncation.
+  /** `ts` is TIMESTAMP(MICROS) in the lake's events files (the testdata
+    * and perfbench's `gen.py` both write micros), read as is. A
+    * TIMESTAMP(NANOS) input arrives as a long under
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, which we truncate to
+    * micros (`div 1000` — integer division; a double division would
+    * lose precision above 2^53 ns) to match DuckDB's nanos→micros
+    * read-truncation.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val df = load(spark, dir, "events")

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   *  - BATCH READ is a [[PrunedFilteredScan]]: Catalyst hands the scan
   *    its pushable filters, the relation prunes snapshot DIRECTORIES
   *    against the manifest's per-dir [min, max] stats
-  *    ([[TxnLog.readRanges]] — the same data-skipping the native
-  *    `readWhere` path uses), translates the filters onto the inner
+  *    ([[TxnLog.readRangesCensusFiles]] — the same data-skipping
+  *    scan the native `readWhere` path uses), translates the filters onto the inner
   *    parquet scan (so row-group/page pushdown still happens), and
   *    reports every filter UNHANDLED so Spark re-applies exact
   *    semantics above — pruning is pure I/O avoidance, never a
@@ -270,8 +270,7 @@ class GraftRelation(override val sqlContext: SQLContext, root: String,
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
     val ranges = filters.toSeq.flatMap(GraftDataSource.rangesOf)
-    val m = TxnLog.readRanges(spark, root,
-      if (ranges.isEmpty) Seq.empty else ranges, asOf)
+    val m = TxnLog.readRangesCensusFiles(spark, root, ranges, asOf)._1
     val snapN = TxnLog.read(spark, root, asOf) // manifest-only if unused
     // census for specs: dirs admitted vs snapshot size (metadata-only)
     GraftDataSource.lastScanCensus = (

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, conv, count, date_format, lit, md5, not, pmod, struct, substring, when}
 
@@ -239,11 +239,20 @@ object TxnLog {
     * null contract as [[delete]]. DV predicates are expressed in the
     * logical names current when the delete committed, and
     * [[renameColumn]]/[[dropColumn]] refuse while vectors are live,
-    * so mapping-then-filter is always the consistent order. */
+    * so mapping-then-filter is always the consistent order. A
+    * non-empty `files` reads only those files of the dir (file-stat
+    * skipping, [[skipScan]]). */
   private def dirFrame(spark: SparkSession, root: String, d: String,
                        m: Option[Commit],
-                       partFilters: Seq[(String, Column)] = Nil): DataFrame = {
-    val raw = readDir(spark, root, d)
+                       partFilters: Seq[(String, Column)] = Nil,
+                       files: Seq[String] = Nil): DataFrame = {
+    val paths = files.map(f => s"${dataPath(root, d)}/$f")
+    // a local dir's files share its (cached) schema; an ext: dir's
+    // subset infers from its own files, as a foreign writer may differ
+    val raw =
+      if (files.isEmpty) readDir(spark, root, d)
+      else if (d.startsWith(ExtPrefix)) spark.read.parquet(paths: _*)
+      else spark.read.schema(readDir(spark, root, d).schema).parquet(paths: _*)
     // hidden-partition pruning: the mapped predicate references the
     // derived Hive partition column, so Spark's partition pruning
     // skips files INSIDE this commit dir. Applied only when the dir
@@ -446,47 +455,52 @@ object TxnLog {
     * log, not guessed from timestamps). */
   def vacuum(spark: SparkSession, root: String, retainVersions: Int = 1,
              orphanMinAgeMs: Long = 10L * 60 * 1000): Unit = {
-    require(retainVersions >= 1, s"need retainVersions >= 1, got $retainVersions")
-    require(orphanMinAgeMs >= 0, s"need orphanMinAgeMs >= 0, got $orphanMinAgeMs")
     val fs = fileSystem(spark, root)
-    val commits = history(spark, root)
-    if (commits.isEmpty) return
-    val cutoff = commits.last.version - (retainVersions - 1)
-    val keepDirs = commits.filter(_.version >= cutoff)
-      .flatMap(c => snapshotAt(commits, c.version)).toSet
-    val referencedEver = commits.flatMap(_.dirs).toSet
-    // belt-and-braces vs the convertFromParquet/cloneTable nesting
-    // guards: an ext:-referenced path that RESOLVES under this root's
-    // data/ (e.g. a manifest written by an older version without the
-    // guard) must never be swept as an unreferenced orphan
-    val extResolved = referencedEver.filter(_.startsWith(ExtPrefix))
-      .map(d => new Path(d.stripPrefix(ExtPrefix)).toUri.getPath)
-    val orphanCutoffMs = System.currentTimeMillis() - orphanMinAgeMs
-    val dataRoot = new Path(s"$root/data")
-    if (fs.exists(dataRoot))
-      fs.listStatus(dataRoot).foreach { st =>
-        val name = st.getPath.getName
-        val extRef = extResolved.contains(st.getPath.toUri.getPath)
-        val expired = referencedEver.contains(name) && !keepDirs.contains(name)
-        val staleOrphan = !referencedEver.contains(name) && !extRef &&
-          st.getModificationTime < orphanCutoffMs
-        if (st.isDirectory && (expired || staleOrphan)) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
+    val (commits, cutoff, classed) = vacuumClasses(spark, root, retainVersions, orphanMinAgeMs)
+    classed.foreach { case (st, cls) =>
+      if (cls.startsWith("delete")) { fs.delete(st.getPath, true); () }
+    }
     commits.filter(_.version < cutoff).foreach { c =>
       fs.delete(logPath(root, c.version), false); ()
     }
   }
 
-  /** Compaction: rewrite the CURRENT snapshot into ~`targetBytes`
-    * files and publish it as a new overwrite version. Readers never
-    * block (old versions stay readable; the commit point is the same
-    * exclusive manifest create), so this is the online answer to the
-    * small-file problem a long-lived append table accumulates —
-    * thousands of micro-batch files become a handful of scan-sized
-    * ones, and time travel to pre-compaction versions still works
-    * until `vacuum`. Returns the new version. */
+  /** The one vacuum classifier behind [[vacuum]] and [[vacuumAudit]]:
+    * the log, the retention cutoff, and every data directory outside
+    * the retained snapshots with its class. An `ext:` entry that
+    * RESOLVES under this root's `data/` (a manifest written before the
+    * convertFromParquet/cloneTable nesting guards) keeps its dir
+    * whether it expired by name or looks like an orphan: a retained
+    * version may still read it. */
+  private def vacuumClasses(spark: SparkSession, root: String, retainVersions: Int,
+                            orphanMinAgeMs: Long): (Seq[Commit], Long, Seq[(FileStatus, String)]) = {
+    require(retainVersions >= 1, s"need retainVersions >= 1, got $retainVersions")
+    require(orphanMinAgeMs >= 0, s"need orphanMinAgeMs >= 0, got $orphanMinAgeMs")
+    val fs = fileSystem(spark, root)
+    val commits = history(spark, root)
+    if (commits.isEmpty) return (commits, 0L, Seq.empty)
+    val cutoff = commits.last.version - (retainVersions - 1)
+    val keepDirs = commits.filter(_.version >= cutoff).flatMap(_.dirs).toSet
+    val referencedEver = commits.flatMap(_.dirs).toSet
+    val extResolved = referencedEver.filter(_.startsWith(ExtPrefix))
+      .map(d => new Path(d.stripPrefix(ExtPrefix)).toUri.getPath)
+    val orphanCutoffMs = System.currentTimeMillis() - orphanMinAgeMs
+    val dataRoot = new Path(s"$root/data")
+    val classed =
+      if (!fs.exists(dataRoot)) Seq.empty
+      else fs.listStatus(dataRoot).toIndexedSeq.filter(_.isDirectory).flatMap { st =>
+        val name = st.getPath.getName
+        val cls =
+          if (keepDirs.contains(name)) None // live — not a candidate
+          else if (extResolved.contains(st.getPath.toUri.getPath)) Some("keep-ext-referenced")
+          else if (referencedEver.contains(name)) Some("delete-expired")
+          else if (st.getModificationTime < orphanCutoffMs) Some("delete-stale-orphan")
+          else Some("keep-fresh-orphan")
+        cls.map(st -> _)
+      }
+    (commits, cutoff, classed)
+  }
+
   /** One-row TABLE HEALTH report — the at-a-glance composition of
     * every advisor a maintenance cadence consults ([[compactAdvice]]'s
     * file census, stats/Bloom coverage, deletion-vector debt,
@@ -500,20 +514,14 @@ object TxnLog {
     val latest = latestCommit(spark, root)
     require(latest.nonEmpty, s"TxnLog: no table at $root")
     val c = latest.get
-    val fs = fileSystem(spark, root)
-    val files = c.dirs.flatMap { d =>
-      fs.listStatus(new Path(dataPath(root, d))).toIndexedSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    }
-    val bytes = files.map(_.getLen).sum
-    val ideal = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    val (nFiles, bytes, ideal) = fileCensus(spark, root, c.dirs, targetBytes)
     val statsOn = c.dirs.count(d => c.stats.get(d).exists(_.nonEmpty))
     val reclaimable = vacuumAudit(spark, root)
       .filter(col("action").startsWith("delete"))
       .agg(coalesce(org.apache.spark.sql.functions.sum(col("bytes")), lit(0L)))
       .head.getLong(0)
-    Seq((c.version, c.dirs.size.toLong, files.size.toLong, bytes, ideal,
-      if (files.size.toLong > 4L * ideal) 1 else 0,
+    Seq((c.version, c.dirs.size.toLong, nFiles, bytes, ideal,
+      if (nFiles > 4L * ideal) 1 else 0,
       // exact bps: stats-covered dirs over snapshot dirs
       if (c.dirs.isEmpty) 0L else statsOn.toLong * 10000L / c.dirs.size,
       c.dvs.size.toLong, reclaimable, c.checks.size.toLong,
@@ -527,52 +535,36 @@ object TxnLog {
     * byte: one row per data directory outside the current snapshot,
     * classed `delete-expired` (referenced only by versions past the
     * retention window — deleted regardless of age), `delete-stale-
-    * orphan` (never referenced, older than `orphanMinAgeMs`), or
+    * orphan` (never referenced, older than `orphanMinAgeMs`),
     * `keep-fresh-orphan` (a possibly in-flight writer's staging dir —
-    * the age guard protects it). The operator reviews reclaimable
-    * bytes and the blast radius on time travel BEFORE destroying
-    * history — the audit every production retention job runs first.
-    * Metadata-only (one listing + one content summary per candidate);
-    * same classification code path shape as [[vacuum]], so the audit
-    * names exactly what a same-parameter vacuum then deletes. */
+    * the age guard protects it), or `keep-ext-referenced` (see
+    * [[vacuumClasses]]). The operator reviews reclaimable bytes and the
+    * blast radius on time travel BEFORE destroying history — the audit
+    * every production retention job runs first. Metadata-only (one
+    * listing + one content summary per candidate); [[vacuum]] runs the
+    * same classifier, so the audit names exactly what a same-parameter
+    * vacuum then deletes. */
   def vacuumAudit(spark: SparkSession, root: String, retainVersions: Int = 1,
                   orphanMinAgeMs: Long = 10L * 60 * 1000): DataFrame = {
-    require(retainVersions >= 1, s"need retainVersions >= 1, got $retainVersions")
-    require(orphanMinAgeMs >= 0, s"need orphanMinAgeMs >= 0, got $orphanMinAgeMs")
     import spark.implicits._
     val fs = fileSystem(spark, root)
-    val commits = history(spark, root)
-    if (commits.isEmpty) return Seq.empty[(String, String, Long, Long)]
-      .toDF("dir_name", "action", "bytes", "last_version")
-    val cutoff = commits.last.version - (retainVersions - 1)
-    val keepDirs = commits.filter(_.version >= cutoff)
-      .flatMap(c => snapshotAt(commits, c.version)).toSet
-    val referencedEver = commits.flatMap(_.dirs).toSet
+    val (commits, _, classed) = vacuumClasses(spark, root, retainVersions, orphanMinAgeMs)
     val lastRef = commits.flatMap(c => c.dirs.map(_ -> c.version))
       .groupBy(_._1).map { case (d, vs) => d -> vs.map(_._2).max }
-    val orphanCutoffMs = System.currentTimeMillis() - orphanMinAgeMs
-    val dataRoot = new Path(s"$root/data")
-    val rows =
-      if (!fs.exists(dataRoot)) Seq.empty
-      else fs.listStatus(dataRoot).toIndexedSeq.filter(_.isDirectory).flatMap { st =>
-        val name = st.getPath.getName
-        // mirror vacuum's ext: resolution — see the comment there
-        val extRef = referencedEver.filter(_.startsWith(ExtPrefix))
-          .exists(d => new Path(d.stripPrefix(ExtPrefix)).toUri.getPath ==
-            st.getPath.toUri.getPath)
-        val cls =
-          if (keepDirs.contains(name)) None // live — not a candidate
-          else if (extRef) Some("keep-ext-referenced")
-          else if (referencedEver.contains(name)) Some("delete-expired")
-          else if (st.getModificationTime < orphanCutoffMs) Some("delete-stale-orphan")
-          else Some("keep-fresh-orphan")
-        cls.map(c => (name, c,
-          fs.getContentSummary(st.getPath).getLength,
-          lastRef.getOrElse(name, -1L)))
-      }
-    rows.sortBy(_._1).toDF("dir_name", "action", "bytes", "last_version")
+    classed.map { case (st, cls) =>
+      val name = st.getPath.getName
+      (name, cls, fs.getContentSummary(st.getPath).getLength, lastRef.getOrElse(name, -1L))
+    }.sortBy(_._1).toDF("dir_name", "action", "bytes", "last_version")
   }
 
+  /** Compaction: rewrite the CURRENT snapshot into ~`targetBytes`
+    * files and publish it as a new overwrite version. Readers never
+    * block (old versions stay readable; the commit point is the same
+    * exclusive manifest create), so this is the online answer to the
+    * small-file problem a long-lived append table accumulates —
+    * thousands of micro-batch files become a handful of scan-sized
+    * ones, and time travel to pre-compaction versions still works
+    * until `vacuum`. Returns the new version. */
   def compact(spark: SparkSession, root: String,
               targetBytes: Long = 128L * 1024 * 1024,
               collectStats: Boolean = true): Long = {
@@ -668,20 +660,27 @@ object TxnLog {
                     slack: Long = 4L): DataFrame = {
     require(targetBytes > 0 && slack >= 1,
       s"need targetBytes > 0 and slack >= 1, got $targetBytes, $slack")
-    val fs = fileSystem(spark, root)
-    val snap = snapshotDirs(spark, root, None)
-    val files = snap.flatMap { d =>
-      fs.listStatus(new Path(dataPath(root, d))).toIndexedSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-    }
-    val nFiles = files.size.toLong
-    val bytes = files.map(_.getLen).sum
-    val ideal = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
+    val (nFiles, bytes, ideal) =
+      fileCensus(spark, root, snapshotDirs(spark, root, None), targetBytes)
     val doCompact = nFiles > slack * ideal
     import spark.implicits._
     Seq((nFiles, bytes, ideal, if (doCompact) 1 else 0,
       if (doCompact) s"files $nFiles > $slack x ideal $ideal" else "compacted-enough"))
       .toDF("n_files", "total_bytes", "ideal_files", "compact", "reason")
+  }
+
+  /** The snapshot file census [[health]] and [[compactAdvice]] share:
+    * (data files, their bytes, the ideal file count
+    * `ceil(bytes / targetBytes)`, minimum 1) — one listing per dir. */
+  private def fileCensus(spark: SparkSession, root: String, dirs: Seq[String],
+                         targetBytes: Long): (Long, Long, Long) = {
+    val fs = fileSystem(spark, root)
+    val files = dirs.flatMap { d =>
+      fs.listStatus(new Path(dataPath(root, d))).toIndexedSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    }
+    val bytes = files.map(_.getLen).sum
+    (files.size.toLong, bytes, math.max(1L, (bytes + targetBytes - 1) / targetBytes))
   }
 
   /** 2-D Hilbert index of bucket coordinates in [0, 2^bits)² — the
@@ -926,49 +925,18 @@ object TxnLog {
     // from the promoted dirs (manifest certifies disk)
     val statsMap = newDirs.map(d => d -> dirStats(spark, root, d)).toMap
     // data content is the already-gated snapshot verbatim — CHECK
-    // constraints hold by construction, no re-validation scan
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val last = latestCommit(spark, root)
-      val version = last.map(_.version + 1).getOrElse(0L)
-      // same optimistic resolution as [[commit]]: interleaved plain
-      // appends rebase by reference (their dirs stay un-clustered
-      // until the next pass — pruning yield, never correctness);
-      // anything else aborts
-      var rebased: Seq[String] = Nil
-      if (version != expected + 1) {
-        interleavedAppendDirs(fs, root, expected, version - 1) match {
-          case Left(actions) =>
-            newDirs.foreach(d => fs.delete(new Path(s"$root/data/$d"), true))
-            throw new java.util.ConcurrentModificationException(
-              s"TxnLog: table at $root moved (expected latest $expected, found ${version - 1}) — " +
-                s"non-append commits interleaved (${actions.mkString(",")}); cluster aborted")
-          case Right(ds) => rebased = ds
-        }
-      }
-      txnId.foreach { id =>
-        txnVersionOf(spark, root, last, id).foreach { v =>
-          newDirs.foreach(d => fs.delete(new Path(s"$root/data/$d"), true))
-          return v
-        }
-      }
-      val carriedChecks = last.map(_.checks).getOrElse(Map.empty)
-      // rebased append dirs keep their own manifest stats; DVs cannot
-      // cover them (appends add none)
-      val carriedStats = last.map(_.stats).getOrElse(Map.empty)
-        .filter { case (d, _) => rebased.contains(d) }
-      val txns = capTxns(carriedTxns(spark, root, last) ++ txnId.map(_ -> version))
-      if (tryPublish(fs, root, Commit(version, "overwrite", newDirs ++ rebased, txnId,
-        statsMap ++ carriedStats, Seq.empty, carriedChecks, txns,
-        colmap = last.map(_.colmap).getOrElse(Map.empty),
-        dropped = last.map(_.dropped).getOrElse(Seq.empty),
-        defaults = last.map(_.defaults).getOrElse(Map.empty),
-        transforms = last.map(_.transforms).getOrElse(Map.empty))))
-        return version
-      attempt += 1
+    // constraints hold by construction, no re-validation scan. Same
+    // optimistic resolution as [[commit]]: interleaved plain appends
+    // rebase by reference (their dirs stay un-clustered until the next
+    // pass — pruning yield, never correctness) and keep their own
+    // manifest stats (DVs cannot cover them: appends add none)
+    publish(spark, root, txnId, Some(expected), rebase = true, "cluster", newDirs) {
+      (version, last, rebased) =>
+        val c = last.get
+        c.copy(version = version, action = "overwrite", dirs = newDirs ++ rebased,
+          stats = statsMap ++ c.stats.filter { case (d, _) => rebased.contains(d) },
+          dvs = Seq.empty)
     }
-    throw new IllegalStateException(
-      s"TxnLog: lost $MaxRetries consecutive commit races on $root — giving up")
   }
 
   /** Clustering advisor — the monitoring half of [[cluster]],
@@ -1091,127 +1059,151 @@ object TxnLog {
     out.toSeq
   }
 
+  /** Data-skipping read: `read(...).filter(column BETWEEN lo AND hi)`,
+    * but commit directories whose manifest stats PROVE no row can
+    * match are never opened — no footer reads, no file listings. The
+    * manifest is the index (the Delta/Iceberg shape): on a 100 TB
+    * append table written in time order, a time-range query opens only
+    * the matching commits' directories. Conservative on every gap: a
+    * dir committed without `collectStats`, a column outside the
+    * stats set, or a type mismatch keeps the dir; the exact predicate
+    * is always re-applied, so stats can cost time, never correctness.
+    * `lo`/`hi` are a Long (for integral stat columns) or String pair.
+    * Zero surviving dirs still returns the table's schema (one dir is
+    * opened under an always-false filter). */
+  def readWhere(spark: SparkSession, root: String, column: String,
+                lo: Any, hi: Any, asOf: Option[Long] = None): DataFrame =
+    readWhereAll(spark, root, Seq((column, lo, hi)), asOf)
+
+  /** The pruning census behind [[readWhere]]: (survivors, skipped,
+    * full snapshot). Exposed for specs and skipping reports. */
+  private[graft] def pruneDirs(spark: SparkSession, root: String, column: String,
+                               lo: Any, hi: Any,
+                               asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
+    val m = manifestAt(spark, root, asOf)
+    census(m, rangeTest(m, Seq((column, Some(lo), Some(hi)))))
+  }
+
   /** Conjunctive data-skipping read — [[readWhere]] for several range
     * predicates at once, the consumer a [[cluster]]ed table is built
-    * for: a dir survives only if its stats admit EVERY predicate
-    * (skip set = union of per-column skips), and every predicate is
-    * re-applied exactly. Same conservative laws as [[readWhere]]. */
+    * for: a dir (and a file inside it) survives only if its stats admit
+    * EVERY predicate, and every predicate is re-applied exactly. The
+    * raw ranges also map onto a registered order-preserving hidden
+    * partition, pruning partition dirs inside each surviving dir. */
   def readWhereAll(spark: SparkSession, root: String,
                    preds: Seq[(String, Any, Any)],
                    asOf: Option[Long] = None): DataFrame = {
     require(preds.nonEmpty, "readWhereAll: no predicates")
-    val (survivors, _, snap) = pruneDirsAll(spark, root, preds, asOf)
-    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
     val m = manifestAt(spark, root, asOf)
-    val predicate = preds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
-    val pfs = preds.flatMap { case (c, lo, hi) =>
-      partitionRange(m, physOf(m, c), lo, hi) }
-    val frames = survivors.flatMap(d => survivorFrame(spark, root, d, m, pfs,
-      st => preds.forall { case (c, lo, hi) =>
-        mayContain(st.get(physOf(m, c)), lo, hi) }))
-    if (frames.isEmpty)
-      dirFrame(spark, root, snap.head, m).filter(lit(false))
-    else
-      frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        .filter(predicate)
-  }
-
-  /** Census behind [[readWhereAll]]: (survivors, skipped, snapshot). */
-  private[graft] def pruneDirsAll(spark: SparkSession, root: String,
-                                  preds: Seq[(String, Any, Any)],
-                                  asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
-    val manifest = manifestAt(spark, root, asOf)
-    val snap = manifest.map(_.dirs).getOrElse(Seq.empty)
-    val stats = manifest.map(_.stats).getOrElse(Map.empty)
-    val (keep, skip) = snap.partition(d => preds.forall { case (c, lo, hi) =>
-      mayContain(stats.get(d).flatMap(_.get(physOf(manifest, c))), lo, hi) })
-    (keep, skip, snap)
+    val test = rangeTest(m, preds.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) })
+    skipScan(spark, root, m, asOf, test, Some(test),
+      preds.flatMap { case (c, lo, hi) => partitionRange(m, physOf(m, c), lo, hi) },
+      Some(preds.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
+        .reduce(_ && _)))._1
   }
 
   /** The relation-scan read behind `format("graft")`
-    * ([[GraftDataSource]]): directories pruned by OPTIONAL-bounded
-    * ranges — Catalyst hands a DSv1 relation strict/one-sided
-    * predicates (`>`, `<=`, …) that [[readWhereAll]]'s closed
-    * intervals cannot express. NOTHING is re-applied here: the
-    * relation reports every filter unhandled, so Spark keeps the
-    * exact predicates above the scan and pruning is pure I/O
-    * avoidance, never semantics (the same one-sided-conservatism
-    * laws as [[readWhere]]: stat-blind dirs, unknown columns, and
-    * type mismatches always survive). */
-  private[graft] def readRanges(spark: SparkSession, root: String,
-                                ranges: Seq[(String, Option[Any], Option[Any])],
-                                asOf: Option[Long] = None): DataFrame =
-    readRangesCensus(spark, root, ranges, asOf)._1
-
-  /** [[readRanges]] plus its pruning census — (frame, dirs admitted,
-    * dirs skipped), so scan-substitution callers can report what the
-    * manifest stats bought without a second manifest resolution. */
-  private[graft] def readRangesCensus(spark: SparkSession, root: String,
-                                      ranges: Seq[(String, Option[Any], Option[Any])],
-                                      asOf: Option[Long] = None): (DataFrame, Int, Int) = {
-    val (f, dk, ds, _, _) = readRangesCensusFiles(spark, root, ranges, asOf)
-    (f, dk, ds)
-  }
-
-  /** [[readRangesCensus]] with FILE-granular pruning inside admitted
-    * dirs: when a dir's manifest carries per-file stats (the
-    * [[FileKeyPrefix]] entries [[dirStats]] records), only files whose
-    * range may contain a match are read — the Delta add-file skipping
-    * shape, which matters most AFTER compaction, when one dir holds
-    * many scan-sized files and the dir-level [min, max] has widened to
-    * the union. Returns (frame, dirsKept, dirsSkipped, filesKept,
-    * filesSkipped); the file counts cover only dirs that carry file
-    * stats (stat-blind dirs read whole, conservatively). Same
-    * one-sided laws: a file missing a column's stat survives, and the
-    * exact predicate is re-applied ABOVE the scan by the caller. */
+    * ([[GraftDataSource]], [[graft.plans.GraftScanSubstitution]]) with
+    * its pruning census: (frame, dirs kept, dirs skipped, files kept,
+    * files skipped). Ranges have OPTIONAL bounds — Catalyst hands a
+    * relation strict/one-sided predicates (`>`, `<=`, …) that
+    * [[readWhereAll]]'s closed intervals cannot express. NOTHING is
+    * re-applied here: the relation reports every filter unhandled, so
+    * Spark keeps the exact predicates above the scan and pruning is
+    * pure I/O avoidance, never semantics. No ranges means nothing to
+    * prune, so no file census is taken. */
   private[graft] def readRangesCensusFiles(spark: SparkSession, root: String,
                                            ranges: Seq[(String, Option[Any], Option[Any])],
                                            asOf: Option[Long] = None): (DataFrame, Int, Int, Int, Int) = {
     val m = manifestAt(spark, root, asOf)
+    val test = rangeTest(m, ranges)
+    val (frame, kept, skipped, filesKept, filesSkipped) =
+      skipScan(spark, root, m, asOf, test, Option.when(ranges.nonEmpty)(test), Nil, None)
+    (frame, kept.size, skipped.size, filesKept, filesSkipped)
+  }
+
+  /** A test over one dir's (or one file's) manifest stats: may it hold
+    * a matching row? A missing stat always admits. */
+  private type StatTest = Map[String, ColStat] => Boolean
+
+  /** Every range of a conjunction admits (see [[mayContain]]). */
+  private def rangeTest(m: Option[Commit],
+                        ranges: Seq[(String, Option[Any], Option[Any])]): StatTest =
+    st => ranges.forall { case (c, lo, hi) => mayContain(st.get(physOf(m, c)), lo, hi) }
+
+  /** The one pruning census: the snapshot's dirs split by `admits`
+    * over each dir's stats — (kept, skipped, snapshot). */
+  private def census(m: Option[Commit],
+                     admits: StatTest): (Seq[String], Seq[String], Seq[String]) = {
     val snap = m.map(_.dirs).getOrElse(Seq.empty)
-    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
     val stats = m.map(_.stats).getOrElse(Map.empty)
-    val keep = snap.filter(d => ranges.forall { case (c, lo, hi) =>
-      mayContainOpt(stats.get(d).flatMap(_.get(physOf(m, c))), lo, hi) })
+    val (keep, skip) = snap.partition(d => admits(stats.getOrElse(d, Map.empty)))
+    (keep, skip, snap)
+  }
+
+  /** The one data-skipping scan behind every reader. Dirs failing
+    * `dirAdmits` are never opened ([[census]]). Inside a kept dir that
+    * records per-file stats ([[FileKeyPrefix]]), files failing
+    * `fileAdmits` are not opened either — the Delta add-file skipping
+    * shape, which matters most AFTER compaction, when one dir holds
+    * many scan-sized files and its [min, max] has widened to the
+    * union. A dir without file stats (stat-blind, partitioned, or past
+    * [[FileStatsCap]] files) reads whole, with `partFilters` pruning
+    * its hidden-partition dirs. Deletion vectors apply inside every
+    * kept dir (stats pruning stays valid: a DV only removes rows).
+    * `exact` is re-applied above the union; zero kept dirs or files
+    * still returns the table's schema (one dir is opened under an
+    * always-false filter). Returns (frame, dirs kept, dirs skipped,
+    * files kept, files skipped); the file counts cover only dirs with
+    * file stats, and stay 0 without a `fileAdmits`. */
+  private def skipScan(spark: SparkSession, root: String, m: Option[Commit],
+                       asOf: Option[Long], dirAdmits: StatTest,
+                       fileAdmits: Option[StatTest], partFilters: Seq[(String, Column)],
+                       exact: Option[Column]): (DataFrame, Seq[String], Seq[String], Int, Int) = {
+    val (keep, skip, snap) = census(m, dirAdmits)
+    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
     var filesKept = 0
     var filesSkipped = 0
     val frames = keep.flatMap { d =>
-      val fstats = fileStatsOf(stats.getOrElse(d, Map.empty))
-      if (fstats.isEmpty || ranges.isEmpty) Some(dirFrame(spark, root, d, m))
-      else {
-        val (fk, fs) = fstats.keys.toSeq.sorted.partition(f =>
-          ranges.forall { case (c, lo, hi) =>
-            mayContainOpt(fstats(f).get(physOf(m, c)), lo, hi) })
-        filesKept += fk.size
-        filesSkipped += fs.size
-        if (fs.isEmpty) Some(dirFrame(spark, root, d, m)) // nothing to skip
-        else if (fk.isEmpty) None // every file provably clean
-        else Some(dirFrameFiles(spark, root, d, m, fk))
+      val fstats = fileStatsOf(m.flatMap(_.stats.get(d)).getOrElse(Map.empty))
+      fileAdmits.filter(_ => fstats.nonEmpty) match {
+        case None => Some(dirFrame(spark, root, d, m, partFilters))
+        case Some(admits) =>
+          val (fk, fs) = fstats.keys.toSeq.sorted.partition(f => admits(fstats(f)))
+          filesKept += fk.size
+          filesSkipped += fs.size
+          if (fk.isEmpty) None // every file provably clean
+          else Some(dirFrame(spark, root, d, m, partFilters, if (fs.isEmpty) Nil else fk))
       }
     }
     val frame =
       if (frames.isEmpty) dirFrame(spark, root, snap.head, m).filter(lit(false))
-      else frames.reduce(_.unionByName(_, allowMissingColumns = true))
-    (frame, keep.size, snap.size - keep.size, filesKept, filesSkipped)
+      else {
+        val union = frames.reduce(_.unionByName(_, allowMissingColumns = true))
+        exact.fold(union)(union.filter)
+      }
+    (frame, keep, skip, filesKept, filesSkipped)
   }
 
-  /** A surviving dir's frame with FILE-granular skipping when its
-    * manifest carries per-file stats: only files `fileAdmits` accepts
-    * are read; None when every file is provably clean. Dirs without
-    * file stats (stat-blind, partitioned, or >cap files) read whole
-    * via [[dirFrame]] — the same one-sided conservatism as dir
-    * pruning, and callers re-apply their exact predicate above. */
-  private def survivorFrame(spark: SparkSession, root: String, d: String,
-                            m: Option[Commit], pfs: Seq[(String, Column)],
-                            fileAdmits: Map[String, ColStat] => Boolean): Option[DataFrame] = {
-    val fstats = fileStatsOf(m.flatMap(_.stats.get(d)).getOrElse(Map.empty))
-    if (fstats.isEmpty) Some(dirFrame(spark, root, d, m, pfs))
-    else {
-      val fk = fstats.keys.toSeq.sorted.filter(f => fileAdmits(fstats(f)))
-      if (fk.size == fstats.size) Some(dirFrame(spark, root, d, m, pfs))
-      else if (fk.isEmpty) None
-      else Some(dirFrameFiles(spark, root, d, m, fk))
+  /** Can a dir (or file) with these stats hold a value in [lo, hi]?
+    * An absent bound is unconstrained; strict bounds prune with their
+    * inclusive envelope (a dir whose max equals a `>` literal
+    * survives; the exact filter discards its rows). Missing stats, or
+    * a present bound whose type does not match the stat → yes
+    * (conservative). NaN endpoints never prune (every comparison
+    * involving one fails the skip test, keeping the dir). */
+  private def mayContain(st: Option[ColStat], lo: Option[Any], hi: Option[Any]): Boolean = {
+    val bounds = lo.toSeq ++ hi.toSeq
+    def num(b: Any): Number = b.asInstanceOf[Number]
+    st match {
+      case Some(ColStat("long", mn, mx)) if bounds.forall(_.isInstanceOf[Number]) =>
+        lo.forall(l => mx.toLong >= num(l).longValue) && hi.forall(h => mn.toLong <= num(h).longValue)
+      case Some(ColStat("double", mn, mx)) if bounds.forall(_.isInstanceOf[Number]) =>
+        lo.forall(l => !(mx.toDouble < num(l).doubleValue)) &&
+          hi.forall(h => !(mn.toDouble > num(h).doubleValue))
+      case Some(ColStat("string", mn, mx)) if bounds.forall(_.isInstanceOf[String]) =>
+        lo.forall(l => mx >= l.toString) && hi.forall(h => mn <= h.toString)
+      case _ => true
     }
   }
 
@@ -1225,47 +1217,6 @@ object TxnLog {
     }.groupBy(_._1).map { case (f, xs) =>
       f -> xs.map(t => (t._2, t._3)).toMap
     }
-
-  /** [[dirFrame]] restricted to an explicit file subset (file-stat
-    * pruning only fires on unpartitioned dirs, so no partition
-    * filters apply here; logicalization and DVs do). */
-  private def dirFrameFiles(spark: SparkSession, root: String, d: String,
-                            m: Option[Commit], files: Seq[String]): DataFrame = {
-    val base = dataPath(root, d)
-    val paths = files.map(f => s"$base/$f")
-    // a local dir's files share its (cached) schema; an ext: dir's
-    // subset infers from its own files, as a foreign writer may differ
-    val raw =
-      if (d.startsWith(ExtPrefix)) spark.read.parquet(paths: _*)
-      else spark.read.schema(readDir(spark, root, d).schema).parquet(paths: _*)
-    val logical = logicalFrame(raw,
-      m.map(_.colmap).getOrElse(Map.empty), m.map(_.dropped).getOrElse(Seq.empty),
-      m.map(_.defaults).getOrElse(Map.empty))
-    m.map(_.dvs).getOrElse(Seq.empty).filter(_.dirs.contains(d))
-      .foldLeft(logical) { (df, dv) =>
-        df.filter(coalesce(not(org.apache.spark.sql.functions.expr(dv.pred)), lit(true)))
-      }
-  }
-
-  /** [[mayContain]] with optional bounds: an absent side is
-    * unconstrained (tests only the bound the filter actually
-    * carries). Strict bounds prune with their inclusive envelope —
-    * a dir whose max equals a `>` literal survives; the exact filter
-    * above the scan discards its rows. Conservative on every gap,
-    * NaN endpoints never prune. */
-  private def mayContainOpt(st: Option[ColStat],
-                            lo: Option[Any], hi: Option[Any]): Boolean = st match {
-    case Some(ColStat("long", mn, mx)) =>
-      lo.forall { case l: Number => mx.toLong >= l.longValue; case _ => true } &&
-        hi.forall { case h: Number => mn.toLong <= h.longValue; case _ => true }
-    case Some(ColStat("double", mn, mx)) =>
-      lo.forall { case l: Number => !(mx.toDouble < l.doubleValue); case _ => true } &&
-        hi.forall { case h: Number => !(mn.toDouble > h.doubleValue); case _ => true }
-    case Some(ColStat("string", mn, mx)) =>
-      lo.forall { case l: String => mx >= l; case _ => true } &&
-        hi.forall { case h: String => mn <= h; case _ => true }
-    case _ => true
-  }
 
   /** On-disk bytes of the visible snapshot — metadata-only (one
     * listing per snapshot dir, never a file open). Feeds the
@@ -1396,18 +1347,23 @@ object TxnLog {
     * from Spark's CAST for timestamp/date/decimal/float values, and a
     * Bloom probing the WRONG string wrongly proves absence — the
     * one-sided-error guarantee only holds when writer and reader hash
-    * identical bytes. The frame is a local relation ([[driverEval]]),
-    * so a lookup runs no job for its probes. NULL probes nothing (the
-    * writer set no bits for NULLs — callers keep every dir, and the
-    * exact predicate decides). */
-  private[graft] def bloomProbes(spark: SparkSession, value: Any): Option[Seq[Long]] = {
-    if (value == null) return None
-    Option(driverEval(spark, probeExpr(value)).getAs[scala.collection.Seq[Long]](0))
-      .map(_.toSeq)
-  }
+    * identical bytes. NULL probes nothing (the writer set no bits for
+    * NULLs). */
+  private[graft] def bloomProbes(spark: SparkSession, value: Any): Option[Seq[Long]] =
+    if (value == null) None else probesOf(spark, Seq(value)).head
 
-  private def probeExpr(value: Any): Column =
-    graft.functions.TextFunctions.bloomPositions(lit(value).cast("string"), BloomBits, BloomK)
+  /** [[bloomProbes]] of several non-null values at once, from ONE
+    * one-row local relation ([[driverEval]]), so a lookup runs no job
+    * for its probes however many values it carries. */
+  private def probesOf(spark: SparkSession, values: Seq[Any]): Seq[Option[Seq[Long]]] =
+    if (values.isEmpty) Seq.empty
+    else {
+      val row = driverEval(spark, org.apache.spark.sql.functions.array(values.map(v =>
+        graft.functions.TextFunctions.bloomPositions(lit(v).cast("string"), BloomBits, BloomK)): _*))
+      Option(row.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](0))
+        .map(_.map(ps => Option(ps).map(_.toSeq)).toSeq)
+        .getOrElse(values.map(_ => None))
+    }
 
   /** One column expression evaluated over a one-row local relation —
     * folded on the driver by `ConvertToLocalRelation`, so no job. */
@@ -1426,46 +1382,54 @@ object TxnLog {
     * dir never held it; the decontamination screen's one-sided-error
     * discipline, deterministic cross-engine by the md5 probes).
     * Consults BOTH indexes when present (a dir must pass its bloom
-    * AND its range stats to be opened); conservative on every gap.
-    * The exact equality predicate is always re-applied. */
+    * AND its range stats to be opened; a file, its range stats);
+    * conservative on every gap. The exact equality predicate is always
+    * re-applied. */
   def readPoint(spark: SparkSession, root: String, column: String,
                 value: Any, asOf: Option[Long] = None): DataFrame = {
-    val (survivors, _, snap) = prunePoint(spark, root, column, value, asOf)
-    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
     val m = manifestAt(spark, root, asOf)
-    val pfs = partitionPoint(m, physOf(m, column), value)
-    val frames = survivors.flatMap(d => survivorFrame(spark, root, d, m, pfs,
-      st => mayContain(st.get(physOf(m, column)), value, value)))
-    if (frames.isEmpty)
-      dirFrame(spark, root, snap.head, m).filter(lit(false))
-    else
-      frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        .filter(col(column) === lit(value))
+    val (dirTest, fileTest) = pointTests(spark, m, column, value)
+    skipScan(spark, root, m, asOf, dirTest, Some(fileTest),
+      partitionPoint(m, physOf(m, column), value), Some(col(column) === lit(value)))._1
   }
 
   /** Census behind [[readPoint]]: (survivors, skipped, snapshot). */
   private[graft] def prunePoint(spark: SparkSession, root: String, column: String,
                                 value: Any,
                                 asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
-    val manifest = manifestAt(spark, root, asOf)
-    val snap = manifest.map(_.dirs).getOrElse(Seq.empty)
-    val stats = manifest.map(_.stats).getOrElse(Map.empty)
-    val probes = bloomProbes(spark, value)
-    val phys = physOf(manifest, column)
-    val (keep, skip) = snap.partition { d =>
-      val ds = stats.get(d)
-      bloomAdmits(ds, phys, probes) &&
-        mayContain(ds.flatMap(_.get(phys)), value, value)
-    }
-    (keep, skip, snap)
+    val m = manifestAt(spark, root, asOf)
+    census(m, pointTests(spark, m, column, value)._1)
+  }
+
+  /** [[pointsTests]] of one value, except that a NULL probe keeps every
+    * dir and file: the writer set no Bloom bits for NULLs, and the
+    * exact predicate decides. */
+  private def pointTests(spark: SparkSession, m: Option[Commit], column: String,
+                         value: Any): (StatTest, StatTest) =
+    if (value == null) (_ => true, _ => true)
+    else pointsTests(spark, m, column, Seq(value))
+
+  /** The (dir, file) tests of a lookup on ANY of `values` (IN
+    * semantics: a NULL matches nothing, so it keeps nothing). A dir is
+    * kept when some value passes both its Bloom ([[bloomAdmits]]) and
+    * its range stats; a file carries no Bloom, so range stats alone
+    * decide. */
+  private def pointsTests(spark: SparkSession, m: Option[Commit], column: String,
+                          values: Seq[Any]): (StatTest, StatTest) = {
+    val phys = physOf(m, column)
+    val nonNull = values.filterNot(_ == null)
+    val probes = probesOf(spark, nonNull)
+    def ranged(v: Any): StatTest = st => mayContain(st.get(phys), Some(v), Some(v))
+    (st => nonNull.zip(probes).exists { case (v, ps) => bloomAdmits(st, phys, ps) && ranged(v)(st) },
+      st => nonNull.exists(v => ranged(v)(st)))
   }
 
   /** Does the dir's Bloom (if any) admit a value with these probe
     * positions? No bloom / unreadable bloom / no probes → true
     * (conservative, never skip). */
-  private def bloomAdmits(ds: Option[Map[String, ColStat]], column: String,
+  private def bloomAdmits(ds: Map[String, ColStat], column: String,
                           probes: Option[Seq[Long]]): Boolean =
-    (probes, ds.flatMap(_.get(s"$BloomKeyPrefix$column"))) match {
+    (probes, ds.get(s"$BloomKeyPrefix$column")) match {
       case (Some(ps), Some(ColStat("bloom", hexWords, meta)))
         if meta == s"$BloomBits:$BloomK" && hexWords.length == BloomBits / 4 =>
         ps.forall { p =>
@@ -1478,66 +1442,29 @@ object TxnLog {
 
   /** Multi-key point lookup — [[readPoint]] for a VALUE LIST, the
     * "fetch these K ids" serving read: a dir is opened if ANY of the
-    * values may be present there (per-value Bloom ∧ range test,
-    * conservative on every gap), and the exact IN predicate always
-    * re-applies. All probe positions come from ONE engine job over
-    * the literal list (the writer's-own-rendering discipline of
-    * [[readPoint]]), so a K-id fetch costs one 1-row job plus the
-    * admitted dirs — on a hash-scattered 100 TB table with Blooms,
-    * that is ~K dirs, not the snapshot. */
+    * values may be present there ([[pointsTests]]), and the exact IN
+    * predicate always re-applies. All probe positions come from ONE
+    * local relation ([[probesOf]]), so on a hash-scattered 100 TB
+    * table with Blooms a K-id fetch opens ~K dirs, not the snapshot. */
   def readPoints(spark: SparkSession, root: String, column: String,
                  values: Seq[Any], asOf: Option[Long] = None): DataFrame = {
     require(values.nonEmpty, "readPoints: no values")
-    val (survivors, _, snap) = prunePoints(spark, root, column, values, asOf)
-    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
     val m = manifestAt(spark, root, asOf)
+    val (dirTest, fileTest) = pointsTests(spark, m, column, values)
     // one OR of the per-value partition points — a K-id fetch opens
     // only the K derived partitions inside each admitted dir
-    val pfs = {
-      val per = values.filterNot(_ == null)
-        .flatMap(v => partitionPoint(m, physOf(m, column), v))
-      if (per.isEmpty) Nil
-      else Seq((per.head._1, per.map(_._2).reduce(_ || _)))
-    }
-    // file-level: a file is opened if ANY value's range admits it
-    // (NULL matches nothing under IN — it cannot keep a file)
-    val frames = survivors.flatMap(d => survivorFrame(spark, root, d, m, pfs,
-      st => values.exists(v => v != null &&
-        mayContain(st.get(physOf(m, column)), v, v))))
-    if (frames.isEmpty)
-      dirFrame(spark, root, snap.head, m).filter(lit(false))
-    else
-      frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        .filter(col(column).isin(values: _*))
+    val per = values.flatMap(v => partitionPoint(m, physOf(m, column), v))
+    val pfs = if (per.isEmpty) Nil else Seq((per.head._1, per.map(_._2).reduce(_ || _)))
+    skipScan(spark, root, m, asOf, dirTest, Some(fileTest), pfs,
+      Some(col(column).isin(values: _*)))._1
   }
 
   /** Census behind [[readPoints]]: (survivors, skipped, snapshot). */
   private[graft] def prunePoints(spark: SparkSession, root: String, column: String,
                                  values: Seq[Any],
                                  asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
-    val manifest = manifestAt(spark, root, asOf)
-    val snap = manifest.map(_.dirs).getOrElse(Seq.empty)
-    val stats = manifest.map(_.stats).getOrElse(Map.empty)
-    // a NULL value matches nothing under IN — it cannot keep a dir
-    val nonNull = values.filterNot(_ == null)
-    val probesPer: Seq[Option[Seq[Long]]] =
-      if (nonNull.isEmpty) Seq.empty
-      else {
-        val row = driverEval(spark,
-          org.apache.spark.sql.functions.array(nonNull.map(probeExpr): _*))
-        Option(row.getAs[scala.collection.Seq[scala.collection.Seq[Long]]](0))
-          .map(_.map(ps => Option(ps).map(_.toSeq)).toSeq)
-          .getOrElse(nonNull.map(_ => None))
-      }
-    val phys = physOf(manifest, column)
-    val (keep, skip) = snap.partition { d =>
-      val ds = stats.get(d)
-      nonNull.zip(probesPer).exists { case (v, ps) =>
-        bloomAdmits(ds, phys, ps) &&
-          mayContain(ds.flatMap(_.get(phys)), v, v)
-      }
-    }
-    (keep, skip, snap)
+    val m = manifestAt(spark, root, asOf)
+    census(m, pointsTests(spark, m, column, values)._1)
   }
 
   /** Row-level DELETE by copy-on-write at commit-dir granularity —
@@ -1685,44 +1612,18 @@ object TxnLog {
     org.apache.spark.sql.functions.expr(predSql)
     val affected = affectedDirs(spark, root, snap, latest0, _.filter(predicate))
     if (affected.isEmpty) return expected
-    val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val lastOpt = latestCommit(spark, root)
-      val version = lastOpt.map(_.version + 1).getOrElse(0L)
-      // CAS with the same optimistic resolution as [[commit]]: the
-      // vector's dir scope was derived from `expected`'s snapshot, so
-      // interleaved plain appends rebase (their dirs ride in
-      // UNCOVERED — a DELETE applies to its own snapshot, appended
-      // rows survive, serializing as delete-then-append); anything
-      // else aborts.
-      var rebased: Seq[String] = Nil
-      if (version != expected + 1) {
-        interleavedAppendDirs(fs, root, expected, version - 1) match {
-          case Left(actions) =>
-            throw new java.util.ConcurrentModificationException(
-              s"TxnLog: table at $root moved (expected latest $expected, found ${version - 1}) — " +
-                s"non-append commits interleaved (${actions.mkString(",")}); merge-on-read delete aborted")
-          case Right(ds) => rebased = ds
-        }
-      }
-      txnId.foreach { id =>
-        txnVersionOf(spark, root, lastOpt, id).foreach(return _)
-      }
-      val last = lastOpt.get
-      val snapPub = snap ++ rebased
-      val newDvs = last.dvs.map(dv => dv.copy(dirs = dv.dirs.filter(snapPub.contains)))
-        .filter(_.dirs.nonEmpty) :+ Dv(predSql, affected.toSeq.sorted)
-      val txns = capTxns(carriedTxns(spark, root, lastOpt) ++ txnId.map(_ -> version))
-      if (tryPublish(fs, root,
-        Commit(version, "delete_mor", snapPub, txnId, last.stats, newDvs,
-          last.checks, txns, colmap = last.colmap, dropped = last.dropped,
-          defaults = last.defaults, transforms = last.transforms)))
-        return version
-      attempt += 1
+    // the vector's dir scope was derived from `expected`'s snapshot, so
+    // interleaved plain appends rebase and ride in UNCOVERED (a DELETE
+    // applies to its own snapshot; appended rows survive, serializing
+    // as delete-then-append); anything else aborts
+    publish(spark, root, txnId, Some(expected), rebase = true, "merge-on-read delete") {
+      (version, last, rebased) =>
+        val c = last.get
+        val snapPub = snap ++ rebased
+        c.copy(version = version, action = "delete_mor", dirs = snapPub,
+          dvs = c.dvs.map(dv => dv.copy(dirs = dv.dirs.filter(snapPub.contains)))
+            .filter(_.dirs.nonEmpty) :+ Dv(predSql, affected.toSeq.sorted))
     }
-    throw new IllegalStateException(
-      s"TxnLog: lost $MaxRetries consecutive commit races on $root — giving up")
   }
 
   /** Hive partition columns (outermost first) of the affected commit
@@ -2318,34 +2219,10 @@ object TxnLog {
     * `mutate` transforms only the metadata its action owns. */
   private def publishMeta(spark: SparkSession, root: String, expected: Long,
                           txnId: Option[String], action: String,
-                          mutate: Commit => Commit): Long = {
-    val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val lastOpt = latestCommit(spark, root)
-      val version = lastOpt.map(_.version + 1).getOrElse(0L)
-      if (version != expected + 1)
-        throw new java.util.ConcurrentModificationException(
-          s"TxnLog: table at $root moved (expected latest $expected, found ${version - 1}) — " +
-            s"$action aborted; re-run against the new state")
-      txnId.foreach { id =>
-        txnVersionOf(spark, root, lastOpt, id).foreach(return _)
-      }
-      // mutate rewrites ONLY the metadata the action owns (checks for
-      // set/drop_check, colmap/dropped for rename/drop_column); dirs,
-      // version, and the txn map are this loop's to fix
-      val base = mutate(lastOpt.get)
-      val txns = capTxns(carriedTxns(spark, root, lastOpt) ++ txnId.map(_ -> version))
-      if (tryPublish(fs, root, Commit(version, action, base.dirs, txnId,
-        base.stats, base.dvs, base.checks, txns,
-        colmap = base.colmap, dropped = base.dropped, defaults = base.defaults,
-        transforms = base.transforms)))
-        return version
-      attempt += 1
+                          mutate: Commit => Commit): Long =
+    publish(spark, root, txnId, Some(expected), rebase = false, action) { (version, last, _) =>
+      mutate(last.get).copy(version = version, action = action)
     }
-    throw new IllegalStateException(
-      s"TxnLog: lost $MaxRetries consecutive commit races on $root — giving up")
-  }
 
   /** RESTORE: make version `toVersion`'s snapshot the CURRENT table
     * state again as a NEW commit — the incident-recovery primitive
@@ -2379,31 +2256,13 @@ object TxnLog {
           s"written); available: ${listVersions(fs, root).mkString(",")}"))
     val expected = latest.get.version
     if (toVersion == expected) return expected
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      val lastOpt = latestCommit(spark, root)
-      val version = lastOpt.map(_.version + 1).getOrElse(0L)
-      if (version != expected + 1)
-        throw new java.util.ConcurrentModificationException(
-          s"TxnLog: table at $root moved (expected latest $expected, found ${version - 1}) — " +
-            "restore aborted; re-examine the new state first")
-      txnId.foreach { id =>
-        txnVersionOf(spark, root, lastOpt, id).foreach(return _)
-      }
-      val txns = capTxns(carriedTxns(spark, root, lastOpt) ++ txnId.map(_ -> version))
-      // the TARGET's data/stats/vectors come back — and its COLUMN
-      // MAPPING with them (a restore across a rename serves the
-      // restored version's own names: full-fidelity rollback); CHECK
-      // constraints are table metadata and stay at the TIP's state
-      if (tryPublish(fs, root, Commit(version, "restore", target.dirs, txnId,
-        target.stats, target.dvs, lastOpt.get.checks, txns,
-        colmap = target.colmap, dropped = target.dropped,
-        defaults = target.defaults, transforms = target.transforms)))
-        return version
-      attempt += 1
+    // the TARGET's data/stats/vectors come back — and its COLUMN
+    // MAPPING with them (a restore across a rename serves the restored
+    // version's own names: full-fidelity rollback); CHECK constraints
+    // are table metadata and stay at the TIP's state
+    publish(spark, root, txnId, Some(expected), rebase = false, "restore") { (version, last, _) =>
+      target.copy(version = version, action = "restore", checks = last.get.checks)
     }
-    throw new IllegalStateException(
-      s"TxnLog: lost $MaxRetries consecutive commit races on $root — giving up")
   }
 
   /** ZERO-COPY SHALLOW CLONE — the Delta `CREATE TABLE ... SHALLOW
@@ -2969,89 +2828,104 @@ object TxnLog {
       rangeStats ++ bloomCols.map(c => colmap0.getOrElse(c, c)).map(p =>
         s"$BloomKeyPrefix$p" -> dirBloom(spark, root, dir, p))
     }
+    // CAS writers (compaction, CoW delete/merge) derived the rewrite
+    // FROM a specific snapshot; interleaved PLAIN APPENDS rebase (they
+    // touch no dir the rewrite read, add no deletion vectors, change no
+    // checks — the outcome serializes as rewrite-then-append), anything
+    // else aborts and the caller re-derives ([[publish]])
+    publish(spark, root, txnId, expectedLatest, rebase = true, "rewrite", Seq(dir)) {
+      (version, last, rebasedDirs) =>
+        val dirs = action match {
+          case "overwrite" => Seq(dir) ++ rebasedDirs
+          case "append"    => last.map(_.dirs).getOrElse(Seq.empty) :+ dir
+          // copy-on-write rewrite: unaffected directories carry by
+          // reference, the freshly written dir replaces the affected set
+          case "replace"   => (replaceBase.get :+ dir) ++ rebasedDirs
+        }
+        // manifests stay self-contained: carry forward the retained
+        // dirs' stats from the previous manifest, add the new dir's
+        val carried = last.map(_.stats).getOrElse(Map.empty)
+          .filter { case (d, _) => dirs.contains(d) }
+        val stats =
+          if (newStats.nonEmpty) carried + (dir -> newStats) else carried
+        // deletion vectors carry forward pruned to the still-visible
+        // dirs: an overwrite (incl. compact) drops them all — the
+        // rewrite read them away; a replace drops exactly the entries
+        // scoped to dirs it rewrote (materialized); the new dir is
+        // never covered (nothing was deleted from it yet)
+        val dvs = last.map(_.dvs).getOrElse(Seq.empty)
+          .map(dv => dv.copy(dirs = dv.dirs.filter(dirs.contains)))
+          .filter(_.dirs.nonEmpty)
+        // CHECK constraints are table metadata, not snapshot data: they
+        // carry across every action (incl. overwrite) until dropCheck.
+        // A check registered CONCURRENTLY (between our pre-loop
+        // validation and this publish attempt) must not ride into the
+        // new manifest unvalidated — re-validate the new dir against
+        // the loop-time set whenever it differs from what we last proved
+        val carriedChecks = last.map(_.checks).getOrElse(Map.empty)
+        if (carriedChecks != validatedChecks) {
+          validateChecks(carriedChecks)
+          validatedChecks = carriedChecks
+        }
+        // the dir was WRITTEN under mapAt's mapping — a rename/drop that
+        // landed since would make its physical names wrong; abort loudly
+        // (the caller re-runs under the new mapping)
+        if (last.map(_.colmap).getOrElse(Map.empty) != colmap0 ||
+            last.map(_.dropped).getOrElse(Seq.empty) != dropped0 ||
+            last.map(_.defaults).getOrElse(Map.empty) != defaults0) {
+          fs.delete(new Path(s"$root/data/$dir"), true)
+          throw new java.util.ConcurrentModificationException(
+            s"TxnLog: column mapping at $root changed while a commit was in flight — " +
+              "commit aborted; re-run (the data dir was written under the old mapping)")
+        }
+        Commit(version, action, dirs, txnId, stats, dvs, carriedChecks,
+          colmap = colmap0, dropped = dropped0, defaults = defaults0,
+          transforms = newTransforms)
+    }
+  }
+
+  /** The one optimistic commit loop every writer publishes through:
+    * read the latest manifest, take the next version, and claim it with
+    * a create-exclusive manifest ([[tryPublish]]); a lost race retries
+    * on the next version, up to [[MaxRetries]] times. A writer that
+    * derived its commit from version `expected` meets any interleaved
+    * commits here: with `rebase`, interleaved plain appends ride into
+    * `build` by reference (their dirs, as the third argument) and
+    * anything else aborts; without it, any interleaving aborts. Aborts
+    * raise a `ConcurrentModificationException` naming `op`. A `txnId`
+    * the latest log already carries makes the call a no-op returning
+    * that version. On an abort or a no-op, the caller's `written` data
+    * dirs are deleted. `build` gets the version, the latest manifest
+    * and the rebased dirs; the loop stamps the txnId and the carried
+    * txn map. */
+  private def publish(spark: SparkSession, root: String, txnId: Option[String],
+                      expected: Option[Long], rebase: Boolean, op: String,
+                      written: Seq[String] = Nil)
+                     (build: (Long, Option[Commit], Seq[String]) => Commit): Long = {
+    val fs = fileSystem(spark, root)
+    def discard(): Unit = written.foreach(d => fs.delete(new Path(s"$root/data/$d"), true))
     var attempt = 0
     while (attempt < MaxRetries) {
       val last = latestCommit(spark, root)
       val version = last.map(_.version + 1).getOrElse(0L)
-      // CAS writers (compaction, CoW delete/merge): the rewrite was
-      // derived FROM a specific snapshot. If the table moved since,
-      // resolve optimistically the Delta way: interleaved PLAIN
-      // APPENDS are logically disjoint additions (they touch no dir
-      // the rewrite read, add no deletion vectors, change no checks),
-      // so the rewrite REBASES — the appended dirs ride into the
-      // published set by reference and the outcome serializes as
-      // rewrite-then-append. Any other interleaved action (overwrite,
-      // replace, delete_mor, meta) may have read or rewritten what we
-      // rewrote — abort, the caller re-derives.
-      var rebasedDirs: Seq[String] = Nil
-      expectedLatest.foreach { exp =>
-        if (version != exp + 1) {
-          interleavedAppendDirs(fs, root, exp, version - 1) match {
-            case Left(actions) =>
-              fs.delete(new Path(s"$root/data/$dir"), true)
-              throw new java.util.ConcurrentModificationException(
-                s"TxnLog: table at $root moved (expected latest $exp, found ${version - 1}) — " +
-                  s"non-append commits interleaved (${actions.mkString(",")}); rewrite aborted")
-            case Right(ds) => rebasedDirs = ds
-          }
+      val rebased = expected.filter(_ != version - 1).fold(Seq.empty[String]) { exp =>
+        def abort(why: String): Nothing = {
+          discard()
+          throw new java.util.ConcurrentModificationException(
+            s"TxnLog: table at $root moved (expected latest $exp, found ${version - 1}) — $why")
         }
+        if (!rebase) abort(s"$op aborted; re-run against the new state")
+        interleavedAppendDirs(fs, root, exp, version - 1).fold(
+          actions => abort(s"non-append commits interleaved (${actions.mkString(",")}); $op aborted"),
+          identity)
       }
       // idempotency re-check under the latest log (a racing retry of
-      // the same txn may have won a version since our first look)
+      // the same txn may have won a version since the caller's look)
       txnId.foreach { id =>
-        txnVersionOf(spark, root, last, id).foreach { v =>
-          fs.delete(new Path(s"$root/data/$dir"), true)
-          return v
-        }
-      }
-      val dirs = action match {
-        case "overwrite" => Seq(dir) ++ rebasedDirs
-        case "append"    => last.map(_.dirs).getOrElse(Seq.empty) :+ dir
-        // copy-on-write rewrite: unaffected directories carry by
-        // reference, the freshly written dir replaces the affected set
-        case "replace"   => (replaceBase.get :+ dir) ++ rebasedDirs
-      }
-      // manifests stay self-contained: carry forward the retained
-      // dirs' stats from the previous manifest, add the new dir's
-      val carried = last.map(_.stats).getOrElse(Map.empty)
-        .filter { case (d, _) => dirs.contains(d) }
-      val stats =
-        if (newStats.nonEmpty) carried + (dir -> newStats) else carried
-      // deletion vectors carry forward pruned to the still-visible
-      // dirs: an overwrite (incl. compact) drops them all — the
-      // rewrite read them away; a replace drops exactly the entries
-      // scoped to dirs it rewrote (materialized); the new dir is
-      // never covered (nothing was deleted from it yet)
-      val dvs = last.map(_.dvs).getOrElse(Seq.empty)
-        .map(dv => dv.copy(dirs = dv.dirs.filter(dirs.contains)))
-        .filter(_.dirs.nonEmpty)
-      // CHECK constraints are table metadata, not snapshot data: they
-      // carry across every action (incl. overwrite) until dropCheck.
-      // A check registered CONCURRENTLY (between our pre-loop
-      // validation and this publish attempt) must not ride into the
-      // new manifest unvalidated — re-validate the new dir against
-      // the loop-time set whenever it differs from what we last proved
-      val carriedChecks = last.map(_.checks).getOrElse(Map.empty)
-      if (carriedChecks != validatedChecks) {
-        validateChecks(carriedChecks)
-        validatedChecks = carriedChecks
-      }
-      // the dir was WRITTEN under mapAt's mapping — a rename/drop that
-      // landed since would make its physical names wrong; abort loudly
-      // (the caller re-runs under the new mapping)
-      if (last.map(_.colmap).getOrElse(Map.empty) != colmap0 ||
-          last.map(_.dropped).getOrElse(Seq.empty) != dropped0 ||
-          last.map(_.defaults).getOrElse(Map.empty) != defaults0) {
-        fs.delete(new Path(s"$root/data/$dir"), true)
-        throw new java.util.ConcurrentModificationException(
-          s"TxnLog: column mapping at $root changed while a commit was in flight — " +
-            "commit aborted; re-run (the data dir was written under the old mapping)")
+        txnVersionOf(spark, root, last, id).foreach { v => discard(); return v }
       }
       val txns = capTxns(carriedTxns(spark, root, last) ++ txnId.map(_ -> version))
-      if (tryPublish(fs, root,
-        Commit(version, action, dirs, txnId, stats, dvs, carriedChecks, txns,
-          colmap = colmap0, dropped = dropped0, defaults = defaults0,
-          transforms = newTransforms)))
+      if (tryPublish(fs, root, build(version, last, rebased).copy(txnId = txnId, txns = txns)))
         return version
       attempt += 1 // lost the race: someone else took this version
     }
@@ -3279,82 +3153,17 @@ object TxnLog {
     readTagFile(fs, p)
   }
 
-  private def readTagFile(fs: FileSystem, p: Path): Long = {
+  private def readTagFile(fs: FileSystem, p: Path): Long = readUtf8(fs, p).trim.toLong
+
+  /** One small log file's whole content (manifest, checkpoint pointer,
+    * tag) as UTF-8 text. */
+  private def readUtf8(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
-      val buf = new Array[Byte](32)
-      val n = in.read(buf)
-      new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
+      buf.toString("UTF-8")
     } finally in.close()
-  }
-
-  /** Data-skipping read: `read(...).filter(column BETWEEN lo AND hi)`,
-    * but commit directories whose manifest stats PROVE no row can
-    * match are never opened — no footer reads, no file listings. The
-    * manifest is the index (the Delta/Iceberg shape): on a 100 TB
-    * append table written in time order, a time-range query opens only
-    * the matching commits' directories. Conservative on every gap: a
-    * dir committed without `collectStats`, a column outside the
-    * stats set, or a type mismatch keeps the dir; the exact predicate
-    * is always re-applied, so stats can cost time, never correctness.
-    * `lo`/`hi` are a Long (for integral stat columns) or String pair.
-    * Zero surviving dirs still returns the table's schema (one dir is
-    * opened under an always-false filter). */
-  def readWhere(spark: SparkSession, root: String, column: String,
-                lo: Any, hi: Any, asOf: Option[Long] = None): DataFrame = {
-    val (survivors, _, snap) = pruneDirs(spark, root, column, lo, hi, asOf)
-    require(snap.nonEmpty, s"TxnLog table at $root has no data at version ${asOf.getOrElse("latest")}")
-    // deletion vectors still apply inside surviving dirs (stats
-    // pruning stays valid: a DV only removes rows, so recorded
-    // [min, max] still bounds what remains)
-    val m = manifestAt(spark, root, asOf)
-    val predicate = col(column) >= lit(lo) && col(column) <= lit(hi)
-    // hidden-partition pruning INSIDE surviving dirs (manifest stats
-    // already pruned whole dirs): the raw range maps onto the
-    // registered transform's derived column
-    val pfs = partitionRange(m, physOf(m, column), lo, hi)
-    val frames = survivors.flatMap(d => survivorFrame(spark, root, d, m, pfs,
-      st => mayContain(st.get(physOf(m, column)), lo, hi)))
-    if (frames.isEmpty)
-      dirFrame(spark, root, snap.head, m).filter(lit(false))
-    else
-      frames.reduce(_.unionByName(_, allowMissingColumns = true))
-        .filter(predicate)
-  }
-
-  /** The pruning census behind [[readWhere]]: (survivors, skipped,
-    * full snapshot). Exposed for specs and skipping reports. */
-  private[graft] def pruneDirs(spark: SparkSession, root: String, column: String,
-                               lo: Any, hi: Any,
-                               asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
-    val manifest = manifestAt(spark, root, asOf)
-    val snap = manifest.map(_.dirs).getOrElse(Seq.empty)
-    val stats = manifest.map(_.stats).getOrElse(Map.empty)
-    val (keep, skip) = snap.partition(d =>
-      mayContain(stats.get(d).flatMap(_.get(physOf(manifest, column))), lo, hi))
-    (keep, skip, snap)
-  }
-
-  /** Can a dir with these stats contain a value in [lo, hi]? Missing
-    * stats or a type mismatch → yes (conservative). NaN endpoints are
-    * never trusted to prune (every comparison involving one fails the
-    * skip test, keeping the dir). */
-  private def mayContain(st: Option[ColStat], lo: Any, hi: Any): Boolean = st match {
-    case Some(ColStat("long", mn, mx)) => (lo, hi) match {
-      case (l: Number, h: Number) =>
-        mx.toLong >= l.longValue && mn.toLong <= h.longValue
-      case _ => true
-    }
-    case Some(ColStat("double", mn, mx)) => (lo, hi) match {
-      case (l: Number, h: Number) =>
-        !(mx.toDouble < l.doubleValue || mn.toDouble > h.doubleValue)
-      case _ => true
-    }
-    case Some(ColStat("string", mn, mx)) => (lo, hi) match {
-      case (l: String, h: String) => mx >= l && mn <= h
-      case _ => true
-    }
-    case _ => true
   }
 
   /** The commit point: a GENUINELY atomic create-exclusive on the
@@ -3436,14 +3245,8 @@ object TxnLog {
     val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
     while (System.nanoTime() < deadline) {
       val onDisk =
-        try {
-          val in = fs.open(path)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-            Some(buf.toString("UTF-8"))
-          } finally in.close()
-        } catch { case _: Throwable => None }
+        try Some(readUtf8(fs, path))
+        catch { case scala.util.control.NonFatal(_) => None }
       onDisk match {
         case Some(b) if b == body      => return true  // our bytes survived
         case Some(b) if b.nonEmpty     => return false // replaced by a racer
@@ -3531,17 +3334,7 @@ object TxnLog {
   private def readCheckpoint(fs: FileSystem, root: String): Option[Long] =
     try {
       val p = checkpointPath(root)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val body =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-            buf.toString("UTF-8")
-          } finally in.close()
-        body.trim.toLongOption
-      }
+      if (!fs.exists(p)) None else readUtf8(fs, p).trim.toLongOption
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Latest committed version without a log listing: pointer +
@@ -3668,20 +3461,14 @@ object TxnLog {
       // un-claim" would destroy a published commit — fail immediately
       // with the right diagnosis.
       val body =
-        try {
-          val in = fs.open(path)
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-            buf.toString("UTF-8")
-          } finally in.close()
-        } catch { case e: Throwable => last = e; Thread.sleep(10); null }
+        try readUtf8(fs, path)
+        catch { case scala.util.control.NonFatal(e) => last = e; Thread.sleep(10); null }
       if (body != null) {
         if (body.isEmpty) { Thread.sleep(10) }
         else
           try return parse(body)
           catch {
-            case e: Throwable => throw new IllegalStateException(
+            case scala.util.control.NonFatal(e) => throw new IllegalStateException(
               s"TxnLog: manifest $path is non-empty but unparseable — corrupt " +
                 "or written by an incompatible version; restore it from a " +
                 "backup (do NOT delete it: its version was published)", e)

@@ -49,12 +49,13 @@ class TablesSpec extends SparkSpec {
     assert(after.as[(Long, String, Long)].collect().toSeq == Seq((2L, "b", 20L)))
   }
 
-  test("schema cache: the session's nanosAsLong and inferTimestampNTZ decide events.ts under one file version") {
+  /** A one-row `events.parquet` in a new temp dir whose ts is
+    * TIMESTAMP(NANOS) 2024-03-01T02:17:00.123456789, which Spark cannot
+    * write: parquet-mr's example writer can. Returns the dir. */
+  private def nanosEventsDir(): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    // an events file with TIMESTAMP(NANOS) ts, which Spark cannot write:
-    // parquet-mr's example writer can
     val tmp = Files.createTempDirectory("graft_tables").toString
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 user_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
@@ -63,6 +64,11 @@ class TablesSpec extends SparkSpec {
     try w.write(new SimpleGroupFactory(schema).newGroup()
       .append("user_id", 1L).append("ts", 1709259420123456789L))
     finally w.close()
+    tmp
+  }
+
+  test("schema cache: the session's nanosAsLong and inferTimestampNTZ decide events.ts under one file version") {
+    val tmp = nanosEventsDir()
     def ts(d: String) = Tables.load(spark, d, "events").schema("ts").dataType.typeName
     val nanos = "spark.sql.legacy.parquet.nanosAsLong"
     assert(withConfs(nanos -> "true")(ts(tmp)) == "long")
@@ -76,6 +82,15 @@ class TablesSpec extends SparkSpec {
     assert(withConfs(ntz -> "true")(ts(dir)) == "timestamp_ntz")
     assert(withConfs(ntz -> "false")(ts(dir)) == "timestamp")
     assert(withConfs(ntz -> "true")(ts(dir)) == "timestamp_ntz")
+  }
+
+  test("Tables.events: a TIMESTAMP(NANOS) ts arrives as timestamp_ntz, truncated to micros") {
+    // the session reads NANOS as a long (nanosAsLong), which events
+    // converts with integer division, dropping the last three digits
+    val ev = Tables.events(spark, nanosEventsDir())
+    assert(ev.schema("ts").dataType.typeName == "timestamp_ntz")
+    assert(ev.select("ts").as[java.time.LocalDateTime].collect().toSeq ==
+      Seq(java.time.LocalDateTime.parse("2024-03-01T02:17:00.123456")))
   }
 
   test("schema cache: four threads loading the same new file at once get one schema") {

@@ -824,9 +824,9 @@ class TxnLogSpec extends SparkSpec {
       s"z-order should prune on both: a skips ${skipA.size}, b skips ${skipB.size} of ${snapZ.size}")
     // conjunctive read: skips at least as much as either column alone,
     // result exactly the brute filter
-    val (keepAB, skipAB, _) = TxnLog.pruneDirsAll(spark, root,
-      Seq(("a", 0L, 7L), ("b", 0L, 7L)))
-    assert(skipAB.size >= math.max(skipA.size, skipB.size) && keepAB.size < snapZ.size)
+    val (_, keptAB, skippedAB, _, _) = TxnLog.readRangesCensusFiles(spark, root,
+      Seq(("a", Some(0L), Some(7L)), ("b", Some(0L), Some(7L))))
+    assert(skippedAB >= math.max(skipA.size, skipB.size) && keptAB < snapZ.size)
     val got = TxnLog.readWhereAll(spark, root, Seq(("a", 0L, 7L), ("b", 0L, 7L)))
     val brute = TxnLog.read(spark, root)
       .filter(col("a") <= 7L && col("b") <= 7L)
@@ -1689,6 +1689,23 @@ class TxnLogSpec extends SparkSpec {
     // post-vacuum the audit is clean of deletable rows
     assert(TxnLog.vacuumAudit(spark, root).collect()
       .forall(_.getString(1) == "keep-fresh-orphan"))
+    // a dir expired by name that a retained version still reads through
+    // an ext: path (a manifest from before the nesting guard, published
+    // by hand): v0 holds A, v1 holds B, v2 holds B + ext:<root>/data/A
+    val root2 = Files.createTempDirectory("graft_txn").toString + "/t"
+    TxnLog.overwrite(Seq((1L, "a")).toDF("id", "s"), root2)
+    def dataDirs = fs.listStatus(new Path(s"$root2/data")).map(_.getPath.getName).toSet
+    val dirA = dataDirs.head
+    TxnLog.overwrite(Seq((2L, "b")).toDF("id", "s"), root2)
+    val dirB = (dataDirs - dirA).head
+    assert(TxnLog.tryPublish(fs, root2, TxnLog.Commit(2L, "append",
+      Seq(dirB, s"${TxnLog.ExtPrefix}$root2/data/$dirA"), None)))
+    val audit2 = TxnLog.vacuumAudit(spark, root2, retainVersions = 1)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(audit2.get(dirA).contains("keep-ext-referenced"), audit2)
+    TxnLog.vacuum(spark, root2, retainVersions = 1)
+    assert(dataDirs.contains(dirA), "vacuum deleted a dir the retained v2 reads through ext:")
+    assert(TxnLog.read(spark, root2).count() == 2)
   }
 
   test("health composes the advisors: a churned table flags, a maintained one is clean") {
@@ -1996,5 +2013,66 @@ class TxnLogSpec extends SparkSpec {
       TxnLog.versionAtTimestamp(spark, root, t0 - 3600L * 1000)
     }
     assert(e.getMessage.contains("predates"), e.getMessage)
+  }
+
+  test("data-skipping readers agree with a plain filtered read: file stats, Bloom, hidden partition, DV, compaction") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, format_string, lit}
+    val root = Files.createTempDirectory("graft_txn").toString + "/t"
+    def rows(lo: Long, hi: Long): DataFrame = spark.range(lo, hi).toDF("id")
+      .withColumn("v", col("id") * 2).withColumn("s", format_string("k%04d", col("id")))
+    // two stats-on dirs compacted into one single-file dir: ids 0-399
+    TxnLog.overwrite(rows(0L, 200L).coalesce(1), root, collectStats = true)
+    TxnLog.append(rows(200L, 400L).coalesce(1), root, collectStats = true)
+    TxnLog.compact(spark, root)
+    // ids 400-799 as four 100-id slabs hash-placed into files: per-file
+    // stats and a Bloom on id
+    TxnLog.append(rows(400L, 800L).repartition(4, (col("id") / 100).cast("long")), root,
+      collectStats = true, bloomCols = Seq("id"))
+    // ids 800-999 under a hidden trunc(50, id) partition (its files sit
+    // in __p_ dirs, so the dir carries no per-file stats)
+    TxnLog.append(rows(800L, 1000L).coalesce(1), root, partitionBy = Seq("trunc(50, id)"),
+      collectStats = true, bloomCols = Seq("id"))
+    // a merge-on-read deletion vector over all three dirs
+    TxnLog.deleteMor(spark, root, col("id") % 10 === 3)
+    val all = TxnLog.read(spark, root)
+    assert(all.count() == 900L)
+    def agrees(got: DataFrame, exact: Column): Unit = {
+      val want = all.filter(exact)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"reader disagrees with read().filter($exact)")
+    }
+    def sizes(c: (Seq[String], Seq[String], Seq[String])): (Int, Int) = (c._1.size, c._2.size)
+    def census(ranges: (String, Option[Any], Option[Any])*): (Int, Int, Int, Int) = {
+      val (frame, dk, ds, fk, fs) = TxnLog.readRangesCensusFiles(spark, root, ranges)
+      val exact = ranges.map { case (c, lo, hi) =>
+        lo.map(col(c) >= _).getOrElse(lit(true)) && hi.map(col(c) <= _).getOrElse(lit(true))
+      }.reduce(_ && _)
+      agrees(frame.filter(exact), exact)
+      (dk, ds, fk, fs)
+    }
+    val id = col("id")
+    agrees(TxnLog.readWhere(spark, root, "id", 350L, 460L), id >= 350L && id <= 460L)
+    agrees(TxnLog.readWhere(spark, root, "s", "k0420", "k0555"),
+      col("s") >= "k0420" && col("s") <= "k0555")
+    agrees(TxnLog.readWhereAll(spark, root, Seq(("id", 420L, 650L), ("v", 900L, 1200L))),
+      id >= 420L && id <= 650L && col("v") >= 900L && col("v") <= 1200L)
+    agrees(TxnLog.readPoint(spark, root, "id", 423L), id === 423L)
+    agrees(TxnLog.readPoint(spark, root, "id", 503L), id === 503L) // tombstoned
+    agrees(TxnLog.readPoint(spark, root, "id", 870L), id === 870L)
+    agrees(TxnLog.readPoints(spark, root, "id", Seq(5L, 423L, 503L, 870L, null)),
+      id.isin(5L, 423L, 503L, 870L))
+    // dir and file censuses, pinned: (kept, skipped) dirs, then files
+    // of the dirs that carry per-file stats
+    assert(sizes(TxnLog.pruneDirs(spark, root, "id", 350L, 460L)) == ((2, 1)))
+    assert(sizes(TxnLog.pruneDirs(spark, root, "s", "k0420", "k0555")) == ((1, 2)))
+    assert(sizes(TxnLog.prunePoint(spark, root, "id", 423L)) == ((1, 2)))
+    assert(sizes(TxnLog.prunePoint(spark, root, "id", 870L)) == ((1, 2)))
+    assert(sizes(TxnLog.prunePoints(spark, root, "id", Seq(5L, 423L, 503L, 870L, null))) == ((3, 0)))
+    assert(census(("id", Some(420L), Some(650L)), ("v", Some(900L), Some(1200L))) == ((1, 2, 2, 1)))
+    assert(census(("id", Some(450L), None)) == ((2, 1, 3, 0)))
+    assert(census(("s", None, Some("k0120"))) == ((1, 2, 1, 0)))
+    assert(census(("id", Some(250L), Some(250L))) == ((1, 2, 1, 0)))
+    assert(census(("id", Some(523L), Some(523L))) == ((1, 2, 1, 2)))
   }
 }
