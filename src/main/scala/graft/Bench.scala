@@ -162,6 +162,20 @@ object Bench {
       else "regressed-volumes-grew (metered work increased — adjudicate as real)"
   }
 
+  /** Attribution of one 10x data step from its time growth and the
+    * larger of its shuffle-record and scan-row growth: sublinear-in-data
+    * is always fine; else time must not outgrow the metered volume by
+    * more than 1.5x, or the step is flagged as a suspected plan change.
+    * None = a leg failed or ran too fast to attribute (fixed session
+    * overhead dominates under 50 ms). */
+  private def attributeOf(growth: Option[Double], volumeGrowth: Double): String = growth match {
+    case None => "too-fast-to-attribute"
+    case Some(g) if g <= 2.0 => "near-flat"
+    case Some(g) if g <= 10.0 && g <= 1.5 * volumeGrowth => "data-proportional (sublinear-in-data)"
+    case Some(g) if g <= 1.5 * volumeGrowth => "volume-proportional"
+    case Some(_) => "SUSPECT: time outgrows shuffle+scan volume — possible plan change"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder("graft-bench").getOrCreate()
@@ -358,63 +372,63 @@ object Bench {
     // shuffle/scan/spill numbers that attribute them.
     val minsMap = mins.toMap
     val runsMap = results.toMap
-    val vsPrevJson = prev match {
-      case None => "null"
-      case Some((prevTotal, prevMins, prevRuns, prevVols)) =>
-        val compared = mins.collect {
-          case (name, cur) if cur > 0 && prevMins.get(name).exists(_ > 0) =>
-            val p = prevMins(name)
-            (name, p, cur, cur / p)
-        }
-        val flagged = compared.filter { case (_, p, cur, r) =>
-          (r > 1.3 || r < 1.0 / 1.3) && math.max(p, cur) > 0.3
-        }
-        val adjudicated = flagged.map { case (name, p, cur, r) =>
-          val pr = prevRuns.getOrElse(name, Seq(p)).filter(_ > 0)
-          val cr = runsMap.getOrElse(name, Seq(cur)).filter(_ > 0)
-          val overlap = pr.nonEmpty && cr.nonEmpty &&
-            cr.min <= pr.max && pr.min <= cr.max
-          // Surviving regressions are CLASSED by the cross-round volume
-          // diff: steady-state shuffle records + scan rows agreeing
-          // within 1.2x means the query moved the same data slower —
-          // barrier/host class, chase job structure or box state; real
-          // volume growth means it genuinely recomputed more. No prev
-          // volumes (older artifact) → unclassified "regressed".
-          def flat(a: Long, b: Long): Boolean =
-            (a == 0L && b == 0L) ||
-              (a > 0L && b > 0L &&
-                math.max(a, b).toDouble / math.min(a, b) <= 1.2)
-          val verdict =
-            if (overlap) "within-run-spread"
-            else if (r <= 1.0) "improved"
-            else (for { pv <- prevVols.get(name); cv <- volByQuery.get(name) }
-              yield {
-                val pRec = pv.getOrElse("shuffle_records", 0L)
-                val pScan = pv.getOrElse("scan_rows", 0L)
-                if (flat(pRec, cv.shuffleRecords) && flat(pScan, cv.inputRecords))
-                  "regressed-flat-volumes"
-                else if (cv.shuffleRecords > pRec || cv.inputRecords > pScan)
-                  "regressed-volume-growth"
-                else "regressed-volume-shrank"
-              }).getOrElse("regressed")
-          (name, p, cur, r, verdict)
-        }
-        val flaggedJson = adjudicated.map { case (name, p, cur, r, verdict) =>
-          val metricsJson = volByQuery.get(name).filter(_ => verdict.startsWith("regressed"))
-            .map { m =>
-              s""","metrics":{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"scan_rows":${m.inputRecords},"spill_disk_bytes":${m.spillDisk},"spill_mem_bytes":${m.spillMemory}}"""
-            }.getOrElse("")
-          s""""$name":{"prev_min_s":${fmt(p)},"cur_min_s":${fmt(cur)},"ratio":${fmt(r)},"verdict":"$verdict"$metricsJson}"""
-        }.mkString("{", ",", "}")
-        val ratiosJson = compared.map { case (name, _, _, r) =>
-          s""""$name":${fmt(r)}"""
-        }.mkString("{", ",", "}")
-        adjudicated.foreach { case (name, p, cur, r, verdict) =>
-          System.err.println(s"[bench][vs_prev] $name ${fmt(p)} -> ${fmt(cur)} " +
-            s"(${fmt(r)}x) $verdict")
-        }
-        s"""{"prev_file":"$prevDetailPath","prev_total_s":${fmt(prevTotal)},"n_compared":${compared.size},"n_flagged":${adjudicated.size},"flagged":$flaggedJson,"ratios":$ratiosJson}"""
+    val vsPrev = prev.map { case (prevTotal, prevMins, prevRuns, prevVols) =>
+      val compared = mins.collect {
+        case (name, cur) if cur > 0 && prevMins.get(name).exists(_ > 0) =>
+          val p = prevMins(name)
+          (name, p, cur, cur / p)
+      }
+      val flagged = compared.filter { case (_, p, cur, r) =>
+        (r > 1.3 || r < 1.0 / 1.3) && math.max(p, cur) > 0.3
+      }
+      val adjudicated = flagged.map { case (name, p, cur, r) =>
+        val pr = prevRuns.getOrElse(name, Seq(p)).filter(_ > 0)
+        val cr = runsMap.getOrElse(name, Seq(cur)).filter(_ > 0)
+        val overlap = pr.nonEmpty && cr.nonEmpty &&
+          cr.min <= pr.max && pr.min <= cr.max
+        // Surviving regressions are CLASSED by the cross-round volume
+        // diff: steady-state shuffle records + scan rows agreeing
+        // within 1.2x means the query moved the same data slower —
+        // barrier/host class, chase job structure or box state; real
+        // volume growth means it genuinely recomputed more. No prev
+        // volumes (older artifact) → unclassified "regressed".
+        def flat(a: Long, b: Long): Boolean =
+          (a == 0L && b == 0L) ||
+            (a > 0L && b > 0L &&
+              math.max(a, b).toDouble / math.min(a, b) <= 1.2)
+        val verdict =
+          if (overlap) "within-run-spread"
+          else if (r <= 1.0) "improved"
+          else (for { pv <- prevVols.get(name); cv <- volByQuery.get(name) }
+            yield {
+              val pRec = pv.getOrElse("shuffle_records", 0L)
+              val pScan = pv.getOrElse("scan_rows", 0L)
+              if (flat(pRec, cv.shuffleRecords) && flat(pScan, cv.inputRecords))
+                "regressed-flat-volumes"
+              else if (cv.shuffleRecords > pRec || cv.inputRecords > pScan)
+                "regressed-volume-growth"
+              else "regressed-volume-shrank"
+            }).getOrElse("regressed")
+        (name, p, cur, r, verdict)
+      }
+      val flaggedJson = adjudicated.map { case (name, p, cur, r, verdict) =>
+        val metricsJson = volByQuery.get(name).filter(_ => verdict.startsWith("regressed"))
+          .map { m =>
+            s""","metrics":{"shuffle_bytes":${m.shuffleBytes},"shuffle_records":${m.shuffleRecords},"scan_rows":${m.inputRecords},"spill_disk_bytes":${m.spillDisk},"spill_mem_bytes":${m.spillMemory}}"""
+          }.getOrElse("")
+        s""""$name":{"prev_min_s":${fmt(p)},"cur_min_s":${fmt(cur)},"ratio":${fmt(r)},"verdict":"$verdict"$metricsJson}"""
+      }.mkString("{", ",", "}")
+      val ratiosJson = compared.map { case (name, _, _, r) =>
+        s""""$name":${fmt(r)}"""
+      }.mkString("{", ",", "}")
+      adjudicated.foreach { case (name, p, cur, r, verdict) =>
+        System.err.println(s"[bench][vs_prev] $name ${fmt(p)} -> ${fmt(cur)} " +
+          s"(${fmt(r)}x) $verdict")
+      }
+      (s"""{"prev_file":"$prevDetailPath","prev_total_s":${fmt(prevTotal)},"n_compared":${compared.size},"n_flagged":${adjudicated.size},"flagged":$flaggedJson,"ratios":$ratiosJson}""",
+        adjudicated.map { case (name, _, _, _, verdict) => (name, verdict) })
     }
+    val vsPrevJson = vsPrev.fold("null")(_._1)
 
     // ---- PlanLint sweep over every executed plan ----
     // PlanLint already skips the by-design shapes (bounded-side
@@ -494,20 +508,12 @@ object Bench {
             case (a, b) if a > 0 && b >= 0 => Some(b.toDouble / a)
             case _ => None
           }
-          // Attribution of the final 10x step (the one local[32] is most
-          // likely to distort): sublinear-in-data is always fine; else
-          // time must not outgrow the max of shuffle-record and scan-row
-          // growth by more than 1.5x, or we flag a suspected plan change.
+          // attribution of the final 10x step (the one local[32] is
+          // most likely to distort)
           val tG = if (times.init.last > 0.05 && times.last > 0)
             Some(times.last / times.init.last) else None
           val volG = (lastRatio(shufR).toSeq ++ lastRatio(scanR).toSeq ++ Seq(1.0)).max
-          val attribution = tG match {
-            case None => "too-fast-to-attribute"
-            case Some(g) if g <= 2.0 => "near-flat"
-            case Some(g) if g <= 10.0 && g <= 1.5 * volG => "data-proportional (sublinear-in-data)"
-            case Some(g) if g <= 1.5 * volG => "volume-proportional"
-            case Some(_) => "SUSPECT: time outgrows shuffle+scan volume — possible plan change"
-          }
+          val attribution = attributeOf(tG, volG)
           val exemptWhy = SparkEntry.specByName.get(name).flatMap(_.scalingExempt)
           val exempt = exemptWhy
             .map(r => s"""{"exempt":true,"why":"$r"}""").getOrElse("""{"exempt":false}""")
@@ -604,14 +610,7 @@ object Bench {
               a <- leg01.map(r => f(r._2)) if a > 0 && runs1.nonEmpty
             } yield runs1.map(r => f(r._2)).max.toDouble / a
           val vol = (volG(_.shuffleRecords).toSeq ++ volG(_.inputRecords).toSeq ++ Seq(1.0)).max
-          def attributeOf(g: Option[Double]): String = g match {
-            case None => "too-fast-to-attribute"
-            case Some(x) if x <= 2.0 => "near-flat"
-            case Some(x) if x <= 10.0 && x <= 1.5 * vol => "data-proportional (sublinear-in-data)"
-            case Some(x) if x <= 1.5 * vol => "volume-proportional"
-            case Some(_) => "SUSPECT: time outgrows shuffle+scan volume — possible plan change"
-          }
-          val attribution0 = attributeOf(growth)
+          val attribution0 = attributeOf(growth, vol)
           // SELF-ADJUDICATION (round-15 verdict #4): a SUSPECT sf1 leg
           // automatically re-measures in a FRESH QUIET child JVM (the
           // SPARK_GRAFT_ONLY discipline the sweep flags already get) —
@@ -626,7 +625,7 @@ object Bench {
           val attribution =
             if (requiet.isEmpty) attribution0
             else {
-              val a = attributeOf(growthAdj)
+              val a = attributeOf(growthAdj, vol)
               if (a.startsWith("SUSPECT")) a
               else s"$a (requiet-cleared from SUSPECT)"
             }
@@ -696,21 +695,17 @@ object Bench {
     val attributionBrief =
       if (attributionCompact.isEmpty) "null" else attributionCompact.mkString("{", ",", "}")
     val disagree = inconsistent.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val vsPrevBrief = prev match {
-      case None => "null"
-      case Some(_) =>
-        // recompute the brief from the detail-side flags (names only).
-        // NOISE flags carry only a COUNT here: round 14's 102
-        // within-run-spread names pushed this line past the driver's
-        // ~2 KB stdout tail window and truncated away the totals —
-        // only the NON-noise classes (the actionable ones) get names,
-        // capped, and the full lists live in BENCH_detail.json.
-        val r = """"(\w+)":\{"prev_min_s":[^}]*"verdict":"regressed"""".r
-        val i = """"(\w+)":\{"prev_min_s":[^}]*"verdict":"improved"""".r
-        val n = """"(\w+)":\{"prev_min_s":[^}]*"verdict":"within-run-spread"""".r
-        def names(rx: scala.util.matching.Regex) =
-          rx.findAllMatchIn(vsPrevJson).map(_.group(1)).toSeq
-        s"""{"regressed":[${names(r).take(10).map("\"" + _ + "\"").mkString(",")}],"improved":[${names(i).take(5).map("\"" + _ + "\"").mkString(",")}],"noise_n":${names(n).size}}"""
+    // The brief names only the NON-noise classes (the actionable ones),
+    // capped; noise flags carry only a COUNT: round 14's 102
+    // within-run-spread names pushed this line past a ~2 KB output
+    // tail window and truncated away the totals. The full lists
+    // live in BENCH_detail.json.
+    val vsPrevBrief = vsPrev.fold("null") { case (_, verdicts) =>
+      def named(keep: String => Boolean) = verdicts.filter(v => keep(v._2))
+      val regressed = named(_.startsWith("regressed")).take(10)
+        .map { case (n, v) => s""""$n":"$v"""" }.mkString("{", ",", "}")
+      val improved = named(_ == "improved").take(5).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+      s"""{"regressed":$regressed,"improved":$improved,"noise_n":${named(_ == "within-run-spread").size}}"""
     }
     // The BRIEF goes to STDERR (round-15 verdict #4b): the driver's
     // parser reads stdout, and even the brief line grew past its tail

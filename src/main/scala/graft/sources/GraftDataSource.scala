@@ -47,11 +47,14 @@ import org.apache.spark.sql.types.StructType
   *    batch is the full snapshot at the stream's start version, every
   *    later batch is exactly the directories appended in
   *    `(start, end]` ([[TxnLog.appendedDirsBetween]] — O(delta)
-  *    manifest reads per poll). Non-append commits refuse loudly
-  *    unless `ignoreChanges=true` (rewritten rows are never
-  *    re-delivered — the documented Delta contract). Offsets live in
-  *    the checkpoint, so recovery replays the exact version range and
-  *    exactly-once composes with the sink's own idempotency.
+  *    manifest reads per poll). Each commit in range is read by its
+  *    class in TxnLog's one action table (`changeOf`): additive
+  *    commits serve, metadata-only ones are skipped, schema changes
+  *    always refuse, and rewrites and tombstones refuse loudly unless
+  *    `ignoreChanges=true` (rewritten rows are never re-delivered —
+  *    the documented Delta contract). Offsets live in the checkpoint,
+  *    so recovery replays the exact version range and exactly-once
+  *    composes with the sink's own idempotency.
   *
   * Registered in `META-INF/services` under the short name `graft`.
   * Reference anchor: the reference stack reads/writes its lakehouse
@@ -318,25 +321,40 @@ class GraftStreamSource(spark: SparkSession, root: String,
                         metadataPath: Option[String] = None,
                         startingVersionOpt: Option[String] = None) extends Source {
 
+  /** One source-private marker file in the checkpoint metadata dir:
+    * Right(None) when absent, Right(Some(v)) when read, Left when it
+    * exists but cannot be read or parsed (or the filesystem failed). */
+  private def readMarker(p: Path): Either[Throwable, Option[Long]] =
+    try {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) Right(None)
+      else {
+        val in = fs.open(p)
+        try Right(Some(new String(
+          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong))
+        finally in.close()
+      }
+    } catch { case scala.util.control.NonFatal(e) => Left(e) }
+
+  private def writeMarker(p: Path, v: Long): Unit = {
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+  }
+
   /** Resolved `startingVersion`: a number validates against the log;
     * `'latest'` resolves ONCE — at the query's first start — and the
     * resolution persists in the source's checkpoint metadata so a
     * restart keeps serving from the original frontier instead of
-    * re-resolving against a moved log. */
+    * re-resolving against a moved log. A marker that exists but cannot
+    * be read fails the start: reading it as absent would re-resolve
+    * `'latest'` and skip every commit since the first start. */
   private val startingVersion: Option[Long] = startingVersionOpt.map { raw =>
     val file = metadataPath.map(mp => new Path(mp, "graft-starting-version"))
-    def persisted: Option[Long] = file.flatMap { p =>
-      scala.util.Try {
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          try Some(new String(
-            org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-          finally in.close()
-        }
-      }.toOption.flatten
-    }
+    val persisted = file.flatMap(p => readMarker(p).fold(e =>
+      throw new IllegalStateException(
+        s"graft stream: cannot read the startingVersion marker $p — " +
+          "repair or delete it (deleting re-resolves the option against the current log)", e),
+      identity))
     persisted.getOrElse {
       val latest = TxnLog.latestVersion(spark, root)
       val sv =
@@ -344,11 +362,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
         else raw.toLong
       require(sv >= 0L && sv <= latest + 1L,
         s"graft stream: startingVersion $sv out of range [0, ${latest + 1}] at $root")
-      file.foreach { p =>
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val out = fs.create(p, true)
-        try out.write(sv.toString.getBytes("UTF-8")) finally out.close()
-      }
+      file.foreach(writeMarker(_, sv))
       sv
     }
   }
@@ -369,31 +383,16 @@ class GraftStreamSource(spark: SparkSession, root: String,
   private val limiterFile: Option[Path] =
     metadataPath.map(p => new Path(p, "graft-limiter-base"))
 
-  private def limiterFs: org.apache.hadoop.fs.FileSystem =
-    limiterFile.get.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readPersistedBase(): Option[Long] = limiterFile.flatMap { p =>
-    scala.util.Try {
-      val fs = limiterFs
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-        finally in.close()
-      }
-    }.toOption.flatten
-  }
+  /** The limiter marker as found at construction. */
+  private val limiterMark: Option[Either[Throwable, Option[Long]]] =
+    limiterFile.map(readMarker)
 
   /** True only when this stream has never offered an offset before —
     * no persisted high-water mark existed at construction. Only then
     * is capping from base = −1 safe (there is no committed offset the
-    * capped offer could fall below). */
-  private val freshStart: Boolean = limiterFile.isEmpty || {
-    // distinguish "marker absent" (fresh) from "marker unreadable"
-    // (treat as restarted — never cap until re-seeded)
-    scala.util.Try(!limiterFs.exists(limiterFile.get)).getOrElse(false)
-  }
+    * capped offer could fall below). An unreadable marker counts as
+    * restarted: never cap until re-seeded. */
+  private val freshStart: Boolean = limiterMark.forall(_ == Right(None))
 
   /** The last version this source has offered or served — the base
     * the rate limiter advances from. Recovered from the persisted
@@ -401,7 +400,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
     * whichever is higher); a startingVersion seeds it one below the
     * first version to serve. −1 = unknown. */
   private var base: Long =
-    readPersistedBase().orElse(startingVersion.map(_ - 1L)).getOrElse(-1L)
+    limiterMark.flatMap(_.toOption.flatten).orElse(startingVersion.map(_ - 1L)).getOrElse(-1L)
 
   /** Advance + persist the high-water mark. Persist failures FAIL the
     * trigger: a lost mark is exactly the restart-regression bug, and
@@ -409,10 +408,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
     * reliability domain as the offsets Spark itself writes. */
   private def advanceBase(to: Long): Unit = if (to > base) {
     base = to
-    limiterFile.foreach { p =>
-      val out = limiterFs.create(p, true)
-      try out.write(to.toString.getBytes("UTF-8")) finally out.close()
-    }
+    limiterFile.foreach(writeMarker(_, to))
   }
 
   /** BACKPRESSURE (`option("maxVersionsPerTrigger", n)`, 0 = off —

@@ -1234,56 +1234,35 @@ object TxnLog {
 
   /** Data directories APPENDED in `(sinceVersion, untilVersion]` —
     * the micro-batch planner behind the `format("graft")` streaming
-    * source. Each append commit's new dirs come from the exact
-    * manifest pair diff (O(delta) manifest reads, the [[changesSince]]
-    * discipline), so interleaved rewrites never smear the attribution.
-    * Non-append, non-metadata commits in the range REFUSE loudly by
-    * default (the visible set was rewritten — an additive delta does
-    * not exist); `ignoreChanges = true` skips them and serves appends
-    * only (the Delta `ignoreChanges` contract: rewritten rows are NOT
-    * re-delivered). */
+    * source, by the exact manifest pair diffs of [[rangeWalk]]
+    * (startingVersion = 0 arrives as since = −1). Metadata-only commits
+    * are skipped; rewrites and tombstones REFUSE loudly (an additive
+    * delta does not exist) unless `ignoreChanges = true`, which skips
+    * them (the Delta contract: rewritten rows are NOT re-delivered). A
+    * schema change refuses even then: the stream's schema was pinned
+    * at start, and null-filling a renamed column would be data loss. */
   private[graft] def appendedDirsBetween(spark: SparkSession, root: String,
                                          sinceVersion: Long, untilVersion: Long,
                                          ignoreChanges: Boolean): Seq[String] = {
     require(sinceVersion <= untilVersion,
       s"TxnLog stream: since $sinceVersion > until $untilVersion at $root")
     if (sinceVersion == untilVersion) return Seq.empty
-    val fs = fileSystem(spark, root)
-    // startingVersion=0 arrives as since=-1: no manifest -1 exists, so
-    // synthesize the empty predecessor. Version 0's commit is then a
-    // pure addition from empty whatever its action word (it's always
-    // the table-creating write), matching Delta's startingVersion=0.
-    val commits =
-      if (sinceVersion >= 0L) commitsInRange(fs, root, sinceVersion, untilVersion)
-      else Commit(-1L, "append", Seq.empty, None) +:
-        commitsInRange(fs, root, 0L, untilVersion)
-    // add_column is stream-safe metadata: the pinned schema simply
-    // never selects the new column (same as a widening append)
-    val metadataOnly = Set("set_check", "drop_check", "add_column")
-    val schemaChange = Set("rename_column", "drop_column")
-    commits.sliding(2).flatMap {
-      case Seq(prev, cur) =>
-        // the table-creating commit (against the synthetic empty
-        // predecessor) is additive regardless of its action word
-        if (prev.version == -1L) cur.dirs
-        else if (cur.action == "append") cur.dirs.filterNot(prev.dirs.toSet)
-        else if (metadataOnly(cur.action)) Nil
-        // a schema change refuses EVEN under ignoreChanges: the
-        // stream's schema was pinned at start, and silently
-        // null-filling a renamed column would be data loss — restart
-        // the stream (the Delta contract for mid-stream evolution)
-        else if (schemaChange(cur.action)) throw new IllegalStateException(
-          s"TxnLog stream: schema commit v${cur.version}:${cur.action} at $root — " +
+    rangeWalk(fileSystem(spark, root), root, sinceVersion, untilVersion).steps.flatMap { s =>
+      s.change match {
+        case Additive => s.added
+        case MetadataOnly => Nil
+        case SchemaChange => throw new IllegalStateException(
+          s"TxnLog stream: schema commit ${s.label} at $root — " +
             "the streaming schema was pinned at start; restart the stream from a " +
             "fresh checkpoint to pick up the new schema")
-        else if (ignoreChanges) Nil
-        else throw new IllegalStateException(
-          s"TxnLog stream: non-append commit v${cur.version}:${cur.action} at $root — " +
+        case _ if ignoreChanges => Nil
+        case _ => throw new IllegalStateException(
+          s"TxnLog stream: non-append commit ${s.label} at $root — " +
             "the visible set was rewritten, so an additive delta does not exist; " +
             "restart from a fresh checkpoint (full re-baseline) or set " +
             "ignoreChanges=true to skip rewrite commits")
-      case _ => Nil
-    }.toSeq
+      }
+    }
   }
 
   /** The logical frame of the dirs [[appendedDirsBetween]] returns —
@@ -1297,14 +1276,8 @@ object TxnLog {
     val dirs = appendedDirsBetween(spark, root, sinceVersion, untilVersion,
       ignoreChanges)
     if (dirs.isEmpty) None
-    else {
-      val m = manifestFileAt(fileSystem(spark, root), root, untilVersion)
-      Some(logicalFrame(
-        spark.read.parquet(dirs.map(d => dataPath(root, d)): _*),
-        m.map(_.colmap).getOrElse(Map.empty),
-        m.map(_.dropped).getOrElse(Seq.empty),
-        m.map(_.defaults).getOrElse(Map.empty)))
-    }
+    else Some(appendedFrame(spark, root, dirs,
+      manifestFileAt(fileSystem(spark, root), root, untilVersion)))
   }
 
   /** Reserved stats-key prefix carrying a column's per-dir Bloom
@@ -1384,30 +1357,17 @@ object TxnLog {
     * Consults BOTH indexes when present (a dir must pass its bloom
     * AND its range stats to be opened; a file, its range stats);
     * conservative on every gap. The exact equality predicate is always
-    * re-applied. */
+    * re-applied. [[readPoints]] of the one value: a NULL probe matches
+    * no row, so it opens no dir. */
   def readPoint(spark: SparkSession, root: String, column: String,
-                value: Any, asOf: Option[Long] = None): DataFrame = {
-    val m = manifestAt(spark, root, asOf)
-    val (dirTest, fileTest) = pointTests(spark, m, column, value)
-    skipScan(spark, root, m, asOf, dirTest, Some(fileTest),
-      partitionPoint(m, physOf(m, column), value), Some(col(column) === lit(value)))._1
-  }
+                value: Any, asOf: Option[Long] = None): DataFrame =
+    readPoints(spark, root, column, Seq(value), asOf)
 
   /** Census behind [[readPoint]]: (survivors, skipped, snapshot). */
   private[graft] def prunePoint(spark: SparkSession, root: String, column: String,
                                 value: Any,
-                                asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) = {
-    val m = manifestAt(spark, root, asOf)
-    census(m, pointTests(spark, m, column, value)._1)
-  }
-
-  /** [[pointsTests]] of one value, except that a NULL probe keeps every
-    * dir and file: the writer set no Bloom bits for NULLs, and the
-    * exact predicate decides. */
-  private def pointTests(spark: SparkSession, m: Option[Commit], column: String,
-                         value: Any): (StatTest, StatTest) =
-    if (value == null) (_ => true, _ => true)
-    else pointsTests(spark, m, column, Seq(value))
+                                asOf: Option[Long] = None): (Seq[String], Seq[String], Seq[String]) =
+    prunePoints(spark, root, column, Seq(value), asOf)
 
   /** The (dir, file) tests of a lookup on ANY of `values` (IN
     * semantics: a NULL matches nothing, so it keeps nothing). A dir is
@@ -2404,12 +2364,14 @@ object TxnLog {
     * of the new batches. Pass `sinceVersion = -1` to consume from the
     * beginning.
     *
-    * Append-only lineage is REQUIRED and checked: an `overwrite`
-    * (including [[compact]]) anywhere in `(sinceVersion, latest]`
-    * rewrites the visible set, so "directories added" no longer means
-    * "rows added" — the call fails loudly and the consumer must
-    * re-baseline from a full [[read]]. A vacuumed `sinceVersion`
-    * fails the same way (the delta's base is gone). */
+    * Append-only lineage is REQUIRED and checked against the one
+    * action table ([[changeOf]]): additive commits serve, metadata-only
+    * ones are skipped, and any other commit (a rewrite — [[compact]]
+    * included — a tombstone or a schema change) anywhere in
+    * `(sinceVersion, latest]` means "directories added" no longer
+    * means "rows added" — the call fails loudly and the consumer must
+    * re-baseline from a full [[read]]. A vacuumed `sinceVersion` fails
+    * the same way (the delta's base is gone). */
   def changesSince(spark: SparkSession, root: String, sinceVersion: Long): DataFrame = {
     val fs = fileSystem(spark, root)
     val latestOpt = latestCommit(spark, root)
@@ -2423,70 +2385,55 @@ object TxnLog {
     // O(delta) manifest reads — the per-cycle poll of an incremental
     // consumer never replays the log; only the from-the-beginning
     // baseline (-1) walks the full history (it reads everything anyway)
-    val commits =
-      if (sinceVersion == -1L) history(spark, root)
-      else commitsInRange(fs, root, sinceVersion, latest)
-    val delta = commits.filter(_.version > sinceVersion)
-    // set_check/drop_check/add_column are metadata-only (dirs
-    // unchanged, zero rows added — add_column widens like any
-    // schema-evolution append, which this feed already tolerates);
-    // an incremental consumer skips straight over them. rename/drop
-    // REFUSE below: existing rows changed names, no additive delta
-    val broken = delta.filter(c => c.action != "append" &&
-      c.action != "set_check" && c.action != "drop_check" &&
-      c.action != "add_column" &&
-      !(sinceVersion == -1L && c.version == commits.head.version))
+    val walk = historyWalk(spark, root, sinceVersion, latest)
+    val broken = walk.steps.filterNot(s => s.change == Additive || s.change == MetadataOnly)
     require(broken.isEmpty,
-      s"TxnLog: non-append commit(s) ${broken.map(c => s"v${c.version}:${c.action}").mkString(", ")} " +
+      s"TxnLog: non-append commit(s) ${broken.map(_.label).mkString(", ")} " +
         s"after version $sinceVersion at $root — the visible set was rewritten, " +
         "so an additive delta does not exist; re-baseline from a full read")
-    val baseDirs =
-      if (sinceVersion == -1L) Set.empty[String]
-      else commits.head.dirs.toSet // range head IS the since manifest
-    val snapshot = commits.last.dirs
-    val newDirs = snapshot.filterNot(baseDirs)
     // the range is append-only (proven above), so the column mapping
     // is CONSTANT across it — serve the logical view of it
-    val tip = commits.last
+    val tip = walk.tip
+    val newDirs = tip.dirs.filterNot(walk.base.dirs.toSet)
     if (newDirs.isEmpty)
       // caught up — the COMMON poll outcome must stay cheap: an empty
       // frame with the table's schema from ONE visible directory, not
       // a re-read of the log plus a plan over the full snapshot
-      snapshot.headOption match {
+      tip.dirs.headOption match {
         case Some(one) => logicalFrame(
           readDir(spark, root, one),
           tip.colmap, tip.dropped, tip.defaults).limit(0)
         case None => read(spark, root).limit(0)
       }
-    else logicalFrame(
-      spark.read.parquet(newDirs.map(d => dataPath(root, d)): _*),
-      tip.colmap, tip.dropped, tip.defaults)
+    else appendedFrame(spark, root, newDirs, Some(tip))
   }
 
   /** Row-level CHANGE DATA FEED — the Delta CDF / Iceberg changelog
     * shape, extending [[changesSince]] (inserts only, refuses on any
     * rewrite) to the row-changing commits: every commit strictly
     * after `sinceVersion` contributes rows tagged `_change_type` and
-    * `_commit_version`:
+    * `_commit_version`, by its class in the one action table
+    * ([[changeOf]]):
     *
-    *  - `append` → its added directory's rows as `insert` (O(delta) —
-    *    no old data touched);
-    *  - `delete_mor` → the covered dirs' rows matching the new
-    *    tombstone predicate, AT THE PRIOR VERSION, as `delete`
+    *  - additive (`append`, and the since = −1 baseline whatever its
+    *    action word) → its added directory's rows as `insert`
+    *    (O(delta) — no old data touched);
+    *  - tombstone (`delete_mor`) → the covered dirs' rows matching the
+    *    new tombstone predicate, AT THE PRIOR VERSION, as `delete`
     *    (reads only covered dirs);
-    *  - `replace` (copy-on-write delete/merge) → the affected old
-    *    dirs diffed against the rewrite dir as ONE signed multiset
-    *    diff ([[replaceFeed]]: old rows −1, new rows +1, one
+    *  - row rewrite (`replace`: copy-on-write delete/merge) → the
+    *    affected old dirs diffed against the rewrite dir as ONE signed
+    *    multiset diff ([[replaceFeed]]: old rows −1, new rows +1, one
     *    aggregate — a single exchange, multiset-exact): without
     *    `keyCols`, as `delete` + `insert`; with `keyCols`, rows
     *    sharing a non-null key on both sides pair into
     *    `update_preimage`/`update_postimage` and only unpaired
     *    residue stays delete/insert;
-    *  - `set_check`/`drop_check` → skipped (metadata-only);
-    *  - `overwrite`/`restore` → REFUSED loudly, like
-    *    [[changesSince]]: the visible set was wholesale re-pointed,
-    *    so a row-level delta would be a full-table delete+insert
-    *    that says nothing — re-baseline.
+    *  - metadata-only → skipped;
+    *  - wholesale rewrite (`overwrite`/`restore`/`clone`) and schema
+    *    change → REFUSED loudly: the visible set was re-pointed, or the
+    *    rows changed names, so a row-level delta under one schema would
+    *    say nothing — re-baseline.
     *
     * Cost is bounded by the AFFECTED directories of each commit in
     * the range, never the snapshot — the property that makes a CDC
@@ -2508,44 +2455,35 @@ object TxnLog {
       s"TxnLog: version $sinceVersion does not exist at $root (vacuumed?) — re-baseline")
     // O(range) manifest reads, like [[changesSince]] — a CDC poller's
     // cycle cost is the commits it consumes, never the log length
-    val commits =
-      if (sinceVersion == -1L) history(spark, root)
-      else commitsInRange(fs, root, sinceVersion, latest)
-    val delta = commits.filter(c => c.version > sinceVersion && c.version <= latest)
-    val refused = delta.filter(c => c.action == "overwrite" || c.action == "restore"
-        || c.action == "clone"
-        || c.action == "rename_column" || c.action == "drop_column")
-      .filterNot(c => sinceVersion == -1L && c.version == commits.head.version)
+    val steps = historyWalk(spark, root, sinceVersion, latest).steps
+    val refused = steps.filter(s => s.change == Wholesale || s.change == SchemaChange)
     require(refused.isEmpty,
-      s"TxnLog: rewrite/schema commit(s) ${refused.map(c => s"v${c.version}:${c.action}").mkString(", ")} " +
+      s"TxnLog: rewrite/schema commit(s) ${refused.map(_.label).mkString(", ")} " +
         s"after version $sinceVersion at $root — no row-level delta exists under one schema; " +
         "re-baseline from read()")
     def tag(df: DataFrame, tpe: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(v))
-    val feeds = delta.flatMap { c =>
-      val prior = snapshotAt(commits, c.version - 1)
-      val priorCommit = commits.filter(_.version < c.version).lastOption
-      c.action match {
-        case "append" | "overwrite" | "restore" | "clone" => // rewrites only as the -1 baseline
-          val added = c.dirs.filterNot(prior.toSet)
-          if (added.isEmpty) None
-          else Some(tag(added.map(d => dirFrame(spark, root, d, Some(c)))
+    val feeds = steps.flatMap { s =>
+      val c = s.cur
+      s.change match {
+        case Additive =>
+          if (s.added.isEmpty) None
+          else Some(tag(s.added.map(d => dirFrame(spark, root, d, Some(c)))
             .reduce(_.unionByName(_, allowMissingColumns = true)), "insert", c.version))
-        case "delete_mor" =>
+        case Tombstone =>
           val dv = c.dvs.last // the commit's own new tombstone
-          val covered = dv.dirs.map(d => dirFrame(spark, root, d, priorCommit))
+          val covered = dv.dirs.map(d => dirFrame(spark, root, d, Some(s.prev)))
             .reduce(_.unionByName(_, allowMissingColumns = true))
           Some(tag(covered.filter(
             org.apache.spark.sql.functions.expr(dv.pred) === lit(true)),
             "delete", c.version))
-        case "replace" =>
-          val affected = prior.filterNot(c.dirs.toSet)
-          val newDirs = c.dirs.filterNot(prior.toSet)
-          val old0 = affected.map(d => dirFrame(spark, root, d, priorCommit))
+        case RowRewrite =>
+          val affected = s.prev.dirs.filterNot(c.dirs.toSet)
+          val old0 = affected.map(d => dirFrame(spark, root, d, Some(s.prev)))
             .reduce(_.unionByName(_, allowMissingColumns = true))
           val neu0 =
-            if (newDirs.isEmpty) old0.limit(0)
-            else newDirs.map(d => dirFrame(spark, root, d, Some(c)))
+            if (s.added.isEmpty) old0.limit(0)
+            else s.added.map(d => dirFrame(spark, root, d, Some(c)))
               .reduce(_.unionByName(_, allowMissingColumns = true))
           // after a widening schema-evolution append, one side may be
           // all-narrow (the affected dirs predate the widening, or the
@@ -2563,12 +2501,10 @@ object TxnLog {
               if (have(cn)) col(cn) else lit(null).cast(colType(cn)).as(cn)): _*)
           }
           Some(replaceFeed(aligned(old0), aligned(neu0), keyCols, c.version))
-        case _ => None // set_check / drop_check / add_column: metadata-only
+        case _ => None // metadata-only
       }
     }
-    require(feeds.nonEmpty || delta.forall(c =>
-      c.action == "set_check" || c.action == "drop_check" ||
-        c.action == "add_column"),
+    require(feeds.nonEmpty || steps.forall(_.change == MetadataOnly),
       s"TxnLog: no change feed in ($sinceVersion, $latest] at $root")
     feeds.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse(tag(read(spark, root).limit(0), "insert", latest))
@@ -2637,66 +2573,69 @@ object TxnLog {
   def replicate(spark: SparkSession, sourceRoot: String, targetRoot: String,
                 sinceVersion: Long, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "replicate: need key columns")
-    val fs = fileSystem(spark, sourceRoot)
     val latestOpt = latestCommit(spark, sourceRoot)
     require(latestOpt.nonEmpty, s"TxnLog table at $sourceRoot is empty")
     val latest = latestOpt.get.version
     val srcTag = Integer.toHexString(sourceRoot.hashCode)
     // O(delta) manifest reads per cycle (the changesSince discipline);
     // only a from-scratch seed (-1) reads the whole log
-    val pending =
-      if (sinceVersion < 0L) history(spark, sourceRoot)
-      else if (latest > sinceVersion) commitsInRange(fs, sourceRoot, sinceVersion + 1, latest)
-      else Seq.empty[Commit]
-    pending.filter(_.version > sinceVersion).foreach { c =>
+    val steps =
+      if (latest <= sinceVersion) Seq.empty
+      else {
+        require(sinceVersion == -1L ||
+          fileSystem(spark, sourceRoot).exists(logPath(sourceRoot, sinceVersion)),
+          s"TxnLog: version $sinceVersion does not exist at $sourceRoot (vacuumed?) — re-baseline")
+        historyWalk(spark, sourceRoot, sinceVersion, latest).steps
+      }
+    // a metadata-only commit applies nothing, unless it changed the
+    // schema (add_column), which the replica cannot follow: it refuses
+    // below
+    steps.filterNot(s => s.change == MetadataOnly && s.cur.defaults == s.prev.defaults).foreach { s =>
+      val c = s.cur
       val txn = Some(s"repl-$srcTag-v${c.version}")
-      c.action match {
-        case "set_check" | "drop_check" => // metadata-only: nothing to apply
-        case _ =>
-          val feed = changeFeed(spark, sourceRoot,
-            math.max(c.version - 1, -1L), keyCols, untilVersion = Some(c.version))
-          val payload = feed.drop("_change_type", "_commit_version")
-          c.action match {
-            case "overwrite" | "clone" =>
-              // reachable only as the feed's since=-1 baseline (any
-              // later rewrite was refused by changeFeed above): the
-              // replica seeds itself from the baseline inserts — a
-              // clone seeds as a DEEP copy (replicate is exactly the
-              // deep-copy escape hatch the shallow-clone doc names)
-              overwrite(payload, targetRoot, txn); ()
-            case "append" =>
-              append(payload, targetRoot, txn); ()
-            case "delete_mor" =>
-              // replay the SOURCE's own tombstone predicate — the
-              // replica's content equals the source's pre-commit
-              // snapshot, so the same predicate erases the same rows;
-              // no key collect, no predicate-size blowup, and the
-              // replica's manifest carries the same compact SQL
-              deleteMor(spark, targetRoot,
-                org.apache.spark.sql.functions.expr(c.dvs.last.pred), txn); ()
-            case "replace" =>
-              val dels = feed.filter(col("_change_type") === "delete")
-                .select(keyCols.map(col): _*).distinct()
-                .collect() // bounded by the rewrite's deleted-key count
-              if (dels.nonEmpty) {
-                // a flat IN list, never an OR chain — 10^4-key lists
-                // stay parseable where nested ors hit the parser's
-                // complexity limit (FAILED_TO_PARSE_TOO_COMPLEX)
-                val pred =
-                  if (keyCols.size == 1)
-                    col(keyCols.head).isin(dels.map(_.get(0)).toIndexedSeq: _*)
-                  else
-                    struct(keyCols.map(col): _*).isin(dels.map(r =>
-                      struct(keyCols.indices.map(i => lit(r.get(i))): _*)).toIndexedSeq: _*)
-                delete(spark, targetRoot, pred, txn.map(_ + "-d")); ()
-              }
-              val ups = feed.filter(col("_change_type").isin("update_postimage", "insert"))
-                .drop("_change_type", "_commit_version")
-              if (!ups.isEmpty) { merge(ups, targetRoot, keyCols, txn.map(_ + "-u")); () }
-            case other =>
-              throw new IllegalStateException(
-                s"TxnLog.replicate: unexpected action '$other' at v${c.version} of $sourceRoot")
+      val feed = changeFeed(spark, sourceRoot,
+        math.max(c.version - 1, -1L), keyCols, untilVersion = Some(c.version))
+      val payload = feed.drop("_change_type", "_commit_version")
+      s.change match {
+        case Additive if s.word == Wholesale =>
+          // the since = -1 baseline of a table created wholesale (any
+          // later rewrite was refused by changeFeed above): the replica
+          // seeds itself from the baseline inserts — a clone or convert
+          // seeds as a DEEP copy (replicate is exactly the deep-copy
+          // escape hatch the shallow-clone doc names)
+          overwrite(payload, targetRoot, txn); ()
+        case Additive =>
+          append(payload, targetRoot, txn); ()
+        case Tombstone =>
+          // replay the SOURCE's own tombstone predicate — the
+          // replica's content equals the source's pre-commit
+          // snapshot, so the same predicate erases the same rows;
+          // no key collect, no predicate-size blowup, and the
+          // replica's manifest carries the same compact SQL
+          deleteMor(spark, targetRoot,
+            org.apache.spark.sql.functions.expr(c.dvs.last.pred), txn); ()
+        case RowRewrite =>
+          val dels = feed.filter(col("_change_type") === "delete")
+            .select(keyCols.map(col): _*).distinct()
+            .collect() // bounded by the rewrite's deleted-key count
+          if (dels.nonEmpty) {
+            // a flat IN list, never an OR chain — 10^4-key lists
+            // stay parseable where nested ors hit the parser's
+            // complexity limit (FAILED_TO_PARSE_TOO_COMPLEX)
+            val pred =
+              if (keyCols.size == 1)
+                col(keyCols.head).isin(dels.map(_.get(0)).toIndexedSeq: _*)
+              else
+                struct(keyCols.map(col): _*).isin(dels.map(r =>
+                  struct(keyCols.indices.map(i => lit(r.get(i))): _*)).toIndexedSeq: _*)
+            delete(spark, targetRoot, pred, txn.map(_ + "-d")); ()
           }
+          val ups = feed.filter(col("_change_type").isin("update_postimage", "insert"))
+            .drop("_change_type", "_commit_version")
+          if (!ups.isEmpty) { merge(ups, targetRoot, keyCols, txn.map(_ + "-u")); () }
+        case _ =>
+          throw new IllegalStateException(
+            s"TxnLog.replicate: unexpected action '${c.action}' at v${c.version} of $sourceRoot")
       }
     }
     latest
@@ -3264,12 +3203,6 @@ object TxnLog {
                            asOf: Option[Long]): Seq[String] =
     manifestAt(spark, root, asOf).map(_.dirs).getOrElse(Seq.empty)
 
-  /** Fold the log up to and including `v`. Manifests are
-    * self-contained (each carries its full visible set), so this is
-    * just "the manifest at v" — kept as a fold point for clarity. */
-  private def snapshotAt(commits: Seq[Commit], v: Long): Seq[String] =
-    commits.filter(_.version <= v).lastOption.map(_.dirs).getOrElse(Seq.empty)
-
   /** Full log replay — O(n-commits) manifest reads. Reserved for the
     * HISTORY consumers ([[versions]], [[vacuum]], [[readWithLineage]],
     * the from-the-beginning feed baselines) and the legacy-manifest
@@ -3381,25 +3314,91 @@ object TxnLog {
         s"TxnLog: manifest $v missing at $root (vacuumed while an operation " +
           s"spanning $fromVersion..$toVersion was in flight)")))
 
-  /** Rewrite-rebase resolution by direct range reads: the dirs each
-    * interleaved commit in `(expected, current]` added (its manifest
-    * minus its predecessor's), provided every interleaved action is a
-    * PLAIN APPEND — otherwise Left of the action list (the caller
-    * aborts: a conflicting rewrite may have read or moved what we
-    * rewrote). O(interleaved) manifest reads, never a log replay. */
+  // ---- the commit-range walk behind every incremental reader ---------
+  //
+  // changesSince, changeFeed, replicate, the format("graft") stream
+  // source and the append rebase all ask "what did the commits in
+  // (since, until] do?". Each reads one walk — every commit paired
+  // with its predecessor — classified by the one action table
+  // [[changeOf]]; a reader only decides, per class, to serve, skip or
+  // refuse.
+
+  private sealed trait Change
+  private case object Additive extends Change     // new dirs on top of the predecessor's
+  private case object MetadataOnly extends Change // same dirs, same rows
+  private case object SchemaChange extends Change // existing rows changed names
+  private case object Wholesale extends Change    // the visible set re-pointed
+  private case object RowRewrite extends Change   // copy-on-write of the affected dirs
+  private case object Tombstone extends Change    // a deletion vector over covered dirs
+
+  /** The one action table. `add_column` is metadata-only: a pinned
+    * schema simply never selects the new column. An unknown word is a
+    * wholesale rewrite, which every incremental reader refuses. */
+  private val changeOf: Map[String, Change] = Map(
+    "append" -> Additive,
+    "set_check" -> MetadataOnly, "drop_check" -> MetadataOnly, "add_column" -> MetadataOnly,
+    "rename_column" -> SchemaChange, "drop_column" -> SchemaChange,
+    "overwrite" -> Wholesale, "restore" -> Wholesale, "clone" -> Wholesale, "convert" -> Wholesale,
+    "replace" -> RowRewrite,
+    "delete_mor" -> Tombstone)
+
+  /** The empty predecessor of since = −1 (no manifest −1 exists). */
+  private val NoCommit = Commit(-1L, "", Seq.empty, None)
+
+  /** One commit against its predecessor. To the readers (`change`) the
+    * baseline — the step off [[NoCommit]] — is additive whatever its
+    * action word (`word`): off an empty predecessor every dir is new
+    * (Delta's startingVersion 0). The rebase judges every step by `word`. */
+  private case class Step(prev: Commit, cur: Commit) {
+    def baseline: Boolean = prev eq NoCommit
+    def word: Change = changeOf.getOrElse(cur.action, Wholesale)
+    def change: Change = if (baseline) Additive else word
+    def added: Seq[String] = cur.dirs.filterNot(prev.dirs.toSet)
+    def label: String = s"v${cur.version}:${cur.action}"
+  }
+
+  /** The since manifest (or [[NoCommit]]), then (since, until] in order. */
+  private case class Walk(chain: Seq[Commit]) {
+    def base: Commit = chain.head
+    def tip: Commit = chain.last
+    def steps: Seq[Step] = chain.sliding(2).collect { case Seq(p, c) => Step(p, c) }.toSeq
+  }
+
+  /** The walk by direct per-version reads, O(range) manifests; since =
+    * −1 starts at manifest 0, so a vacuumed manifest 0 fails loudly
+    * ([[commitsInRange]]). The stream source and the rebase. */
+  private def rangeWalk(fs: FileSystem, root: String, since: Long, until: Long): Walk =
+    Walk(if (since >= 0L) commitsInRange(fs, root, since, until)
+      else NoCommit +: commitsInRange(fs, root, 0L, until))
+
+  /** [[rangeWalk]], except that since = −1 replays the surviving log
+    * ([[history]]): after a vacuum the oldest surviving manifest is the
+    * baseline. [[changesSince]], [[changeFeed]], [[replicate]]. */
+  private def historyWalk(spark: SparkSession, root: String, since: Long, until: Long): Walk =
+    if (since >= 0L) rangeWalk(fileSystem(spark, root), root, since, until)
+    else Walk(NoCommit +: history(spark, root).filter(_.version <= until))
+
+  /** Appended dirs under `m`'s column mapping — the frame
+    * [[changesSince]] and the stream source serve. */
+  private def appendedFrame(spark: SparkSession, root: String, dirs: Seq[String],
+                            m: Option[Commit]): DataFrame =
+    logicalFrame(spark.read.parquet(dirs.map(d => dataPath(root, d)): _*),
+      m.map(_.colmap).getOrElse(Map.empty), m.map(_.dropped).getOrElse(Seq.empty),
+      m.map(_.defaults).getOrElse(Map.empty))
+
+  /** Rewrite-rebase resolution: the dirs each interleaved commit in
+    * `(expected, current]` added, provided every one is additive by its
+    * action word — otherwise Left of the interleaved action list (the
+    * caller aborts: a conflicting rewrite may have read or moved what we
+    * rewrote). The baseline gets no pass here: a writer that derived
+    * from an empty table and meets a racer's table-creating overwrite
+    * has no serial order that keeps both, so it aborts.
+    * O(interleaved) manifest reads, never a log replay. */
   private def interleavedAppendDirs(fs: FileSystem, root: String,
                                     expected: Long, current: Long): Either[Seq[String], Seq[String]] = {
-    // expected = -1 (writer derived from an EMPTY table, racer created
-    // it since): synthesize the empty predecessor — version 0 then
-    // counts as interleaved like any other commit
-    val range =
-      if (expected >= 0L) commitsInRange(fs, root, expected, current)
-      else Commit(-1L, "append", Seq.empty, None) +:
-        commitsInRange(fs, root, 0L, current)
-    val interleaved = range.tail
-    if (!interleaved.forall(_.action == "append")) Left(interleaved.map(_.action))
-    else Right(range.sliding(2).collect { case Seq(prev, c) =>
-      c.dirs.filterNot(prev.dirs.toSet) }.flatten.toSeq)
+    val steps = rangeWalk(fs, root, expected, current).steps
+    if (steps.forall(_.word == Additive)) Right(steps.flatMap(_.added))
+    else Left(steps.map(_.cur.action))
   }
 
   /** Carried txn map cap: beyond this many remembered txnIds the

@@ -325,6 +325,37 @@ class GraftConnectorSpec extends SparkSpec {
     assert(runOnce(ckptD, Map("startingVersion" -> "0")) == Seq.empty)
   }
 
+  test("streaming startingVersion: an unreadable persisted marker fails the restart and names the file") {
+    val root = freshRoot()
+    Seq((0L, "r0")).toDF("id", "s").write.format("graft").save(root)
+    val ckpt = Files.createTempDirectory("graft_sv_ckpt").toString
+    import scala.jdk.CollectionConverters._
+    def runOnce(): Seq[Long] = {
+      val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val q = spark.readStream.format("graft").option("startingVersion", "latest").load(root)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().foreach(r => ids.add(r.getLong(0))); ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      ids.asScala.toSeq.sorted
+    }
+    // 'latest' resolves to version 1 and persists it
+    assert(runOnce() == Seq.empty)
+    val marker = new java.io.File(s"$ckpt/sources/0/graft-starting-version")
+    assert(marker.isFile, s"no persisted startingVersion marker under $ckpt")
+    Seq((1L, "r1")).toDF("id", "s").write.format("graft").mode(SaveMode.Append).save(root)
+    // a torn marker must not read as absent: re-resolving 'latest'
+    // against the moved log would skip version 1 for good
+    java.nio.file.Files.writeString(marker.toPath, "garbage")
+    val e = intercept[Exception](runOnce())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null && m.contains("graft-starting-version")), msgs.mkString(" | "))
+    // the marker is left as it was for the operator to inspect
+    assert(java.nio.file.Files.readString(marker.toPath) == "garbage")
+  }
+
   test("limiter restart matrix: crashes between offset WAL and commit replay exactly-once") {
     // the round-15 limiter fix persisted a high-water mark so a
     // post-restart getOffset can never regress below the committed

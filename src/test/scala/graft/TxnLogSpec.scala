@@ -918,10 +918,11 @@ class TxnLogSpec extends SparkSpec {
     val (keep, skip, snap) = TxnLog.prunePoint(spark, root, "t", v)
     assert(snap.size == 4 && keep.nonEmpty && skip.nonEmpty,
       s"probe should keep the holder and skip the rest: keep=$keep skip=$skip")
-    // a NULL probe never consults the bloom (the writer set no bits
-    // for NULLs): every dir survives, the exact predicate decides
+    // a NULL probe matches no row (`t = NULL` is never true), so it
+    // opens no dir and returns nothing
     val (keepN, skipN, _) = TxnLog.prunePoint(spark, root, "t", null)
-    assert(keepN.size == 4 && skipN.isEmpty)
+    assert(keepN.isEmpty && skipN.size == 4)
+    assert(TxnLog.readPoint(spark, root, "t", null).count() == 0)
     // multi-key fetch: one read for two held values keeps (at least)
     // their two dirs and still skips provably clean ones; results
     // equal the plain IN filter
@@ -1561,6 +1562,21 @@ class TxnLogSpec extends SparkSpec {
       "exactly one replica commit per applied source commit")
     // the replica's own append lineage survived the append commits
     assert(TxnLog.versions(spark, dst).count(_._2 == "append") >= 2)
+  }
+
+  test("a convertFromParquet table's version 0 is the change-feed baseline: changeFeed(-1) and replicate serve the converted rows") {
+    val base = Files.createTempDirectory("graft_txn").toString
+    val pq = s"$base/pq"; val src = s"$base/src"; val dst = s"$base/dst"
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "v").write.parquet(pq)
+    TxnLog.convertFromParquet(spark, pq, src)                      // v0 convert
+    TxnLog.append(Seq((3L, 30L)).toDF("id", "v"), src)             // v1
+    val feed = TxnLog.changeFeed(spark, src, -1L).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version")))
+    assert(feed.sorted.toSeq == Seq((1L, "insert", 0L), (2L, "insert", 0L), (3L, "insert", 1L)))
+    assert(TxnLog.replicate(spark, src, dst, -1L, Seq("id")) == 1L)
+    def content(root: String) = TxnLog.read(spark, root)
+      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"))).toSet
+    assert(content(dst) == content(src) && content(dst).size == 3)
   }
 
   test("partition-layout evolution: a table may switch partitioning mid-history; reads reconcile per dir") {
